@@ -51,7 +51,7 @@ def generate_series_udtf():
 
 import weakref
 
-# Weakly keyed by the session object (as registry._plan_cache does): an
+# Weakly keyed by the session object (as tables._session_state is): an
 # id()-keyed memo can collide when a GC'd session's id is reused by a new
 # live session, silently skipping registration there (ADVICE r3).
 _REGISTERED: "weakref.WeakSet" = weakref.WeakSet()

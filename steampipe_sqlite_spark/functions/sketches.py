@@ -465,9 +465,7 @@ def kmv_pairwise_jaccard(sig: DataFrame, k: int = 128) -> DataFrame:
     are <= |groups|*k rows by construction, so the cached state is
     bounded.  A/B at sf0.01 (source-pair query, warm): 1.28 s -> 0.85 s,
     and the cold plan carries one build subtree instead of four."""
-    from steampipe_sqlite_spark.operators.scale import persist_tracked
-
-    sig = persist_tracked(sig)
+    sig = sig.persist()
     a = sig.selectExpr("grp AS ga", "h")
     b = sig.selectExpr("grp AS gb", "h AS hb")
     paired = (

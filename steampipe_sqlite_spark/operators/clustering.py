@@ -136,8 +136,6 @@ def semantic_dedup(
     representative × members (one row per vector), so cost stays linear
     where naive semantic dedup is quadratic.
     """
-    from steampipe_sqlite_spark.operators.scale import persist_tracked
-
     # Persist the fitted assignment ONCE (optimization r15): the relation
     # is referenced three times below (the reps aggregate, the
     # representative-vector restriction, and the member face of the final
@@ -147,7 +145,7 @@ def semantic_dedup(
     # corpus-sized row per vector — the same bounded within-query state
     # class as ppjoin's shingle cache (r14); dropped by clearCache between
     # bench runs.
-    assigned = persist_tracked(kmeans_assign(df, vec_col, id_col, k=k, iters=iters))
+    assigned = kmeans_assign(df, vec_col, id_col, k=k, iters=iters).persist()
     reps = (
         assigned.groupBy("cell")
         .agg(F.min(F.struct("d2", "id")).alias("m"))

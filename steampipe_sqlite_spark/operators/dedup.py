@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from steampipe_sqlite_spark.functions.text import fingerprint, word_ngrams
-from steampipe_sqlite_spark.operators.scale import persist_tracked
 
 
 def _hash64(c: Column, family: str) -> tuple[Column, int]:
@@ -143,14 +142,12 @@ def ngram_jaccard_pairs(
     # one materialization of the (block, id, gram, n) stream feeds both
     # join sides — the ppjoin/kmv lesson: never recompute the tokenize
     # pipeline per plan reference
-    toks = persist_tracked(
-        grams.select(
-            *[F.col(c) for c in block_cols],
-            "id",
-            F.size("grams").alias("n"),
-            F.explode("grams").alias("g"),
-        )
-    )
+    toks = grams.select(
+        *[F.col(c) for c in block_cols],
+        "id",
+        F.size("grams").alias("n"),
+        F.explode("grams").alias("g"),
+    ).persist()
     a = toks.alias("a")
     b = toks.alias("b")
     cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
@@ -316,9 +313,9 @@ def minhash_lsh_pairs(
     4. two hash joins back to the signature table score the surviving
        pairs (candidate count ≪ corpus, so these joins are tiny).
     """
-    sigs = persist_tracked(minhash_signatures_oph(
+    sigs = minhash_signatures_oph(
         df, text_col, id_col, num_hashes, shingle_k, hash_family
-    ))
+    ).persist()
 
     # one JVM-side parse for the whole banded projection (py4j chattiness
     # of the per-band struct builders measured as real per-query latency);
@@ -446,9 +443,7 @@ def simhash_pairs(
     persisted first so the self-join doesn't recompute the vote pipeline
     twice.
     """
-    fp = persist_tracked(
-        simhash_fingerprints(df, text_col, id_col, hash_family=hash_family)
-    )
+    fp = simhash_fingerprints(df, text_col, id_col, hash_family=hash_family).persist()
     # 4 bands over the full fp width: 16 bits each for the 64-bit family,
     # 15 bits each for the 60-bit md5 family
     bw = 16 if hash_family == "xxhash64" else 15
@@ -572,11 +567,7 @@ def cdc_chunk_fingerprints(
     # the ppjoin/exact-substrings caches; plans/r15/
     # dedup_cdc_chunks_{before,after}.txt).  One normalized string per
     # document, dropped by clearCache between bench runs.
-    from steampipe_sqlite_spark.operators.scale import persist_tracked
-
-    norm_df = persist_tracked(
-        df.selectExpr(f"{id_col} AS id", f"{norm} AS norm")
-    )
+    norm_df = df.selectExpr(f"{id_col} AS id", f"{norm} AS norm").persist()
     h60 = f"cast(conv(substring(md5(substring(norm, i, {k})), 1, 15), 16, 10) as bigint)"
     flags = norm_df.selectExpr(
         "id",
@@ -650,14 +641,12 @@ def duplicated_span_stats(
     # regex normalize chain dominated the recompute (measured r15: 0.33 s
     # of the 0.44 s single gram pass at sf0.1; the un-persisted plan ran
     # the chain 3x + the gram explode+md5 2x, 4.6 s total).  Persist it
-    # ONCE — the same corpus-sized, within-query, ledger-tracked state the
+    # ONCE — the same corpus-sized, within-query reuse state the
     # ppjoin pipeline caches (guide §5); everything downstream derives
     # from the cache.  The exploded gram rows themselves are NOT cached:
     # they are ~k-fold larger than the text and recomputing them from the
     # cached norms costs ~0.1 s here.
-    norm_df = persist_tracked(
-        _spread(df).selectExpr(f"{id_col} AS id", f"{norm} AS norm")
-    )
+    norm_df = _spread(df).selectExpr(f"{id_col} AS id", f"{norm} AS norm").persist()
     h60 = f"cast(conv(substring(md5(substring(norm, i, {k})), 1, 15), 16, 10) as bigint)"
     grams = norm_df.selectExpr(
         "id",
@@ -773,7 +762,7 @@ def ppjoin_pairs(
             f"array_distinct(transform(sequence(1, greatest(size(w) - {k - 1}, 1)),"
             f" i -> array_join(slice(w, i, {k}), ' ')))"
         )
-    # The per-doc shingle ARRAY is materialized ONCE (persist_tracked,
+    # The per-doc shingle ARRAY is materialized ONCE (persist,
     # the minhash-signatures pattern) and every later stage derives from
     # it: the exploded prefix-ranking stream, BOTH sides of the candidate
     # self-join, and the verification arrays.  The r13 shape recomputed
@@ -783,11 +772,9 @@ def ppjoin_pairs(
     # through the explode also deletes the
     # `count(*) OVER (PARTITION BY id)` window the r5 rewrite used for
     # set size — one fewer window aggregate on the id exchange.
-    arrs = persist_tracked(
-        words.selectExpr("id", f"{elems} AS toks").selectExpr(
-            "id", "toks", "CAST(size(toks) AS BIGINT) AS n"
-        )
-    )
+    arrs = words.selectExpr("id", f"{elems} AS toks").selectExpr(
+        "id", "toks", "CAST(size(toks) AS BIGINT) AS n"
+    ).persist()
     # exploding the PERSISTED named column is safe here: the
     # InferFiltersFromGenerate trap (a pushed `size(...) > 0` filter
     # re-evaluating the whole shingle pipeline) bites when the array is
@@ -928,9 +915,9 @@ def minhash_index_query(
     in-memory pair join; scoring joins touch candidates only; parameters
     come from the index's meta."""
     num_hashes, bands, shingle_k, hash_family = _minhash_index_meta(spark, path)
-    qsigs = persist_tracked(minhash_signatures_oph(
+    qsigs = minhash_signatures_oph(
         new_docs, text_col, id_col, num_hashes, shingle_k, hash_family
-    ))
+    ).persist()
     qbands = qsigs.selectExpr(
         "id", f"explode(array({_band_projection(num_hashes, bands, hash_family)})) AS bk"
     ).selectExpr("id AS query_id", "bk.band AS band", "bk.band_sig AS band_sig")

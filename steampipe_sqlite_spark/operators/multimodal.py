@@ -504,9 +504,7 @@ def image_phash_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
     (doc_id, phash) — 16 bytes per image, the guide-§8 "decide with small
     rows" proxy, orders of magnitude smaller than the media it replaces.
     """
-    from steampipe_sqlite_spark.operators.scale import persist_tracked
-
-    fp = persist_tracked(image_phash(media))
+    fp = image_phash(media).persist()
     bands = fp.select(
         "doc_id",
         "phash",

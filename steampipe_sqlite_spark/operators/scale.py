@@ -4,62 +4,25 @@ handling, and a pre-partition helper for shuffle reuse.
 
 None of these change results; they change plan shape.  Plan-level proofs
 live in tests/test_scale_toolkit.py.
+
+Lifetime: a DataFrame's intermediates live exactly as long as the
+DataFrame does.  The offset-baking helpers (:func:`distributed_row_number`,
+:func:`distributed_running_sum`) compute per-partition offsets from a
+``repartitionByRange`` copy whose boundaries come from sampling, so the
+copy is an eager ``localCheckpoint``: its blocks are freed with the
+DataFrame that references them and are immune to
+``spark.catalog.clearCache()``, so a recompute can never re-sample the
+boundaries under the baked offsets.  The trade-off: a lost checkpoint
+block (a dead executor) fails the query loudly instead of recomputing it
+under different boundaries.  Reuse persists elsewhere in the package (a
+frame read twice within one query) are plain ``.persist()`` and last
+until ``clearCache()`` or session stop.
 """
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# Persist ledger: every .persist() an operator takes on a caller's behalf is
-# registered here (session-scoped, weakly keyed so a stopped session's list
-# dies with it).  The plans registry claims slices of this list per query
-# build and unpersists a query's previous slice when a plan_cache=False
-# query is rebuilt — closing the accumulate-until-GC-pressure leak class
-# (ADVICE r7: chained distributed_row_number calls dropped intermediate
-# handles).  Direct callers can also use :func:`persisted_ledger` to sweep.
-_PERSIST_LEDGER: "weakref.WeakKeyDictionary[SparkSession, list]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def persisted_ledger(spark: SparkSession) -> list:
-    """The session's list of operator-persisted DataFrames, oldest first.
-    Owners (the plans registry, or a direct caller) remove entries they
-    take responsibility for; anything left is released by session stop or
-    ``spark.catalog.clearCache()``.
-
-    The ``_jsc is None`` guard mirrors registry._plan_cache / tables.py:
-    CPython can reuse a stopped session object's identity, and the new
-    session must not inherit the dead one's handles.  Entries already
-    unpersisted out-of-band (``clearCache`` by bench/probe loops that call
-    ``__wrapped__`` directly) are pruned on access so un-owned ledgers
-    cannot grow without bound across a long session."""
-    led = _PERSIST_LEDGER.get(spark)
-    if led is None or getattr(spark.sparkContext, "_jsc", None) is None:
-        led = []
-        _PERSIST_LEDGER[spark] = led
-    elif led:
-        def _live(df: DataFrame) -> bool:
-            try:
-                sl = df.storageLevel
-                return sl.useMemory or sl.useDisk
-            except Exception:  # noqa: BLE001 — dead JVM handle = not live
-                return False
-
-        led[:] = [df for df in led if _live(df)]
-    return led
-
-
-def persist_tracked(df: DataFrame) -> DataFrame:
-    """``df.persist()`` + ledger registration — use for every persist taken
-    inside an operator so lifetime ownership is transferable (see
-    :func:`persisted_ledger`)."""
-    out = df.persist()
-    persisted_ledger(out.sparkSession).append(out)
-    return out
 
 
 def write_bucketed(
@@ -270,7 +233,7 @@ def _check_prefix_sum_reserved(df: DataFrame, name: str) -> None:
 def _with_partition_offsets(ranged: DataFrame, offsets: dict) -> DataFrame:
     """Attach each row's partition prefix offset as column ``_off``.
 
-    ``ranged`` must carry ``_pid`` (spark_partition_id at persist time);
+    ``ranged`` must carry ``_pid`` (spark_partition_id at checkpoint time);
     ``offsets`` maps pid -> exclusive prefix total.  Small maps inline as
     a ``create_map`` literal (zero extra plan nodes beyond the map);
     large maps broadcast-join so plan size stays O(1) in partition count
@@ -312,18 +275,8 @@ def distributed_row_number(
 
     Results equal the window form whenever ``order_cols`` is a total
     order (the corpus determinism convention).  Cost: one range shuffle +
-    one count job over the persisted ranged data vs one all-to-one
+    one count job over the checkpointed ranged data vs one all-to-one
     shuffle — the difference between "works at any SF" and "driver OOM".
-
-    Lifetime: ``ranged`` MUST stay persisted while the returned plan is
-    live — the offsets were computed from the persisted instance, and
-    ``repartitionByRange`` picks boundaries by sampling, so a recompute
-    could repartition differently than the counted data (wrong offsets,
-    silently).  It therefore cannot be unpersisted inside this function;
-    the persisted handle is attached to the result as
-    ``result._sgs_persisted`` — call ``.unpersist()`` on it when done
-    with the result to reclaim executor memory (session stop also
-    releases it).
 
     Offsets attach via :func:`_with_partition_offsets`: a ``create_map``
     literal up to ``_OFFSETS_BROADCAST_THRESHOLD`` partitions, a broadcast
@@ -336,8 +289,10 @@ def distributed_row_number(
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     cols = [c if isinstance(c, Column) else F.col(c) for c in order_cols]
-    ranged = persist_tracked(
-        df.repartitionByRange(n, *cols).withColumn("_pid", F.spark_partition_id())
+    ranged = (
+        df.repartitionByRange(n, *cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     # one long per partition — metadata, not data (same class as a
     # parquet footer read); ordering by _pid preserves the range order
@@ -354,12 +309,6 @@ def distributed_row_number(
         .withColumn(name, (F.row_number().over(w) + F.col("_off")).cast("long"))
         .drop("_pid", "_off")
     )
-    out._sgs_persisted = ranged  # owner handle — see Lifetime note above
-    # chained-call ownership: a helper built ON another helper's result
-    # carries EVERY upstream ranged handle, so releasing the final frame's
-    # _sgs_persisted_all reclaims the whole chain (ADVICE r7: rfm's d1/d2
-    # intermediates leaked when only d3's single handle survived)
-    out._sgs_persisted_all = [*getattr(df, "_sgs_persisted_all", []), ranged]
     # total row count — already computed for the offsets; callers needing
     # COUNT(*) OVER () alongside the rank read this instead of re-scanning
     out._sgs_total_rows = acc
@@ -375,9 +324,9 @@ def distributed_running_sum(
 ) -> DataFrame:
     """Global running SUM(value_col) over a total order without the
     single-partition WindowExec — the prefix-sum sibling of
-    :func:`distributed_row_number` (same two-phase composition, same
-    lifetime contract on the persisted ranged instance, same
-    literal-or-broadcast offset attach via :func:`_with_partition_offsets`):
+    :func:`distributed_row_number` (same two-phase composition over a
+    checkpointed ranged copy, same literal-or-broadcast offset attach via
+    :func:`_with_partition_offsets`):
     range shuffle on the order keys, local cumsum
     windowed by ``spark_partition_id()``, per-partition TOTALS (one long
     per partition) prefix-summed on the driver and added as offsets.
@@ -393,8 +342,10 @@ def distributed_running_sum(
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     cols = [c if isinstance(c, Column) else F.col(c) for c in order_cols]
-    ranged = persist_tracked(
-        df.repartitionByRange(n, *cols).withColumn("_pid", F.spark_partition_id())
+    ranged = (
+        df.repartitionByRange(n, *cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     totals = sorted(
         (r["_pid"], r["tot"])
@@ -415,8 +366,6 @@ def distributed_running_sum(
             name, (F.sum(F.col(value_col)).over(w) + F.col("_off")).cast("long")
         ).drop("_pid", "_off")
     )
-    out._sgs_persisted = ranged  # owner handle — see distributed_row_number
-    out._sgs_persisted_all = [*getattr(df, "_sgs_persisted_all", []), ranged]
     out._sgs_total = acc  # grand total of value_col, free from the offsets
     return out
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from steampipe_sqlite_spark.operators.scale import persist_tracked
 from steampipe_sqlite_spark.plans.registry import presentation_sort, query, sql_query
 from steampipe_sqlite_spark.plans.relational import _ppm_div
 from steampipe_sqlite_spark.tables import load_table, register_views
@@ -1009,10 +1008,10 @@ def dedup_minhash_lsh_q(spark, sf_dir):
     # broadcast joins put no shuffle boundary between dedup and sort);
     # caching the output-sized pair set makes the sampling pass a cache
     # read (measured 2.00 s → 1.62 s at sf0.1).
-    pairs = persist_tracked(minhash_lsh_pairs(
+    pairs = minhash_lsh_pairs(
         docs, "text", "doc_id", num_hashes=64, bands=16, threshold=0.5,
         hash_family="md5",
-    ))
+    ).persist()
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -1050,9 +1049,9 @@ def dedup_simhash_q(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     # orderBy + output-sized persist: see dedup_minhash_lsh (range-sort
     # sampling re-executes the post-shuffle tail otherwise).
-    pairs = persist_tracked(simhash_pairs(
+    pairs = simhash_pairs(
         docs, "text", "doc_id", max_hamming=8, hash_family="md5"
-    ))
+    ).persist()
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -2131,7 +2130,6 @@ def sample_balanced_per_group(spark, sf_dir):
 
 @query(
     "pack_length_buckets",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 WITH t AS (
   SELECT doc_id, n_chars,
@@ -2381,7 +2379,6 @@ def agg_gmean_pandas_q(spark, sf_dir):
 
 @query(
     "pack_context_windows",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 WITH ordered AS (
   SELECT doc_id, n_chars,
@@ -3752,9 +3749,9 @@ def dedup_ppjoin_exact_q(spark, sf_dir):
     # orderBy + output-sized persist: see dedup_minhash_lsh (range-sort
     # sampling re-executes the verification tail otherwise; measured
     # 1.56 s → 1.23 s at sf0.1).
-    pairs = persist_tracked(ppjoin_pairs(
+    pairs = ppjoin_pairs(
         docs, "text", "doc_id", threshold_pct=80, shingle=3
-    ))
+    ).persist()
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -3911,11 +3908,7 @@ def sketch_cms_token_counts_q(spark, sf_dir):
     # ppjoin's r14 cache); the exploded token rows stay uncached, so each
     # branch re-splits from the cached string (cheap) instead of
     # re-regexing (the wall).  plans/r15/sketch_cms_token_counts_*.txt.
-    from steampipe_sqlite_spark.operators.scale import persist_tracked
-
-    normed = persist_tracked(
-        docs.selectExpr(f"{_NORM_SQL.format(c='text')} AS norm")
-    )
+    normed = docs.selectExpr(f"{_NORM_SQL.format(c='text')} AS norm").persist()
     toks = normed.selectExpr("explode(split(norm, ' ')) AS tok")
     sketch = cms_build(toks, "tok", width=64, depth=4)
     probes = spark.createDataFrame(
@@ -4203,7 +4196,6 @@ def text_bpe_apply_fidelity(spark, sf_dir):
 
 @query(
     "vocab_growth_curve",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle=f"""
 WITH first_seen AS (
   SELECT tok, CAST(MIN(doc_id) AS BIGINT) AS first_doc
@@ -4373,7 +4365,6 @@ def emb_matryoshka_fidelity_q(spark, sf_dir):
 
 @query(
     "sample_systematic_weighted",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 WITH w AS (
   SELECT doc_id, n_chars,
@@ -4532,7 +4523,6 @@ def key_skew_profile_q(spark, sf_dir):
 
 @query(
     "shard_by_bytes",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 WITH cum AS (
   SELECT doc_id, n_chars,
@@ -5852,7 +5842,7 @@ def mining_hard_negatives_q(spark, sf_dir):
         "cu",
         "ROW_NUMBER() OVER (PARTITION BY qid, same ORDER BY cu DESC, tid) AS rn",
     ).where("rn = 1")
-    ranked = persist_tracked(ranked)
+    ranked = ranked.persist()
     pos = ranked.where("same").selectExpr(
         "qid AS anchor_id", "qlabel AS label", "tid AS positive_id", "cu AS pos_cos_u"
     )
@@ -5951,7 +5941,6 @@ SELECT CAST(length(bin(rnk)) - 1 AS BIGINT) AS band,
 FROM (SELECT freq, ROW_NUMBER() OVER (ORDER BY freq DESC, tok) AS rnk FROM cnt)
 GROUP BY 1 ORDER BY band
 """,
-    plan_cache=False,
 )
 def text_zipf_band_counts(spark, sf_dir):
     """Zipf rank-frequency profile of the corpus vocabulary: tokens

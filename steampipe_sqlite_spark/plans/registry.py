@@ -4,6 +4,9 @@ The driver contract (__spark_entry__.py) wants two dicts:
   queries() -> {name: fn(spark, sf_dir) -> DataFrame}
   oracle_sql() -> {name: ANSI SQL for DuckDB over the same tables}
 
+The registry keeps no per-session state: ``queries()`` hands out the plan
+functions themselves, and every call builds a fresh DataFrame.
+
 Column names must match exactly between the two (the driver sorts columns by
 name before value-hashing), so every computed column is aliased identically
 on both sides.  Aggregates over double columns are rounded (or cast to
@@ -43,196 +46,18 @@ QueryFn = Callable[["SparkSession", str], "DataFrame"]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Plan cache (prepared-statement analog): the DataFrame a query fn returns
-# is an immutable analyzed logical plan, so re-invoking the same (query,
-# session, sf_dir) can return the SAME object — construction (py4j
-# expression building + Catalyst analysis, measured 0.05–0.5 s per query,
-# persistent across repeats) is paid once.  Keyed weakly on the session so
-# a stopped session's cache dies with it; the _jsc guard catches CPython
-# reusing a stopped session object's identity (same pattern as tables.py).
-_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
 
-
-def _plan_cache(spark: "SparkSession") -> dict:
-    global _PLAN_CACHE
-    if _PLAN_CACHE is None:
-        import weakref
-
-        _PLAN_CACHE = weakref.WeakKeyDictionary()
-    per = _PLAN_CACHE.get(spark)
-    if per is None or getattr(spark.sparkContext, "_jsc", None) is None:
-        per = {}
-        _PLAN_CACHE[spark] = per
-    return per
-
-
-# Persisted-handle ownership (ADVICE r7): a plan_cache=False query's build
-# may take operator-level persists (the scale helpers' ranged copies, dedup
-# candidate frames).  Those register in operators.scale's session ledger;
-# the wrapper below claims each build's slice under (query, sf_dir) and
-# unpersists the PREVIOUS build's slice when the query is rebuilt, so
-# repeated invocation holds at most one build's worth of cached data per
-# query instead of accumulating until clearCache / GC pressure.
-_OWNED_PERSISTS: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
-
-
-def _owned_persists(spark: "SparkSession") -> dict:
-    global _OWNED_PERSISTS
-    if _OWNED_PERSISTS is None:
-        import weakref
-
-        _OWNED_PERSISTS = weakref.WeakKeyDictionary()
-    per = _OWNED_PERSISTS.get(spark)
-    if per is None or getattr(spark.sparkContext, "_jsc", None) is None:
-        per = {}
-        _OWNED_PERSISTS[spark] = per
-    return per
-
-
-class _SupersededPlan:
-    """Poison pill installed as the ``_jdf`` of a superseded build's
-    DataFrame: further use of THAT object (collect/count/show/schema —
-    they all go through ``_jdf``) raises instead of re-executing a plan
-    whose baked partition offsets refer to released data (ADVICE r8:
-    before this, a caller re-executing the old frame after a rebuild
-    resampled repartitionByRange boundaries under stale offsets and got
-    silently wrong ranks).
-
-    SCOPE (ADVICE r9): only the top-level DataFrame the registry
-    returned is poisoned.  A frame DERIVED from it before the rebuild
-    (``df.select(...)``, a child captured by a bench loop) carries its
-    own ``_jdf`` and will still re-execute under the stale baked
-    offsets.  This is accepted: the registry's contract is that callers
-    hold the returned frame and re-invoke the query after any
-    plan_cache=False rebuild; plan-level invalidation of every derived
-    child would require tracking Catalyst plan identity across py4j,
-    which Spark does not expose."""
-
-    def __init__(self, qname: str):
-        object.__setattr__(self, "_qname", qname)
-
-    def __getattr__(self, attr: str):
-        raise RuntimeError(
-            f"stale plan: query {self._qname!r} was rebuilt "
-            "(plan_cache=False) and this DataFrame's baked partition "
-            "offsets refer to released data — re-invoke the query to get "
-            "the current build"
-        )
-
-
-def _rebuild_with_persist_ownership(
-    fn: QueryFn, name: str, spark: "SparkSession", sf_dir: str
-) -> "DataFrame":
-    import weakref
-
-    from steampipe_sqlite_spark.operators.scale import persisted_ledger
-
-    owned = _owned_persists(spark)
-    key = (name, sf_dir)
-    prev_ref, prev_handles = owned.pop(key, (None, ()))
-    for h in prev_handles:
-        try:
-            h.unpersist()
-        except Exception:  # noqa: BLE001 — a stopped session's handles are moot
-            pass
-    # Poison the superseded DataFrame (if a caller still holds it) so
-    # use-after-rebuild fails loudly instead of returning wrong data.
-    prev = prev_ref() if prev_ref is not None else None
-    if prev is not None:
-        prev._jdf = _SupersededPlan(name)
-    ledger = persisted_ledger(spark)
-    # Ownership is claimed by IDENTITY, not positional slice (ADVICE r8):
-    # persisted_ledger prunes dead entries on every access — including
-    # mid-build via persist_tracked — so a positional `before` index can
-    # shift under out-of-band unpersists and claim another owner's handle.
-    # Holding strong refs in `before` also pins ids against CPython reuse
-    # for the duration of the build.
-    before = list(ledger)
-    before_ids = {id(h) for h in before}
-    try:
-        df = fn(spark, sf_dir)
-    except BaseException:
-        # a failed build's partial persists are useless — release them NOW
-        # instead of leaking them past every future claim (review r8:
-        # without this, each failed rebuild in a heap-constrained session
-        # permanently accumulated cached RDDs)
-        for h in ledger:
-            if id(h) not in before_ids:
-                try:
-                    h.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
-        ledger[:] = [h for h in ledger if id(h) in before_ids]
-        raise
-    # transfer ownership of everything this build persisted
-    claimed = [h for h in ledger if id(h) not in before_ids]
-    owned[key] = (weakref.ref(df), claimed)
-    ledger[:] = [h for h in ledger if id(h) in before_ids]
-    return df
-
-
-def invalidate_plan_cache(spark: "SparkSession", sf_dir: str) -> None:
-    """Drop every cached (query, sf_dir) plan for this session — called by
-    tables._invalidate_session_table when a table's layout changes
-    (optimize_layout / drop_layout), so the next invocation re-plans over
-    the new layout instead of serving a plan analyzed against the old one.
-    The dropped DataFrames stay valid (the old layout's data is correct);
-    no poisoning needed.  Abspath-insensitive: cache keys carry the
-    caller's sf_dir spelling, the layout registry normalizes — both must
-    match."""
-    import os
-
-    ap = os.path.abspath(sf_dir)
-    per = _plan_cache(spark)
-    for key in [k for k in per if os.path.abspath(k[1]) == ap]:
-        per.pop(key, None)
-
-
-def query(
-    name: str, oracle: str | None = None, plan_cache: bool = True
-) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query; ``oracle=None`` marks a non-SQL-expressible op
-    (driver falls back to a rows-only check).
-
-    ``plan_cache=False`` rebuilds the DataFrame on EVERY call.  Required
-    for queries built on operators/scale's distributed helpers: those bake
-    per-partition offsets (computed from a persisted range shuffle) into
-    plan literals, so a cached DataFrame re-executed after
-    ``spark.catalog.clearCache()`` would resample partition boundaries
-    under stale offsets and return silently wrong ranks.  Rebuilding
-    recomputes offsets from a fresh persist, making cache clears safe.
-    Each rebuild's operator-level persists are claimed from the
-    operators.scale ledger and the PREVIOUS build's are unpersisted
-    (``_rebuild_with_persist_ownership``), so repeated invocation holds
-    at most one build's worth of cached data per query — the r7
-    accumulate-until-GC-pressure class is closed; the previous plan
-    object is dead after a rebuild (its baked offsets refer to
-    released data)."""
+    (driver falls back to a rows-only check)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-
-        def cached(spark: "SparkSession", sf_dir: str) -> "DataFrame":
-            if not plan_cache:
-                return _rebuild_with_persist_ownership(fn, name, spark, sf_dir)
-            per = _plan_cache(spark)
-            key = (name, sf_dir)
-            df = per.get(key)
-            if df is None:
-                df = fn(spark, sf_dir)
-                per[key] = df
-            return df
-
-        cached.__name__ = getattr(fn, "__name__", name)
-        cached.__doc__ = fn.__doc__
-        cached.__wrapped__ = fn
-        cached.__plan_cache__ = plan_cache  # introspectable: tests enforce
-        # that distributed-helper queries registered plan_cache=False
-        QUERIES[name] = cached
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        return cached
+        return fn
 
     return deco
 

@@ -283,7 +283,6 @@ SELECT c_custkey, NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS quartile
 FROM customer
 ORDER BY c_custkey
 """,
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
 )
 def win_ntile_q(spark, sf_dir):
     """NTILE over a near-unique global order — the naive form is a
@@ -326,7 +325,6 @@ def win_ntile_q(spark, sf_dir):
 # WindowExec: the scale path for global sequence numbers.
 @query(
     "win_global_rownum_scale",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 SELECT o_orderkey, o_totalprice,
        ROW_NUMBER() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn
@@ -984,7 +982,6 @@ ORDER BY ALL
 
 @query(
     "stats_equidepth_bins",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 WITH ranked AS (
   SELECT o_totalprice,
@@ -1041,7 +1038,6 @@ def stats_equidepth_bins(spark, sf_dir):
 
 @query(
     "rfm_segmentation",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 WITH per_cust AS (
   SELECT o_custkey,
@@ -1111,11 +1107,9 @@ def rfm_segmentation(spark, sf_dir):
     # materializes it, so an unpersisted `anchored` ran the orders
     # scan+groupBy (and the broadcast anchor's second orders scan) twice
     # before any ranking happened.  Customer-grain state, same size class
-    # as the ranked partitions the helper itself persists.  Measured
+    # as the ranked partitions the helper itself checkpoints.  Measured
     # 2.59 s -> 1.95 s warm at sf0.1, identical output.
-    from steampipe_sqlite_spark.operators.scale import persist_tracked
-
-    anchored = persist_tracked(anchored)
+    anchored = anchored.persist()
     d1 = distributed_row_number(
         anchored, [F.col("recency_days"), F.col("o_custkey")], name="_rn_r"
     )
@@ -1192,9 +1186,7 @@ def market_basket_pairs(spark, sf_dir):
     # (plans/r15/market_basket_pairs_{before,after}.txt).  Two longs per
     # distinct (order, part) row — bounded within-query state, dropped by
     # clearCache between bench runs.
-    from steampipe_sqlite_spark.operators.scale import persist_tracked
-
-    lines = persist_tracked(li.select("l_orderkey", "l_partkey").distinct())
+    lines = li.select("l_orderkey", "l_partkey").distinct().persist()
     a, b = lines.alias("a"), lines.alias("b")
     pair = (
         a.join(
@@ -1252,7 +1244,6 @@ _AUC_DEN = "(2 * npos * (n - npos))"
 
 @query(
     "eval_auc_mann_whitney",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle=f"""
 WITH lab AS (
   SELECT value AS s,
@@ -1328,7 +1319,6 @@ def eval_auc_mann_whitney(spark, sf_dir):
 
 @query(
     "stats_gini_spend",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle=f"""
 WITH per_cust AS (
   SELECT o_custkey,
@@ -1414,7 +1404,6 @@ sql_query(
 
 @query(
     "stats_pareto_topdecile",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle=f"""
 WITH per_cust AS (
   SELECT o_custkey,

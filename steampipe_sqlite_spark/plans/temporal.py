@@ -781,7 +781,6 @@ def user_activity_streaks(spark, sf_dir):
 
 @query(
     "funnel_latency_stats",
-    plan_cache=False,  # bakes distributed-helper offsets; see registry.query
     oracle="""
 WITH firsts AS (
   SELECT user_id,

@@ -750,15 +750,6 @@ def _invalidate_session_table(spark: SparkSession, sf_dir: str, table: str) -> N
         state["tables"].pop(key, None)
     # force re-registration of temp views so spark.sql() sees the change
     state.pop("views", None)
-    # the query registry caches one DataFrame per (query, sf_dir) per
-    # session — those plans were analyzed against the OLD layout and would
-    # keep serving it (still-correct data, but the exchange-free plan the
-    # layout was deployed for never appears); drop them so the next call
-    # re-plans over the new layout.  Lazy import: registry imports tables
-    # at call time, so importing it here at call time closes no cycle.
-    from steampipe_sqlite_spark.plans import registry as _registry
-
-    _registry.invalidate_plan_cache(spark, sf_dir)
 
 
 def _layout_table_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:

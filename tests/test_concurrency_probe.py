@@ -15,7 +15,7 @@ def test_probe_replays_registered_queries_concurrently():
     from tools import concurrency_probe as P
 
     src = inspect.getsource(P.run_arm)
-    assert "tpch_q3" in src and "tpch_q6" in src and "__wrapped__" in src
+    assert "tpch_q3" in src and "tpch_q6" in src
     assert "threading.Thread" in src
 
 

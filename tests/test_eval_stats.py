@@ -659,9 +659,9 @@ def test_degenerate_inputs_yield_null_not_crash(spark, tmp_path):
     from steampipe_sqlite_spark.plans.registry import collect
 
     q, _ = collect()
-    [auc] = q["eval_auc_mann_whitney"].__wrapped__(spark, str(d)).collect()
+    [auc] = q["eval_auc_mann_whitney"](spark, str(d)).collect()
     assert auc.npos == 0 and auc.auc_ppm is None
-    [ks] = q["stats_ks_lengths"].__wrapped__(spark, str(d)).collect()
+    [ks] = q["stats_ks_lengths"](spark, str(d)).collect()
     assert ks.n2 == 0 and ks.d_ppm is None and ks.d_num == 0
 
 

@@ -356,7 +356,7 @@ def test_partitioned_layout_reaches_registered_queries(spark, layout_root):
     from steampipe_sqlite_spark.plans.registry import collect
 
     q, _ = collect()
-    fn = getattr(q["join_asof_events"], "__wrapped__", q["join_asof_events"])
+    fn = q["join_asof_events"]
     base = {tuple(r) for r in fn(spark, SF_DIR).collect()}
     T.optimize_layout(spark, SF_DIR, "events", partition_by="event_type")
     try:

@@ -210,12 +210,12 @@ def test_aqe_parity_on_representative_queries(spark, queries):
     names = ["tpch_q5", "win_running_sum", "dedup_exact"]
     baseline = {}
     for n in names:
-        fn = getattr(queries[n], "__wrapped__", queries[n])
+        fn = queries[n]
         baseline[n] = sorted(map(tuple, fn(spark, SF_DIR).collect()))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try:
         for n in names:
-            fn = getattr(queries[n], "__wrapped__", queries[n])
+            fn = queries[n]
             got = sorted(map(tuple, fn(spark, SF_DIR).collect()))
             assert got == baseline[n], f"AQE changed {n}'s result"
     finally:

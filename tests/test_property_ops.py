@@ -553,7 +553,7 @@ def test_transition_matrix_deterministic_under_ts_ties(spark, tmp_path_factory, 
     q, _ = collect()
     got = {
         (r.src_event, r.dst_event): (r.n, r.row_total, r.share_ppm)
-        for r in q["events_transition_matrix"].__wrapped__(spark, str(d)).collect()
+        for r in q["events_transition_matrix"](spark, str(d)).collect()
     }
     want = {
         (a, b): (n, row_tot[a], n * 1000000 // row_tot[a])
@@ -591,7 +591,7 @@ def test_ks_statistic_property(spark, tmp_path_factory, s1, s2):
         for v in set(s1) | set(s2)
     )
     q, _ = collect()
-    [row] = q["stats_ks_lengths"].__wrapped__(spark, str(d)).collect()
+    [row] = q["stats_ks_lengths"](spark, str(d)).collect()
     assert (row.n1, row.n2, row.d_num) == (n1, n2, d_num)
     assert row.d_ppm == d_num * 1000000 // (n1 * n2)
     if sorted(s1) == sorted(s2):

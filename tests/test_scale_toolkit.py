@@ -24,6 +24,12 @@ def executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _shuffled_counts(spark):
+    """~20k rows of a hash-aggregated (shuffled) input for the held-frame
+    tests: many rank ties on ``count``, broken by ``k``."""
+    return spark.range(400_000).selectExpr("id % 20011 AS k", "id").groupBy("k").count()
+
+
 def test_bucketed_join_is_shuffle_free(spark):
     import shutil
 
@@ -304,9 +310,11 @@ class TestDistributedRowNumber:
         df = spark.range(0, 5000).selectExpr("id", "id % 97 AS v")
         got = distributed_row_number(df, [F.col("v"), F.col("id")], num_partitions=8)
         # the work is spread: the pre-offset data really lives in >1
-        # partition (the empty-OVER window would collapse to exactly 1)
+        # partition (the empty-OVER window would collapse to exactly 1) —
+        # the baked offsets cover all 8 range partitions of the
+        # checkpointed copy
         plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "rangepartitioning" in plan
+        assert "keys: [0,1,2,3,4,5,6,7]" in plan
         assert "SinglePartition" not in plan
         # and rn is a correct total sequence
         rns = [r.rn for r in got.orderBy("rn").collect()]
@@ -375,92 +383,25 @@ class TestDistributedRowNumber:
         with pytest.raises(ValueError, match="rn"):
             distributed_row_number(df_name, ["id"], name="rn", num_partitions=2)
 
-    def test_persist_handle_released(self, spark):
-        """The ranged intermediate must expose its owner handle so callers
-        can reclaim cache memory once done (ADVICE r3: persist without a
-        cleanup path leaks for the session lifetime)."""
-        from pyspark.sql import functions as F
-
+    def test_held_frame_survives_clear_cache(self, spark):
+        """A held result read again after ``clearCache()`` must rank
+        exactly as before.  Each read is a projection of the held frame,
+        so Spark plans it afresh: a persisted range copy dropped by the
+        clear would be recomputed with re-sampled boundaries over this
+        shuffled input, moving rows across partitions under the offsets
+        baked from the first run."""
         from steampipe_sqlite_spark.operators.scale import distributed_row_number
 
-        df = spark.range(0, 1000).selectExpr("id", "id % 7 AS v")
-        got = distributed_row_number(df, [F.col("v"), F.col("id")], num_partitions=4)
-        got.collect()
-        handle = got._sgs_persisted
-        assert handle.storageLevel.useMemory
-        handle.unpersist(blocking=True)
-        assert not handle.storageLevel.useMemory
-
-
-class TestHelperQueriesBypassPlanCache:
-    """Queries built on the distributed helpers bake partition offsets
-    (computed from a persisted range shuffle) into plan literals, so a
-    registry-CACHED DataFrame re-executed after clearCache would resample
-    boundaries under stale offsets — silently wrong ranks.  Those queries
-    register with plan_cache=False: every call rebuilds, which recomputes
-    offsets from a fresh persist and makes cache clears safe."""
-
-    def test_helper_query_rebuilds_and_survives_clear(self, spark):
-        from steampipe_sqlite_spark.plans.registry import collect
-
-        queries, _ = collect()
-        sf = "/root/testdata/sf0.001"
-        a = queries["stats_gini_spend"](spark, sf)
-        first = a.collect()
-        spark.catalog.clearCache()
-        b = queries["stats_gini_spend"](spark, sf)
-        assert a is not b, "helper-based query must not return a cached plan"
-        assert b.collect() == first
-        # a plain query stays plan-cached (the perf contract is unchanged)
-        c = queries["tpch_q6"](spark, sf)
-        assert queries["tpch_q6"](spark, sf) is c
-
-    def test_rebuild_releases_previous_persists(self, spark):
-        """ADVICE r7 / VERDICT r7 #3: re-invoking a plan_cache=False query
-        must NOT accumulate persisted RDDs — the registry claims each
-        build's operator persists (operators.scale ledger) and unpersists
-        the previous build's when rebuilding.  rfm_segmentation is the
-        worst case: three CHAINED distributed_row_number calls = 3 ranged
-        persists per build."""
-        from steampipe_sqlite_spark.plans.registry import collect
-
-        queries, _ = collect()
-        sf = "/root/testdata/sf0.001"
-        q = queries["rfm_segmentation"]
-        assert not getattr(q, "__plan_cache__", True)
-        jsc = spark.sparkContext._jsc
-
-        q(spark, sf).collect()
-        after_first = jsc.getPersistentRDDs().size()
-        for _ in range(3):
-            q(spark, sf).collect()
-        after_repeats = jsc.getPersistentRDDs().size()
-        assert after_repeats <= after_first, (
-            f"persisted RDDs grew across rebuilds: {after_first} -> "
-            f"{after_repeats} (previous build's handles not released)"
+        df = _shuffled_counts(spark)
+        n = df.count()
+        got = distributed_row_number(
+            df, [F.col("count"), F.col("k")], num_partitions=4
         )
-
-    def test_chained_helpers_carry_all_owner_handles(self, spark):
-        """A helper built on another helper's result must expose EVERY
-        upstream persisted handle (_sgs_persisted_all), so releasing the
-        final frame reclaims the whole chain (ADVICE r7: rfm's d1/d2
-        intermediates leaked when only the last handle survived)."""
-        from pyspark.sql import functions as F
-
-        from steampipe_sqlite_spark.operators.scale import distributed_row_number
-
-        df = spark.range(0, 2000).selectExpr("id", "id % 13 AS v")
-        d1 = distributed_row_number(df, [F.col("v"), F.col("id")], name="r1",
-                                    num_partitions=4)
-        d2 = distributed_row_number(d1, [F.col("id")], name="r2",
-                                    num_partitions=4)
-        d2.collect()
-        handles = d2._sgs_persisted_all
-        assert len(handles) == 2
-        assert all(h.storageLevel.useMemory for h in handles)
-        for h in handles:
-            h.unpersist(blocking=True)
-        assert all(not h.storageLevel.useMemory for h in handles)
+        first = sorted(r.rn for r in got.select("rn").collect())
+        spark.catalog.clearCache()
+        second = sorted(r.rn for r in got.select("rn").collect())
+        assert first == list(range(1, n + 1))
+        assert second == list(range(1, n + 1))
 
 
 class TestDistributedRunningSum:
@@ -487,9 +428,28 @@ class TestDistributedRunningSum:
         df = spark.range(0, 5000).selectExpr("id", "id % 13 + 1 AS w")
         got = distributed_running_sum(df, "w", ["id"], num_partitions=8)
         plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "rangepartitioning" in plan
+        assert "keys: [0,1,2,3,4,5,6,7]" in plan
         assert "SinglePartition" not in plan
-        got._sgs_persisted.unpersist(blocking=True)
+
+    def test_held_frame_survives_clear_cache(self, spark):
+        """Running-sum twin of the row_number held-frame test: the same
+        held frame collected before and after ``clearCache()`` must carry
+        the exact global prefix sums both times."""
+        from steampipe_sqlite_spark.operators.scale import distributed_running_sum
+
+        df = _shuffled_counts(spark)
+        acc, expected = 0, {}
+        for r in sorted(df.collect(), key=lambda r: (r["count"], r.k)):
+            acc += r["count"]
+            expected[r.k] = acc
+        got = distributed_running_sum(
+            df, "count", [F.col("count"), F.col("k")], num_partitions=4
+        )
+        first = {r.k: r.cum for r in got.select("k", "cum").collect()}
+        spark.catalog.clearCache()
+        second = {r.k: r.cum for r in got.select("k", "cum").collect()}
+        assert first == expected
+        assert second == expected
 
 
 def test_gapfill_locf_semantics(spark):
@@ -577,142 +537,3 @@ class TestZorder:
         )
         assert out.columns == ["id", "v", "_z"]
         assert out.count() == 10
-
-
-def test_every_distributed_helper_query_bypasses_plan_cache():
-    """Enforcement for the silent-wrong-ranks class: ANY corpus query whose
-    implementation uses the distributed helpers (baked range-shuffle
-    offsets) must register plan_cache=False — a cached plan re-executed
-    after clearCache resamples boundaries under stale offsets.  Static
-    source scan so a future adopter can't forget the flag."""
-    import inspect
-    import sys
-
-    from steampipe_sqlite_spark.plans.registry import collect
-
-    queries, _ = collect()
-
-    # Transitive taint (ADVICE r7): a query reaching the helpers THROUGH a
-    # wrapper in operators/ or plans/ must be flagged too, or a future
-    # indirection would evade the guard and reintroduce the stale-offset
-    # class.  Fixed-point over every package-module function: any function
-    # whose source mentions a tainted name becomes tainted itself.
-    tainted = {"distributed_row_number", "distributed_running_sum"}
-    # Source map keyed by (module, qualname), NOT bare attribute name
-    # (ADVICE r8): two same-named functions in different modules must not
-    # overwrite each other's source — a tainted wrapper shadowed by an
-    # identically named untainted function elsewhere would escape taint
-    # and let a helper-using query evade the plan_cache=False guard.
-    # Taint membership stays a set of BARE names because the propagation
-    # test is textual (call sites mention the bare name); a bare-name
-    # collision can only over-taint, which is safe for this guard.
-    pkg_fns = {}
-    for mod_name, mod in list(sys.modules.items()):
-        if not mod_name.startswith("steampipe_sqlite_spark"):
-            continue
-        for attr_name, attr in vars(mod).items():
-            if (
-                inspect.isfunction(attr)
-                and getattr(attr, "__module__", "").startswith("steampipe_sqlite_spark")
-                and attr_name not in tainted
-            ):
-                try:
-                    pkg_fns[(attr.__module__, attr.__qualname__)] = (
-                        inspect.getsource(attr)
-                    )
-                except (OSError, TypeError):
-                    pass
-    changed = True
-    while changed:
-        changed = False
-        for (_mod, qual), src in pkg_fns.items():
-            bare = qual.rsplit(".", 1)[-1]
-            if bare not in tainted and any(t in src for t in tainted):
-                tainted.add(bare)
-                changed = True
-
-    offenders = []
-    for name, fn in queries.items():
-        src = inspect.getsource(getattr(fn, "__wrapped__", fn))
-        if any(t in src for t in tainted) and getattr(fn, "__plan_cache__", True):
-            offenders.append(name)
-    assert not offenders, f"helper queries missing plan_cache=False: {offenders}"
-    # and the flag is actually in use somewhere (guards against the scan
-    # silently matching nothing after a refactor)
-    assert sum(
-        1 for fn in queries.values() if not getattr(fn, "__plan_cache__", True)
-    ) >= 12
-
-
-def test_failed_rebuild_releases_partial_persists(spark):
-    """A plan_cache=False build that RAISES mid-way must release the
-    persists it already took (review r8: without this, each failed
-    rebuild in a heap-constrained session permanently accumulated cached
-    RDDs that every future ledger slice skipped past)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from steampipe_sqlite_spark.operators.scale import (
-        distributed_row_number,
-        persisted_ledger,
-    )
-    from steampipe_sqlite_spark.plans.registry import (
-        _rebuild_with_persist_ownership,
-    )
-
-    def exploding_build(spark_, sf_dir_):
-        df = spark_.range(0, 500).selectExpr("id", "id % 7 AS v")
-        d1 = distributed_row_number(df, [F.col("v"), F.col("id")],
-                                    num_partitions=2)
-        d1.count()  # materialize the persist
-        raise RuntimeError("mid-build failure after one persist")
-
-    before_led = len(persisted_ledger(spark))
-    before_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
-    with pytest.raises(RuntimeError, match="mid-build"):
-        _rebuild_with_persist_ownership(
-            exploding_build, "exploding_test_query", spark, "/tmp"
-        )
-    assert len(persisted_ledger(spark)) == before_led, (
-        "failed build left orphans in the ledger"
-    )
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before_rdds, (
-        "failed build left RDDs persisted"
-    )
-
-
-def test_rebuild_poisons_superseded_dataframe(spark):
-    """After a plan_cache=False rebuild, the PREVIOUS build's DataFrame
-    must fail loudly on any use (ADVICE r8): its baked range-shuffle
-    offsets refer to released persisted data, so re-executing it would
-    resample partition boundaries under stale offsets and return silently
-    wrong ranks.  The registry installs a raising _jdf sentinel."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from steampipe_sqlite_spark.operators.scale import distributed_row_number
-    from steampipe_sqlite_spark.plans.registry import (
-        _rebuild_with_persist_ownership,
-    )
-
-    def build(spark_, sf_dir_):
-        df = spark_.range(0, 300).selectExpr("id", "id % 5 AS v")
-        return distributed_row_number(df, [F.col("v"), F.col("id")],
-                                      num_partitions=2)
-
-    first = _rebuild_with_persist_ownership(build, "poison_test_q", spark, "/tmp")
-    assert first.count() == 300  # live before the rebuild
-    second = _rebuild_with_persist_ownership(build, "poison_test_q", spark, "/tmp")
-    with pytest.raises(RuntimeError, match="stale plan"):
-        first.count()
-    assert second.count() == 300  # the current build is unaffected
-    # identity-claim sanity: the rebuild released the first build's persist
-    # (at most one build's worth of cached handles per query key)
-    from steampipe_sqlite_spark.plans.registry import _owned_persists
-
-    ref, handles = _owned_persists(spark)[("poison_test_q", "/tmp")]
-    assert ref() is second and len(handles) == 1
-    # cleanup for neighboring leak-sensitive tests
-    for h in handles:
-        h.unpersist()
-    del _owned_persists(spark)[("poison_test_q", "/tmp")]

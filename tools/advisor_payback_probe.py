@@ -70,7 +70,7 @@ def main() -> None:
     queries, _ = collect()
 
     def q(name):
-        return getattr(queries[name], "__wrapped__", queries[name])
+        return queries[name]
 
     # events range-filter trio over the (value, ts) mix — the Z-order
     # evidence; tiny absolute wall next to q3/q18, which is the point

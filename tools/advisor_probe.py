@@ -97,7 +97,7 @@ def main() -> None:
     flat = {}
     flat_pds = {}
     for name in PROBE_QUERIES:
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        fn = queries[name]
         df = fn(spark, sf_dir)
         flat_pds[name] = df.toPandas()  # warm
         flat[name] = {
@@ -107,7 +107,7 @@ def main() -> None:
 
     # ---- the advisor reads the SAME plans and picks the layout ----
     workload = {
-        n: getattr(queries[n], "__wrapped__", queries[n])(spark, sf_dir)
+        n: queries[n](spark, sf_dir)
         for n in PROBE_QUERIES
     }
     recs = advise_layout(spark, sf_dir, workload)
@@ -130,7 +130,7 @@ def main() -> None:
     advised = {}
     equal = {}
     for name in PROBE_QUERIES:
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        fn = queries[name]
         df = fn(spark, sf_dir)
         pd_adv = df.toPandas()  # warm over the discovered layout
         advised[name] = {

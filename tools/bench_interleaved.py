@@ -65,7 +65,7 @@ def main() -> None:
         )
 
     def spark_run(name: str) -> float:
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        fn = queries[name]
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         fn(spark, sf_dir).toPandas()

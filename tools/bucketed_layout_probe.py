@@ -161,7 +161,7 @@ def main() -> None:
     flat = {}
     flat_pds = {}
     for name in PROBE_QUERIES:
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        fn = queries[name]
         flat_df = fn(spark, sf_dir)
         flat_pds[name] = flat_df.toPandas()  # warm: codegen + page cache
         flat_s = _best_of(lambda: fn(spark, sf_dir).toPandas())
@@ -202,7 +202,7 @@ def main() -> None:
         if engine_path:
             # the registered query fn itself — discovery re-registers the
             # views over the deployed layout; no view surgery here
-            fn = getattr(queries[name], "__wrapped__", queries[name])
+            fn = queries[name]
             buck_df = fn(spark, sf_dir)
             buck_pd = buck_df.toPandas()  # warm
             buck_s = _best_of(lambda: fn(spark, sf_dir).toPandas())

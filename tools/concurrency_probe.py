@@ -96,8 +96,8 @@ def run_arm(mode: str, x100: str, per_thread: int) -> dict:
     os.environ["SPARK_GRAFT_SF_DIR"] = x100  # size the session for the heavy side
     spark = get_spark(f"concprobe-{mode}")
     queries, _ = collect()
-    q3 = getattr(queries["tpch_q3"], "__wrapped__", queries["tpch_q3"])
-    q6 = getattr(queries["tpch_q6"], "__wrapped__", queries["tpch_q6"])
+    q3 = queries["tpch_q3"]
+    q6 = queries["tpch_q6"]
 
     # isolated tiny baseline in THIS session (warm codegen first)
     q6(spark, SF_TINY).collect()

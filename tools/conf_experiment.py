@@ -43,7 +43,7 @@ def main() -> None:
 
     per = {}
     for name in HEADLINE:
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        fn = queries[name]
         best = float("inf")
         for _ in range(3):
             spark.catalog.clearCache()

@@ -91,7 +91,7 @@ def main() -> None:
         stop_spark()
         spark = get_spark("elasticity", cpus=cpus)
         for name in QUERIES:
-            fn = getattr(queries[name], "__wrapped__", queries[name])
+            fn = queries[name]
             fn(spark, sf_dir).toPandas()  # warm: codegen + page cache
             best = min(
                 _timed(lambda: fn(spark, sf_dir).toPandas()) for _ in range(3)

@@ -7,7 +7,9 @@ registry: clear caches, build the DataFrame, run it once to warm
 (construction + codegen + page cache), then time ``toPandas()`` once —
 the same action the driver's correctness gate pays, so walls here are
 comparable round-over-round.  The session recycles every 50 queries
-(bounded executor memory; same schedule the oracle sweeps use).
+(bounded executor memory; same schedule the oracle sweeps use) and after
+every query that raises, so one wedged session cannot turn the rest of
+its 50-query block into errors.
 
 Co-tenant noise on this box inflates single readings 2–20x in bursts
 (BASELINE.md), so this pass is a WALL FINDER, not an A/B instrument:
@@ -16,7 +18,9 @@ session before it is called a regression.
 
 Usage: python tools/corpus_warm_pass.py [sf_dir] [out.json] [query ...]
 Prints one JSON line {"metric": "corpus_warm_pass", "sf": ..., "walls":
-{name: sec desc-sorted}} and writes the full dict to out.json if given.
+{name: sec desc-sorted, top 40}, "errors": [names that raised]} and
+writes the full dict to out.json if given.  An errored query's wall is
+-1.0, which sorts last and falls out of the top 40 — read "errors".
 With explicit query names the pass times ONLY those, best-of-3 (the
 outlier re-measure mode: this box's co-tenant bursts inflate single
 readings up to ~17x — measured in-process on emb_neardup_cosine this
@@ -26,6 +30,7 @@ single-shot wall is a finder, never an attribution).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -50,7 +55,7 @@ def main() -> None:
             if spark is not None:
                 spark.stop()
             spark = get_spark()
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        fn = queries[name]
         spark.catalog.clearCache()
         try:
             spark.sparkContext.setJobDescription(f"warm-pass: {name}")
@@ -61,16 +66,20 @@ def main() -> None:
                 fn(spark, sf_dir).toPandas()  # timed: the driver-gate action
                 best = min(best, time.perf_counter() - t0)
             walls[name] = round(best, 3)
+            spark.sparkContext.setJobDescription(None)
         except Exception as e:  # keep sweeping; a red here is a bug report
             walls[name] = -1.0
             print(f"ERROR {name}: {e}", file=sys.stderr)
-        finally:
-            spark.sparkContext.setJobDescription(None)
+            # the failure may have wedged the session: start a fresh one
+            with contextlib.suppress(Exception):
+                spark.stop()
+            spark = None
         print(f"{i + 1}/{len(names)} {name} {walls[name]}", file=sys.stderr)
     if spark is not None:
         spark.stop()
     ordered = dict(sorted(walls.items(), key=lambda kv: -kv[1]))
-    line = {"metric": "corpus_warm_pass", "sf": sf_dir, "walls": ordered}
+    errors = [n for n, w in walls.items() if w < 0]
+    line = {"metric": "corpus_warm_pass", "sf": sf_dir, "walls": ordered, "errors": errors}
     if out_path:
         with open(out_path, "w") as f:
             json.dump(line, f, indent=1)

@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from steampipe_sqlite_spark.operators import dedup as D
 from steampipe_sqlite_spark.operators.dedup import _band_projection, _hash64, _spread
-from steampipe_sqlite_spark.operators.scale import persist_tracked
 from steampipe_sqlite_spark.session import get_spark
 from steampipe_sqlite_spark.tables import load_table
 
@@ -87,9 +86,9 @@ def chain_minhash_signatures_oph(df, text_col, id_col, num_hashes, shingle_k, ha
 
 def chain_minhash_lsh_pairs(df, text_col, id_col, num_hashes, bands, shingle_k,
                             threshold, hash_family):
-    sigs = persist_tracked(chain_minhash_signatures_oph(
+    sigs = chain_minhash_signatures_oph(
         df, text_col, id_col, num_hashes, shingle_k, hash_family
-    ))
+    ).persist()
     banded = sigs.select(
         "id",
         F.expr(f"explode(array({_band_projection(num_hashes, bands, hash_family)})) as bk"),
@@ -151,9 +150,7 @@ def chain_simhash_fingerprints(df, text_col, id_col, hash_family):
 
 
 def chain_simhash_pairs(df, text_col, id_col, max_hamming, hash_family):
-    fp = persist_tracked(
-        chain_simhash_fingerprints(df, text_col, id_col, hash_family=hash_family)
-    )
+    fp = chain_simhash_fingerprints(df, text_col, id_col, hash_family=hash_family).persist()
     bw = 16 if hash_family == "xxhash64" else 15
     bands = fp.select(
         "id",
@@ -215,7 +212,7 @@ def main() -> None:
     def run(build) -> float:
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        pairs = persist_tracked(build())
+        pairs = build().persist()
         pairs.orderBy("id_a", "id_b").toPandas()
         return time.perf_counter() - t0
 

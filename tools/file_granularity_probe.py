@@ -93,7 +93,7 @@ def main() -> None:
     stop_spark()
 
     queries, _ = collect()
-    q1 = getattr(queries["tpch_q1"], "__wrapped__", queries["tpch_q1"])
+    q1 = queries["tpch_q1"]
 
     fingerprints = set()
     for g in grans:

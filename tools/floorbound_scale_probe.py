@@ -251,7 +251,7 @@ def main() -> None:
                 f"read_parquet('{sf_dir}/{t}.parquet/*.parquet')"
             )
         for name in names:
-            fn = getattr(queries[name], "__wrapped__", queries[name])
+            fn = queries[name]
             spark.catalog.clearCache()
             fn(spark, sf_dir).toPandas()  # warm (codegen + page cache)
             con.execute(oracles[name]).df()

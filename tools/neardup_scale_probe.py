@@ -294,11 +294,7 @@ def run_fuzzy(reps: int) -> dict:
     stop_spark()
     spark = get_spark("neardup")
     queries, oracles = collect()
-    fn = getattr(
-        queries["join_fuzzy_blocked_prefix"],
-        "__wrapped__",
-        queries["join_fuzzy_blocked_prefix"],
-    )
+    fn = queries["join_fuzzy_blocked_prefix"]
     df = fn(spark, sf_dir)
     df.count()  # warm
     best_s = float("inf")

@@ -97,8 +97,7 @@ def main() -> None:
     from steampipe_sqlite_spark.plans.registry import QUERIES, collect
 
     collect()
-    q = QUERIES["graph_pagerank"]
-    fn = getattr(q, "__wrapped__", q)
+    fn = QUERIES["graph_pagerank"]
 
     # NOTE: the A/B times the DECLARED query fn (arm r15) vs the same fn
     # with pagerank_nano monkeypatched to the r14 form (arm r14) — both

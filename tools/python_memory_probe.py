@@ -134,9 +134,7 @@ def main() -> None:
     stop_spark()
 
     queries, _ = collect()
-    blas = getattr(
-        queries["knn_cosine_blas"], "__wrapped__", queries["knn_cosine_blas"]
-    )
+    blas = queries["knn_cosine_blas"]
 
     def run_blas(sf_dir):
         return lambda spark: len(blas(spark, sf_dir).collect())

@@ -51,10 +51,7 @@ def _sentinel(sf_dir: str) -> float:
 
 def _overlapped(spark, sf_dir):
     """Probe-local overlapped form of rfm_segmentation (same math)."""
-    from steampipe_sqlite_spark.operators.scale import (
-        distributed_row_number,
-        persist_tracked,
-    )
+    from steampipe_sqlite_spark.operators.scale import distributed_row_number
     from steampipe_sqlite_spark.plans.registry import presentation_sort
     from steampipe_sqlite_spark.plans.relational import load_table
 
@@ -67,14 +64,12 @@ def _overlapped(spark, sf_dir):
         ).alias("monetary_cents"),
     )
     anchor = orders.agg(F.expr("MAX(CAST(o_orderdate AS DATE))").alias("max_d"))
-    anchored = persist_tracked(
-        per_cust.crossJoin(F.broadcast(anchor)).selectExpr(
-            "o_custkey",
-            "datediff(max_d, last_order) AS recency_days",
-            "freq",
-            "monetary_cents",
-        )
-    )
+    anchored = per_cust.crossJoin(F.broadcast(anchor)).selectExpr(
+        "o_custkey",
+        "datediff(max_d, last_order) AS recency_days",
+        "freq",
+        "monetary_cents",
+    ).persist()
     anchored.count()  # materialize once so the three samplers hit cache
 
     specs = [
@@ -133,9 +128,7 @@ def main() -> None:
     from steampipe_sqlite_spark.session import get_spark
 
     queries, _ = collect()
-    chained_fn = getattr(
-        queries["rfm_segmentation"], "__wrapped__", queries["rfm_segmentation"]
-    )
+    chained_fn = queries["rfm_segmentation"]
     spark = get_spark()
     s_before = _sentinel(sf_dir)
 

@@ -109,10 +109,10 @@ def run_arm(name: str, heap: str, sf_dir: str, reps: int) -> None:
     spark = get_spark(f"spillprobe-{heap}-{name}")
     queries, _ = collect()
     # house measurement convention (core_elasticity/floorbound probes):
-    # bypass the registry's plan-cache wrapper and clear persisted data
+    # rebuild the registered query and clear persisted data
     # between reps — otherwise rep 2 reads an InMemoryRelation and the
     # "best" is a cache hit, not the join/aggregate under test
-    fn = getattr(queries[name], "__wrapped__", queries[name])
+    fn = queries[name]
     best = float("inf")
     fingerprint = None
     for _ in range(reps):

@@ -5,16 +5,14 @@ WindowExec that moves EVERY input row to a single partition ("No
 Partition Defined for Window operation" at runtime): correct, and fatal
 once the window input scales with the corpus (VERDICT r6).  This audit
 walks every corpus query's OPTIMIZED logical plan and reports each
-Window node whose partitionSpec is empty — no query RESULT is collected,
-but note that BUILDING a plan is not free for every query: the
-distributed_* helper queries run their per-partition count/total jobs
-(and persist their range shuffle) at construction time — those names
-are therefore SKIPPED by default and only audited under
-``--include-distributed`` (VERDICT r12 blemish #3),
-plus whether a Limit node bounds its input subtree (a global window over
-an already-top-k'd pool is fine at any scale).
+Window node whose partitionSpec is empty, plus whether a Limit node
+bounds its input subtree (a global window over an already-top-k'd pool
+is fine at any scale).  No query RESULT is collected, but BUILDING a
+plan is not free for every query: the distributed_* helper queries run
+their range-shuffle checkpoint and per-partition count/total jobs at
+construction time, so point the audit at a small sf_dir.
 
-Usage: python tools/window_audit.py [--include-distributed] [sf_dir] [name ...]
+Usage: python tools/window_audit.py [sf_dir] [name ...]
 
 tests/test_plans.py pins the result: every unpartitioned window in the
 corpus must sit over a Limit-bounded or aggregate-bounded input, with
@@ -72,11 +70,7 @@ def unpartitioned_windows(df) -> list[dict]:
     return found
 
 
-def audit(
-    sf_dir: str,
-    names: list[str] | None = None,
-    include_distributed: bool = False,
-) -> dict[str, list[dict]]:
+def audit(sf_dir: str, names: list[str] | None = None) -> dict[str, list[dict]]:
     from steampipe_sqlite_spark.plans.registry import collect
     from steampipe_sqlite_spark.session import get_spark
 
@@ -85,19 +79,6 @@ def audit(
     out: dict[str, list[dict]] = {}
     for name, fn in queries.items():
         if names and name not in names:
-            continue
-        if not getattr(fn, "__plan_cache__", True) and not include_distributed:
-            # plan_cache=False marks the distributed-helper queries whose
-            # plan CONSTRUCTION runs real count/persist jobs — pointing
-            # the audit at a big sf_dir would do data-scale scan work just
-            # to build their plans (VERDICT r12 blemish #3).  Skipped by
-            # default; opt in with --include-distributed (their residual
-            # windows are separately pinned bounded by tests/test_plans).
-            out[name] = [
-                {"node": "plan build runs data jobs (plan_cache=False); "
-                         "--include-distributed to audit",
-                 "skipped": True}
-            ]
             continue
         try:
             hits = unpartitioned_windows(fn(spark, sf_dir))
@@ -111,27 +92,12 @@ def audit(
 
 if __name__ == "__main__":
     args = sys.argv[1:]
-    include_distributed = "--include-distributed" in args
-    args = [a for a in args if a != "--include-distributed"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    names = args[1:] or None
-    result = audit(sf_dir, names, include_distributed=include_distributed)
+    result = audit(sf_dir, args[1:] or None)
     for name, hits in sorted(result.items()):
         for h in hits:
-            if h.get("skipped"):
-                tag = "SKIPPED"
-            else:
-                tag = "bounded" if h["bounded"] else "UNBOUNDED"
+            tag = "bounded" if h["bounded"] else "UNBOUNDED"
             print(f"{tag:9s}  {name}: {h['node'][:140]}")
-    # a skipped entry is NOT a bounded finding — it was not audited at
-    # all; only genuinely audited windows count either way
-    unbounded = {
-        n for n, hs in result.items()
-        if any(not h.get("skipped") and not h["bounded"] for h in hs)
-    }
-    skipped = {
-        n for n, hs in result.items() if all(h.get("skipped") for h in hs)
-    }
-    print(f"\n{len(result) - len(skipped)} queries with global windows "
-          f"({len(skipped)} skipped, not audited); "
+    unbounded = {n for n, hs in result.items() if any(not h["bounded"] for h in hs)}
+    print(f"\n{len(result)} queries with global windows; "
           f"{len(unbounded)} with no Limit bound: {sorted(unbounded)}")

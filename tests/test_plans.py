@@ -2,14 +2,13 @@
 scalable (pushdown, pruning, broadcast, partial agg, codegen, shuffle-free
 map stages) must not regress."""
 
-import contextlib
-import io
 import re
 
 import pytest
 
 from steampipe_sqlite_spark.plans.registry import collect
 from steampipe_sqlite_spark.tables import load_table
+from tools.plan_audit import audit, duplicated, plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,11 +19,17 @@ def queries():
     return q
 
 
-def plan_text(df, mode="simple"):
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
+@pytest.fixture(scope="module")
+def corpus_plans(spark, queries):
+    """{name: PlanAudit(windows, plan)} for every corpus query that builds,
+    each plan built once for all corpus-wide tests below.  Build errors are
+    other tests' job, so a query that raises is simply absent.  Earlier test
+    modules leave cached DataFrames in the shared session (a cached
+    documents scan, for one), and an InMemoryRelation changes the plans
+    built over it, so the walk starts from an empty cache."""
+    spark.catalog.clearCache()
+    built, _ = audit(spark, SF_DIR, queries)
+    return built
 
 
 def test_q6_filters_reach_the_parquet_scan(spark, queries):
@@ -358,28 +363,17 @@ GLOBAL_WINDOW_BOUNDED_OK = {
 }
 
 
-def test_no_unbounded_global_windows_in_corpus(spark, queries):
+def test_no_unbounded_global_windows_in_corpus(corpus_plans):
     """Corpus-wide: any Window node with an empty partitionSpec must sit
     over a Limit-bounded subtree or be on the justified allowlist above.
     Catches the 100 TB single-reducer anti-pattern at plan-build time
     (the five VERDICT-r6 offenders are now routed through the
     distributed_* helpers and must stay that way)."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.window_audit import unpartitioned_windows
-
     offenders = {}
     justified_hits = set()
-    built_ok = set()
-    for name, fn in queries.items():
-        try:
-            hits = unpartitioned_windows(fn(spark, SF_DIR))
-        except Exception:  # noqa: BLE001 — build errors are other tests' job
-            continue
-        built_ok.add(name)
-        unbounded = [h for h in hits if not h["bounded"]]
+    built_ok = set(corpus_plans)
+    for name, a in corpus_plans.items():
+        unbounded = [h for h in a.windows if not h["bounded"]]
         if unbounded:
             if name in GLOBAL_WINDOW_BOUNDED_OK:
                 justified_hits.add(name)
@@ -418,25 +412,20 @@ def test_curation_pipeline_evaluates_scoring_chain_once(spark, queries):
 ROW_UDTF_WITNESS_OK = {"tvf_generate_series"}
 
 
-def test_corpus_global_windows_are_allowlisted(spark, queries):
+def test_corpus_global_windows_are_allowlisted(corpus_plans):
     """PHYSICAL-plan twin of test_no_unbounded_global_windows_in_corpus,
     sharing GLOBAL_WINDOW_BOUNDED_OK: the advisor's detector flags any
     Exchange SinglePartition feeding a Window — the one-task-sorts-the-
-    world shape at 100 TB — so the logical audit (window_audit,
+    world shape at 100 TB — so the logical audit (unpartitioned_windows,
     bounded-subtree aware) and the physical detector must agree on the
     same justified set; anti-rot on entries whose plans stopped
     tripping."""
     from steampipe_sqlite_spark.advisor import _plan_scale_hazards
 
     tripped = set()
-    built_ok = set()
-    for name, fn in queries.items():
-        try:
-            p = plan_text(fn(spark, SF_DIR))
-        except Exception:  # noqa: BLE001 — build errors are other tests' job
-            continue
-        built_ok.add(name)
-        if "single_partition_window" in _plan_scale_hazards(p):
+    built_ok = set(corpus_plans)
+    for name, a in corpus_plans.items():
+        if "single_partition_window" in _plan_scale_hazards(a.plan):
             tripped.add(name)
     unjustified = tripped - GLOBAL_WINDOW_BOUNDED_OK
     assert not unjustified, (
@@ -447,22 +436,17 @@ def test_corpus_global_windows_are_allowlisted(spark, queries):
     assert not stale, f"allowlist entries no longer tripping the detector: {stale}"
 
 
-def test_corpus_has_no_cartesian_or_row_python_stages(spark, queries):
+def test_corpus_has_no_cartesian_or_row_python_stages(corpus_plans):
     """Corpus-wide anti-pattern gate (one plan build per query, sf0.001):
     no CartesianProduct anywhere — a shuffle-cross is never the right
     shape at 100 TB — and no row-at-a-time scalar Python stage
     (BatchEvalPython without the UDTF suffix); Python must enter plans
-    only as Arrow-batched stages.  PLANS.md records the same census for
-    the committed sf0.01 run; this test keeps it true at build time."""
+    only as Arrow-batched stages."""
     cartesian, row_python = {}, {}
     udtf_hits = set()
-    built_ok = set()
-    for name, fn in queries.items():
-        try:
-            p = plan_text(fn(spark, SF_DIR))
-        except Exception:  # noqa: BLE001 — build errors are other tests' job
-            continue
-        built_ok.add(name)
+    built_ok = set(corpus_plans)
+    for name, a in corpus_plans.items():
+        p = a.plan
         if "CartesianProduct" in p:
             cartesian[name] = True
         # match the scalar node, not BatchEvalPythonUDTF
@@ -478,6 +462,47 @@ def test_corpus_has_no_cartesian_or_row_python_stages(spark, queries):
     # anti-rot: the allowlisted witness must still be a UDTF plan
     stale = (ROW_UDTF_WITNESS_OK & built_ok) - udtf_hits
     assert not stale, f"UDTF allowlist entries with no UDTF node left: {stale}"
+
+
+# Plans that evaluate one expensive expression 3 or more times (VERDICT
+# r15 #8: a subtree referenced several times is recomputed per reference).
+# These are the offenders found when the audit was introduced, NOT
+# justified shapes: each is a fix waiting to be made, and leaves this list
+# when its plan stops duplicating (the anti-rot check below).
+DUPLICATED_EXPR_OK = {
+    # the text normalizer chain (lower -> 2x regexp_replace -> split),
+    # re-evaluated once per reference of the token column
+    "dedup_exact_substrings",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "sketch_kmv_source_jaccard",
+    "text_chunk_sliding",
+    "text_decontaminate",
+    "text_decontaminate_bloom",
+    "text_repetition_flags",
+    # the boilerplate-injected text's split, per reference
+    "text_boilerplate_strip",
+    # the fragment-stripped url, nested into every later canonicalization step
+    "dedup_url_canonical",
+    # one Python UDF application evaluated by several plan nodes
+    "join_fuzzy_blocked_prefix",  # ArrowEvalPython _norm
+    "mm_video_neardup_shingles",  # MapInPandas parse
+}
+
+
+def test_corpus_duplicated_expressions_are_allowlisted(corpus_plans):
+    """Corpus-wide: no plan may evaluate the same regexp_replace/split
+    expression, or the same Python UDF application, 3 or more times unless
+    it is on the offender list above; anti-rot on entries that no longer
+    duplicate."""
+    dups = {
+        name: d for name, a in corpus_plans.items() if (d := duplicated(a.plan))
+    }
+    new = {n: sorted(d.values(), reverse=True) for n, d in dups.items()
+           if n not in DUPLICATED_EXPR_OK}
+    assert not new, f"expressions evaluated 3+ times in one plan: {new}"
+    stale = (DUPLICATED_EXPR_OK & set(corpus_plans)) - set(dups)
+    assert not stale, f"allowlist entries with no duplicated expression left: {stale}"
 
 
 def test_optimized_layout_runs_q3_q18_exchange_free_on_orderkey(

@@ -20,6 +20,10 @@ Everything here derives from public knowledge only: the Apache Spark API and
 the reference's observable behavior.
 """
 
+from steampipe_sqlite_spark import zipcache
+
+zipcache.install()  # before anything else: every Spark Python worker imports the package
+
 from steampipe_sqlite_spark.session import get_spark, stop_spark
 from steampipe_sqlite_spark.tables import drop_layout, load_table, optimize_layout, register_views
 

@@ -23,20 +23,24 @@ NUMBERS on it through the full Spark scan path:
 Usage: python tools/paged_scan_probe.py [n_partitions] [n_pages] [page_size] [rps]
 Prints one JSON line.
 
-Committed reading (round 13, local[32], 8 partitions x 50 pages x 200
-rows, rps=100 burst default, quiet window):
+Committed reading (local[4], 4-core box, 8 partitions x 50 pages x 200
+rows, rps=100 burst default; three runs with
+`steampipe_sqlite_spark/zipcache.py`, which stops PySpark's per-task
+`importlib.invalidate_caches()` from re-reading the worker's zip archives,
+interleaved with three runs at the commit before it):
 
-  throughput arm: 400 pages / 80k rows in 0.66-0.85 s -> 470-610
-    pages/s, 94-122k rows/s through SQL->DataSource->token-chain->Arrow
-    (~2 ms protocol cost per page fetch at page_size=200 —
-    fetch-dominated, so real deployments want pages of thousands of
-    rows, not tens)
-  budget arm: 400 calls in 3.8 s across 8 worker processes; peak
-    sliding-1s aggregate 181 <= burst(100) + rps(100) [the same
-    first-second allowance a single-process bucket gives]; sustained
-    rate 78.6 <= 100 rps -> within_budget TRUE.  The multi-process
-    static fair-share (12.5 rps per chain) holds the cluster-wide
-    sustained rate under the configured budget with zero coordination.
+  throughput arm: 400 pages / 80k rows in 0.56-0.72 s -> 555-714
+    pages/s, 111-143k rows/s through SQL->DataSource->token-chain->Arrow
+    (before: 1.18-1.44 s -> 278-339 pages/s; each scan task paid about
+    0.25 s of worker CPU re-reading pyspark.zip and the spark-core jar
+    before the connector ran)
+  budget arm: 400 calls in 6.5-6.6 s across 8 partitions on 4 worker
+    slots; peak sliding-1s aggregate 92-93 <= burst(100) + rps(100);
+    sustained rate 45.3-45.8 <= 100 rps -> within_budget TRUE (before:
+    7.4-7.9 s, peak 90-92, sustained 37.8-40.5).  The static fair share
+    (12.5 rps per chain, 4 chains at a time) holds the cluster-wide
+    sustained rate under the configured budget with zero coordination;
+    faster task starts do not break it.
 """
 
 from __future__ import annotations

@@ -22,6 +22,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from steampipe_sqlite_spark.sources.config import validate_engine_options
 from steampipe_sqlite_spark.sources.connector import DYNAMIC, STATIC, Schema
 from steampipe_sqlite_spark.sources.datasource import (
     FORMAT_NAME,
@@ -53,6 +54,7 @@ class Engine:
         """Load a connector; static mode discovers and registers tables
         immediately (with blank config if none given — the reference sends
         Config:"" for static plugins, register.go:49-69)."""
+        validate_engine_options(config)
         conn = load_connector(connector_class, config)
         alias = alias or conn.name
         schema = conn.get_schema()
@@ -71,12 +73,15 @@ class Engine:
 
     def configure(self, alias: str, config: str) -> None:
         """steampipe_configure_<alias>() analog: update config, refetch
-        schema, drop/recreate views for dynamic connectors."""
+        schema, drop/recreate views for dynamic connectors.  A config that
+        fails validation or schema discovery leaves the previous one
+        serving."""
         state = self._connections[alias]
-        state["config"] = config
+        validate_engine_options(config)
         conn = load_connector(state["class"], config)
         schema = conn.get_schema()
         old_mode = state["schema"].mode if state["schema"] else None
+        state["config"] = config
         state["schema"] = schema
         if schema.mode == DYNAMIC or old_mode == DYNAMIC:
             self._drop_views(alias)

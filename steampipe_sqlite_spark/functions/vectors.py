@@ -44,18 +44,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; structured as dot/(norm·norm) — the oracle uses
-    the identical association."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_prenorm(dot_ab: Column) -> Column:
-    """When both sides are pre-normalized (the scale path — normalize once,
-    not per pair), cosine IS the dot product."""
-    return dot_ab
-
-
 def normalize(a: Column) -> Column:
     """Unit-normalize an array<float> into array<double>."""
     from steampipe_sqlite_spark.functions.text import _let

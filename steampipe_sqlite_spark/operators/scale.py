@@ -1,6 +1,7 @@
 """Scale toolkit: the partitioning techniques that keep joins and
-aggregations healthy at 100 TB — bucketed co-located joins, salted skew
-handling, and a pre-partition helper for shuffle reuse.
+orderings healthy at 100 TB — targeted skew salting, distributed global
+ranks and running sums, Python-stage right-sizing, and Z-order clustering.
+Bucketed and partitioned layouts are deployed by ``tables.optimize_layout``.
 
 None of these change results; they change plan shape.  Plan-level proofs
 live in tests/test_scale_toolkit.py.
@@ -21,116 +22,8 @@ until ``clearCache()`` or session stop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int, sort_col: str | None = None
-) -> None:
-    """Persist ``df`` as a bucketed managed table: rows are hash-bucketed
-    on ``bucket_col`` at write time, so equi-joins and aggregations on that
-    column read co-located data and skip the shuffle entirely (Catalyst
-    sees the bucketing as a satisfied hash distribution).
-
-    This is the batch-layer answer to repeated big-fact joins: pay one
-    shuffle at ingest, never again.  ``sort_col`` additionally sorts within
-    buckets (sort-merge joins then skip the sort too).
-    """
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
-
-
-def write_partitioned_dataset(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a curated dataset as hive-partitioned parquet — the
-    standard sink for pipeline output at scale.
-
-    - ``partitionBy`` on low-cardinality columns (lang, source, date
-      bucket) gives readers free partition pruning (a `WHERE lang='en'`
-      scan touches only that directory);
-    - ``maxRecordsPerFile`` bounds file size so downstream scans split
-      evenly (the small-file *and* giant-file problems are both write-time
-      mistakes);
-    - readers recover the partition columns from directory names, so the
-      data files store only the remaining columns.
-    """
-    (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
-def salted_groupby_agg(
-    df: DataFrame,
-    key_col: str,
-    agg_exprs: dict[str, str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-stage aggregation for skewed keys: stage 1 aggregates on
-    (key, salt) — the hot key's rows spread over ``n_salts`` reducers —
-    stage 2 folds the partials on the key alone (tiny input).
-
-    ``agg_exprs`` maps output column → 'sum'|'count'|'min'|'max' of a
-    source column, e.g. {'total': 'sum:value', 'n': 'count:*'} — the
-    decomposable aggregates (partial + merge both expressible with the
-    same primitive).
-    """
-    salted = df.withColumn("_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts)))
-    stage1_aggs, stage2_aggs = [], []
-    for out, spec in agg_exprs.items():
-        op, _, col = spec.partition(":")
-        p = f"_p_{out}"
-        if op == "count":
-            stage1_aggs.append(F.count(F.lit(1) if col in ("*", "") else F.col(col)).alias(p))
-            stage2_aggs.append(F.sum(p).alias(out))
-        elif op in ("sum", "min", "max"):
-            stage1_aggs.append(getattr(F, op)(F.col(col)).alias(p))
-            stage2_aggs.append(getattr(F, "sum" if op == "sum" else op)(p).alias(out))
-        else:
-            raise ValueError(f"non-decomposable aggregate {op!r}")
-    return (
-        salted.groupBy(key_col, "_salt")
-        .agg(*stage1_aggs)
-        .groupBy(key_col)
-        .agg(*stage2_aggs)
-    )
-
-
-def salted_join_skewed_left(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Equi-join where ``left`` has skewed keys and ``right`` is moderate:
-    left rows get a random salt in [0, n_salts); right is exploded to all
-    salts.  The shuffle key becomes (key, salt), so a hot key's rows land
-    on ``n_salts`` reducers instead of one.
-
-    AQE's skew-join splitting handles the sort-merge case automatically
-    (spark.sql.adaptive.skewJoin.enabled, on in session.py); this explicit
-    form is for when the join must shuffle-hash or the skew is known ahead
-    of time.  Cost: right side replicated ×n_salts — use only when right ≪
-    left, which is the skew scenario by definition.
-    """
-    l_salted = left.withColumn(
-        "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts)).cast("int")
-    )
-    r_salted = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    out = l_salted.join(r_salted, [key, "_salt"])
-    return out.drop("_salt")
 
 
 def salted_join_hot_keys(
@@ -146,9 +39,9 @@ def salted_join_hot_keys(
     0, and the right side is replicated ONLY for the hot keys (one row
     stays one row for the long tail).  The shuffle key is (key, salt), so
     each hot key's rows land on ``n_salts`` reducers while the tail pays
-    nothing — unlike :func:`salted_join_skewed_left`, whose blanket
-    ×n_salts right-side explode costs n_salts× build even when 99.9% of
-    keys are cold.
+    nothing — unlike a blanket salt, whose ×n_salts right-side explode
+    costs n_salts× build even when 99.9% of keys are cold (refuted in
+    DEADENDS.md, "Blanket-salted skew join").
 
     This is the production pattern when the hot set is known ahead of the
     join (a heavy-hitter sketch over yesterday's partition, a static
@@ -396,43 +289,6 @@ def coalesce_for_python(df: DataFrame, bytes_per_task: int = 64 << 20) -> DataFr
     # coalesce never increases partition count, so this is a no-op when the
     # scan already has <= k splits
     return df.coalesce(int(k))
-
-
-def prepartition_for_reuse(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
-    """Hash-repartition once on ``key`` so several downstream wide ops
-    (groupBys / joins on the same key) reuse one exchange instead of each
-    shuffling independently — Catalyst recognizes the existing
-    HashPartitioning and elides the redundant Exchanges."""
-    return df.repartition(n, F.col(key)) if n else df.repartition(F.col(key))
-
-
-def table_is_bucketed(spark: SparkSession, table_name: str) -> bool:
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}").collect()
-    return any("Num Buckets" in (r.col_name or "") for r in rows)
-
-
-def compact_parquet(spark: SparkSession, path: str, target_file_mb: int = 128) -> int:
-    """Rewrite a parquet directory into ~``target_file_mb`` files — the
-    small-files remedy (streaming sinks and fine-grained partitions
-    accumulate KB-sized files whose open/footer overhead dominates scans
-    at scale).  Returns the new file count.
-
-    Uses total byte size to pick the target partition count, then a single
-    coalesce-free repartition write (repartition, not coalesce: coalesce
-    would chain the read parallelism down to the target too).
-    """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    files = _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-    total_mb = sum(_os.path.getsize(f) for f in files) / 1e6
-    n = max(1, round(total_mb / target_file_mb))
-    tmp = path.rstrip("/") + "__compacting"
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(tmp)
-    _shutil.rmtree(path)
-    _os.rename(tmp, path)
-    return len(_glob.glob(_os.path.join(path, "*.parquet")))
 
 
 def zorder_values(df: DataFrame, cols: list[str], bits: int = 8) -> DataFrame:

@@ -3954,8 +3954,8 @@ ORDER BY doc_id
 # classifies every row added / deleted / modified / unchanged and names
 # the changed column.  The parity-derived synthetic snapshots exercise
 # all four branches; at scale the join is key-partitioned (one shuffle
-# per side, or zero with bucketed snapshots — operators/scale
-# write_bucketed).  Identical text both engines.
+# per side, or zero with bucketed snapshots — tables.optimize_layout
+# (bucket_by=)).  Identical text both engines.
 
 
 @query(
@@ -4960,7 +4960,7 @@ def graph_two_hop_reach(spark, sf_dir):
     exactly 4 candidates per node before dedup — linear in nodes, keyed
     on the join column; the histogram is a two-level hash aggregate.
     A power-law graph would need the high-degree-vertex split
-    (salted_join_skewed_left); the docstring marks the swap point."""
+    (salted_join_hot_keys); the docstring marks the swap point."""
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()
     nodes = docs.selectExpr("doc_id AS node")

@@ -13,6 +13,10 @@ connector funnels its config through :func:`parse_config`, which accepts:
    values and ``#``/``//`` comments.  (Nested blocks are out of scope —
    none of the reference's own examples use them; install python-hcl2
    for full HCL.)
+
+:func:`validate_engine_options` checks the options the engine itself reads
+(scan cache, retry, throttle) once, when a connection is loaded or
+reconfigured.
 """
 
 from __future__ import annotations
@@ -144,3 +148,46 @@ def parse_config(config: str | None) -> dict[str, Any]:
         except Exception:
             pass
     return _parse_hcl_subset(config)
+
+
+def _is_number(v: Any) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+# Connection options the engine itself reads (scan cache, retry, throttle):
+# key -> (check, what it must be).  Checked up front because the cache
+# ignores a value it cannot use ({"cache": "false"} would leave caching on,
+# {"cache_ttl": "5"} would keep the 300 s default) and the retry and
+# throttle code would raise inside a Python worker at the first page.
+# cache_ttl and cache_max_size_mb must be positive for the same reason; for
+# the others 0 means "off".
+_ENGINE_OPTIONS = {
+    "cache": (lambda v: isinstance(v, bool), "a bool"),
+    "cache_ttl": (lambda v: _is_number(v) and v > 0, "a positive number of seconds"),
+    "cache_max_size_mb": (lambda v: _is_number(v) and v > 0, "a positive number"),
+    **{
+        key: (lambda v: _is_number(v) and v >= 0, "a non-negative number")
+        for key in (
+            "retry_attempts",
+            "retry_min_backoff_ms",
+            "retry_max_backoff_ms",
+            "rate_limit_rps",
+            "rate_limit_burst",
+        )
+    },
+}
+
+
+def validate_engine_options(config: str | None) -> None:
+    """Raise ``ValueError`` naming the first engine-read option in
+    ``config`` whose value has the wrong type or range.  A null value counts
+    as unset.  A config that parses as neither JSON nor HCL is left to the
+    connector, which owns its own config format."""
+    try:
+        cfg = parse_config(config)
+    except ConfigError:
+        return
+    for key, (ok, want) in _ENGINE_OPTIONS.items():
+        value = cfg.get(key)
+        if value is not None and not ok(value):
+            raise ValueError(f"connection option {key!r} must be {want}, got {value!r}")

@@ -59,6 +59,7 @@ from steampipe_sqlite_spark.sources.connector import (
     TableSchema,
     bind_cidr,
     bind_ipaddr,
+    bind_limit,
     bind_timestamp,
     check_required_quals,
 )
@@ -216,13 +217,12 @@ class ConnectorReader(DataSourceReader):
         self.connector = connector
         self.table = table
         self.quals: list[Qual] = []
-        self.limit = None
         raw_limit = options.get("limit")
-        if raw_limit is not None:
-            try:
-                self.limit = max(int(raw_limit), 0)
-            except (TypeError, ValueError):
-                self.limit = None  # non-integer limit dropped (cursor.go:203-207)
+        try:
+            raw_limit = int(raw_limit)  # Spark options arrive as strings
+        except (TypeError, ValueError):
+            pass  # non-integer: bind_limit drops it
+        self.limit = bind_limit(raw_limit)
         cols_opt = options.get("columns")
         self.columns: list[str] | None = json.loads(cols_opt) if cols_opt else None
         self._filters_seen = False

@@ -209,15 +209,9 @@ def compacted_path(spark: SparkSession, path: str) -> str:
 # write.  Turn discovery off with SPARK_GRAFT_LAYOUT=off.
 # ---------------------------------------------------------------------------
 
-# Test override only (monkeypatched to a str by the layout tests); None
-# means "resolve SPARK_GRAFT_LAYOUT_DIR at call time" — reading the env var
-# once at import silently ignored a dir set after import (ADVICE r11).
-_LAYOUT_ROOT: str | None = None
-
-
 def _layout_root() -> str:
-    if _LAYOUT_ROOT is not None:
-        return _LAYOUT_ROOT
+    # resolved at call time: reading SPARK_GRAFT_LAYOUT_DIR once at import
+    # silently ignored a dir set after import (ADVICE r11)
     return os.environ.get(
         "SPARK_GRAFT_LAYOUT_DIR",
         os.path.join(
@@ -250,6 +244,17 @@ def _layout_registry() -> dict:
             return json.load(f)
     except (OSError, ValueError):
         return {}
+
+
+def _save_layout_registry(reg: dict) -> None:
+    """Write the registry atomically (caller holds the registry lock):
+    lock-free readers see either the old or the new complete file."""
+    import json
+
+    tmp = f"{_layout_registry_path()}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(reg, f, indent=1)
+    os.replace(tmp, _layout_registry_path())
 
 
 class _layout_lock:
@@ -342,6 +347,43 @@ def _catalog_table_points_at(spark: SparkSession, cat: str, location: str) -> bo
     return False
 
 
+def _bind_bucketed_table(
+    spark: SparkSession,
+    cat: str,
+    location: str,
+    schema_ddl: str,
+    bucket_by: str,
+    buckets: int,
+    sort_by: str | None,
+) -> None:
+    """Bind catalog name ``cat`` to the bucket files already at
+    ``location``, unless it points there already: absent, or bound to
+    ANOTHER root's files (layout dir changed mid-session) — (re)create it.
+    Bucket ids ride the part-file names, so the external table keeps the
+    bucketing."""
+    if _catalog_table_points_at(spark, cat, location):
+        return
+    spark.sql(f"DROP TABLE IF EXISTS {cat}")
+    sorted_clause = f"SORTED BY ({sort_by}) " if sort_by else ""
+    spark.sql(
+        f"CREATE TABLE {cat} ({schema_ddl}) USING PARQUET "
+        f"CLUSTERED BY ({bucket_by}) {sorted_clause}"
+        f"INTO {buckets} BUCKETS LOCATION '{location}'"
+    )
+
+
+def _drop_table_if_points_at(spark: SparkSession, cat: str, location: str) -> None:
+    """Drop catalog name ``cat`` ONLY if it still points at ``location``:
+    the name is content-keyed without the layout root, so a same-spec
+    redeploy under a different root REBINDS it, and reclaiming the old
+    root's entry must not kill the live binding.  Best-effort."""
+    if _catalog_table_points_at(spark, cat, location):
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {cat}")
+        except Exception:  # noqa: BLE001 — cleanup best-effort
+            pass
+
+
 def _sweep_trash(reg: dict, spark: SparkSession) -> None:
     """Reclaim trash entries past the grace period (caller holds the
     registry lock).  A location whose ``.writing`` flock is held by a
@@ -371,16 +413,7 @@ def _sweep_trash(reg: dict, spark: SparkSession) -> None:
             continue
         try:
             if t.get("bucket_by") is not None and t.get("catalog_name"):
-                # drop the catalog name ONLY if it still points at the
-                # trashed location: the name is content-keyed without the
-                # layout root, so a same-spec redeploy under a different
-                # root REBINDS it — sweeping the old root's entry must not
-                # kill the live binding
-                if _catalog_table_points_at(spark, t["catalog_name"], t["location"]):
-                    try:
-                        spark.sql(f"DROP TABLE IF EXISTS {t['catalog_name']}")
-                    except Exception:  # noqa: BLE001 — cleanup best-effort
-                        pass
+                _drop_table_if_points_at(spark, t["catalog_name"], t["location"])
             # completion marker FIRST: a torn rmtree must leave an
             # INCOMPLETE directory, never a "complete" gutted one a later
             # same-spec redeploy would reuse
@@ -466,8 +499,9 @@ def optimize_layout(
     - ``bucket_by``/``buckets`` (+optional ``sort_by``): hash-bucketed
       table — equi-joins/aggregations on the bucket key plan with ZERO
       exchanges on that key.  One ingest-time shuffle buys every repeated
-      big-fact join; measured 4.5-8.7x on q3/q18 at 100x data
-      (tools/bucketed_layout_probe.py, engine-path mode).
+      big-fact join; measured 1.7-2.0x through this call on q3/q18 at
+      100x data, 4.5-8.7x when the flat side hit its slow window
+      (tools/bucketed_layout_probe.py).
     - ``partition_by``: hive-partitioned directory layout — equality/IN
       filters on the partition column prune to matching directories
       (PartitionFilters in the scan; untouched partitions are never read).
@@ -524,8 +558,6 @@ def optimize_layout(
     instead; every axis costs one ingest-time rewrite, so deploy for
     REPEATED access, not one-shot queries.
     """
-    import json
-
     if sum(x is not None for x in (bucket_by, partition_by, order_by)) != 1:
         raise ValueError(
             "optimize_layout: pass exactly one of bucket_by, partition_by, order_by"
@@ -571,16 +603,10 @@ def optimize_layout(
         complete = os.path.exists(marker)
         if bucket_by is not None:
             if complete:
-                if not _catalog_table_points_at(spark, catalog_name, location):
-                    # absent, or bound to ANOTHER root's files (layout dir
-                    # changed mid-session) — (re)create at this location
-                    spark.sql(f"DROP TABLE IF EXISTS {catalog_name}")
-                    sorted_clause = f"SORTED BY ({sort_by}) " if sort_by else ""
-                    spark.sql(
-                        f"CREATE TABLE {catalog_name} ({df.schema.toDDL()}) USING PARQUET "
-                        f"CLUSTERED BY ({bucket_by}) {sorted_clause}"
-                        f"INTO {buckets} BUCKETS LOCATION '{location}'"
-                    )
+                _bind_bucketed_table(
+                    spark, catalog_name, location, df.schema.toDDL(),
+                    bucket_by, buckets, sort_by,
+                )
             else:
                 writer = df.write.mode("overwrite").bucketBy(buckets, bucket_by).option("path", location)
                 if sort_by:
@@ -663,10 +689,7 @@ def optimize_layout(
                 # for nested types like map<string,int>)
                 "columns": list(df.dtypes),
             }
-            tmp = f"{_layout_registry_path()}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(reg, f, indent=1)
-            os.replace(tmp, _layout_registry_path())
+            _save_layout_registry(reg)
     finally:
         import fcntl
 
@@ -684,18 +707,13 @@ def drop_layout(spark: SparkSession, sf_dir: str, table: str) -> None:
     stops serving the layout the moment the entry is gone, so the delay
     only costs disk).  Set SPARK_GRAFT_LAYOUT_RECLAIM_GRACE=0 to reclaim
     on the next sweep regardless of age."""
-    import json
-
     with _layout_lock():
         reg = _layout_registry()
         entry = reg.pop(_layout_key(sf_dir, table), None)
         if entry is not None:
             _enqueue_reclaim(reg, entry)
         _sweep_trash(reg, spark)
-        tmp = f"{_layout_registry_path()}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(reg, f, indent=1)
-        os.replace(tmp, _layout_registry_path())
+        _save_layout_registry(reg)
         if entry is not None and entry.get("bucket_by") is not None:
             # the catalog name dies with the registry entry (discovery
             # would re-create it); already-planned queries hold their file
@@ -722,15 +740,9 @@ def drop_layout(spark: SparkSession, sf_dir: str, table: str) -> None:
                     wl = None
             else:
                 try:
-                    if _catalog_table_points_at(
+                    _drop_table_if_points_at(
                         spark, entry["catalog_name"], entry["location"]
-                    ):
-                        try:
-                            spark.sql(
-                                f"DROP TABLE IF EXISTS {entry['catalog_name']}"
-                            )
-                        except Exception:  # noqa: BLE001 — best-effort
-                            pass
+                    )
                 finally:
                     fcntl.flock(wl, fcntl.LOCK_UN)
                     os.close(wl)
@@ -793,16 +805,10 @@ def _layout_table_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame |
                 *(F.col(n).cast(t).alias(n) for n, t in entry["columns"])
             )
         cat = entry["catalog_name"]
-        if not _catalog_table_points_at(spark, cat, entry["location"]):
-            # absent, or a stale binding from a previous layout root in
-            # this session — recreate over the registry's location
-            spark.sql(f"DROP TABLE IF EXISTS {cat}")
-            sorted_clause = f"SORTED BY ({entry['sort_by']}) " if entry["sort_by"] else ""
-            spark.sql(
-                f"CREATE TABLE {cat} ({entry['schema_ddl']}) USING PARQUET "
-                f"CLUSTERED BY ({entry['bucket_by']}) {sorted_clause}"
-                f"INTO {entry['buckets']} BUCKETS LOCATION '{entry['location']}'"
-            )
+        _bind_bucketed_table(
+            spark, cat, entry["location"], entry["schema_ddl"],
+            entry["bucket_by"], entry["buckets"], entry["sort_by"],
+        )
         return spark.table(cat)
     except Exception:  # noqa: BLE001 — layout discovery must never fail a read
         return None

@@ -354,7 +354,7 @@ class TestAdvisor:
         registered read actually prunes."""
         import steampipe_sqlite_spark.tables as T
 
-        monkeypatch.setattr(T, "_LAYOUT_ROOT", str(tmp_path / "layout"))
+        monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "layout"))
         ev = load_table(spark, SF_DIR, "events")
         workload = {
             "clicks": ev.filter(F.col("event_type") == "click").groupBy().count(),

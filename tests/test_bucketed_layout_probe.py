@@ -38,7 +38,7 @@ def test_probe_reads_the_registered_corpus_sql():
     q, _ = collect()
     sql_text = q["tpch_q3"].__doc__
     # the registry stores the Spark SQL on the query fn (sql_query sets
-    # __doc__); the probe replays THAT text against the bucketed catalog
+    # __doc__); the probe runs THAT query over the deployed layout
     assert "FROM lineitem" in sql_text and "JOIN orders" in sql_text
     # the bucket keys are the join's equi-keys — a key rename in the
     # fixture would silently turn the probe into a no-op comparison

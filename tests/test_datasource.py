@@ -97,6 +97,11 @@ class TestEndToEnd:
         # unfetched columns surface as NULL, never wrong values
         assert rows[0].id == 0 and rows[0].name == "item_0000"
 
+    def test_negative_limit_means_no_limit(self, engine):
+        # cursor.go:203-207: a negative limit is no limit, so the scan
+        # returns every row instead of asking the connector for zero
+        assert len(engine.table("chaos", "all_types", limit=-1).collect()) == 100
+
 
 class TestFilterTranslation:
     def test_supported_shapes(self):
@@ -180,6 +185,35 @@ class TestDynamicReconfigure:
         assert eng.sql("SELECT count(*) AS n FROM dyn_t2").collect()[0].n == 10
         with pytest.raises(Exception):
             eng.sql("SELECT * FROM dyn_t1").collect()
+
+
+class TestConfigValidation:
+    """Mistyped engine options fail at load/configure, naming the key,
+    instead of being ignored or failing in a Python worker mid-scan."""
+
+    @pytest.mark.parametrize(
+        "config, key",
+        [
+            ('{"cache": "false"}', "cache"),
+            ('{"cache_ttl": "5"}', "cache_ttl"),
+            ('{"rate_limit_rps": "fast"}', "rate_limit_rps"),
+            ('{"retry_attempts": "x"}', "retry_attempts"),
+        ],
+    )
+    def test_load_rejects_mistyped_option(self, spark, config, key):
+        eng = Engine(spark)
+        with pytest.raises(ValueError, match=f"'{key}'"):
+            eng.load(CHAOS, alias="badcfg", config=config)
+        assert not spark.catalog.tableExists("badcfg_all_types")
+
+    def test_failed_configure_keeps_previous_config(self, spark):
+        eng = Engine(spark)
+        eng.load("steampipe_sqlite_spark.sources.chaos:DynamicConnector", alias="keep")
+        eng.configure("keep", '{"tables": {"t1": [["x", "int"]]}}')
+        with pytest.raises(ValueError, match="'cache'"):
+            eng.configure("keep", '{"tables": {"t2": [["y", "int"]]}, "cache": "false"}')
+        assert eng.tables("keep") == ["keep_t1"]
+        assert eng.sql("SELECT count(*) AS n FROM keep_t1").collect()[0].n == 10
 
 
 SHARDED = "steampipe_sqlite_spark.sources.chaos:ShardedConnector"

@@ -17,7 +17,7 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture()
 def layout_root(monkeypatch, tmp_path):
     root = tmp_path / "layout"
-    monkeypatch.setattr(T, "_LAYOUT_ROOT", str(root))
+    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(root))
     yield str(root)
 
 
@@ -210,7 +210,6 @@ def test_sweep_and_drop_never_kill_a_rebound_catalog_name(spark, tmp_path, monke
     must therefore drop the name ONLY while it still points at the
     reclaimed location — otherwise the live rebinding dies with the
     superseded files (code-review r12)."""
-    monkeypatch.setattr(T, "_LAYOUT_ROOT", None)
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_RECLAIM_GRACE", "3600")
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "rootA"))
     cat = T.optimize_layout(spark, SF_DIR, "region", "r_regionkey", 2)
@@ -243,7 +242,6 @@ def test_layout_dir_env_honored_at_call_time(spark, tmp_path, monkeypatch):
     """SPARK_GRAFT_LAYOUT_DIR set AFTER import must take effect (ADVICE
     r11: the root was read once at import and later changes were silently
     ignored)."""
-    monkeypatch.setattr(T, "_LAYOUT_ROOT", None)
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "lateroot"))
     T.optimize_layout(spark, SF_DIR, "region", "r_regionkey", 2)
     entry = T._layout_registry()[T._layout_key(SF_DIR, "region")]
@@ -256,7 +254,6 @@ def test_bucketed_catalog_rebinds_when_layout_root_changes(spark, tmp_path, monk
     must not leave the catalog name bound to the OLD root's files (ADVICE
     r11): the location check recreates the table over the registry's
     location."""
-    monkeypatch.setattr(T, "_LAYOUT_ROOT", None)
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_RECLAIM_GRACE", "3600")
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "rootA"))
     cat = T.optimize_layout(spark, SF_DIR, "region", "r_regionkey", 2)

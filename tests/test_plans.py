@@ -516,7 +516,7 @@ def test_optimized_layout_runs_q3_q18_exchange_free_on_orderkey(
     aggregates in place), with results identical to the plain layout."""
     import steampipe_sqlite_spark.tables as T
 
-    monkeypatch.setattr(T, "_LAYOUT_ROOT", str(tmp_path / "layout"))
+    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "layout"))
     base = {
         name: {tuple(r) for r in queries[name](spark, SF_DIR).collect()}
         for name in ("tpch_q3", "tpch_q18")

@@ -1,27 +1,14 @@
-"""Scale-toolkit proofs: bucketed joins skip the shuffle, salted shapes
-preserve results, pre-partitioning reuses its exchange."""
-
-import contextlib
-import io
+"""Scale-toolkit proofs: targeted salting preserves results, AQE splits a
+skewed join, distributed ranks and running sums match the window form
+without a single-partition stage, and Z-order clustering preserves rows."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from steampipe_sqlite_spark.operators.scale import (
-    prepartition_for_reuse,
-    salted_groupby_agg,
-    salted_join_skewed_left,
-    table_is_bucketed,
-    write_bucketed,
-)
+from steampipe_sqlite_spark.operators.scale import salted_join_hot_keys
 from steampipe_sqlite_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def executed_plan(df):
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _shuffled_counts(spark):
@@ -30,75 +17,10 @@ def _shuffled_counts(spark):
     return spark.range(400_000).selectExpr("id % 20011 AS k", "id").groupBy("k").count()
 
 
-def test_bucketed_join_is_shuffle_free(spark):
-    import shutil
-
-    orders = load_table(spark, SF_DIR, "orders")
-    lineitem = load_table(spark, SF_DIR, "lineitem")
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        loc = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(f"{loc}/{t}", ignore_errors=True)
-    write_bucketed(orders.select("o_orderkey", "o_totalprice"), "b_orders", "o_orderkey", 8)
-    write_bucketed(
-        lineitem.select("l_orderkey", "l_quantity"), "b_lineitem", "l_orderkey", 8
-    )
-    assert table_is_bucketed(spark, "b_orders")
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast
-    try:
-        joined = spark.table("b_orders").join(
-            spark.table("b_lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = executed_plan(joined)
-        assert "Exchange" not in plan, f"bucketed join shuffled:\n{plan[:2000]}"
-        # result parity with the plain join
-        plain = orders.join(lineitem, F.col("o_orderkey") == F.col("l_orderkey"))
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_salted_groupby_matches_plain(spark):
-    events = load_table(spark, SF_DIR, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    plain = {
-        (r.event_type, r.n, r.total)
-        for r in events.withColumn("c", cents)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("c").alias("total"))
-        .collect()
-    }
-    salted = {
-        (r.event_type, r.n, r.total)
-        for r in salted_groupby_agg(
-            events.withColumn("c", cents),
-            "event_type",
-            {"n": "count:*", "total": "sum:c"},
-            n_salts=8,
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_join_matches_plain(spark):
-    lineitem = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderpriority")
-    right = orders.withColumnRenamed("o_orderkey", "l_orderkey")
-    plain = lineitem.join(right, "l_orderkey")
-    salted = salted_join_skewed_left(lineitem, right, "l_orderkey", n_salts=8)
-    assert salted.count() == plain.count()
-    assert sorted(salted.columns) == sorted(plain.columns)
-
-
 def test_salted_hot_keys_join_matches_plain(spark):
     """Targeted salting must be value-exact, not just count-exact: hot
     rows fan over n_salts, cold rows keep salt 0, and every (key, payload)
     pairing survives — compare full aggregate fingerprints per key."""
-    from steampipe_sqlite_spark.operators.scale import salted_join_hot_keys
-
     lineitem = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     orders = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderpriority")
     right = orders.withColumnRenamed("o_orderkey", "l_orderkey")
@@ -128,8 +50,6 @@ def test_salted_hot_keys_left_join_matches_plain(spark):
     salt and the right side is replicated across all salts for hot keys,
     so it surfaces once with nulls — both through the salted path and
     the empty-hot-set plain-join fallback."""
-    from steampipe_sqlite_spark.operators.scale import salted_join_hot_keys
-
     lineitem = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     # drop half the orders so some left rows are unmatched
     orders = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderpriority")
@@ -167,8 +87,6 @@ def test_salted_hot_keys_right_join_matches_plain(spark):
     all salts for hot keys — so an unmatched right row surfaces once with
     nulls and matched multiplicities are exact.  The skewed fact table
     sits on the preserved (right) side here."""
-    from steampipe_sqlite_spark.operators.scale import salted_join_hot_keys
-
     lineitem = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     orders = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderpriority")
     left = orders.withColumnRenamed("o_orderkey", "l_orderkey").filter(
@@ -195,15 +113,6 @@ def test_salted_hot_keys_right_join_matches_plain(spark):
     assert fingerprint(salted) == fingerprint(plain)
     fallback = salted_join_hot_keys(left, lineitem, "l_orderkey", [], how="right")
     assert fingerprint(fallback) == fingerprint(plain)
-
-
-def test_prepartition_reuses_exchange(spark):
-    events = load_table(spark, SF_DIR, "events")
-    pre = prepartition_for_reuse(events, "user_id", 8)
-    agg = pre.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    plan = executed_plan(agg).split("== Initial Plan ==")[0]
-    # exactly the explicit repartition exchange; the groupBy rides it
-    assert plan.count("Exchange") == 1, plan[:2000]
 
 
 def test_aqe_splits_skewed_join(spark):
@@ -239,47 +148,6 @@ def test_aqe_splits_skewed_join(spark):
         conf.set("spark.sql.shuffle.partitions", old_parts)
         conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
         conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from steampipe_sqlite_spark.operators.scale import compact_parquet
-
-    out = str(tmp_path / "small_files")
-    events = load_table(spark, SF_DIR, "events")
-    events.repartition(64).write.parquet(out)  # 64 tiny files
-    import glob
-
-    assert len(glob.glob(f"{out}/*.parquet")) == 64
-    before = events.count()
-    n_files = compact_parquet(spark, out, target_file_mb=128)
-    assert n_files <= 2
-    after = spark.read.parquet(out)
-    assert after.count() == before
-    assert sorted(after.columns) == sorted(events.columns)
-
-
-class TestPartitionedSink:
-    def test_write_prunes_and_bounds_files(self, spark, tmp_path):
-        import glob
-        from steampipe_sqlite_spark.operators.scale import write_partitioned_dataset
-
-        df = spark.range(0, 1000).selectExpr(
-            "id", "CASE WHEN id % 2 = 0 THEN 'en' ELSE 'fr' END AS lang"
-        )
-        out = str(tmp_path / "curated")
-        write_partitioned_dataset(df, out, ["lang"], max_records_per_file=100)
-        # hive layout: one directory per partition value
-        assert sorted(
-            p.split("=")[-1] for p in glob.glob(f"{out}/lang=*")
-        ) == ["en", "fr"]
-        # maxRecordsPerFile bounds each data file
-        files = glob.glob(f"{out}/lang=en/*.parquet")
-        assert len(files) >= 5  # 500 rows / 100 per file
-        back = spark.read.parquet(out)
-        assert back.count() == 1000
-        # partition pruning: an en-only read plans only the en directory
-        plan = back.filter("lang = 'en'")._jdf.queryExecution().executedPlan().toString()
-        assert "lang=fr" not in plan
 
 
 class TestDistributedRowNumber:

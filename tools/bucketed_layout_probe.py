@@ -10,23 +10,21 @@ corpus SQL (queries['tpch_q3'].__doc__, the registered text) against two
 physical layouts of the SAME 100x replica universe:
 
   flat      -- plain parquet, the corpus read path (temp views)
-  bucketed  -- lineitem and orders written once via
-               operators/scale.write_bucketed: bucketBy(N, orderkey) +
-               sortBy(orderkey); customer stays a parquet view (its join
-               keys on o_custkey -- bucketing the order key cannot also
-               co-locate that join, which is exactly the real trade at a
-               warehouse: bucket for the dominant join)
+  bucketed  -- lineitem and orders deployed once via the engine's
+               tables.optimize_layout(bucket_by=orderkey, sort_by=orderkey);
+               customer stays plain parquet (its join keys on o_custkey --
+               bucketing the order key cannot also co-locate that join,
+               which is exactly the real trade at a warehouse: bucket for
+               the dominant join)
 
 PASS = the bucketed plan has no Exchange under the lineitem|><|orders
 join (Catalyst treats the bucket layout as a satisfied hash
 distribution), results are row-identical, and wall-clock drops by about
 the cost of the removed shuffle writes.
 
-Usage: python tools/bucketed_layout_probe.py [reps] [buckets] [--engine-path]
+Usage: python tools/bucketed_layout_probe.py [reps] [buckets]
        (defaults: 100 64; replica corpus cached/shared with
-       floorbound_scale_probe under .cache/floorscale; --engine-path
-       deploys via the public tables.optimize_layout catalog instead of
-       probe-level write_bucketed — the engine-owned path, VERDICT r10 #3)
+       floorbound_scale_probe under .cache/floorscale)
 Prints one JSON line.
 
 Committed reading (round 10, local[32], 100x sf0.1 = 60M lineitem /
@@ -60,6 +58,10 @@ groupBy(l_orderkey) over the 60M-row fact):
   (sf0.1 at 1x) stay under the broadcast threshold and never pay the
   shuffle this removes.
 
+  The round-10 table above was produced by a probe-level writer (a plain
+  bucketBy + sortBy saveAsTable with view shadowing), since deleted; its
+  last version is `git show 97e0519:tools/bucketed_layout_probe.py`.
+
 Since round 11 the measured win is ENGINE-OWNED, not probe-only
 (VERDICT r10 #3): `tables.optimize_layout(spark, sf_dir, table,
 bucket_by=, buckets=, sort_by=)` deploys the bucketed layout into a
@@ -67,10 +69,10 @@ fixture-keyed catalog that `load_table`/`register_views` discover in any
 session — the registered q3/q18 SQL plans its order-key stages
 exchange-free with no probe code involved (plan proof:
 tests/test_plans.py::test_optimized_layout_runs_q3_q18_exchange_free_on_orderkey).
-This probe remains the at-scale measurement harness for that path; the
---engine-path mode runs it through the public API.
+This probe is the at-scale measurement harness for that path and runs
+only through the public API.
 
-Committed engine-path reading (round 11, local[32], 100x, 64 buckets,
+Committed optimize_layout reading (round 11, local[32], 100x, 64 buckets,
 best-of-3 warm):
 
   query     flat best   engine-layout best   speedup   exchanges
@@ -78,9 +80,9 @@ best-of-3 warm):
   tpch_q18   5.197 s         2.542 s           2.04x     2 -> 0
 
   Results row-identical; ingest (via optimize_layout) lineitem 22.4 s +
-  orders 5.1 s, paid once.  Engine-path speedups sit under the r10
-  probe-path table above because the flat side drew a faster window
-  here (4.0-5.2 s vs 5.4-9.8 s — the flat SMJ's documented variance);
+  orders 5.1 s, paid once.  These speedups sit under the r10 table
+  above because the flat side drew a faster window here (4.0-5.2 s vs
+  5.4-9.8 s — the flat SMJ's documented variance);
   the LAYOUT side agrees across all runs (1.1-2.5 s), and the plan
   property (zero order-key exchanges) is binary and window-independent.
 """
@@ -94,12 +96,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from tools.floorbound_scale_probe import SCRATCH, build  # noqa: E402
-from steampipe_sqlite_spark.operators.scale import write_bucketed  # noqa: E402
+from tools.floorbound_scale_probe import build  # noqa: E402
 from steampipe_sqlite_spark.plans.registry import collect  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
+import steampipe_sqlite_spark.tables as T  # noqa: E402
 
 TABLES = {"lineitem", "orders", "customer"}
 BUCKET_KEYS = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
@@ -134,12 +134,7 @@ def _best_of(fn, n: int = 3) -> float:
 
 
 def main() -> None:
-    # --engine-path: deploy via the PUBLIC tables.optimize_layout API
-    # (fixture-keyed catalog + discovery through register_views) instead
-    # of probe-level write_bucketed + view shadowing — measures the
-    # engine-owned deployment path end-to-end (VERDICT r10 #3).
-    engine_path = "--engine-path" in sys.argv
-    args = [a for a in sys.argv[1:] if a != "--engine-path"]
+    args = sys.argv[1:]
     reps = int(args[0]) if len(args) > 0 else 100
     buckets = int(args[1]) if len(args) > 1 else 64
 
@@ -174,43 +169,20 @@ def main() -> None:
 
     # ---- bucketed layout: one-time ingest, then the same SQL text ----
     write_s = {}
-    if engine_path:
-        import steampipe_sqlite_spark.tables as T
-
-        for t, key in BUCKET_KEYS.items():
-            t0 = time.perf_counter()
-            T.optimize_layout(spark, sf_dir, t, key, buckets, sort_by=key)
-            write_s[t] = round(time.perf_counter() - t0, 3)
-    else:
-        for t, key in BUCKET_KEYS.items():
-            src = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
-            # one output file per bucket: hash-repartition on the bucket key
-            # first, else every write task emits a sliver of every bucket
-            # (tasks x buckets small files)
-            t0 = time.perf_counter()
-            write_bucketed(
-                src.repartition(buckets, F.col(key)), t, key, buckets, sort_col=key
-            )
-            write_s[t] = round(time.perf_counter() - t0, 3)
-            # the temp view (registered by the flat run) shadows the catalog
-            # table — drop it so the SQL resolves to the bucketed table
-            spark.catalog.dropTempView(t)
+    for t, key in BUCKET_KEYS.items():
+        t0 = time.perf_counter()
+        T.optimize_layout(spark, sf_dir, t, key, buckets, sort_by=key)
+        write_s[t] = round(time.perf_counter() - t0, 3)
 
     bucketed = {}
     equal = {}
     for name in PROBE_QUERIES:
-        if engine_path:
-            # the registered query fn itself — discovery re-registers the
-            # views over the deployed layout; no view surgery here
-            fn = queries[name]
-            buck_df = fn(spark, sf_dir)
-            buck_pd = buck_df.toPandas()  # warm
-            buck_s = _best_of(lambda: fn(spark, sf_dir).toPandas())
-        else:
-            sql_text = queries[name].__doc__
-            buck_df = spark.sql(sql_text)
-            buck_pd = buck_df.toPandas()  # warm
-            buck_s = _best_of(lambda: spark.sql(sql_text).toPandas())
+        # the registered query fn itself -- discovery re-registers the
+        # views over the deployed layout; no view surgery here
+        fn = queries[name]
+        buck_df = fn(spark, sf_dir)
+        buck_pd = buck_df.toPandas()  # warm
+        buck_s = _best_of(lambda: fn(spark, sf_dir).toPandas())
         plan = _executed_plan(buck_df)
         bucketed[name] = {
             "best_s": round(buck_s, 3),
@@ -225,7 +197,6 @@ def main() -> None:
         )
 
     out = {
-        "mode": "engine_path" if engine_path else "probe_path",
         "reps": reps,
         "buckets": buckets,
         "rows": rows,
@@ -235,18 +206,12 @@ def main() -> None:
         "results_equal": equal,
     }
     print(json.dumps(out))
-    if engine_path:
-        import steampipe_sqlite_spark.tables as T
-
-        # probe hygiene: reclamation is deferred by default (grace period
-        # for in-flight readers); a probe's multi-GB 100x layouts must not
-        # linger in the trash list
-        os.environ["SPARK_GRAFT_LAYOUT_RECLAIM_GRACE"] = "0"
-        for t in BUCKET_KEYS:
-            T.drop_layout(spark, sf_dir, t)
-    else:
-        for t in BUCKET_KEYS:
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    # probe hygiene: reclamation is deferred by default (grace period
+    # for in-flight readers); a probe's multi-GB 100x layouts must not
+    # linger in the trash list
+    os.environ["SPARK_GRAFT_LAYOUT_RECLAIM_GRACE"] = "0"
+    for t in BUCKET_KEYS:
+        T.drop_layout(spark, sf_dir, t)
 
 
 if __name__ == "__main__":

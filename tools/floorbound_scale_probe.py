@@ -60,8 +60,8 @@ session.py.  spark_s / duckdb_s (ratio), quiet window, best-of-3):
   15M rows), then runtime stats convert every join to broadcast and the
   joins read the map output via AQEShuffleRead local.  The sunk shuffle
   writes are the delta vs q3/q9's floor at ~6; bucketing
-  lineitem/orders on the order key (write_bucketed, same deployment
-  note as q3) removes exactly those writes.  Round-10 window context:
+  lineitem/orders on the order key (tables.optimize_layout(bucket_by=),
+  same deployment note as q3) removes exactly those writes.  Round-10 window context:
   the 2-stage floor sentinel read 0.224 s during this arm vs 0.13 in
   the r9 rows — the co-tenant tax inflates the Spark column of all
   three readings, so cross-round comparisons should lean on the trend,
@@ -79,8 +79,8 @@ session.py.  spark_s / duckdb_s (ratio), quiet window, best-of-3):
   tpch_q3 / asof: ratios fall to ~5–6 and floor there — at 60M rows the
   broadcast is no longer legal and the SMJ/keyed-window shuffle meets a
   single-process in-memory hash join; the Spark plan is the scale-OUT
-  shape (and write_bucketed on l_orderkey/o_orderkey removes the q3
-  shuffle entirely at deployment), which the comparison engine cannot
+  shape (and optimize_layout(bucket_by=) on l_orderkey/o_orderkey removes
+  the q3 shuffle entirely at deployment), which the comparison engine cannot
   extend past one node.  tpch_q9 (row added round 9 when it grazed the
   2× ex-floor bar at 2.17): same family — facts replicated 100×, the
   part/supplier/nation catalog fixed (the DIMS model), so the

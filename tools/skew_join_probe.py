@@ -1,12 +1,13 @@
-"""Skew-join probe: measure the engine's three answers to a hot key.
+"""Skew-join probe: measure the engine's two answers to a hot key.
 
 Every join story so far (floorbound, bucketed-layout, core-elasticity
 probes) ran UNIFORM keys — replicas re-keyed per copy exactly so that
 per-key density stays flat.  Real corpora are zipfian: one null-ish or
 default key owning 10-30% of a fact table is the classic 100 TB
 straggler, where a 1000-executor cluster waits on the one reducer that
-got the hot key.  The engine claims three mitigations; this probe turns
-each into a measurement on the same deterministic skewed universe:
+got the hot key.  The engine keeps two mitigations; this probe turns
+each into a measurement, against the unmitigated baseline, on the same
+deterministic skewed universe:
 
   aqe_skew_on   -- the session default: AQE runtime skew split
                    (spark.sql.adaptive.skewJoin), which detects the
@@ -14,14 +15,11 @@ each into a measurement on the same deterministic skewed universe:
                    tasks, replicating the matching build side.
   aqe_skew_off  -- the straggler baseline: same plan, splitter disabled;
                    one task sorts/joins the whole hot key.
-  salted_full   -- operators/scale.salted_join_skewed_left: blanket
-                   (key, salt) shuffle key, right side exploded x
-                   n_salts for EVERY key (the naive textbook salt).
   salted_hot    -- operators/scale.salted_join_hot_keys: salts only the
                    known-hot keys, right side replicated only for them —
                    the production pattern when the hot set is known
                    (heavy-hitter sketch over yesterday's partition),
-                   and the only option of the four for shuffle-HASH
+                   and the only option of the three for shuffle-HASH
                    joins, which AQE's splitter does not cover.
 
 Universe (deterministic, no rand()): facts(fact_rows) with key 0 owning
@@ -31,7 +29,7 @@ letting the hot reducer's sort — not the map-side write — set the wall.
 dims(n_keys) carries a 64-char pad so its estimated size clears the 64m
 broadcast threshold — the join MUST shuffle, which is the scenario.
 
-PASS = all four arms return identical aggregates; aqe_skew_on beats
+PASS = all three arms return identical aggregates; aqe_skew_on beats
 aqe_skew_off by roughly the straggler's serial tail; the executed plan
 of the aqe_skew_on arm carries skew-split markers at the default-engaging
 scale and the probe reports whether the 256 MB default threshold engaged
@@ -44,12 +42,14 @@ Prints one JSON line per scale.
 
 Committed reading (round 10, local[32], 40M facts / 4M dims, key 0 =
 45% of fact rows = 18M rows ≈ 1 GB of one reducer's input; each arm in
-its own session, best-of-3 warm, all four arms row-identical):
+its own session, best-of-3 warm, all four arms row-identical; the
+salted_full arm -- a blanket salt on every key -- has since been deleted
+as refuted, see DEADENDS.md "Blanket-salted skew join"):
 
   arm            40M facts    4M facts (1/10 scale)
   aqe_skew_on       6.94 s       0.72 s
   aqe_skew_off     15.98 s       0.75 s
-  salted_full      13.06 s       2.84 s
+  salted_full      13.06 s       2.84 s   (arm deleted)
   salted_hot        9.70 s       1.07 s
 
   At 40M the runtime splitter engages (SortMergeJoin(skew=true) +
@@ -77,15 +77,9 @@ its own session, best-of-3 warm, all four arms row-identical):
   covers sort-merge only) or pipelines with a known hot set below the
   engagement threshold; never blanket-salt.
 
-Aggregate half of the playbook (probe_agg, same 40M corpus): a 45%-hot
-groupBy(key) reads plain 1.35 s vs salted_groupby_agg 2.34 s, results
-identical — Spark's partial+final hash aggregate collapses the hot key
-to one row PER MAP TASK before the shuffle, so the skewed reducer
-receives ~n_map_tasks rows, not 18M, and salting just adds a second
-shuffle.  Join skew needs help because join payloads cannot collapse;
-algebraic aggregation skew needs none — reserve salted_groupby_agg for
-non-algebraic aggregates (collect_list, exact percentiles) where the
-partial cannot shrink the hot key.
+Aggregate skew needs no salt: a salted two-stage groupBy lost to the
+plain one on the same corpus (DEADENDS.md "Salted algebraic groupBy"),
+and its measuring arm has been deleted with it.
 
 Methodology notes, both measured: (1) the first cut ran all arms in one
 JVM and the last arm read 2x its isolated wall — a dozen consecutive
@@ -109,11 +103,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from steampipe_sqlite_spark.operators.scale import (  # noqa: E402
-    salted_groupby_agg,
-    salted_join_hot_keys,
-    salted_join_skewed_left,
-)
+from steampipe_sqlite_spark.operators.scale import salted_join_hot_keys  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
 
 SCRATCH = os.path.join(
@@ -231,10 +221,6 @@ ARMS = {
     # arm -> (skew splitter on?, join builder)
     "aqe_skew_on": (True, lambda f, d: f.join(d, "key")),
     "aqe_skew_off": (False, lambda f, d: f.join(d, "key")),
-    "salted_full": (
-        False,
-        lambda f, d: salted_join_skewed_left(f, d, "key", N_SALTS),
-    ),
     "salted_hot": (
         False,
         lambda f, d: salted_join_hot_keys(
@@ -280,50 +266,6 @@ def probe_scale(base: str, reps: int = 3) -> dict:
     }
 
 
-def probe_agg(base: str, reps: int = 3) -> dict:
-    """The aggregate half of the skew playbook: a 45%-hot groupBy(key),
-    plain vs operators/scale.salted_groupby_agg — measuring whether
-    aggregation skew needs salting at all.  It should not: Spark's
-    hash aggregate is partial+final, so every map task collapses the hot
-    key to ONE partial row before the shuffle; the reducer for key 0
-    receives n_map_tasks rows, not 18M.  Salting can only help
-    non-algebraic aggregates (collect_list, exact percentiles) where the
-    partial cannot collapse.  Verified row-identical via a fingerprint
-    over the 4M-group result."""
-    arms, results = {}, {}
-
-    def fingerprint(g):
-        return _run(
-            g.agg(
-                F.count(F.lit(1)).alias("groups"),
-                F.sum("n").alias("rows"),
-                F.sum("s").alias("vals"),
-                F.sum(F.col("key") * F.col("n")).alias("keyed"),
-            )
-        )
-
-    for name, build_agg in {
-        "groupby_plain": lambda f: f.groupBy("key").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("val").alias("s")
-        ),
-        "groupby_salted": lambda f: salted_groupby_agg(
-            f, "key", {"n": "count:*", "s": "sum:val"}, N_SALTS
-        ),
-    }.items():
-        spark = get_spark(f"skewprobe-{name}")
-        facts = spark.read.parquet(os.path.join(base, "facts.parquet"))
-        arms[name], results[name] = _best_of(
-            lambda: fingerprint(build_agg(facts)), reps
-        )
-        stop_spark()
-
-    return {
-        "base": os.path.basename(base),
-        "arms_s": {a: round(s, 3) for a, s in arms.items()},
-        "all_arms_agree": results["groupby_plain"] == results["groupby_salted"],
-    }
-
-
 def main() -> None:
     fact_m = int(sys.argv[1]) if len(sys.argv) > 1 else 40
     keys_m = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -338,8 +280,6 @@ def main() -> None:
         stop_spark()
         os.environ["SPARK_GRAFT_SF_DIR"] = base
         print(json.dumps(probe_scale(base)), flush=True)
-        if divisor == 1:
-            print(json.dumps(probe_agg(base)), flush=True)
 
 
 if __name__ == "__main__":

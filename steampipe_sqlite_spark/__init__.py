@@ -25,14 +25,12 @@ from steampipe_sqlite_spark import zipcache
 zipcache.install()  # before anything else: every Spark Python worker imports the package
 
 from steampipe_sqlite_spark.session import get_spark, stop_spark
-from steampipe_sqlite_spark.tables import drop_layout, load_table, optimize_layout, register_views
+from steampipe_sqlite_spark.tables import load_table, register_views
 
 __all__ = [
     "get_spark",
     "stop_spark",
     "load_table",
     "register_views",
-    "optimize_layout",
-    "drop_layout",
 ]
 __version__ = "0.1.0"

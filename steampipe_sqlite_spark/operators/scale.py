@@ -1,7 +1,6 @@
 """Scale toolkit: the partitioning techniques that keep joins and
 orderings healthy at 100 TB — targeted skew salting, distributed global
-ranks and running sums, Python-stage right-sizing, and Z-order clustering.
-Bucketed and partitioned layouts are deployed by ``tables.optimize_layout``.
+ranks and running sums, and Python-stage right-sizing.
 
 None of these change results; they change plan shape.  Plan-level proofs
 live in tests/test_scale_toolkit.py.
@@ -112,8 +111,8 @@ def _check_prefix_sum_reserved(df: DataFrame, name: str) -> None:
     """The two-phase prefix-sum helpers stage ``_pid`` and ``_off`` working
     columns and emit ``name``: an input already carrying one of those
     would be silently overwritten then dropped (or made ambiguous on the
-    broadcast-join path) — same corruption class as zorder_values'
-    reserved names, same remedy: demand a rename."""
+    broadcast-join path) — corrupting data is worse than demanding a
+    rename."""
     clash = sorted({"_pid", "_off", name} & set(df.columns))
     if clash:
         raise ValueError(
@@ -289,107 +288,3 @@ def coalesce_for_python(df: DataFrame, bytes_per_task: int = 64 << 20) -> DataFr
     # coalesce never increases partition count, so this is a no-op when the
     # scan already has <= k splits
     return df.coalesce(int(k))
-
-
-def zorder_values(df: DataFrame, cols: list[str], bits: int = 8) -> DataFrame:
-    """Add a ``_z`` column: the Morton (Z-order) code of ``cols``.
-
-    Each column is quantized to ``bits`` buckets via its approximate
-    quantile boundaries (one distributed GK-sketch pass per column,
-    driver-side result is just the 2^bits boundary list), then the bucket
-    ids' bits are interleaved JVM-side with one shift/or expression chain.
-    Rank-based quantization (not min/max scaling) makes the code robust to
-    skew: each bucket holds ~1/2^bits of the rows regardless of the value
-    distribution.
-
-    This is the layout transform behind Delta/Iceberg's OPTIMIZE ZORDER
-    (public construction: Morton 1966): sorting by ``_z`` clusters rows so
-    EVERY listed column has narrow min/max ranges per file, which turns
-    parquet footer stats into an effective multi-column index — the
-    standard lakehouse answer to "I filter on two columns but can only
-    partition by one".
-
-    Column types: numerics, booleans, timestamps (incl. NTZ — the session
-    timezone is pinned UTC), and dates quantize through a numeric
-    surrogate; strings/binaries are rejected with a clear error (their
-    only order-preserving surrogate IS the value — use ``partition_by``
-    for low-cardinality strings, or a plain range sort on a single string
-    column, which repartitionByRange handles natively).
-    """
-    k_res = len(cols)
-    reserved = (
-        {f"_q{i}" for i in range(k_res)}
-        | {f"_b{i}" for i in range(k_res)}
-        | {"_z"}
-    )
-    clash = sorted(reserved & set(df.columns))
-    if clash:
-        # the internal quantization columns would silently overwrite (and
-        # then drop) same-named input columns — corrupting data is worse
-        # than demanding a rename (ADVICE r11)
-        raise ValueError(
-            f"zorder_values: input columns {clash} collide with the "
-            "reserved internal names (_q<i>/_b<i>/_z) — rename them first"
-        )
-    n = 1 << bits
-    probs = [j / n for j in range(1, n)]
-    # order-preserving NUMERIC surrogate per column: approxQuantile (and
-    # the quantization filter below) are numeric-only, but z-ordering by
-    # time + key is the canonical use — cast rather than reject
-    surrogates = []
-    for c, t in ((c, dict(df.dtypes)[c]) for c in cols):
-        if t in ("timestamp", "timestamp_ntz"):
-            surrogates.append(f"cast(cast({c} as timestamp) as double)")
-        elif t == "date":
-            surrogates.append(f"cast(unix_date({c}) as double)")
-        elif t in ("string", "binary") or t.startswith(("array", "map", "struct")):
-            raise ValueError(
-                f"zorder_values: column {c!r} has non-quantizable type {t} — "
-                "use partition_by for low-cardinality strings"
-            )
-        else:
-            surrogates.append(f"cast({c} as double)")
-    work = df
-    for i, s in enumerate(surrogates):
-        work = work.withColumn(f"_q{i}", F.expr(s))
-    qcols = [f"_q{i}" for i in range(len(cols))]
-    # ONE multi-column GK pass (one job), not one per column
-    all_bounds = work.stat.approxQuantile(qcols, probs, 0.001)
-    quantized = work
-    for i, bounds in enumerate(all_bounds):
-        # width_bucket via a literal sorted-array binary search would be
-        # ideal; a filter-count over the literal array is one expression
-        # and exact for our bucket counts
-        arr = ", ".join(repr(float(b)) for b in bounds)
-        quantized = quantized.withColumn(
-            f"_b{i}",
-            F.expr(f"size(filter(array({arr}), x -> x <= _q{i}))"),
-        )
-    quantized = quantized.drop(*qcols)
-    k = len(cols)
-    z = " | ".join(
-        f"shiftleft(cast(shiftrightunsigned(_b{i}, {b}) & 1 as bigint), {b * k + (k - 1 - i)})"
-        for i in range(k)
-        for b in range(bits)
-    )
-    return quantized.withColumn("_z", F.expr(z)).drop(
-        *[f"_b{i}" for i in range(k)]
-    )
-
-
-def zorder_write(
-    df: DataFrame,
-    cols: list[str],
-    out_path: str,
-    files: int = 32,
-    bits: int = 8,
-) -> None:
-    """OPTIMIZE ZORDER analog: rewrite ``df`` into ``files`` parquet files
-    range-partitioned and sorted by the Morton code of ``cols``, so
-    min/max footer stats prune scans filtered on ANY prefix-free subset of
-    those columns.  Row values are unchanged — only layout.  The shuffle
-    is one range exchange on a bigint (the same cost class as a global
-    sort), paid once at write time like every compaction job."""
-    zorder_values(df, cols, bits=bits).repartitionByRange(
-        files, "_z"
-    ).sortWithinPartitions("_z").drop("_z").write.mode("overwrite").parquet(out_path)

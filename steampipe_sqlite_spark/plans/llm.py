@@ -1461,45 +1461,70 @@ def knn_ivf_q(spark, sf_dir):
     )
 
 
+# Seconds a superseded index generation stays on disk after it is
+# tombstoned, so in-flight probe scans over it can drain (see _ensure_index).
+_INDEX_RECLAIM_GRACE_S = 600.0
+
+
+def _source_identity(path: str) -> dict:
+    """Fixture identity for staleness checks.  A directory's own
+    size/mtime does NOT change when a part file is rewritten in place, so
+    directory-shaped tables (anything Spark wrote) fingerprint the full
+    recursive (relpath, size, mtime) listing instead — folded into the
+    mtime_ns slot so the identity shape stays uniform."""
+    import hashlib
+    import os
+
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return {"size": st.st_size, "mtime_ns": st.st_mtime_ns}
+    h = hashlib.sha256()
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            fp = os.path.join(root, f)
+            try:
+                s = os.stat(fp)
+            except OSError:
+                continue
+            total += s.st_size
+            h.update(f"{os.path.relpath(fp, path)}|{s.st_size}|{s.st_mtime_ns};".encode())
+    return {"size": total, "mtime_ns": int(h.hexdigest()[:15], 16)}
+
+
 def _ensure_index(
     sf_dir: str, kind: str, build_fn, parts: tuple[str, ...]
 ) -> str:
     """Build a persisted ANN index under repo-local ``.cache/indexes``
     exactly once per (fixture content, kind) and return its path.
 
-    Same discipline as the layout catalog (tables.py): the path is keyed
-    on the embeddings fixture's identity via ``tables._source_identity``
-    (recursive listing for directory-shaped fixtures — a top-level stat
-    misses in-place part-file rewrites), so a regenerated fixture gets a
-    NEW path instead of a stale read and different SFs never collide; the
-    build is serialized by an exclusive flock on ``<path>.writing`` and
-    completed by an engine-owned marker written AFTER the data commits —
-    so concurrent plan constructions (parallel selfcheck chunks, bench
-    alongside a sweep, pytest) can't tear each other's files, and
-    re-constructions of an unchanged fixture skip the rebuild.
-    Completeness = marker AND every ``parts`` subdir present: a torn
-    manual deletion that leaves the marker must trigger a rebuild, not a
-    permanent PATH_NOT_FOUND.  Superseded generations (other keys of the
-    same kind) are reclaimed after a successful ensure — DEFERRED behind
-    a grace period: readers (ivf_query_index probe scans) hold no flock,
-    so an immediate rmtree could FileNotFound a concurrent process
-    mid-scan over the old generation — the same hazard class
-    tables._sweep_trash fixed for layouts (ADVICE r11/r12).  A
-    superseded dir is first tombstoned (``_sgs_index_superseded``
+    The path is keyed on the embeddings fixture's identity
+    (:func:`_source_identity`: a recursive listing for directory-shaped
+    fixtures — a top-level stat misses in-place part-file rewrites), so a
+    regenerated fixture gets a NEW path instead of a stale read and
+    different SFs never collide; the build is serialized by an exclusive
+    flock on ``<path>.writing`` and completed by an engine-owned marker
+    written AFTER the data commits — so concurrent plan constructions
+    (parallel selfcheck chunks, bench alongside a sweep, pytest) can't
+    tear each other's files, and re-constructions of an unchanged fixture
+    skip the rebuild.  Completeness = marker AND every ``parts`` subdir
+    present: a torn manual deletion that leaves the marker must trigger a
+    rebuild, not a permanent PATH_NOT_FOUND.  Superseded generations
+    (other keys of the same kind) are reclaimed after a successful ensure
+    — DEFERRED behind a grace period: readers (ivf_query_index probe
+    scans) hold no flock, so an immediate rmtree could FileNotFound a
+    concurrent process mid-scan over the old generation (ADVICE r11/r12).
+    A superseded dir is first tombstoned (``_sgs_index_superseded``
     mtime = supersession time) and its files removed only by a later
-    ensure once the tombstone outlives tables._reclaim_grace_s(),
-    still skipping any generation a concurrent builder holds flocked."""
+    ensure once the tombstone outlives ``_INDEX_RECLAIM_GRACE_S``, still
+    skipping any generation a concurrent builder holds flocked."""
     import fcntl
     import glob
     import hashlib
     import os
     import shutil
     import time
-
-    from steampipe_sqlite_spark.tables import (
-        _reclaim_grace_s,
-        _source_identity,
-    )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     ident = _source_identity(src)
@@ -1539,7 +1564,9 @@ def _ensure_index(
         fcntl.flock(wl, fcntl.LOCK_UN)
         os.close(wl)
         # the .writing lockfile stays on disk: unlinking a lockfile races
-        # with a concurrent opener (see tables._sweep_trash)
+        # with a concurrent opener (it can end up holding a lock on the
+        # unlinked inode while a fresh file is created — two "exclusive"
+        # holders)
     # a fixture reverted to a previously-seen content hash resurrects its
     # old generation: clear any tombstone so a later sweep can't reclaim
     # the index we just served
@@ -1566,7 +1593,7 @@ def _ensure_index(
             except OSError:
                 pass  # dir vanished under us (another process reclaimed)
             continue
-        if tomb_age < _reclaim_grace_s():
+        if tomb_age < _INDEX_RECLAIM_GRACE_S:
             continue  # grace window still open for in-flight scans
         owl = None
         try:
@@ -3954,8 +3981,7 @@ ORDER BY doc_id
 # classifies every row added / deleted / modified / unchanged and names
 # the changed column.  The parity-derived synthetic snapshots exercise
 # all four branches; at scale the join is key-partitioned (one shuffle
-# per side, or zero with bucketed snapshots — tables.optimize_layout
-# (bucket_by=)).  Identical text both engines.
+# per side).  Identical text both engines.
 
 
 @query(

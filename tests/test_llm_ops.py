@@ -437,6 +437,31 @@ class TestEnsureIndexCache:
     flock-serialized, marker-completed — plus the torn-deletion rebuild
     and same-family generation reclaim (code-review r12, second pass)."""
 
+    def test_directory_source_staleness_detected(self, tmp_path):
+        """Directory-shaped fixtures (Spark-written tables): rewriting a
+        part file in place changes the file's mtime but NOT the
+        directory's — the identity must fingerprint the recursive
+        listing, or the index key keeps serving a stale generation."""
+        import os
+
+        from steampipe_sqlite_spark.plans.llm import _source_identity
+
+        d = tmp_path / "embeddings.parquet"
+        (d / "sub").mkdir(parents=True)
+        for rel in ("part-00000.parquet", "sub/part-00001.parquet"):
+            (d / rel).write_bytes(b"x" * 64)
+        before = _source_identity(str(d))
+        dir_mtime = os.stat(d).st_mtime_ns
+        part = d / "sub" / "part-00001.parquet"
+        st = os.stat(part)
+        os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+        assert os.stat(d).st_mtime_ns == dir_mtime
+        assert _source_identity(str(d)) != before
+        # a plain file keys on its own size and mtime
+        f = tmp_path / "flat.parquet"
+        f.write_bytes(b"y" * 8)
+        assert _source_identity(str(f))["size"] == 8
+
     def test_torn_deletion_rebuilds_and_generations_reclaim(
         self, spark, monkeypatch
     ):
@@ -509,9 +534,8 @@ class TestEnsureIndexCache:
                 parts=("centroids", "cells"),
             )
             assert os.path.exists(fake)
-            # phase 2: grace elapsed (env knob shared with the layout
-            # sweep) -> next ensure reclaims the files
-            monkeypatch.setenv("SPARK_GRAFT_LAYOUT_RECLAIM_GRACE", "0")
+            # phase 2: grace elapsed -> next ensure reclaims the files
+            monkeypatch.setattr(L, "_INDEX_RECLAIM_GRACE_S", 0.0)
             L._ensure_index(
                 "/root/testdata/sf0.001", "testivf", build,
                 parts=("centroids", "cells"),

@@ -8,7 +8,7 @@ import pytest
 
 from steampipe_sqlite_spark.plans.registry import collect
 from steampipe_sqlite_spark.tables import load_table
-from tools.plan_audit import audit, duplicated, plan_text
+from tools.plan_audit import audit, duplicated, plan_text, single_partition_windows
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -414,18 +414,16 @@ ROW_UDTF_WITNESS_OK = {"tvf_generate_series"}
 
 def test_corpus_global_windows_are_allowlisted(corpus_plans):
     """PHYSICAL-plan twin of test_no_unbounded_global_windows_in_corpus,
-    sharing GLOBAL_WINDOW_BOUNDED_OK: the advisor's detector flags any
+    sharing GLOBAL_WINDOW_BOUNDED_OK: single_partition_windows flags any
     Exchange SinglePartition feeding a Window — the one-task-sorts-the-
     world shape at 100 TB — so the logical audit (unpartitioned_windows,
     bounded-subtree aware) and the physical detector must agree on the
     same justified set; anti-rot on entries whose plans stopped
     tripping."""
-    from steampipe_sqlite_spark.advisor import _plan_scale_hazards
-
     tripped = set()
     built_ok = set(corpus_plans)
     for name, a in corpus_plans.items():
-        if "single_partition_window" in _plan_scale_hazards(a.plan):
+        if single_partition_windows(a.plan):
             tripped.add(name)
     unjustified = tripped - GLOBAL_WINDOW_BOUNDED_OK
     assert not unjustified, (
@@ -434,6 +432,44 @@ def test_corpus_global_windows_are_allowlisted(corpus_plans):
     )
     stale = (GLOBAL_WINDOW_BOUNDED_OK & built_ok) - tripped
     assert not stale, f"allowlist entries no longer tripping the detector: {stale}"
+
+
+def test_window_group_limit_is_not_a_global_window_hazard():
+    """single_partition_windows must fire on the actual Window operator
+    only: a WindowGroupLimit (the rank<=k prune Spark inserts ABOVE the
+    window) sitting within 3 lines of an Exchange SinglePartition is
+    not the all-rows-to-one-task shape and must not be flagged
+    (ADVICE r12)."""
+    prune_only = (
+        "+- WindowGroupLimit [rank#9], 10\n"
+        "   +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=3]\n"
+        "      +- Sort [k#1 ASC NULLS FIRST], false, 0\n"
+    )
+    assert not single_partition_windows(prune_only)
+
+    # the REALISTIC full group-limit plan Spark emits for rank()<=k over
+    # an empty partition: Window / WindowGroupLimit Final / Sort /
+    # Exchange SinglePartition / WindowGroupLimit Partial — the exchange
+    # input is pruned to k rows per partition by the partial, so the
+    # Window-above must not be flagged either (code-review r13)
+    full_prune = (
+        "+- Window [rank(v#2) windowspecdefinition(v#2 ASC NULLS FIRST, "
+        "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) "
+        "AS rnk#7], [v#2 ASC NULLS FIRST]\n"
+        "   +- WindowGroupLimit [v#2 ASC NULLS FIRST], rank(v#2), 10, Final\n"
+        "      +- Sort [v#2 ASC NULLS FIRST], false, 0\n"
+        "         +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=5]\n"
+        "            +- WindowGroupLimit [v#2 ASC NULLS FIRST], rank(v#2), 10, Partial\n"
+    )
+    assert not single_partition_windows(full_prune)
+
+    real_global = (
+        "+- Window [row_number() windowspecdefinition(k#1 ASC NULLS FIRST, "
+        "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) "
+        "AS rn#7], [k#1 ASC NULLS FIRST]\n"
+        "   +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=3]\n"
+    )
+    assert single_partition_windows(real_global)
 
 
 def test_corpus_has_no_cartesian_or_row_python_stages(corpus_plans):
@@ -503,46 +539,6 @@ def test_corpus_duplicated_expressions_are_allowlisted(corpus_plans):
     assert not new, f"expressions evaluated 3+ times in one plan: {new}"
     stale = (DUPLICATED_EXPR_OK & set(corpus_plans)) - set(dups)
     assert not stale, f"allowlist entries with no duplicated expression left: {stale}"
-
-
-def test_optimized_layout_runs_q3_q18_exchange_free_on_orderkey(
-    spark, queries, monkeypatch, tmp_path
-):
-    """VERDICT r10 #3: the measured 4.5-8.7x bucketed-layout win must be
-    reachable through the public engine surface.  optimize_layout on
-    lineitem/orders (bucketed on orderkey) + the REGISTERED q3/q18 SQL —
-    no probe code — must plan zero exchanges whose partitioning key is the
-    orderkey (q3's SMJ rides the bucketing; q18's GROUP BY l_orderkey
-    aggregates in place), with results identical to the plain layout."""
-    import steampipe_sqlite_spark.tables as T
-
-    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "layout"))
-    base = {
-        name: {tuple(r) for r in queries[name](spark, SF_DIR).collect()}
-        for name in ("tpch_q3", "tpch_q18")
-    }
-    T.optimize_layout(spark, SF_DIR, "lineitem", "l_orderkey", 8, sort_by="l_orderkey")
-    T.optimize_layout(spark, SF_DIR, "orders", "o_orderkey", 8, sort_by="o_orderkey")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
-    try:
-        for name in ("tpch_q3", "tpch_q18"):
-            df = queries[name](spark, SF_DIR)
-            assert {tuple(r) for r in df.collect()} == base[name]
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert plan.count("Bucketed: true") >= 1, plan[:2000]
-            # single-key hashpartitioning on the orderkey = the exchange the
-            # layout exists to remove (multi-key group-bys may still shuffle)
-            bad = re.findall(r"Exchange hashpartitioning\([lo]_orderkey#\d+L?, \d+\)", plan)
-            assert not bad, f"{name} still exchanges on the bucket key: {bad}"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        T.drop_layout(spark, SF_DIR, "lineitem")
-        T.drop_layout(spark, SF_DIR, "orders")
-    # dropped: the next run is back on the plain parquet scan
-    plain = queries["tpch_q3"](spark, SF_DIR)
-    assert "Bucketed: true" not in plain._jdf.queryExecution().executedPlan().toString()
-    assert {tuple(r) for r in plain.collect()} == base["tpch_q3"]
 
 
 def test_emb_neardup_pair_join_is_parallel(spark, queries):

@@ -1,6 +1,6 @@
 """Scale-toolkit proofs: targeted salting preserves results, AQE splits a
 skewed join, distributed ranks and running sums match the window form
-without a single-partition stage, and Z-order clustering preserves rows."""
+without a single-partition stage."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -232,8 +232,7 @@ class TestDistributedRowNumber:
     def test_reserved_working_names_rejected(self, spark):
         """Inputs already carrying _pid/_off (or the output name) would be
         silently overwritten then dropped by the two-phase composition —
-        the same corruption class zorder_values guards against; both
-        helpers must raise instead (code-review r12)."""
+        both helpers must raise instead (code-review r12)."""
         import pytest
 
         from steampipe_sqlite_spark.operators.scale import (
@@ -341,67 +340,3 @@ def test_gapfill_locf_semantics(spark):
         else:
             assert r.v_filled is not None
             prev[r.k] = r.v_filled
-
-
-class TestZorder:
-    def test_zorder_clusters_both_columns_and_preserves_rows(self, spark, tmp_path):
-        import glob
-
-        import pyarrow.parquet as pq
-
-        from steampipe_sqlite_spark.operators.scale import zorder_write
-
-        events = load_table(spark, SF_DIR, "events").select(
-            "event_id", "user_id", "value"
-        )
-        out = str(tmp_path / "zorder")
-        zorder_write(events, ["user_id", "value"], out, files=8, bits=8)
-
-        # rows unchanged (layout-only transform)
-        back = spark.read.parquet(out)
-        assert back.count() == events.count()
-        assert (
-            back.select(F.sum("event_id")).first()[0]
-            == events.select(F.sum("event_id")).first()[0]
-        )
-
-        # per-file min/max spread: with 8 z-ordered files each file should
-        # cover a narrow slice of BOTH dimensions (~sqrt(1/8) of the domain
-        # per column); an unclustered layout covers ~100% of each.
-        stats = {"user_id": [], "value": []}
-        domain = {
-            c: events.selectExpr(f"max({c}) - min({c})").first()[0]
-            for c in stats
-        }
-        for path in glob.glob(f"{out}/*.parquet"):
-            meta = pq.ParquetFile(path).metadata
-            schema_names = [meta.schema.column(i).name for i in range(meta.num_columns)]
-            for c in stats:
-                idx = schema_names.index(c)
-                lo = min(meta.row_group(g).column(idx).statistics.min for g in range(meta.num_row_groups))
-                hi = max(meta.row_group(g).column(idx).statistics.max for g in range(meta.num_row_groups))
-                stats[c].append((hi - lo) / domain[c])
-        for c, spreads in stats.items():
-            mean_spread = sum(spreads) / len(spreads)
-            assert mean_spread < 0.6, f"{c}: files cover {mean_spread:.0%} of the domain on average"
-
-    def test_reserved_internal_names_rejected(self, spark):
-        """An input column named like the internal quantization columns
-        (_q<i>/_b<i>/_z) would be silently overwritten and then dropped
-        (ADVICE r11) — must raise instead of corrupting data."""
-        import pytest
-
-        from steampipe_sqlite_spark.operators.scale import zorder_values
-
-        df = spark.range(10).selectExpr("id", "id * 2 AS _q0")
-        with pytest.raises(ValueError, match="_q0"):
-            zorder_values(df, ["id", "_q0"])
-        df2 = spark.range(10).selectExpr("id", "id * 2 AS v", "id AS _z")
-        with pytest.raises(ValueError, match="_z"):
-            zorder_values(df2, ["id", "v"])
-        # and clean inputs still work
-        out = zorder_values(
-            spark.range(10).selectExpr("id", "id * 3 AS v"), ["id", "v"], bits=2
-        )
-        assert out.columns == ["id", "v", "_z"]
-        assert out.count() == 10

@@ -131,7 +131,7 @@ def test_max_partition_bytes_ignores_tiny_side_tables(monkeypatch, tmp_path):
 
 
 def test_max_partition_bytes_counts_hive_partitioned_parts(monkeypatch, tmp_path):
-    """optimize_layout(partition_by=) nests part files under key=value subdirs;
+    """A hive-partitioned sf dir nests part files under key=value subdirs;
     counting only the dataset dir's direct children saw 1 file and forced
     16m splits on an already-many-file layout (ADVICE r10) — the count
     must walk recursively, mirroring _input_bytes."""

@@ -41,9 +41,7 @@ in a busier window; the scaling property holds under both policies):
   plateaus or regresses: there is no hidden single-core stage (the
   window-rewrite probe pinned that class separately), so partition
   count — cluster width — is the only cap.  The SMJ shapes stay
-  shuffle-bound, exactly the work bucketing removes
-  (tools/bucketed_layout_probe.py: q3 3.68 -> ~1.1 s on the bucketed
-  layout at 32 cores).
+  shuffle-bound.
 
   The probe paid for itself before its table settled: the FIRST sweep
   showed q3/q9 REGRESSING 16->32 cores (5.40 -> 7.13 s, 3.00 -> 3.94).

@@ -59,9 +59,7 @@ session.py.  spark_s / duckdb_s (ratio), quiet window, best-of-3):
   lineitem⋈orders and customer (so both shuffle WRITES happen, 60M +
   15M rows), then runtime stats convert every join to broadcast and the
   joins read the map output via AQEShuffleRead local.  The sunk shuffle
-  writes are the delta vs q3/q9's floor at ~6; bucketing
-  lineitem/orders on the order key (tables.optimize_layout(bucket_by=),
-  same deployment note as q3) removes exactly those writes.  Round-10 window context:
+  writes are the delta vs q3/q9's floor at ~6.  Round-10 window context:
   the 2-stage floor sentinel read 0.224 s during this arm vs 0.13 in
   the r9 rows — the co-tenant tax inflates the Spark column of all
   three readings, so cross-round comparisons should lean on the trend,
@@ -79,10 +77,9 @@ session.py.  spark_s / duckdb_s (ratio), quiet window, best-of-3):
   tpch_q3 / asof: ratios fall to ~5–6 and floor there — at 60M rows the
   broadcast is no longer legal and the SMJ/keyed-window shuffle meets a
   single-process in-memory hash join; the Spark plan is the scale-OUT
-  shape (and optimize_layout(bucket_by=) on l_orderkey/o_orderkey removes
-  the q3 shuffle entirely at deployment), which the comparison engine cannot
-  extend past one node.  tpch_q9 (row added round 9 when it grazed the
-  2× ex-floor bar at 2.17): same family — facts replicated 100×, the
+  shape, which the comparison engine cannot extend past one node.
+  tpch_q9 (row added round 9 when it grazed the 2× ex-floor bar at
+  2.17): same family — facts replicated 100×, the
   part/supplier/nation catalog fixed (the DIMS model), so the
   part/supplier joins stay broadcast at every scale and only the
   lineitem⋈orders SMJ grows; ratio 8.7 → 8.3 → 5.8, converging like q3.
@@ -96,9 +93,7 @@ the r9 rows so compare trends, not absolutes):
   win_running_sum   7.91/3.73 (2.12)
 
   q9/asof/running-sum improved vs the r9 rows; q3/q5 read higher on
-  this window (their flat-layout SMJ is the shape with the widest
-  window variance — see tools/bucketed_layout_probe.py, which removes
-  both the exchange and the variance: q3 ~1.1 s bucketed).
+  this window (their SMJ is the shape with the widest window variance).
 """
 
 from __future__ import annotations

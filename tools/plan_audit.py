@@ -102,6 +102,28 @@ def unpartitioned_windows(df) -> list[dict]:
     return found
 
 
+def single_partition_windows(plan: str) -> bool:
+    """True when the physical ``plan`` text has a Window operator fed by an
+    Exchange SinglePartition: every row sorted in one task (Spark's "No
+    Partition Defined" warning), fatal at 100 TB.  A WindowGroupLimit
+    between the two is Spark's rank<=k prune, whose single partition gets
+    at most k rows per input partition: bounded, not flagged (ADVICE r12,
+    code-review r13)."""
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        # the operator name after the tree-drawing prefix; WindowGroupLimit
+        # itself is the prune, not the window
+        op = line.lstrip(" :+-*()0123456789")
+        if op.startswith("Window") and not op.startswith("WindowGroupLimit"):
+            # the child subtree prints directly below the window
+            for nxt in lines[i + 1 : i + 4]:
+                if "WindowGroupLimit" in nxt:
+                    break
+                if "Exchange SinglePartition" in nxt:
+                    return True
+    return False
+
+
 def facts(plan: str) -> list[str]:
     out = []
     joins = re.findall(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)", plan)

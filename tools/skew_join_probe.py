@@ -1,8 +1,8 @@
 """Skew-join probe: measure the engine's two answers to a hot key.
 
-Every join story so far (floorbound, bucketed-layout, core-elasticity
-probes) ran UNIFORM keys — replicas re-keyed per copy exactly so that
-per-key density stays flat.  Real corpora are zipfian: one null-ish or
+Every join story so far (floorbound and core-elasticity probes) ran
+UNIFORM keys — replicas re-keyed per copy exactly so that per-key
+density stays flat.  Real corpora are zipfian: one null-ish or
 default key owning 10-30% of a fact table is the classic 100 TB
 straggler, where a 1000-executor cluster waits on the one reducer that
 got the hot key.  The engine keeps two mitigations; this probe turns
@@ -272,7 +272,7 @@ def main() -> None:
 
     for divisor in (1, 10):
         # build with a default session, then size every arm session from
-        # the corpus it will read (house pattern: bucketed_layout_probe)
+        # the corpus it will read
         spark = get_spark("skewprobe-build")
         base = build(
             spark, fact_m * 1_000_000 // divisor, keys_m * 1_000_000 // divisor

@@ -1,7 +1,6 @@
 """Spill probe: shrink the heap until the engine must spill, and measure
 the tax — completing the scale-evidence matrix (floorbound = data scale,
-bucketed_layout = layout, core_elasticity = cores, skew_join = keys,
-THIS = memory).
+core_elasticity = cores, skew_join = keys, THIS = memory).
 
 At 100 TB the per-task memory budget is whatever the executor grants —
 a plan is only deployable if it degrades to disk spill instead of dying

@@ -160,7 +160,9 @@ def _is_number(v: Any) -> bool:
 # {"cache_ttl": "5"} would keep the 300 s default) and the retry and
 # throttle code would raise inside a Python worker at the first page.
 # cache_ttl and cache_max_size_mb must be positive for the same reason; for
-# the others 0 means "off".
+# the retry keys and rate_limit_rps 0 means "off".  rate_limit_burst 0 means
+# the default; a burst below 1 could never hold the 1-token debit of one
+# call, so every throttled call would wait forever.
 _ENGINE_OPTIONS = {
     "cache": (lambda v: isinstance(v, bool), "a bool"),
     "cache_ttl": (lambda v: _is_number(v) and v > 0, "a positive number of seconds"),
@@ -172,9 +174,12 @@ _ENGINE_OPTIONS = {
             "retry_min_backoff_ms",
             "retry_max_backoff_ms",
             "rate_limit_rps",
-            "rate_limit_burst",
         )
     },
+    "rate_limit_burst": (
+        lambda v: _is_number(v) and (v == 0 or v >= 1),
+        "0 (the default) or a number >= 1",
+    ),
 }
 
 

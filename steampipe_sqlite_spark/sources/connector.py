@@ -340,40 +340,12 @@ class Connector(ABC):
         connectors should call per page, not per scan.  Returns seconds
         waited (0.0 when unthrottled).
 
-        Scope (config ``rate_limit_scope``):
-
-        - ``"process"`` (default): one token bucket per process at the
-          full rps — the SDK's per-process limiter shape.  On a cluster
-          the effective rate multiplies by worker count.
-        - ``"global"``: the scan planner divides the budget by the
-          planned partition count (datasource.ConnectorReader.partitions
-          stamps ``rate_share`` on each partition); each partition
-          throttles against its OWN bucket at rps x share, so the
-          cluster-wide total of PARTITIONED BATCH SCANS stays at rps no
-          matter where tasks land — the shape a 1000-executor deployment
-          needs against a real cloud API quota.  Partitionless calls
-          (the streaming face's single cursor, or a direct execute with
-          partition=None) have no share; ALL of them for one connection
-          draw from ONE shared full-rps bucket in the process (bucket
-          key pins index -1), so any number of concurrent partitionless
-          scans stay at rps COMBINED (pinned by
-          test_concurrent_partitionless_scans_share_one_budget).
-
-          Known limits, in-process coordination can't remove:
-
-          - a streaming tail running CONCURRENTLY with batch scans of
-            the same connection can reach 2x the budget (stream bucket +
-            partition buckets are independent); give the stream its own
-            connection config (its own budget) when that matters.
-          - shares are derived PER TABLE (from that table's unpruned
-            shard count), so concurrent partitioned scans of T different
-            tables of one connection can reach T x rps combined.  Shards
-            of different tables that happen to compute the SAME
-            per-partition rate share a bucket (the key is (partition
-            index, rate)) — conservative — but differing shard counts
-            give different rates and therefore independent budgets.
-            Size rps per (connection, table) when multi-table
-            concurrency matters."""
+        The budget is per host: every process on the host (driver,
+        planner, each Python worker) draws from one token bucket for this
+        connection, keyed by connector class and config string
+        (sources/ratelimit.py), so ``rate_limit_rps`` is the host's
+        request rate however many tasks, tables or streams scan it.  On a
+        multi-host cluster, size it as api_budget / hosts."""
         from steampipe_sqlite_spark.sources.config import parse_config
         from steampipe_sqlite_spark.sources.ratelimit import bucket_for
 
@@ -384,26 +356,8 @@ class Connector(ABC):
         rps = cfg.get("rate_limit_rps")
         if not rps:
             return 0.0
-        rps = float(rps)
-        burst = cfg.get("rate_limit_burst")
         key = (type(self).__module__, type(self).__qualname__, self.config)
-        if str(cfg.get("rate_limit_scope", "process")).lower() == "global":
-            part = getattr(self, "_current_partition", None)
-            share = (part.info.get("rate_share") if part is not None else None) or 1.0
-            rps *= share
-            if burst:
-                burst = max(1.0, float(burst) * share)
-            # per-partition bucket: co-located partitions must not pool
-            # into one under-budget bucket (their shares are additive).
-            # The applied RATE is part of the key so a rate change can
-            # never silently replace a live bucket mid-deficit
-            # (ratelimit.bucket_for rebuilds on rate mismatch, which
-            # would grant a fresh burst — code-review r13); shares are
-            # derived from the stable unpruned shard count
-            # (datasource.ConnectorReader.partitions), so in practice
-            # one partition maps to one long-lived bucket.
-            key = key + ("global", part.index if part is not None else -1, rps)
-        return bucket_for(key, rps, burst).acquire(n)
+        return bucket_for(key, float(rps), cfg.get("rate_limit_burst")).acquire(n)
 
     # -- discovery (reference configure_fn.go:152-163)
     @abstractmethod

@@ -63,7 +63,6 @@ from steampipe_sqlite_spark.sources.connector import (
     bind_timestamp,
     check_required_quals,
 )
-from steampipe_sqlite_spark.sources.ratelimit import cached_share
 
 FORMAT_NAME = "steampipe"
 
@@ -250,76 +249,10 @@ class ConnectorReader(DataSourceReader):
         # error surfaces at execute time (/root/reference/table.go:156-164)
         check_required_quals(self.table, self.quals, self._constrained)
         parts = self.connector.partitions(self.table.name, self.quals)
-        # rate_limit_scope=global: the per-process token bucket multiplies
-        # by worker count on a real cluster (1000 executors x rps calls/s
-        # would hammer the upstream API 1000x over budget), so the planned
-        # partition count — known HERE, at plan time — divides the budget:
-        # each partition's scan gets an rps/n share enforced by its own
-        # bucket (Connector.throttle), keeping the cluster-wide total at
-        # rps regardless of task placement.  Static fair-share, the same
-        # discipline a Spark job uses absent a coordination service.
-        try:
-            from steampipe_sqlite_spark.sources.config import parse_config
-
-            cfg = parse_config(self.connector.config)
-        except Exception:  # noqa: BLE001 — unconfigured connectors
-            cfg = {}
-        if (
-            parts
-            and cfg.get("rate_limit_rps")
-            and str(cfg.get("rate_limit_scope", "process")).lower() == "global"
-        ):
-            # Divide by the UNPRUNED shard count, not the planned count:
-            # a qual-pruned scan (2 of 4 chains) and a full scan would
-            # otherwise compute different per-partition rates for the
-            # SAME bucket key, and bucket_for replaces a bucket whose
-            # rate changed — each replacement grants a fresh burst,
-            # defeating the budget (code-review r13).  The unpruned
-            # count is stable across scans, so each partition's rate —
-            # and therefore its bucket — is stable too; pruning then
-            # only LOWERS the aggregate rate (fewer active chains).
-            try:
-                total = len(self.connector.partitions(self.table.name, []))
-            except Exception:  # noqa: BLE001 — required-qual connectors
-                total = len(parts)
-            share = 1.0 / max(total, len(parts), 1)
-            # pin the FIRST computed share per (connection, table) for
-            # the process: the required-qual fallback above is pruning-
-            # dependent, and a share that drifts between scans would
-            # open a fresh-burst bucket per distinct rate for the same
-            # shard (ADVICE r13 — see ratelimit.cached_share)
-            conn_cls = type(self.connector)
-            share = cached_share(
-                (
-                    conn_cls.__module__,
-                    conn_cls.__qualname__,
-                    self.connector.config,
-                    self.table.name,
-                ),
-                share,
-            )
-            for p in parts:
-                p.info.setdefault("rate_share", share)
         return [ConnectorPartition(p.index, p.info) for p in parts]
 
     def read(self, partition: ConnectorPartition):
         part = Partition(partition.index, partition.info)
-        # partition context for global-scope throttling: the connector's
-        # own per-page throttle() calls have no partition argument, so
-        # the current partition rides on the instance (one reader scan
-        # per partition — no concurrency on this attribute within a task).
-        # Cleared on exit: a LATER partitionless execute() on the same
-        # in-process instance (streaming face, direct call) must take the
-        # full-rps shared bucket, not inherit this partition's share
-        # (ADVICE r14 — per-task deserialized copies were always fresh,
-        # only instance reuse leaked).
-        self.connector._current_partition = part
-        try:
-            yield from self._read_with_cache(part, partition)
-        finally:
-            self.connector._current_partition = None
-
-    def _read_with_cache(self, part: Partition, partition: ConnectorPartition):
         quals_key = tuple((q.column, q.op, q.value) for q in self.quals)
         cols_key = tuple(self.columns) if self.columns is not None else None
         conn_cls = type(self.connector)

@@ -23,8 +23,9 @@ this one reproduces it faithfully while staying hermetic:
   the same process succeeds.
 - **Throttle per page**: one ``self.throttle()`` debit per page fetch
   (the documented paging-connector contract, connector.py throttle
-  docstring) — so ``rate_limit_rps`` bounds the per-process request
-  rate regardless of how many pages a scan walks.
+  docstring) — so ``rate_limit_rps`` bounds the host's request rate
+  regardless of how many pages a scan walks or how many Python workers
+  walk them.
 - **Partition parallelism**: each partition is an independent token
   chain (per-region/per-account endpoints); ``partitions()`` prunes on
   an equality/IN qual over ``partition_id`` — API-level partition
@@ -34,7 +35,7 @@ this one reproduces it faithfully while staying hermetic:
   monotonic ts) with an O_APPEND single-write (atomic on Linux for
   sub-PIPE_BUF lines), so a driver-side test can prove
   total fetches == pages x partitions (+ the exact retry replays) and
-  that per-process inter-call spacing honors the throttle.
+  that the host-wide call rate honors the throttle.
 
 Rows are deterministic functions of (partition, page, index) so any
 scan is exactly reproducible — which also makes the scan cache and

@@ -1,15 +1,17 @@
-"""Per-process rate limiting for connector API calls.
+"""Host-wide rate limiting for connector API calls.
 
 SURVEY §7.5.5: API rate limits × Spark parallelism need a throttle — a
 plugin backed by a rate-limited API must not get hammered by 32 executor
-threads at once.  The plugin SDK's limiter is per-plugin-process with
-configurable rates; the analog here is a process-wide token bucket keyed
-by (connector class, config), shared by every scan thread in that worker.
+threads at once.  The plugin SDK's limiter lives once in the plugin
+process that serves the whole query; the analog here is one token bucket
+per host, keyed by (connector class, config), whose state is a 16-byte
+file that every driver, planner and Python-worker process on the host
+reads and debits under an ``fcntl.flock``.
 
 Connection-config keys (read by :meth:`Connector.throttle`):
 - ``rate_limit_rps``: sustained calls/second budget for this connection,
-  **per executor process** — cluster-wide rate = rps × python workers, so
-  size it as (api_budget / expected_workers).
+  **per host** — however many processes and tasks scan it.  On a
+  multi-host cluster, size it as (api_budget / hosts).
 - ``rate_limit_burst``: bucket capacity (default: max(rps, 1)) — short
   bursts up to this many calls pass without waiting.
 
@@ -20,74 +22,81 @@ erroring.
 
 from __future__ import annotations
 
-import threading
+import fcntl
+import hashlib
+import math
+import os
+import struct
+import tempfile
 import time
+
+# (tokens, last refill time.monotonic()); CLOCK_MONOTONIC is system-wide
+# on Linux, so every process on the host reads the same clock
+_STATE = struct.Struct("<dd")
 
 
 class TokenBucket:
-    """Thread-safe token bucket: ``acquire()`` blocks until a token is
-    available at the configured refill rate."""
+    """Token bucket whose state lives in the file ``path``: ``acquire()``
+    blocks until a token is available at the configured refill rate.
+    Every thread and process holding a bucket over the same file draws
+    from one budget."""
 
-    def __init__(self, rate_per_s: float, burst: float | None = None):
+    def __init__(self, rate_per_s: float, burst: float | None, path: str):
         if rate_per_s <= 0:
             raise ValueError("rate_per_s must be positive")
         self.rate = float(rate_per_s)
         self.capacity = float(burst) if burst else max(self.rate, 1.0)
-        self._tokens = self.capacity
-        self._last = time.monotonic()
-        self._lock = threading.Lock()
+        self.path = path
 
-    def _refill(self) -> None:
-        now = time.monotonic()
-        self._tokens = min(self.capacity, self._tokens + (now - self._last) * self.rate)
-        self._last = now
+    def _open(self) -> int:
+        try:
+            return os.open(self.path, os.O_RDWR | os.O_CREAT, 0o600)
+        except FileNotFoundError:
+            os.makedirs(os.path.dirname(self.path), mode=0o700, exist_ok=True)
+            return os.open(self.path, os.O_RDWR | os.O_CREAT, 0o600)
 
-    def try_acquire(self, n: float = 1.0) -> bool:
-        with self._lock:
-            self._refill()
-            if self._tokens >= n:
-                self._tokens -= n
-                return True
-            return False
+    def _debit(self, n: float) -> float:
+        """Refill, then take ``n`` tokens if they are there; returns the
+        seconds until they would be (0.0 when taken).  A short or garbled
+        state, or one stamped later than now (a reboot restarts the
+        clock), reads as a full bucket."""
+        fd = self._open()
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            now = time.monotonic()
+            raw = os.pread(fd, _STATE.size, 0)
+            tokens, last = _STATE.unpack(raw) if len(raw) == _STATE.size else (-1.0, 0.0)
+            if not (0.0 <= tokens < math.inf and 0.0 <= last <= now):
+                tokens, last = self.capacity, now
+            tokens = min(self.capacity, tokens + (now - last) * self.rate)
+            if tokens >= n:
+                tokens -= n
+                need = 0.0
+            else:
+                need = (n - tokens) / self.rate
+            os.pwrite(fd, _STATE.pack(tokens, now), 0)
+            return need
+        finally:
+            os.close(fd)  # releases the lock
 
     def acquire(self, n: float = 1.0) -> float:
-        """Block until ``n`` tokens are available; returns seconds waited."""
+        """Block until ``n`` tokens are available; returns seconds waited.
+        Raises ``ValueError`` when ``n`` exceeds the bucket's capacity,
+        which no wait could fill."""
+        if n > self.capacity:
+            raise ValueError(
+                f"cannot acquire {n} tokens from a bucket of capacity {self.capacity}"
+            )
         waited = 0.0
-        while True:
-            with self._lock:
-                self._refill()
-                if self._tokens >= n:
-                    self._tokens -= n
-                    return waited
-                need = (n - self._tokens) / self.rate
+        while need := self._debit(n):
             time.sleep(need)
             waited += need
-
-
-_BUCKETS: dict[tuple, TokenBucket] = {}
-_SHARES: dict[tuple, float] = {}
-_REGISTRY_LOCK = threading.Lock()
+        return waited
 
 
 def bucket_for(key: tuple, rate_per_s: float, burst: float | None = None) -> TokenBucket:
-    """Process-wide bucket registry: every scan thread of the same
-    (connector, config) shares one budget."""
-    with _REGISTRY_LOCK:
-        b = _BUCKETS.get(key)
-        if b is None or b.rate != float(rate_per_s):
-            b = TokenBucket(rate_per_s, burst)
-            _BUCKETS[key] = b
-        return b
-
-
-def cached_share(key: tuple, value: float) -> float:
-    """First-computed global-scope rate share per (connection, table),
-    pinned for the process lifetime.  Required-qual connectors can't
-    answer the unpruned partitions() probe, so the share falls back to
-    the PRUNED count — which varies scan-to-scan with the quals; since
-    the applied rate is part of the bucket key, every distinct rate
-    would open a separate bucket with a fresh burst for the same shard
-    (ADVICE r13).  Pinning the first-computed share keeps one rate — and
-    therefore one long-lived bucket — per shard within a process."""
-    with _REGISTRY_LOCK:
-        return _SHARES.setdefault(key, value)
+    """The host-wide bucket for ``key``: every thread and process that
+    asks for the same (connector, config) key shares one budget."""
+    digest = hashlib.sha256(repr(key).encode()).hexdigest()[:32]
+    state_dir = os.path.join(tempfile.gettempdir(), f"sparktap-ratelimit-{os.getuid()}")
+    return TokenBucket(rate_per_s, burst, os.path.join(state_dir, digest))

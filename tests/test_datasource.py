@@ -197,6 +197,8 @@ class TestConfigValidation:
             ('{"cache": "false"}', "cache"),
             ('{"cache_ttl": "5"}', "cache_ttl"),
             ('{"rate_limit_rps": "fast"}', "rate_limit_rps"),
+            # a burst below 1 can never hold one call's token
+            ('{"rate_limit_rps": 10, "rate_limit_burst": 0.5}', "rate_limit_burst"),
             ('{"retry_attempts": "x"}', "retry_attempts"),
         ],
     )

@@ -7,9 +7,9 @@ atomic-append call log.
 The reference's cursor streams from the plugin SDK's paged Execute
 (/root/reference/cursor.go:39-59); these tests prove the bridge speaks
 that protocol shape: total connector calls == pages x partitions, the
-retry replay arithmetic is exact, the throttle bounds per-process
-request rate, and a partition_id qual prunes whole token chains at the
-API level."""
+retry replay arithmetic is exact, the throttle bounds the host's
+request rate across Python workers, and a partition_id qual prunes whole
+token chains at the API level."""
 
 import json
 import os
@@ -167,9 +167,9 @@ class TestThrottleAndCache:
     def test_throttle_bounds_per_process_page_rate(self):
         """rate_limit_rps spaces the page fetches: 6 pages at 50 rps
         with burst 1 must take >= 5/50 s of bucket waiting.  Driven at
-        the reader level (one process) because the token-bucket budget
-        is per-process by design — at cluster scale each executor gets
-        its own slice, as the SDK's per-process limiter does."""
+        the reader level, in one process; the budget is per host, so
+        test_sql_scan_holds_host_budget checks it across Spark's Python
+        workers."""
         import time as _t
 
         conn = PagedHttpConnector(
@@ -191,65 +191,6 @@ class TestThrottleAndCache:
         # 6 page debits + 1 scan debit, burst 1 -> >= 6 waits of 20 ms
         assert elapsed >= 0.8 * 6 / 50, f"throttle not honored: {elapsed:.3f}s"
 
-    def test_global_scope_divides_budget_across_partitions(self):
-        """rate_limit_scope=global: the planner stamps rate_share=1/n on
-        each partition and throttle() enforces rps x share per-partition
-        — so the CLUSTER-wide total stays at rps even when every worker
-        process has its own bucket.  With 2 partitions at 40 rps, one
-        partition's 6-page chain runs at 20 rps: >= 5/20 s (the same
-        chain under process scope needs only >= 5/40 s)."""
-        import time as _t
-
-        cfg = {
-            "n_partitions": 2,
-            "n_pages": 6,
-            "page_size": 5,
-            "rate_limit_rps": 40,
-            "rate_limit_burst": 1,
-            "rate_limit_scope": "global",
-        }
-        conn = PagedHttpConnector(json.dumps(cfg))
-        r = _reader(conn)
-        parts = r.partitions()
-        assert [p.info["rate_share"] for p in parts] == [0.5, 0.5]
-        t0 = _t.perf_counter()
-        rows = [x for b in r.read(parts[0]) for x in b.to_pylist()]
-        elapsed = _t.perf_counter() - t0
-        assert len(rows) == 30
-        assert elapsed >= 0.8 * 6 / 20, (
-            f"global scope must halve the 2-partition rate: {elapsed:.3f}s"
-        )
-        # partitions draw from SEPARATE buckets (shares are additive):
-        # the other chain is not starved by the first one's debits
-        t0 = _t.perf_counter()
-        [x for b in r.read(parts[1]) for x in b.to_pylist()]
-        second = _t.perf_counter() - t0
-        assert second <= 2.5 * elapsed  # same budget, not a shared-deficit stall
-
-    def test_global_share_is_stable_under_pruning(self):
-        """The per-partition budget share derives from the UNPRUNED shard
-        count: a qual-pruned scan must stamp the SAME share (and thus the
-        same per-partition bucket rate) as a full scan — a differing rate
-        would make bucket_for rebuild the live bucket with a fresh burst,
-        defeating the budget (code-review r13)."""
-        from steampipe_sqlite_spark.sources.connector import Qual
-
-        cfg = {
-            "n_partitions": 4,
-            "n_pages": 2,
-            "page_size": 5,
-            "rate_limit_rps": 40,
-            "rate_limit_scope": "global",
-        }
-        conn = PagedHttpConnector(json.dumps(cfg))
-        full = _reader(conn).partitions()
-        assert [p.info["rate_share"] for p in full] == [0.25] * 4
-        pruned = _reader(
-            conn, quals=[Qual("partition_id", "in", [1, 2])]
-        ).partitions()
-        assert [p.info["rate_share"] for p in pruned] == [0.25, 0.25]
-        assert [p.index for p in pruned] == [1, 2]
-
     def test_concurrent_partitionless_scans_share_one_budget(self):
         """VERDICT r13 #4: partitionless calls (streaming cursors, direct
         execute) of ONE connection all draw from ONE shared full-rps
@@ -264,13 +205,11 @@ class TestThrottleAndCache:
             "page_size": 5,
             "rate_limit_rps": 50,
             "rate_limit_burst": 1,
-            "rate_limit_scope": "global",
         }
-        # distinct config string -> fresh bucket (the registry is
-        # process-global and keyed by config)
+        # two instances of one connection config: one bucket, keyed by
+        # (connector class, config string)
         conn_a = PagedHttpConnector(json.dumps({**cfg, "tag": "shared-budget"}))
         conn_b = PagedHttpConnector(json.dumps({**cfg, "tag": "shared-budget"}))
-        assert getattr(conn_a, "_current_partition", None) is None
 
         def drain(c):
             for _ in range(5):
@@ -292,54 +231,42 @@ class TestThrottleAndCache:
             f"partitionless scans must share one budget: {elapsed:.3f}s"
         )
 
-    def test_partition_context_cleared_after_read(self):
-        """ADVICE r14: ConnectorReader.read must clear the connector's
-        partition context on exit, so a later partitionless execute on
-        the SAME in-process instance takes the full-rps shared bucket
-        instead of inheriting a stale partition's divided share."""
-        cfg = {
-            "n_partitions": 2,
-            "n_pages": 1,
-            "page_size": 5,
-            "rate_limit_rps": 1000,
-            "rate_limit_scope": "global",
-        }
-        conn = PagedHttpConnector(json.dumps({**cfg, "tag": "ctx-clear"}))
-        r = _reader(conn)
-        parts = r.partitions()
-        list(r.read(parts[0]))
-        assert getattr(conn, "_current_partition", None) is None
+    def test_sql_scan_holds_host_budget(self, spark, tmp_path):
+        """An Engine.sql scan of 8 token chains runs its pages in several
+        Python workers at once; they all draw from the connection's one
+        host-wide bucket.  Replayed as tools/paged_scan_probe.py does:
+        the calls beyond the burst, over the scan's wall time, stay
+        within rps.  Per-worker buckets would each grant the full rps."""
+        import time as _t
 
-    def test_required_qual_share_pinned_for_process(self):
-        """ADVICE r14: when the unpruned partitions() probe raises
-        (required-qual connectors), the share falls back to the pruned
-        count — which varies with the quals.  The FIRST computed share
-        is pinned per (connection, table) so later scans with different
-        pruning reuse the same rate (and thus the same long-lived
-        buckets) instead of opening fresh-burst buckets per rate."""
-        from steampipe_sqlite_spark.sources.connector import Qual
-
-        class RequiredQualPaged(PagedHttpConnector):
-            def partitions(self, table, quals):
-                if not quals:
-                    raise ValueError("partition_id qual required")
-                return super().partitions(table, quals)
-
-        cfg = {
-            "n_partitions": 4,
-            "n_pages": 1,
-            "page_size": 5,
-            "rate_limit_rps": 40,
-            "rate_limit_scope": "global",
-        }
-        conn = RequiredQualPaged(json.dumps({**cfg, "tag": "pin-share"}))
-        two = _reader(conn, quals=[Qual("partition_id", "in", [0, 1])]).partitions()
-        assert [p.info["rate_share"] for p in two] == [0.5, 0.5]
-        # a LATER wider scan would compute 1/3 — must reuse the pinned 1/2
-        three = _reader(
-            conn, quals=[Qual("partition_id", "in", [0, 1, 2])]
-        ).partitions()
-        assert [p.info["rate_share"] for p in three] == [0.5, 0.5, 0.5]
+        rps, burst = 50, 1
+        log = str(tmp_path / "calls.jsonl")
+        cfg = {"n_partitions": 8, "n_pages": 1, "page_size": 5, "cache": False}
+        eng = Engine(spark)
+        eng.load(PAGED)
+        # unthrottled warm-up: start the Python workers before timing
+        eng.configure("paged", json.dumps(cfg))
+        assert eng.sql("SELECT COUNT(*) AS n FROM paged_items").first().n == 40
+        eng.configure(
+            "paged",
+            json.dumps(
+                {
+                    **cfg,
+                    "n_pages": 10,
+                    "call_log": log,
+                    "rate_limit_rps": rps,
+                    "rate_limit_burst": burst,
+                }
+            ),
+        )
+        t0 = _t.perf_counter()
+        n = eng.sql("SELECT COUNT(*) AS n FROM paged_items").first().n
+        wall = _t.perf_counter() - t0
+        calls = len(_log(log))
+        assert (n, calls) == (400, 80)
+        assert (calls - burst) / wall <= 1.05 * rps, (
+            f"{calls} calls in {wall:.3f}s exceed {rps} rps"
+        )
 
     def test_scan_cache_absorbs_identical_rescan(self, tmp_path):
         """Second identical scan in the same process must be served from

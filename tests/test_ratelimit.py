@@ -1,6 +1,11 @@
 """Rate limiting: the SURVEY §7.5.5 throttle — API budgets must hold even
-when Spark fans a scan across many threads/partitions."""
+when Spark fans a scan across many threads, partitions and processes."""
 
+import json
+import math
+import multiprocessing
+import struct
+import sys
 import threading
 import time
 
@@ -10,48 +15,110 @@ from steampipe_sqlite_spark.sources.chaos import ChaosConnector
 from steampipe_sqlite_spark.sources.ratelimit import TokenBucket, bucket_for
 
 
+def _debit_ten(config: str, barrier, times) -> None:
+    """Spawned-process body: ten debits on the connection ``config``,
+    started together with the sibling process; reports (first, last)."""
+    c = ChaosConnector()
+    c.set_config(config)
+    barrier.wait()
+    t0 = time.monotonic()
+    for _ in range(10):
+        c.throttle()
+    times.put((t0, time.monotonic()))
+
+
 class TestTokenBucket:
-    def test_burst_passes_immediately(self):
-        b = TokenBucket(rate_per_s=10, burst=5)
+    def test_burst_passes_immediately(self, tmp_path):
+        b = TokenBucket(rate_per_s=10, burst=5, path=str(tmp_path / "b"))
         t0 = time.monotonic()
         for _ in range(5):
             b.acquire()
         assert time.monotonic() - t0 < 0.05
 
-    def test_sustained_rate_enforced(self):
-        b = TokenBucket(rate_per_s=100, burst=1)
+    def test_sustained_rate_enforced(self, tmp_path):
+        b = TokenBucket(rate_per_s=100, burst=1, path=str(tmp_path / "b"))
         t0 = time.monotonic()
         for _ in range(11):
             b.acquire()
         elapsed = time.monotonic() - t0
         assert elapsed >= 0.095  # 10 refills @ 100/s ≥ 0.1 s (timer slack)
 
-    def test_try_acquire_never_blocks(self):
-        b = TokenBucket(rate_per_s=1, burst=1)
-        assert b.try_acquire()
-        t0 = time.monotonic()
-        assert not b.try_acquire()
-        assert time.monotonic() - t0 < 0.05
-
-    def test_threads_share_budget(self):
-        b = TokenBucket(rate_per_s=200, burst=1)
+    def test_threads_share_budget(self, tmp_path):
+        b = TokenBucket(rate_per_s=200, burst=1, path=str(tmp_path / "b"))
         t0 = time.monotonic()
         threads = [threading.Thread(target=b.acquire) for _ in range(21)]
         for t in threads:
             t.start()
         for t in threads:
-            t.join()
+            t.join(timeout=10)
+        assert not any(t.is_alive() for t in threads)
         assert time.monotonic() - t0 >= 0.095  # 20 refills @ 200/s
 
-    def test_rejects_nonpositive_rate(self):
-        with pytest.raises(ValueError):
-            TokenBucket(0)
+    def test_no_lost_debits_under_contention(self, tmp_path):
+        """16 threads each take 50 tokens of a 1000-token bucket that
+        barely refills: the state must end 800 lower.  A debit lost
+        between another thread's read and write would leave more."""
+        b = TokenBucket(rate_per_s=1e-6, burst=1000, path=str(tmp_path / "b"))
 
-    def test_registry_shares_by_key(self):
-        b1 = bucket_for(("m", "C", "cfg-a"), 50)
-        b2 = bucket_for(("m", "C", "cfg-a"), 50)
-        b3 = bucket_for(("m", "C", "cfg-b"), 50)
-        assert b1 is b2 and b1 is not b3
+        def take():
+            for _ in range(50):
+                b.acquire()
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=take) for _ in range(16)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=30)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        tokens, _ = struct.unpack("<dd", (tmp_path / "b").read_bytes())
+        assert tokens == pytest.approx(200, abs=0.01)
+
+    def test_rejects_nonpositive_rate(self, tmp_path):
+        with pytest.raises(ValueError):
+            TokenBucket(0, None, str(tmp_path / "b"))
+
+    def test_debit_larger_than_capacity_raises(self, tmp_path):
+        """A sub-1 burst can never hold one call's token: acquire must
+        raise instead of sleeping forever."""
+        with pytest.raises(ValueError, match="capacity"):
+            TokenBucket(10, 0.5, str(tmp_path / "b")).acquire()
+        with pytest.raises(ValueError, match="capacity"):
+            TokenBucket(10, 2, str(tmp_path / "c")).acquire(3)
+
+    @pytest.mark.parametrize(
+        "state",
+        [
+            b"",
+            b"\x01\x02\x03",  # torn: shorter than one record
+            struct.pack("<dd", math.nan, 1.0),
+            struct.pack("<dd", -5.0, 1.0),
+            struct.pack("<dd", 0.0, math.inf),
+            struct.pack("<dd", 0.0, time.monotonic() + 1e6),  # after a reboot
+        ],
+    )
+    def test_bad_state_file_reads_as_full_bucket(self, tmp_path, state):
+        path = tmp_path / "b"
+        path.write_bytes(state)
+        b = TokenBucket(rate_per_s=10, burst=2, path=str(path))
+        assert b.acquire() == 0.0 and b.acquire() == 0.0  # no sleep at all
+        tokens, last = struct.unpack("<dd", path.read_bytes())
+        assert 0.0 <= tokens <= b.capacity and 0.0 < last <= time.monotonic()
+
+    def test_registry_shares_by_key(self, tmp_path):
+        """One key, one budget; another key, another budget."""
+        key_a = ("m", "C", f"cfg-a-{tmp_path}")
+        key_b = ("m", "C", f"cfg-b-{tmp_path}")
+        b1 = bucket_for(key_a, 5, 1)
+        b2 = bucket_for(key_a, 5, 1)
+        b3 = bucket_for(key_b, 5, 1)
+        assert b1.acquire() == 0.0
+        assert b2.acquire() > 0.0  # b1 spent the shared token
+        assert b3.acquire() == 0.0
 
 
 class TestConnectorThrottle:
@@ -73,6 +140,28 @@ class TestConnectorThrottle:
         c.throttle()
         waited = c.throttle()
         assert waited > 0.0
+
+    def test_processes_on_one_host_share_one_budget(self, tmp_path):
+        """Two spawned processes debit 10 each on one connection at 50 rps,
+        burst 1: together they need >= 19 refills.  Per-process buckets
+        would let each finish its own 9 refills concurrently."""
+        ctx = multiprocessing.get_context("spawn")
+        barrier, times = ctx.Barrier(2), ctx.Queue()
+        config = json.dumps(
+            {"rate_limit_rps": 50, "rate_limit_burst": 1, "tag": str(tmp_path)}
+        )
+        procs = [
+            ctx.Process(target=_debit_ten, args=(config, barrier, times))
+            for _ in range(2)
+        ]
+        for p in procs:
+            p.start()
+        spans = [times.get(timeout=60) for _ in procs]
+        for p in procs:
+            p.join(timeout=30)
+        assert [p.exitcode for p in procs] == [0, 0]
+        elapsed = max(t1 for _, t1 in spans) - min(t0 for t0, _ in spans)
+        assert elapsed >= 0.8 * 19 / 50, f"processes did not share: {elapsed:.3f}s"
 
 
 class TestRetry:

@@ -1,46 +1,41 @@
-"""Paged-bridge probe: protocol throughput and global-budget compliance
+"""Paged-bridge probe: protocol throughput and host-budget compliance
 under REAL Spark parallelism.
 
 test_pagedhttp_connector proves the paged protocol's semantics (call
-accounting, retry replay, per-process throttle) — this probe puts
+accounting, retry replay, host-wide throttle) — this probe puts
 NUMBERS on it through the full Spark scan path:
 
 1. **Throughput arm** (no throttle, no injected latency): N partitions x
    P pages x R rows scanned through Engine.sql — reports pages/s and
    rows/s, i.e. the bridge's protocol overhead per page fetch.
-2. **Budget arm** (rate_limit_rps + rate_limit_scope=global): same scan;
-   afterwards the call log's monotonic timestamps (CLOCK_MONOTONIC is
-   system-wide on Linux, so executor-worker processes are comparable)
-   are replayed to check the token-bucket CONTRACT aggregated across
-   all workers: any window of T seconds serves at most
-   burst_total + T x rps (burst defaults to one second's allowance —
-   the same shape a single-process bucket gives, a first second of up
-   to 2 x rps, sustained rps thereafter).  PASS = the peak sliding 1 s
-   window <= burst_total + rps and the whole run's sustained rate
-   (calls - burst)/wall <= rps — the cluster-budget claim measured,
-   not asserted, under genuine multi-process execution.
+2. **Budget arm** (rate_limit_rps): same scan; every Python worker
+   draws from the connection's one host-wide token bucket.  Afterwards
+   the call log's monotonic timestamps (CLOCK_MONOTONIC is system-wide
+   on Linux, so executor-worker processes are comparable) are replayed
+   to check the token-bucket CONTRACT aggregated across all workers:
+   any window of T seconds serves at most burst + T x rps (burst
+   defaults to one second's allowance, so a first second of up to
+   2 x rps, sustained rps thereafter).  PASS = the peak sliding 1 s
+   window <= burst + rps and the whole run's sustained rate
+   (calls - burst)/wall <= rps — the host-budget claim measured, not
+   asserted, under genuine multi-process execution.
 
 Usage: python tools/paged_scan_probe.py [n_partitions] [n_pages] [page_size] [rps]
 Prints one JSON line.
 
-Committed reading (local[4], 4-core box, 8 partitions x 50 pages x 200
-rows, rps=100 burst default; three runs with
-`steampipe_sqlite_spark/zipcache.py`, which stops PySpark's per-task
-`importlib.invalidate_caches()` from re-reading the worker's zip archives,
-interleaved with three runs at the commit before it):
+Committed reading (SPARK_GRAFT_CPUS=4, i.e. local[4], 4-core box,
+8 partitions x 50 pages x 200 rows, rps=100 burst default; three runs,
+interleaved with three runs of the per-partition fair-share limiter this
+bucket replaced):
 
-  throughput arm: 400 pages / 80k rows in 0.56-0.72 s -> 555-714
-    pages/s, 111-143k rows/s through SQL->DataSource->token-chain->Arrow
-    (before: 1.18-1.44 s -> 278-339 pages/s; each scan task paid about
-    0.25 s of worker CPU re-reading pyspark.zip and the spark-core jar
-    before the connector ran)
-  budget arm: 400 calls in 6.5-6.6 s across 8 partitions on 4 worker
-    slots; peak sliding-1s aggregate 92-93 <= burst(100) + rps(100);
-    sustained rate 45.3-45.8 <= 100 rps -> within_budget TRUE (before:
-    7.4-7.9 s, peak 90-92, sustained 37.8-40.5).  The static fair share
-    (12.5 rps per chain, 4 chains at a time) holds the cluster-wide
-    sustained rate under the configured budget with zero coordination;
-    faster task starts do not break it.
+  throughput arm: 400 pages / 80k rows in 0.45-0.60 s -> 663-894
+    pages/s, 133-179k rows/s through SQL->DataSource->token-chain->Arrow
+  budget arm: 400 calls in 3.27-3.31 s across 8 partitions on 4 worker
+    slots; peak sliding-1s aggregate 193-195 <= burst(100) + rps(100);
+    sustained rate 90.5-91.8 <= 100 rps -> within_budget TRUE.  The
+    fair-share limiter read 6.45-6.54 s, peak 93-96, sustained
+    45.9-46.5: it gave each chain rps/8, so with 4 of the 8 chains
+    running at a time half the budget went unused.
 """
 
 from __future__ import annotations
@@ -103,9 +98,7 @@ def main() -> None:
         "rows_per_s": round(rows / wall, 1),
     }
 
-    wall_b, rows_b, log = scan(
-        {"rate_limit_rps": rps, "rate_limit_scope": "global"}, "budget"
-    )
+    wall_b, rows_b, log = scan({"rate_limit_rps": rps}, "budget")
     ts = sorted(
         json.loads(line)["ts"] for line in open(log) if line.strip()
     )
@@ -120,7 +113,6 @@ def main() -> None:
     sustained = (len(ts) - burst_total) / wall_b if wall_b > 0 else 0.0
     out["budget"] = {
         "rps_configured": rps,
-        "scope": "global",
         "wall_s": round(wall_b, 3),
         "calls": len(ts),
         "peak_1s_aggregate_rate": peak,

@@ -22,7 +22,6 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from steampipe_sqlite_spark.sources.config import validate_engine_options
 from steampipe_sqlite_spark.sources.connector import DYNAMIC, STATIC, Schema
 from steampipe_sqlite_spark.sources.datasource import (
     FORMAT_NAME,
@@ -53,8 +52,8 @@ class Engine:
     def load(self, connector_class: str, alias: str | None = None, config: str | None = None) -> str:
         """Load a connector; static mode discovers and registers tables
         immediately (with blank config if none given — the reference sends
-        Config:"" for static plugins, register.go:49-69)."""
-        validate_engine_options(config)
+        Config:"" for static plugins, register.go:49-69).  A mistyped
+        engine option raises ``ValueError`` before anything registers."""
         conn = load_connector(connector_class, config)
         alias = alias or conn.name
         schema = conn.get_schema()
@@ -77,7 +76,6 @@ class Engine:
         fails validation or schema discovery leaves the previous one
         serving."""
         state = self._connections[alias]
-        validate_engine_options(config)
         conn = load_connector(state["class"], config)
         schema = conn.get_schema()
         old_mode = state["schema"].mode if state["schema"] else None

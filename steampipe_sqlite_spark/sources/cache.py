@@ -9,15 +9,21 @@ Parity with the reference's cache policy (B15, SURVEY.md §2.1):
 - bounded size (32 MB default, /root/reference/register.go:18) with LRU
   eviction.
 
+Per-connection overrides ride the connection config, as the reference's
+config rides every ExecuteRequest (reference register.go:52-64,
+configure_fn.go:70-96): ``cache``, ``cache_ttl`` and ``cache_max_size_mb``,
+parsed once per connection into ``config.ConnectionOptions``.
+
 Keyed on (connector-class, connection-config, table, quals, columns, limit,
-partition).  Lookup is exact first; on miss, qual-subsumption kicks in
-(SURVEY.md §7.5.4, the SDK cache behavior wired at
-/root/reference/cursor.go:70-92): an unlimited cached entry for the same
-connector/config/table/partition whose quals are a SUBSET of the request's
-(→ its rows are a superset) and whose columns cover the request's serves
-the scan with zero connector calls — the residual quals are applied
-vectorized on the cached Arrow batches, columns are projected to the
-requested schema, and the limit is applied by slicing.
+partition).  One lookup, :meth:`ScanCache.get`, tries the exact key first;
+on a miss, qual-subsumption kicks in (SURVEY.md §7.5.4, the SDK cache
+behavior wired at reference cursor.go:70-92): an unlimited cached
+entry for the same connector/config/table/partition whose quals are a
+SUBSET of the request's (→ its rows are a superset) and whose columns
+cover the request's serves the scan with zero connector calls — the
+residual quals are applied vectorized on the cached Arrow batches, columns
+are projected to the requested schema, and the limit is applied by
+slicing.
 """
 
 from __future__ import annotations
@@ -51,48 +57,6 @@ def cache_max_ttl_s() -> int:
         return DEFAULT_MAX_TTL_S
 
 
-def connection_cache_options(
-    config: str | None,
-) -> tuple[bool | None, int | None, int | None]:
-    """Per-connection cache overrides carried in the connection config.
-
-    Reference parity: the connection config travels inside every
-    ExecuteRequest (/root/reference/register.go:52-64,
-    configure_fn.go:70-96), and the plugin SDK honors connection-level
-    ``cache``/``cache_ttl`` options from it; ``MaxCacheSizeMb`` rides the
-    SetAllConnectionConfigs request.  Here the same three knobs are read
-    from the (JSON or HCL) connection config:
-
-    - ``cache``: bool — enable/disable caching for this connection only;
-    - ``cache_ttl``: seconds — per-connection TTL, capped by the
-      process-level STEAMPIPE_CACHE_MAX_TTL like the server default;
-    - ``cache_max_size_mb``: per-connection byte budget inside the shared
-      process cache (LRU-evicted independently per connection).
-
-    Returns (enabled, ttl_s, max_bytes) with None meaning "no override".
-    Unparseable configs yield no overrides — cache options must never take
-    down a scan.
-    """
-    if not config:
-        return None, None, None
-    try:
-        from steampipe_sqlite_spark.sources.config import parse_config
-
-        d = parse_config(config)
-    except Exception:  # noqa: BLE001
-        return None, None, None
-    enabled = d.get("cache") if isinstance(d.get("cache"), bool) else None
-    ttl = d.get("cache_ttl")
-    ttl_s = int(ttl) if isinstance(ttl, (int, float)) and not isinstance(ttl, bool) and ttl > 0 else None
-    mb = d.get("cache_max_size_mb")
-    max_bytes = (
-        int(mb) * 1024 * 1024
-        if isinstance(mb, (int, float)) and not isinstance(mb, bool) and mb > 0
-        else None
-    )
-    return enabled, ttl_s, max_bytes
-
-
 @dataclass
 class _Entry:
     batches: list[pa.RecordBatch]
@@ -103,7 +67,7 @@ class _Entry:
 class ScanCache:
     """LRU + TTL cache of Arrow batches."""
 
-    def __init__(self, ttl_s: int = DEFAULT_TTL_S, max_bytes: int = DEFAULT_MAX_BYTES):
+    def __init__(self, ttl_s: float = DEFAULT_TTL_S, max_bytes: int = DEFAULT_MAX_BYTES):
         self.ttl_s = min(ttl_s, cache_max_ttl_s())
         self.max_bytes = max_bytes
         self._data: OrderedDict[tuple, _Entry] = OrderedDict()
@@ -131,29 +95,51 @@ class ScanCache:
         return (connector_cls, config, table, quals, columns, limit, partition)
 
     def get(self, key: tuple) -> list[pa.RecordBatch] | None:
+        """The rows cached for ``key``, or None.  An exact entry serves its
+        stored batches; otherwise an entry covering ``key`` serves them
+        through :func:`serve_from_superset`.  An entry covers the request
+        when connector/config/table/partition match, it was NOT
+        limit-truncated, its quals are a subset of the requested quals
+        (fewer filters → more rows), and its columns are a superset of the
+        requested columns.  Counts one hit or one miss."""
         if not cache_enabled():
             return None
+        now = time.monotonic()
         entry = self._data.get(key)
-        if entry is None:
-            self.misses += 1
-            return None
-        if entry.expires_at < time.monotonic():
+        if entry is not None:
+            if entry.expires_at >= now:
+                self._data.move_to_end(key)
+                self.hits += 1
+                return entry.batches
             self._evict(key)
-            self.misses += 1
-            return None
-        self._data.move_to_end(key)
-        self.hits += 1
-        return entry.batches
+        cls_, config, table, quals, columns, limit, partition = key
+        want_quals = set(quals)
+        for cand, entry in self._data.items():
+            c_cls, c_config, c_table, c_quals, c_cols, c_limit, c_part = cand
+            if (c_cls, c_config, c_table, c_part) != (cls_, config, table, partition):
+                continue
+            if c_limit is not None or entry.expires_at < now:
+                continue
+            if not set(c_quals) <= want_quals:
+                continue
+            if c_cols is not None and (columns is None or not set(columns) <= set(c_cols)):
+                continue
+            self._data.move_to_end(cand)
+            self.hits += 1
+            residual = tuple(q for q in quals if q not in set(c_quals))
+            return serve_from_superset(entry.batches, residual, columns, limit)
+        self.misses += 1
+        return None
 
     def put(
         self,
         key: tuple,
         batches: list[pa.RecordBatch],
-        ttl_s: int | None = None,
+        ttl_s: float | None = None,
         conn_max_bytes: int | None = None,
     ) -> None:
         """Insert; ``ttl_s``/``conn_max_bytes`` are per-connection
-        overrides from the connection config (connection_cache_options) —
+        overrides from the connection config (ConnectionOptions) —
         TTL capped by the process max like the server default, size
         enforced as an LRU budget over this connection's entries only."""
         if not cache_enabled():
@@ -175,39 +161,6 @@ class ScanCache:
         while self._bytes > self.max_bytes and self._data:
             oldest = next(iter(self._data))
             self._evict(oldest)
-
-    def get_subsuming(
-        self, key: tuple
-    ) -> tuple[list[pa.RecordBatch], tuple, tuple | None] | None:
-        """On exact miss: find an entry whose result set covers ``key``.
-
-        Returns (batches, cached_quals, cached_columns) so the caller can
-        apply the residual quals and project, or None.  A cached entry
-        covers the request when connector/config/table/partition match,
-        the entry was NOT limit-truncated, its quals are a subset of the
-        requested quals (fewer filters → more rows), and its columns are a
-        superset of the requested columns.
-        """
-        if not cache_enabled():
-            return None
-        cls_, config, table, quals, columns, _limit, partition = key
-        now = time.monotonic()
-        want_quals = set(quals)
-        for cand, entry in self._data.items():
-            c_cls, c_config, c_table, c_quals, c_cols, c_limit, c_part = cand
-            if (c_cls, c_config, c_table, c_part) != (cls_, config, table, partition):
-                continue
-            if c_limit is not None or entry.expires_at < now:
-                continue
-            if not set(c_quals) <= want_quals:
-                continue
-            if c_cols is not None and (columns is None or not set(columns) <= set(c_cols)):
-                continue
-            self._data.move_to_end(cand)
-            self.hits += 1
-            residual = tuple(q for q in quals if q not in set(c_quals))
-            return entry.batches, residual, columns
-        return None
 
     def _evict(self, key: tuple) -> None:
         entry = self._data.pop(key, None)

@@ -14,15 +14,19 @@ connector funnels its config through :func:`parse_config`, which accepts:
    none of the reference's own examples use them; install python-hcl2
    for full HCL.)
 
-:func:`validate_engine_options` checks the options the engine itself reads
-(scan cache, retry, throttle) once, when a connection is loaded or
-reconfigured.
+The options the engine itself reads (scan cache, retry, throttle) are
+parsed once per connection into a :class:`ConnectionOptions` record, when
+the connector's config is assigned (``Connector.__init__``/``set_config``,
+the analog of the reference's SetConnectionConfig).  A mistyped value
+fails there, naming its key; the cache, retry and throttle code only read
+the record's fields.
 """
 
 from __future__ import annotations
 
 import json
 import re
+from dataclasses import dataclass
 from typing import Any
 
 try:  # public package, optional — container may not ship it
@@ -160,21 +164,21 @@ def _is_number(v: Any) -> bool:
 # {"cache_ttl": "5"} would keep the 300 s default) and the retry and
 # throttle code would raise inside a Python worker at the first page.
 # cache_ttl and cache_max_size_mb must be positive for the same reason; for
-# the retry keys and rate_limit_rps 0 means "off".  rate_limit_burst 0 means
-# the default; a burst below 1 could never hold the 1-token debit of one
-# call, so every throttled call would wait forever.
+# the retry keys and rate_limit_rps 0 means "off".  retry_attempts counts
+# whole attempts, so 2.5 is an error rather than 2.  rate_limit_burst 0
+# means the default; a burst below 1 could never hold the 1-token debit of
+# one call, so every throttled call would wait forever.
 _ENGINE_OPTIONS = {
     "cache": (lambda v: isinstance(v, bool), "a bool"),
     "cache_ttl": (lambda v: _is_number(v) and v > 0, "a positive number of seconds"),
     "cache_max_size_mb": (lambda v: _is_number(v) and v > 0, "a positive number"),
+    "retry_attempts": (
+        lambda v: isinstance(v, int) and not isinstance(v, bool) and v >= 0,
+        "a non-negative integer",
+    ),
     **{
         key: (lambda v: _is_number(v) and v >= 0, "a non-negative number")
-        for key in (
-            "retry_attempts",
-            "retry_min_backoff_ms",
-            "retry_max_backoff_ms",
-            "rate_limit_rps",
-        )
+        for key in ("retry_min_backoff_ms", "retry_max_backoff_ms", "rate_limit_rps")
     },
     "rate_limit_burst": (
         lambda v: _is_number(v) and (v == 0 or v >= 1),
@@ -183,16 +187,53 @@ _ENGINE_OPTIONS = {
 }
 
 
-def validate_engine_options(config: str | None) -> None:
-    """Raise ``ValueError`` naming the first engine-read option in
-    ``config`` whose value has the wrong type or range.  A null value counts
-    as unset.  A config that parses as neither JSON nor HCL is left to the
-    connector, which owns its own config format."""
-    try:
-        cfg = parse_config(config)
-    except ConfigError:
-        return
-    for key, (ok, want) in _ENGINE_OPTIONS.items():
-        value = cfg.get(key)
-        if value is not None and not ok(value):
-            raise ValueError(f"connection option {key!r} must be {want}, got {value!r}")
+@dataclass(frozen=True)
+class ConnectionOptions:
+    """The engine-read options of one connection config, parsed once.
+
+    ``cache`` False bypasses the scan cache for this connection only;
+    ``cache_ttl_s`` and ``cache_max_bytes`` are None for the cache's own
+    defaults; ``retry`` is (extra attempts, min backoff ms, max backoff
+    ms), None when ``retry_attempts`` is unset or 0; ``rate_limit_rps`` 0
+    means no throttle, ``rate_limit_burst`` None the default capacity.
+    Keys the engine does not read (a connector's own) are ignored, and a
+    config that parses as neither JSON nor HCL yields the defaults: its
+    format belongs to the connector."""
+
+    cache: bool = True
+    cache_ttl_s: float | None = None
+    cache_max_bytes: int | None = None
+    retry: tuple[int, float, float] | None = None
+    rate_limit_rps: float = 0.0
+    rate_limit_burst: float | None = None
+
+    @classmethod
+    def parse(cls, config: str | None) -> "ConnectionOptions":
+        """The options ``config`` sets; raises ``ValueError`` naming the
+        first one whose value has the wrong type or range.  A null value
+        counts as unset."""
+        try:
+            cfg = {k: v for k, v in parse_config(config).items() if v is not None}
+        except ValueError:  # ConfigError, or a bad string escape
+            return cls()
+        for key, (ok, want) in _ENGINE_OPTIONS.items():
+            if key in cfg and not ok(cfg[key]):
+                raise ValueError(f"connection option {key!r} must be {want}, got {cfg[key]!r}")
+        mb = cfg.get("cache_max_size_mb")
+        attempts = cfg.get("retry_attempts")
+        return cls(
+            cache=cfg.get("cache", True),
+            cache_ttl_s=cfg.get("cache_ttl"),
+            cache_max_bytes=None if mb is None else int(mb * 2**20),
+            retry=(
+                (
+                    attempts,
+                    cfg.get("retry_min_backoff_ms", 100),
+                    cfg.get("retry_max_backoff_ms", 5000),
+                )
+                if attempts
+                else None
+            ),
+            rate_limit_rps=cfg.get("rate_limit_rps", 0.0),
+            rate_limit_burst=cfg.get("rate_limit_burst") or None,
+        )

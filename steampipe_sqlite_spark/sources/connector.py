@@ -30,6 +30,9 @@ from typing import Any
 import pyarrow as pa
 from pyspark.sql import types as T
 
+from steampipe_sqlite_spark.sources.config import ConnectionOptions
+from steampipe_sqlite_spark.sources.ratelimit import bucket_for
+
 
 class ColumnType(str, Enum):
     """proto.ColumnType equivalents (SURVEY.md §1.3 mapping table)."""
@@ -299,33 +302,17 @@ class Connector(ABC):
 
     def __init__(self, config: str | None = None):
         self.config = config
+        self.options = ConnectionOptions.parse(config)
 
     # -- configuration (reference configure_fn.go:67-129)
     def set_config(self, config: str) -> None:
+        """Assign a connection config and parse the engine options it
+        carries; a mistyped option raises ``ValueError`` naming its key
+        and leaves the connector unchanged."""
+        self.options = ConnectionOptions.parse(config)
         self.config = config
 
-    # -- retry (SDK RetryHydrate analog) -----------------------------------
-    def retry_policy(self) -> tuple[int, int, int] | None:
-        """(attempts, min_backoff_ms, max_backoff_ms) when the connection
-        config enables retry, else None.  Config keys: ``retry_attempts``
-        (extra attempts beyond the first), ``retry_min_backoff_ms``
-        (default 100), ``retry_max_backoff_ms`` (default 5000).  Backoff is
-        exponential and deterministic (min·2^attempt capped at max)."""
-        from steampipe_sqlite_spark.sources.config import parse_config
-
-        try:
-            cfg = parse_config(self.config)
-        except Exception:
-            return None
-        attempts = cfg.get("retry_attempts")
-        if not attempts:
-            return None
-        return (
-            int(attempts),
-            int(cfg.get("retry_min_backoff_ms", 100)),
-            int(cfg.get("retry_max_backoff_ms", 5000)),
-        )
-
+    # -- retry (SDK RetryHydrate analog; the policy is options.retry) ------
     def is_retriable_error(self, exc: Exception) -> bool:
         """Which failures a retry may repair — transient-transport by
         default; connectors override for their API's error taxonomy (the
@@ -337,8 +324,8 @@ class Connector(ABC):
         """Debit ``n`` API calls from this connection's budget, blocking
         until allowed.  No-op unless the connection config sets
         ``rate_limit_rps``.  Call once per upstream API request — paging
-        connectors should call per page, not per scan.  Returns seconds
-        waited (0.0 when unthrottled).
+        connectors call it per page; the engine never calls it, so tokens
+        equal API calls.  Returns seconds waited (0.0 when unthrottled).
 
         The budget is per host: every process on the host (driver,
         planner, each Python worker) draws from one token bucket for this
@@ -346,18 +333,11 @@ class Connector(ABC):
         (sources/ratelimit.py), so ``rate_limit_rps`` is the host's
         request rate however many tasks, tables or streams scan it.  On a
         multi-host cluster, size it as api_budget / hosts."""
-        from steampipe_sqlite_spark.sources.config import parse_config
-        from steampipe_sqlite_spark.sources.ratelimit import bucket_for
-
-        try:
-            cfg = parse_config(self.config)
-        except Exception:
-            return 0.0
-        rps = cfg.get("rate_limit_rps")
+        rps = self.options.rate_limit_rps
         if not rps:
             return 0.0
         key = (type(self).__module__, type(self).__qualname__, self.config)
-        return bucket_for(key, float(rps), cfg.get("rate_limit_burst")).acquire(n)
+        return bucket_for(key, rps, self.options.rate_limit_burst).acquire(n)
 
     # -- discovery (reference configure_fn.go:152-163)
     @abstractmethod

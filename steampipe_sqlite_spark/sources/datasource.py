@@ -46,11 +46,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from steampipe_sqlite_spark.sources.cache import (
-    ScanCache,
-    connection_cache_options,
-    serve_from_superset,
-)
+from steampipe_sqlite_spark.sources.cache import ScanCache
 from steampipe_sqlite_spark.sources.connector import (
     ColumnType,
     Connector,
@@ -253,6 +249,13 @@ class ConnectorReader(DataSourceReader):
 
     def read(self, partition: ConnectorPartition):
         part = Partition(partition.index, partition.info)
+        options = self.connector.options
+        if not options.cache:
+            # caching and retries are orthogonal in the reference SDK:
+            # cache=false skips only the cache get/put, the RetryHydrate
+            # backoff still applies
+            yield from self._execute_retrying(part)
+            return
         quals_key = tuple((q.column, q.op, q.value) for q in self.quals)
         cols_key = tuple(self.columns) if self.columns is not None else None
         conn_cls = type(self.connector)
@@ -265,54 +268,41 @@ class ConnectorReader(DataSourceReader):
             self.limit,
             partition.index,
         )
-        # per-connection cache overrides ride the connection config, as the
-        # reference's config does in every ExecuteRequest (register.go:64)
-        conn_enabled, conn_ttl, conn_max_bytes = connection_cache_options(
-            self.connector.config
-        )
-        if conn_enabled is False:
-            # caching and retries are orthogonal in the reference SDK:
-            # cache=false skips only the get/put/subsumption steps, the
-            # RetryHydrate backoff still applies (ADVICE r3)
-            yield from self._execute_retrying(part)
-            return
+        # an exact entry, or a broader cached scan filtered, projected and
+        # sliced to this one: zero connector calls (cursor.go:70-92)
         cached = _SCAN_CACHE.get(key)
         if cached is not None:
             yield from cached
-            return
-        superset = _SCAN_CACHE.get_subsuming(key)
-        if superset is not None:
-            # SDK-cache qual subsumption: a broader cached scan covers this
-            # one — filter/project/slice its Arrow batches, zero connector
-            # calls (reference cache wiring cursor.go:70-92)
-            batches, residual, cols = superset
-            yield from serve_from_superset(batches, residual, cols, self.limit)
             return
         batches = []
         for batch in self._execute_retrying(part):
             batches.append(batch)
             yield batch
-        _SCAN_CACHE.put(key, batches, conn_ttl, conn_max_bytes)
+        # per-connection overrides ride the connection config, as the
+        # reference's config does in every ExecuteRequest (register.go:64)
+        _SCAN_CACHE.put(key, batches, options.cache_ttl_s, options.cache_max_bytes)
 
     def _execute_retrying(self, part: Partition):
-        """Throttle + execute with the connector's declared retry policy.
+        """Execute with the connection's retry policy (``options.retry``).
 
         SDK RetryHydrate analog: re-run the WHOLE scan on failure with
         exponential backoff.  When retries are configured, attempts are
         buffered before any yield — a mid-stream retry after partial
         output would duplicate rows (same reason the SDK retries the full
         hydrate call, never resumes one).  Without retries the scan
-        streams batch-by-batch: one throttle debit per partition scan;
-        paging connectors additionally call throttle() per page
-        (SURVEY §7.5.5 — API limits × parallelism)."""
-        retries = self.connector.retry_policy()
-        if retries is None:
-            self.connector.throttle()
-            yield from self.connector.execute(
+        streams batch-by-batch.  Throttling is the connector's: it debits
+        once per upstream API request (SURVEY §7.5.5)."""
+
+        def execute():
+            return self.connector.execute(
                 self.table.name, self.quals, self.columns, self.limit, part
             )
+
+        retry = self.connector.options.retry
+        if retry is None:
+            yield from execute()
             return
-        attempts, min_ms, max_ms = retries
+        attempts, min_ms, max_ms = retry
         import time as _time
 
         last_exc: Exception | None = None
@@ -320,12 +310,7 @@ class ConnectorReader(DataSourceReader):
             if attempt:
                 _time.sleep(min(max_ms, min_ms * (2 ** (attempt - 1))) / 1000.0)
             try:
-                self.connector.throttle()
-                batches = list(
-                    self.connector.execute(
-                        self.table.name, self.quals, self.columns, self.limit, part
-                    )
-                )
+                batches = list(execute())
                 break
             except Exception as exc:  # noqa: BLE001 — connector errors are opaque
                 last_exc = exc
@@ -334,8 +319,6 @@ class ConnectorReader(DataSourceReader):
         else:
             raise last_exc  # type: ignore[misc]
         yield from batches
-
-
 
 
 class ConnectorSimpleStreamReader(SimpleDataSourceStreamReader):

@@ -18,12 +18,13 @@ this one reproduces it faithfully while staying hermetic:
   the network round trip.
 - **Injectable 429s**: config ``fail_page_fetches`` lists
   ``[partition, page]`` pairs whose FIRST fetch raises
-  :class:`RateLimited429`; the retry machinery (connector.retry_policy)
-  must absorb it.  Deterministic: the second fetch of the same page in
-  the same process succeeds.
+  :class:`RateLimited429`; the reader's whole-scan retry (the
+  connection's ``retry_attempts`` options) must absorb it.
+  Deterministic: the second fetch of the same page in the same process
+  succeeds.
 - **Throttle per page**: one ``self.throttle()`` debit per page fetch
-  (the documented paging-connector contract, connector.py throttle
-  docstring) — so ``rate_limit_rps`` bounds the host's request rate
+  and none elsewhere (the engine never debits), so tokens equal API
+  calls and ``rate_limit_rps`` bounds the host's request rate
   regardless of how many pages a scan walks or how many Python workers
   walk them.
 - **Partition parallelism**: each partition is an independent token

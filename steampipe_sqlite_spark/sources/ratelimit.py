@@ -8,7 +8,9 @@ per host, keyed by (connector class, config), whose state is a 16-byte
 file that every driver, planner and Python-worker process on the host
 reads and debits under an ``fcntl.flock``.
 
-Connection-config keys (read by :meth:`Connector.throttle`):
+Connection-config keys (parsed once per connection into
+``config.ConnectionOptions``, read by :meth:`Connector.throttle`, which a
+connector calls once per upstream API request):
 - ``rate_limit_rps``: sustained calls/second budget for this connection,
   **per host** — however many processes and tasks scan it.  On a
   multi-host cluster, size it as (api_budget / hosts).

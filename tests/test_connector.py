@@ -221,19 +221,43 @@ class TestPerConnectionCacheOptions:
         return pa.RecordBatch.from_pylist([{"x": i} for i in range(n)])
 
     def test_parse_overrides(self):
-        from steampipe_sqlite_spark.sources.cache import connection_cache_options
+        from steampipe_sqlite_spark.sources.config import ConnectionOptions
 
-        assert connection_cache_options(None) == (None, None, None)
-        assert connection_cache_options('{"cache": false}') == (False, None, None)
-        en, ttl, mb = connection_cache_options(
-            '{"cache": true, "cache_ttl": 7, "cache_max_size_mb": 2}'
-        )
-        assert (en, ttl, mb) == (True, 7, 2 * 1024 * 1024)
+        parse = ConnectionOptions.parse
+        assert parse(None) == ConnectionOptions()
+        assert parse('{"cache": false}') == ConnectionOptions(cache=False)
+        o = parse('{"cache": true, "cache_ttl": 7, "cache_max_size_mb": 2}')
+        assert (o.cache, o.cache_ttl_s, o.cache_max_bytes) == (True, 7, 2 * 1024 * 1024)
         # HCL form parses identically
-        en, ttl, mb = connection_cache_options("cache_ttl = 9")
-        assert (en, ttl, mb) == (None, 9, None)
+        assert parse("cache_ttl = 9") == ConnectionOptions(cache_ttl_s=9)
         # junk config must not take down the scan path
-        assert connection_cache_options("not a config ][") == (None, None, None)
+        assert parse("not a config ][") == ConnectionOptions()
+
+    @pytest.mark.parametrize("config", ['{"cache_ttl": 0.5}', '{"cache_max_size_mb": 0.5}'])
+    def test_fractional_options_keep_caching(self, config):
+        """A fractional TTL or size budget passes validation, so it must
+        be honoured as given, not truncated to 0 s or 0 bytes (which
+        turned the cache off): a rescan makes no new connector call."""
+        from steampipe_sqlite_spark.sources import datasource as ds
+        from steampipe_sqlite_spark.sources.chaos import ChaosConnector
+
+        class Counting(ChaosConnector):
+            calls = 0
+
+            def execute(self, *a, **kw):
+                Counting.calls += 1
+                yield from super().execute(*a, **kw)
+
+        ds._SCAN_CACHE.clear()
+        conn = Counting(config)
+        table = conn.get_schema().table("all_types")
+        reader = ds.ConnectorReader(conn, table, {})
+        part = reader.partitions()[0]
+        first = [r for b in reader.read(part) for r in b.to_pylist()]
+        again = [r for b in reader.read(part) for r in b.to_pylist()]
+        ds._SCAN_CACHE.clear()
+        assert Counting.calls == 1, "the rescan refetched: cache was off"
+        assert again == first and first
 
     def test_two_connections_evict_independently_by_ttl(self, monkeypatch):
         """Two connections with different TTLs in one shared cache: the
@@ -301,27 +325,33 @@ class TestQualSubsumption:
             [{"x": i, "name": f"n{i}"} for i in range(10)]
         )
 
+    def rows(self, batches):
+        return [r for b in batches for r in b.to_pylist()]
+
     def test_subset_quals_served_from_superset(self):
         cache = ScanCache(ttl_s=60)
         full = ScanCache.key("m:C", None, "t", (), None, None)
         cache.put(full, [self.wide_batch()])
         want = ScanCache.key("m:C", None, "t", (("x", ">", 5),), None, None)
-        assert cache.get(want) is None  # exact miss
-        hit = cache.get_subsuming(want)
-        assert hit is not None
-        batches, residual, cols = hit
-        out = serve_from_superset(batches, residual, cols, None)
-        rows = [r["x"] for b in out for r in b.to_pylist()]
-        assert rows == [6, 7, 8, 9]
+        out = cache.get(want)
+        assert out is not None
+        assert [r["x"] for r in self.rows(out)] == [6, 7, 8, 9]
+
+    def test_subsumed_hit_counts_one_hit(self):
+        """One lookup counts one hit or one miss: a subsumed hit is a hit,
+        not also a miss of the exact key."""
+        cache = ScanCache(ttl_s=60)
+        cache.put(ScanCache.key("m:C", None, "t", (), None, None), [self.wide_batch()])
+        want = ScanCache.key("m:C", None, "t", (("x", ">", 5),), None, None)
+        assert cache.get(want)
+        assert (cache.hits, cache.misses) == (1, 0)
 
     def test_column_projection_and_limit(self):
         cache = ScanCache(ttl_s=60)
         full = ScanCache.key("m:C", None, "t", (), None, None)
         cache.put(full, [self.wide_batch()])
         want = ScanCache.key("m:C", None, "t", (("x", ">=", 2),), ("name",), 3)
-        batches, residual, cols = cache.get_subsuming(want)
-        out = serve_from_superset(batches, residual, cols, 3)
-        rows = [r for b in out for r in b.to_pylist()]
+        rows = self.rows(cache.get(want))
         assert rows == [{"name": "n2"}, {"name": "n3"}, {"name": "n4"}]
 
     def test_limited_entry_never_subsumes(self):
@@ -329,20 +359,20 @@ class TestQualSubsumption:
         truncated = ScanCache.key("m:C", None, "t", (), None, 5)
         cache.put(truncated, [self.wide_batch().slice(0, 5)])
         want = ScanCache.key("m:C", None, "t", (("x", ">", 1),), None, None)
-        assert cache.get_subsuming(want) is None
+        assert cache.get(want) is None
 
     def test_narrow_columns_never_subsume_wider(self):
         cache = ScanCache(ttl_s=60)
         narrow = ScanCache.key("m:C", None, "t", (), ("x",), None)
         cache.put(narrow, [self.wide_batch().select(["x"])])
         want = ScanCache.key("m:C", None, "t", (), None, None)
-        assert cache.get_subsuming(want) is None
+        assert cache.get(want) is None
 
     def test_other_connector_class_never_subsumes(self):
         cache = ScanCache(ttl_s=60)
         cache.put(ScanCache.key("m:A", None, "t", (), None, None), [self.wide_batch()])
         want = ScanCache.key("m:B", None, "t", (("x", ">", 5),), None, None)
-        assert cache.get_subsuming(want) is None
+        assert cache.get(want) is None
 
     def test_in_and_prefix_residuals(self):
         batches = [self.wide_batch()]

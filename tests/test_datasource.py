@@ -200,13 +200,17 @@ class TestConfigValidation:
             # a burst below 1 can never hold one call's token
             ('{"rate_limit_rps": 10, "rate_limit_burst": 0.5}', "rate_limit_burst"),
             ('{"retry_attempts": "x"}', "retry_attempts"),
+            # attempts are whole: 2.5 is not silently truncated to 2
+            ('{"retry_attempts": 2.5}', "retry_attempts"),
         ],
     )
-    def test_load_rejects_mistyped_option(self, spark, config, key):
+    def test_load_rejects_mistyped_option(self, spark, request, config, key):
+        # one alias per case: a wrongly accepted case cannot fail the next
+        alias = f"badcfg{request.node.callspec.indices['config']}"
         eng = Engine(spark)
         with pytest.raises(ValueError, match=f"'{key}'"):
-            eng.load(CHAOS, alias="badcfg", config=config)
-        assert not spark.catalog.tableExists("badcfg_all_types")
+            eng.load(CHAOS, alias=alias, config=config)
+        assert not spark.catalog.tableExists(f"{alias}_all_types")
 
     def test_failed_configure_keeps_previous_config(self, spark):
         eng = Engine(spark)

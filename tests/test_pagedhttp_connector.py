@@ -188,8 +188,40 @@ class TestThrottleAndCache:
         rows = [x for b in r.read(r.partitions()[0]) for x in b.to_pylist()]
         elapsed = _t.perf_counter() - t0
         assert len(rows) == 30
-        # 6 page debits + 1 scan debit, burst 1 -> >= 6 waits of 20 ms
+        # 6 page debits, burst 1 -> >= 5 waits of 20 ms after the first
         assert elapsed >= 0.8 * 6 / 50, f"throttle not honored: {elapsed:.3f}s"
+
+    def test_scan_debits_one_token_per_page(self, tmp_path, monkeypatch):
+        """Tokens equal API calls: the reader adds no debit of its own, so
+        a 5-page scan takes exactly as many tokens as the call log has
+        page fetches."""
+        from steampipe_sqlite_spark.sources.ratelimit import TokenBucket
+
+        acquired = []
+        real_acquire = TokenBucket.acquire
+
+        def counting_acquire(bucket, n=1.0):
+            acquired.append(n)
+            return real_acquire(bucket, n)
+
+        monkeypatch.setattr(TokenBucket, "acquire", counting_acquire)
+        log = str(tmp_path / "calls.jsonl")
+        conn = PagedHttpConnector(
+            json.dumps(
+                {
+                    "n_partitions": 1,
+                    "n_pages": 5,
+                    "page_size": 4,
+                    "rate_limit_rps": 1000,
+                    "call_log": log,
+                }
+            )
+        )
+        r = _reader(conn)
+        rows = [x for b in r.read(r.partitions()[0]) for x in b.to_pylist()]
+        assert len(rows) == 20
+        assert len(_log(log)) == 5
+        assert sum(acquired) == len(acquired) == 5
 
     def test_concurrent_partitionless_scans_share_one_budget(self):
         """VERDICT r13 #4: partitionless calls (streaming cursors, direct

@@ -99,7 +99,7 @@ def test_subsumption_serving_equals_direct_filtering(cached_quals, extra_quals, 
     """For ANY cached superset entry (its quals ⊆ the request's), serving
     the request from the cached batches (residual filter + project +
     slice) must equal filtering the base data directly with ALL quals."""
-    from steampipe_sqlite_spark.sources.cache import ScanCache, serve_from_superset
+    from steampipe_sqlite_spark.sources.cache import ScanCache
     from steampipe_sqlite_spark.sources.connector import Qual
 
     rows = [
@@ -121,14 +121,9 @@ def test_subsumption_serving_equals_direct_filtering(cached_quals, extra_quals, 
     cache.put(full_key, [pa.RecordBatch.from_pylist(cached_rows)] if cached_rows else [])
 
     want = ScanCache.key("m:C", None, "t", request_k, tuple(columns) if columns else None, limit)
-    hit = cache.get_subsuming(want)
+    hit = cache.get(want)
     assert hit is not None, "a cached subset-qual entry must subsume the request"
-    batches, residual, cols = hit
-    served = [
-        r
-        for b in serve_from_superset(batches, residual, cols, limit)
-        for r in b.to_pylist()
-    ]
+    served = [r for b in hit for r in b.to_pylist()]
 
     expected = [
         r for r in rows if all(Qual(c, op, v).matches(r.get(c)) for c, op, v in request)

@@ -242,7 +242,7 @@ class TestRetry:
 
     def test_no_retry_config_streams_unbuffered(self):
         conn = ChaosConnector()
-        assert conn.retry_policy() is None
+        assert conn.options.retry is None
 
     def test_retries_still_apply_when_cache_disabled(self):
         """Caching and retries are orthogonal (reference SDK): cache=false

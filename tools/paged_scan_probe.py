@@ -25,17 +25,18 @@ Prints one JSON line.
 
 Committed reading (SPARK_GRAFT_CPUS=4, i.e. local[4], 4-core box,
 8 partitions x 50 pages x 200 rows, rps=100 burst default; three runs,
-interleaved with three runs of the per-partition fair-share limiter this
-bucket replaced):
+interleaved with three runs of the previous reader, which also
+debited one token per partition scan — 408 tokens for the 400 calls):
 
-  throughput arm: 400 pages / 80k rows in 0.45-0.60 s -> 663-894
-    pages/s, 133-179k rows/s through SQL->DataSource->token-chain->Arrow
-  budget arm: 400 calls in 3.27-3.31 s across 8 partitions on 4 worker
-    slots; peak sliding-1s aggregate 193-195 <= burst(100) + rps(100);
-    sustained rate 90.5-91.8 <= 100 rps -> within_budget TRUE.  The
-    fair-share limiter read 6.45-6.54 s, peak 93-96, sustained
-    45.9-46.5: it gave each chain rps/8, so with 4 of the 8 chains
-    running at a time half the budget went unused.
+  throughput arm: 400 pages / 80k rows in 0.63-0.75 s -> 537-640
+    pages/s, 107-128k rows/s through SQL->DataSource->token-chain->Arrow
+    (the previous reader: 481-693 pages/s in the same window)
+  budget arm: 400 calls, one token each, in 3.26-3.32 s across 8
+    partitions on 4 worker slots; peak sliding-1s aggregate 199 <=
+    burst(100) + rps(100); sustained rate 90.5-92.0 <= 100 rps ->
+    within_budget TRUE.  The previous reader: 3.26-3.36 s, peak 193,
+    sustained 89.3-91.9: the 8 tokens saved are inside this box's
+    run-to-run spread.
 """
 
 from __future__ import annotations

@@ -44,6 +44,9 @@ class Engine:
         # selfcheck).
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
         spark.dataSource.register(ConnectorDataSource)
+        # task slots a bridge scan groups its connector partitions into
+        # (ConnectorReader.partitions)
+        self._slots = spark.sparkContext.defaultParallelism
         # alias -> (class_path, config, schema, view names)
         self._connections: dict[str, dict] = {}
 
@@ -112,6 +115,7 @@ class Engine:
             self.spark.read.format(FORMAT_NAME)
             .option("connector_class", state["class"])
             .option("table", table)
+            .option("slots", str(self._slots))
         )
         if state["config"]:
             reader = reader.option("config", state["config"])

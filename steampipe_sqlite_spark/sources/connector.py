@@ -296,6 +296,12 @@ class Connector(ABC):
     Implementations must be picklable — readers ship to executor Python
     workers.  ``execute`` may over-return rows (pushdown is advisory); it
     must never under-return.
+
+    ``execute`` may run concurrently on threads of one process for
+    distinct partitions of one scan: a Spark task walks its group of
+    partitions on one thread each (datasource.ConnectorReader.read), as
+    the SDK runs hydrate calls on goroutines.  State ``execute`` mutates
+    must be per partition or thread-safe.
     """
 
     name: str = "connector"

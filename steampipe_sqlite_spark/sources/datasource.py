@@ -8,22 +8,30 @@ Source API (PySpark ≥4.1):
 | xConnect/declare (module.go:27-33)         | DataSource.schema()         |
 | xBestIndex (table.go:74-180)               | Reader.pushFilters()        |
 | xOpen/xFilter (cursor.go:39-59)            | Reader.partitions()/read()  |
+| SDK hydrate goroutines (cursor.go:55)      | read()'s chain threads      |
 | xNext/xColumn row loop (cursor.go:96-162)  | Arrow batch yield           |
 | Omit:false re-check (table.go:126-129)     | all filters kept residual   |
 | QueryContext JSON IR (table.go:166-177)    | reader instance state       |
 
 Scale notes: read() executes on executor Python workers; the connector is
-pickled with the reader, so its config travels to every worker.  Each
-connector partition becomes a Spark InputPartition — per-region/per-account
-parallelism the reference cannot express (single cursor,
-/root/reference/cursor.go:25-34).  Batches are Arrow record batches, not
-per-row Python objects.
+pickled with the reader, so its config travels to every worker.  The
+connector's partitions (token chains: per-region, per-account, per-file)
+are grouped round-robin into at most ``slots`` Spark InputPartitions, and
+read() walks its group's chains concurrently on threads — a chain spends
+most of its time waiting on API latency, so chains queue behind each
+other in flight, not behind CPU slots.  The SDK does the same with its
+hydrate goroutines; the reference's single cursor walks one chain at a
+time (/root/reference/cursor.go:25-34).  Batches are Arrow record
+batches, not per-row Python objects.
 """
 
 from __future__ import annotations
 
+import contextlib
 import importlib
 import json
+import queue
+import threading
 from collections.abc import Iterator, Sequence
 from typing import Any
 
@@ -65,6 +73,16 @@ FORMAT_NAME = "steampipe"
 # process-level cache shared across scans (driver side; executors get
 # fresh instances per worker — same semantics as the SDK's per-process cache)
 _SCAN_CACHE = ScanCache()
+# a task's chain threads share _SCAN_CACHE; its LRU bookkeeping is not
+# thread-safe, so every get and put holds this lock
+_SCAN_CACHE_LOCK = threading.Lock()
+
+# Chains one Spark task walks at most.  Each chain is one thread holding
+# up to _BATCHES_IN_FLIGHT batches; a connector with 1,000 partitions
+# (files, accounts) gets more tasks, not hundreds of threads per worker.
+MAX_CHAINS_PER_TASK = 8
+# batches a chain may have fetched ahead of the task's consumer
+_BATCHES_IN_FLIGHT = 2
 
 
 def load_connector(path: str, config: str | None) -> Connector:
@@ -200,9 +218,15 @@ def _parse_filter(f: Filter) -> tuple[str, str, Any] | None:
 
 
 class ConnectorPartition(InputPartition):
-    def __init__(self, index: int, info: dict[str, Any]):
-        self.index = index
-        self.info = info
+    """One Spark task's share of a scan: the connector partitions (token
+    chains) it walks concurrently."""
+
+    def __init__(self, chains: list[Partition]):
+        self.chains = chains
+
+
+class _ChainEnd:
+    """Queue marker: one chain of the group is exhausted."""
 
 
 class ConnectorReader(DataSourceReader):
@@ -220,6 +244,9 @@ class ConnectorReader(DataSourceReader):
         self.limit = bind_limit(raw_limit)
         cols_opt = options.get("columns")
         self.columns: list[str] | None = json.loads(cols_opt) if cols_opt else None
+        # the session's task slots (Engine.table sets it); without it each
+        # chain is its own task
+        self.slots = int(options.get("slots", 0))
         self._filters_seen = False
         self._constrained: set[str] = set()
 
@@ -240,15 +267,72 @@ class ConnectorReader(DataSourceReader):
         yield from filters
 
     def partitions(self) -> list[ConnectorPartition]:
+        """The connector's partitions, dealt round-robin into at most
+        ``slots`` groups of at most MAX_CHAINS_PER_TASK chains each."""
         # late required-check: pushFilters is skipped entirely for
         # filterless scans — mirror the reference where the missing-qual
         # error surfaces at execute time (/root/reference/table.go:156-164)
         check_required_quals(self.table, self.quals, self._constrained)
         parts = self.connector.partitions(self.table.name, self.quals)
-        return [ConnectorPartition(p.index, p.info) for p in parts]
+        slots = self.slots or len(parts)
+        groups = max(min(slots, len(parts)), -(-len(parts) // MAX_CHAINS_PER_TASK))
+        return [ConnectorPartition(parts[g::groups]) for g in range(groups)]
 
     def read(self, partition: ConnectorPartition):
-        part = Partition(partition.index, partition.info)
+        """Walk the group's chains on one thread each and yield their
+        batches as they arrive.  A bounded queue holds at most
+        _BATCHES_IN_FLIGHT batches per chain; the first chain error fails
+        the task; closing the generator (a satisfied LIMIT) stops every
+        chain at its next batch and joins its thread."""
+        chains = partition.chains
+        out: queue.Queue = queue.Queue(maxsize=_BATCHES_IN_FLIGHT * len(chains))
+        stop = threading.Event()
+
+        def offer(item) -> bool:
+            while not stop.is_set():
+                try:
+                    out.put(item, timeout=0.05)
+                    return True
+                except queue.Full:
+                    pass
+            return False
+
+        def walk(part: Partition) -> None:
+            try:
+                with contextlib.closing(self._read_chain(part)) as batches:
+                    for batch in batches:
+                        if not offer(batch):
+                            return
+                offer(_ChainEnd)
+            except BaseException as exc:  # noqa: BLE001
+                # whatever ends a chain must reach the consumer, which
+                # re-raises it; an unreported exit would leave it waiting
+                offer(exc)
+
+        threads = [
+            threading.Thread(target=walk, args=(p,), name=f"sparktap-chain-{p.index}", daemon=True)
+            for p in chains
+        ]
+        for t in threads:
+            t.start()
+        try:
+            running = len(threads)
+            while running:
+                item = out.get()
+                if item is _ChainEnd:
+                    running -= 1
+                elif isinstance(item, BaseException):
+                    raise item
+                else:
+                    yield item
+        finally:
+            stop.set()
+            for t in threads:
+                t.join()
+
+    def _read_chain(self, part: Partition):
+        """One chain's batches through the scan cache: each chain has its
+        own cache entry, keyed by its partition index."""
         options = self.connector.options
         if not options.cache:
             # caching and retries are orthogonal in the reference SDK:
@@ -266,11 +350,12 @@ class ConnectorReader(DataSourceReader):
             quals_key,
             cols_key,
             self.limit,
-            partition.index,
+            part.index,
         )
         # an exact entry, or a broader cached scan filtered, projected and
         # sliced to this one: zero connector calls (cursor.go:70-92)
-        cached = _SCAN_CACHE.get(key)
+        with _SCAN_CACHE_LOCK:
+            cached = _SCAN_CACHE.get(key)
         if cached is not None:
             yield from cached
             return
@@ -280,7 +365,8 @@ class ConnectorReader(DataSourceReader):
             yield batch
         # per-connection overrides ride the connection config, as the
         # reference's config does in every ExecuteRequest (register.go:64)
-        _SCAN_CACHE.put(key, batches, options.cache_ttl_s, options.cache_max_bytes)
+        with _SCAN_CACHE_LOCK:
+            _SCAN_CACHE.put(key, batches, options.cache_ttl_s, options.cache_max_bytes)
 
     def _execute_retrying(self, part: Partition):
         """Execute with the connection's retry policy (``options.retry``).

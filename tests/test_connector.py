@@ -291,18 +291,16 @@ class TestPerConnectionCacheOptions:
         assert cache.get(a2) is not None
         assert cache.get(b1) is not None
 
-    def test_cache_disabled_connection_always_executes(self, spark):
+    def test_cache_disabled_connection_always_executes(self, spark, tmp_path):
         """cache=false in the connection config bypasses the shared cache:
         two identical scans hit the connector twice (observable via the
         chaos connector's call counter file)."""
         import json
-        import tempfile
 
         from steampipe_sqlite_spark.engine import Engine
 
         eng = Engine(spark)
-        with tempfile.NamedTemporaryFile(suffix=".cnt", delete=False) as f:
-            counter = f.name
+        counter = str(tmp_path / "calls.cnt")
         cfg = json.dumps({"cache": False, "count_calls_in": counter})
         eng.load(
             "steampipe_sqlite_spark.sources.chaos:ChaosConnector",

@@ -269,22 +269,33 @@ class TestThrottleAndCache:
         host-wide bucket.  Replayed as tools/paged_scan_probe.py does:
         the calls beyond the burst, over the scan's wall time, stay
         within rps.  Per-worker buckets would each grant the full rps."""
+        self._assert_host_budget(spark, tmp_path, chains=8, pages=10)
+
+    def test_sql_scan_holds_host_budget_chains_above_slots(self, spark, tmp_path):
+        """Three chains per task slot: each task walks its chains on
+        threads, and the threads of every task still share the one
+        host-wide bucket, so the same rps bound holds."""
+        chains = 3 * spark.sparkContext.defaultParallelism
+        self._assert_host_budget(spark, tmp_path, chains=chains, pages=4)
+
+    @staticmethod
+    def _assert_host_budget(spark, tmp_path, chains, pages):
         import time as _t
 
         rps, burst = 50, 1
         log = str(tmp_path / "calls.jsonl")
-        cfg = {"n_partitions": 8, "n_pages": 1, "page_size": 5, "cache": False}
+        cfg = {"n_partitions": chains, "n_pages": 1, "page_size": 5, "cache": False}
         eng = Engine(spark)
         eng.load(PAGED)
         # unthrottled warm-up: start the Python workers before timing
         eng.configure("paged", json.dumps(cfg))
-        assert eng.sql("SELECT COUNT(*) AS n FROM paged_items").first().n == 40
+        assert eng.sql("SELECT COUNT(*) AS n FROM paged_items").first().n == 5 * chains
         eng.configure(
             "paged",
             json.dumps(
                 {
                     **cfg,
-                    "n_pages": 10,
+                    "n_pages": pages,
                     "call_log": log,
                     "rate_limit_rps": rps,
                     "rate_limit_burst": burst,
@@ -295,7 +306,7 @@ class TestThrottleAndCache:
         n = eng.sql("SELECT COUNT(*) AS n FROM paged_items").first().n
         wall = _t.perf_counter() - t0
         calls = len(_log(log))
-        assert (n, calls) == (400, 80)
+        assert (n, calls) == (5 * chains * pages, chains * pages)
         assert (calls - burst) / wall <= 1.05 * rps, (
             f"{calls} calls in {wall:.3f}s exceed {rps} rps"
         )
@@ -366,3 +377,215 @@ class TestThrottleAndCache:
         t0 = _t.perf_counter()
         list(r.read(r.partitions()[0]))
         assert _t.perf_counter() - t0 >= 0.8 * 5 * 0.040
+
+
+def _twin(chains, pages, page_size):
+    """The rows the connector serves, computed from its arithmetic."""
+    return sorted(
+        (
+            (p * pages + pg) * page_size + i,
+            p,
+            pg,
+            f"item-{p}-{pg}-{i}",
+            round((p + 1) * 100 + pg + i / 1000.0, 3),
+        )
+        for p in range(chains)
+        for pg in range(pages)
+        for i in range(page_size)
+    )
+
+
+class TestGroupedScan:
+    """A scan deals its token chains into at most one Spark task per slot,
+    and each task walks its chains concurrently on threads."""
+
+    def test_partitions_group_round_robin_under_the_cap(self):
+        from steampipe_sqlite_spark.sources.datasource import MAX_CHAINS_PER_TASK
+
+        def groups(chains, slots):
+            conn = PagedHttpConnector(json.dumps({"n_partitions": chains}))
+            opts = {"slots": str(slots)} if slots else {}
+            r = _reader(conn, options=opts)
+            return [[c.index for c in g.chains] for g in r.partitions()]
+
+        assert groups(10, 4) == [[0, 4, 8], [1, 5, 9], [2, 6], [3, 7]]
+        assert groups(3, 8) == [[0], [1], [2]]
+        assert groups(5, None) == [[0], [1], [2], [3], [4]]
+        many = groups(100, 4)
+        assert len(many) == -(-100 // MAX_CHAINS_PER_TASK)
+        assert max(map(len, many)) <= MAX_CHAINS_PER_TASK
+        assert sorted(c for g in many for c in g) == list(range(100))
+
+    def test_chains_above_slots_scan_in_slot_tasks_concurrently(self, spark, tmp_path):
+        """3 x defaultParallelism chains scan in defaultParallelism Spark
+        partitions, return the twin's rows exactly once, and every chain
+        fetches its first page before any chain fetches its last."""
+        slots = spark.sparkContext.defaultParallelism
+        chains, pages, size = 3 * slots, 3, 7
+        log = str(tmp_path / "calls.jsonl")
+        eng = Engine(spark)
+        eng.load(PAGED)
+        cfg = {"n_partitions": chains, "n_pages": 1, "page_size": 1, "cache": False}
+        eng.configure("paged", json.dumps(cfg))
+        eng.sql("SELECT COUNT(*) FROM paged_items").collect()  # start the workers
+        eng.configure(
+            "paged",
+            json.dumps(
+                {
+                    **cfg,
+                    "n_pages": pages,
+                    "page_size": size,
+                    "page_latency_ms": 100,
+                    "call_log": log,
+                }
+            ),
+        )
+        df = eng.table("paged", "items")
+        assert df.rdd.getNumPartitions() == slots
+        rows = sorted(tuple(r) for r in df.collect())
+        assert rows == _twin(chains, pages, size)
+        calls = _log(log)
+        assert len(calls) == chains * pages
+        first = max(c["ts"] for c in calls if c["page"] == 0)
+        last = min(c["ts"] for c in calls if c["page"] == pages - 1)
+        assert first < last, "a chain finished before another one started"
+
+    def test_429_on_one_chain_replays_only_that_chain(self, spark, tmp_path):
+        """One chain of a three-chain task fails its first fetch with a
+        429: its whole-scan retry replays that one fetch, the chains
+        beside it in the same task fetch each page once, and the rows
+        come back exactly once."""
+        slots = spark.sparkContext.defaultParallelism
+        chains, pages, size = 3 * slots, 4, 10
+        log = str(tmp_path / "calls.jsonl")
+        eng = Engine(spark)
+        eng.load(PAGED)
+        eng.configure(
+            "paged",
+            json.dumps(
+                {
+                    "n_partitions": chains,
+                    "n_pages": pages,
+                    "page_size": size,
+                    "call_log": log,
+                    "fail_page_fetches": [[1, 0]],
+                    "retry_attempts": 2,
+                    "retry_min_backoff_ms": 1,
+                }
+            ),
+        )
+        row = eng.sql(
+            "SELECT COUNT(*) AS n, COUNT(DISTINCT item_id) AS d FROM paged_items"
+        ).first()
+        assert (row.n, row.d) == (chains * pages * size,) * 2
+        calls = _log(log)
+        assert len(calls) == pages * chains + 1
+        replayed = [(c["partition"], c["page"]) for c in calls if c["attempt"] > 1]
+        assert replayed == [(1, 0)]
+        for part in range(chains):
+            chain = [c["page"] for c in calls if c["partition"] == part]
+            assert chain == ([0] if part == 1 else []) + list(range(pages))
+
+    def test_chain_threads_share_the_scan_cache_under_stress(self):
+        """Two tasks' worth of chains (16 threads) read concurrently with
+        a tiny switch interval, twice: the first pass fills the shared
+        process cache, the second is served from it, and both return
+        every row exactly once."""
+        import sys
+        import threading
+
+        from steampipe_sqlite_spark.sources import datasource as ds
+
+        chains, pages, size = 2 * 8, 3, 50
+        conn = PagedHttpConnector(
+            json.dumps({"n_partitions": chains, "n_pages": pages, "page_size": size})
+        )
+        r = _reader(conn, options={"slots": "1"})
+        groups = r.partitions()
+        assert [len(g.chains) for g in groups] == [8, 8]
+        passes: list[list[int]] = []
+        hits, misses = ds._SCAN_CACHE.hits, ds._SCAN_CACHE.misses
+
+        def scan_pass() -> None:
+            seqs: list[int] = []
+
+            def task(group):
+                seqs.extend(x for b in r.read(group) for x in b.column("seq").to_pylist())
+
+            tasks = [threading.Thread(target=task, args=(g,)) for g in groups]
+            for t in tasks:
+                t.start()
+            for t in tasks:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in tasks)
+            passes.append(sorted(seqs))
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            scan_pass()
+            scan_pass()
+        finally:
+            sys.setswitchinterval(interval)
+        assert passes == [list(range(chains * pages * size))] * 2
+        assert (ds._SCAN_CACHE.hits - hits, ds._SCAN_CACHE.misses - misses) == (chains, chains)
+        ds._SCAN_CACHE.clear()
+
+    def test_closing_a_group_read_stops_its_chains(self, tmp_path):
+        """Closing read() after its first batch (a satisfied LIMIT) stops
+        every chain at its next batch and joins its thread."""
+        import threading
+
+        log = str(tmp_path / "calls.jsonl")
+        chains, pages = 4, 20
+        conn = PagedHttpConnector(
+            json.dumps(
+                {
+                    "n_partitions": chains,
+                    "n_pages": pages,
+                    "page_size": 5000,  # one batch per page
+                    "page_latency_ms": 20,
+                    "call_log": log,
+                }
+            )
+        )
+        r = _reader(conn, options={"slots": "1"})
+        (group,) = r.partitions()
+        batches = r.read(group)
+        assert next(batches).num_rows == 5000
+        batches.close()
+        alive = [t.name for t in threading.enumerate() if t.name.startswith("sparktap-chain-")]
+        assert alive == []
+        fetched = len(_log(log))
+        assert fetched < chains * pages
+
+    def test_limit_query_over_grouped_scan_returns_and_stops(self, spark, tmp_path):
+        """A LIMIT over a grouped scan returns its rows and leaves no chain
+        walking: the call log stops growing once the query is back."""
+        import time as _t
+
+        slots = spark.sparkContext.defaultParallelism
+        chains, pages = 3 * slots, 20
+        log = str(tmp_path / "calls.jsonl")
+        eng = Engine(spark)
+        eng.load(PAGED)
+        eng.configure(
+            "paged",
+            json.dumps(
+                {
+                    "n_partitions": chains,
+                    "n_pages": pages,
+                    "page_size": 5000,
+                    "page_latency_ms": 20,
+                    "cache": False,
+                    "call_log": log,
+                }
+            ),
+        )
+        rows = eng.sql("SELECT seq FROM paged_items LIMIT 5").collect()
+        assert len(rows) == 5
+        _t.sleep(0.5)
+        settled = len(_log(log))
+        _t.sleep(0.5)
+        assert len(_log(log)) == settled, "chains kept walking after LIMIT"
+        assert settled < chains * pages

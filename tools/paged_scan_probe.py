@@ -24,19 +24,20 @@ Usage: python tools/paged_scan_probe.py [n_partitions] [n_pages] [page_size] [rp
 Prints one JSON line.
 
 Committed reading (SPARK_GRAFT_CPUS=4, i.e. local[4], 4-core box,
-8 partitions x 50 pages x 200 rows, rps=100 burst default; three runs,
-interleaved with three runs of the previous reader, which also
-debited one token per partition scan — 408 tokens for the 400 calls):
+8 partitions x 50 pages x 200 rows, rps=100 burst default; two runs,
+interleaved with two runs of the previous reader, which gave each
+partition its own Spark task instead of dealing the 8 chains into 4
+tasks of 2 threads each):
 
-  throughput arm: 400 pages / 80k rows in 0.63-0.75 s -> 537-640
-    pages/s, 107-128k rows/s through SQL->DataSource->token-chain->Arrow
-    (the previous reader: 481-693 pages/s in the same window)
-  budget arm: 400 calls, one token each, in 3.26-3.32 s across 8
-    partitions on 4 worker slots; peak sliding-1s aggregate 199 <=
-    burst(100) + rps(100); sustained rate 90.5-92.0 <= 100 rps ->
-    within_budget TRUE.  The previous reader: 3.26-3.36 s, peak 193,
-    sustained 89.3-91.9: the 8 tokens saved are inside this box's
-    run-to-run spread.
+  throughput arm: 400 pages / 80k rows in 0.54-0.63 s -> 638-745
+    pages/s, 128-149k rows/s through SQL->DataSource->token-chain->Arrow
+    (the previous reader: 688-724 pages/s in the same window; with no
+    page latency the scan is CPU-bound, so threads neither help nor hurt)
+  budget arm: 400 calls, one token each, in 3.18-3.23 s across 8
+    partitions in 4 tasks; peak sliding-1s aggregate 199-200 <=
+    burst(100) + rps(100); sustained rate 93.0-94.4 <= 100 rps ->
+    within_budget TRUE.  The previous reader: 3.20-3.25 s, peak 199,
+    sustained 92.5-93.7.
 """
 
 from __future__ import annotations
@@ -65,8 +66,11 @@ def main() -> None:
         "n_partitions": n_part, "n_pages": n_pages, "page_size": page_size,
     }
 
+    # one directory for the three scans' call logs, removed on exit
+    log_dir = tempfile.TemporaryDirectory(prefix="pagedprobe")
+
     def scan(extra_cfg: dict, tag: str) -> tuple[float, int, str]:
-        log = os.path.join(tempfile.mkdtemp(prefix="pagedprobe"), f"{tag}.jsonl")
+        log = os.path.join(log_dir.name, f"{tag}.jsonl")
         eng = Engine(spark)
         eng.load("steampipe_sqlite_spark.sources.pagedhttp:PagedHttpConnector")
         eng.configure(
@@ -100,9 +104,9 @@ def main() -> None:
     }
 
     wall_b, rows_b, log = scan({"rate_limit_rps": rps}, "budget")
-    ts = sorted(
-        json.loads(line)["ts"] for line in open(log) if line.strip()
-    )
+    with open(log) as f:
+        ts = sorted(json.loads(line)["ts"] for line in f if line.strip())
+    log_dir.cleanup()
     # peak aggregate request rate over any sliding 1 s window
     peak = 0
     j = 0

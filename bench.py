@@ -111,6 +111,13 @@ def _mc_sentinel() -> float:
     return round(time.perf_counter() - t0, 4)
 
 
+def _parquet(sf_dir: str, table: str) -> str:
+    """DuckDB's read_parquet path for ``table``: the file itself, or the
+    part files of a directory Spark wrote (a tools/replica.py replica)."""
+    path = f"{sf_dir}/{table}.parquet"
+    return path + "/*.parquet" if os.path.isdir(path) else path
+
+
 def _sentinel(sf_dir: str) -> float:
     """Noise sentinel: a fixed tiny DuckDB aggregation, timed cold.
     BASELINE.md documents multi-second machine noise on this box
@@ -123,7 +130,7 @@ def _sentinel(sf_dir: str) -> float:
     con = duckdb.connect()
     t0 = time.perf_counter()
     con.execute(
-        f"SELECT count(*), sum(l_quantity) FROM read_parquet('{sf_dir}/lineitem.parquet')"
+        f"SELECT count(*), sum(l_quantity) FROM read_parquet('{_parquet(sf_dir, 'lineitem')}')"
     ).df()
     return round(time.perf_counter() - t0, 4)
 
@@ -136,9 +143,7 @@ def duckdb_connect(sf_dir: str):
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"
     ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{_parquet(sf_dir, t)}')")
     return con
 
 

@@ -107,11 +107,13 @@ def ngram_jaccard_pairs(
     in BOTH arms, sf0.1 (100 blocks of <=112 docs) runs 1.36 s as a
     pair join vs 1.82 s here — the gram join pays ~0.5 s of extra
     exchanges at toy block sizes.  The shape is chosen for block
-    GROWTH: at fixed corpus size, tools/ngram_pairs_scale_probe.py
-    measures the pair join quadratic in block size (2.2 / 13.3 / 48.3 s
-    at blocks of 100 / 1000 / 5000 over 20k docs) while this join stays
-    flat (2.8 / 2.9 / 2.4 s) — and a blocking key can never promise
-    small blocks at 100 TB.
+    GROWTH: at fixed corpus size, a block-size probe measures the pair
+    join quadratic in block size (2.2 / 13.3 / 48.3 s at blocks of
+    100 / 1000 / 5000 over 20k docs) while this join stays flat
+    (2.8 / 2.9 / 2.4 s) — and a blocking key can never promise small
+    blocks at 100 TB.  Reading in BASELINE.md ("the ngram join's
+    block-growth curve"); probe code:
+    `git show ad991e5:tools/ngram_pairs_scale_probe.py`.
 
     A zero/negative threshold keeps the pair-join form: the gram join
     cannot emit jaccard-0 pairs (they share no gram row), which such a
@@ -294,7 +296,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 5,
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded minhash LSH, scored by the
     signature-estimated Jaccard (fraction of agreeing minhashes).
@@ -342,11 +343,6 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    if stats is not None:
-        # instrumentation hook (scale probes): the candidate frame BEFORE
-        # signature scoring — counting it proves the band gate's
-        # candidate-linearity claim without duplicating the pipeline
-        stats["candidates"] = cand
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     est = F.expr(
@@ -713,7 +709,6 @@ def duplicated_span_stats(
 def ppjoin_pairs(
     df: DataFrame, text_col: str, id_col: str, threshold_pct: int = 70,
     shingle: int = 1,
-    stats: dict | None = None,
 ) -> DataFrame:
     """EXACT word-set similarity join via prefix filtering (the PPJoin
     family, Xiao et al. 2008 — public construction): pairs with Jaccard
@@ -813,10 +808,6 @@ def ppjoin_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    if stats is not None:
-        # instrumentation hook (scale probes): prefix-filtered candidates
-        # BEFORE verification — see minhash_lsh_pairs
-        stats["candidates"] = cand
     # verification: per-pair array_intersect over the two docs' token
     # ARRAYS (two map joins against the persisted arrs, one row per
     # side) — NEVER a candidate×token explode, which was measured 20x

@@ -5333,7 +5333,8 @@ ORDER BY doc_a, doc_b
 # filter, which is skew-free by construction.
 #
 # r14: converted from the pure-SQL spelling to DataFrame form for two
-# measured reasons (tools/neardup_scale_probe.py fuzzy arm at 5M docs):
+# measured reasons (content-unique fuzzy corpus at 5M docs: BASELINE.md
+# "Round-14: content-unique near-dup evidence"):
 # (1) the self-join's two CTE references each recomputed the normalize —
 # persisting the 24-char prefixes runs it ONCE; (2) the normalize itself
 # moved off java.util.regex (which loses its fast path on a multi-range

@@ -190,20 +190,14 @@ def mm_media_inventory(spark, sf_dir):
     )
 
 
-def _phash_oracle_sql(px_value_sql: str | None = None) -> str:
+def _phash_oracle_sql() -> str:
     """Full-value oracle for the pHash near-dup pairs: the Q13 integer DCT
     makes the hash exact integer arithmetic, so DuckDB can replay it from
     the same 64 basis constants (rendered as a VALUES list from the SAME
     Python tuple the numpy path reads — never recomputed) and then run
     the identical band-LSH + hamming pair stage.  np.roll(px, i) means
     plane[i][(j+i)%8] = px[j]; the median test is 2*c > s32+s33; bit 63
-    lands on the int64 sign, emitted as the min-int literal.
-
-    ``px_value_sql`` (free vars doc_id, j) overrides the corpus pixel
-    formula — tools/neardup_scale_probe.py injects a content-unique
-    plane so the band-LSH + hamming stages run UNCHANGED over a fixture
-    whose near-dup set is planted rather than an artifact of the
-    id-arithmetic plane (the r13 replica-fixture lesson)."""
+    lands on the int64 sign, emitted as the min-int literal."""
     from steampipe_sqlite_spark.operators.multimodal import PHASH_DCT_Q13
 
     basis_rows = ", ".join(
@@ -211,11 +205,10 @@ def _phash_oracle_sql(px_value_sql: str | None = None) -> str:
         for u, row in enumerate(PHASH_DCT_Q13)
         for j, w in enumerate(row)
     )
-    px_value_sql = px_value_sql or "(doc_id * 7 + j * 13) % 256"
     return f"""
 WITH basis(u, j, w) AS (VALUES {basis_rows}),
 px AS (
-  SELECT doc_id, j, CAST({px_value_sql} AS BIGINT) AS v
+  SELECT doc_id, j, CAST((doc_id * 7 + j * 13) % 256 AS BIGINT) AS v
   FROM documents, generate_series(0, 7) t(j)
   WHERE doc_id % 3 = 0),
 plane AS (

@@ -42,7 +42,7 @@ _AQE_MIN_INPUT_BYTES = 1 << 30
 def _driver_mem() -> str:
     """Heap sized to the data, like shuffle partitions and AQE.
 
-    Measured (round 10, tools/core_elasticity_probe.py follow-up): a 16g
+    Measured (BASELINE.md "Round-10: core elasticity measured"): a 16g
     heap is stable for 32-thread sort-merge joins at sf0.1 but suffers
     PROGRESSIVE GC storms on GB-scale inputs — repeated tpch_q3 runs on
     the 100× replica (60M-row SMJ, local[32]) read 84 → 245 → 310 JVM
@@ -192,7 +192,7 @@ def get_spark(app_name: str = "steampipe_sqlite_spark", cpus: str | int | None =
         # near-empty reducer scheduling on cheap hash aggregates
         # (window_tumbling_1h 0.46 → 0.95 s at 100×) — the right side of
         # the trade at every scale where AQE is on (round 9, measured via
-        # tools/floorbound_scale_probe.py).
+        # the 100x replica; BASELINE.md "Round-9: floor-bound convergence").
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")

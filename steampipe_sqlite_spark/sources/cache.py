@@ -174,9 +174,12 @@ class ScanCache:
                 self._conn_bytes.pop(conn, None)
 
     def clear(self) -> None:
+        """Drop every entry and zero the hit/miss counters."""
         self._data.clear()
         self._bytes = 0
         self._conn_bytes.clear()
+        self.hits = 0
+        self.misses = 0
 
 
 def _qual_mask(batch: pa.RecordBatch, column: str, op: str, value):

@@ -2,6 +2,10 @@
 return fixed times, with bench's sentinels monkeypatched."""
 
 import json
+import os
+import shutil
+
+import pytest
 
 import bench
 from tools import ab
@@ -59,3 +63,36 @@ def test_run_brackets_the_pairs_with_sentinels(monkeypatch, capsys):
     assert r["ratios"] == [0.5, 0.5, 0.5]
     assert r["arms"]["fast"]["wins"] == 3 and r["arms"]["slow"]["wins"] == 0
     assert out["pairs"] == 3
+
+
+def test_main_sizes_the_session_from_sf(monkeypatch, tmp_path):
+    """The session sizes itself from $SPARK_GRAFT_SF_DIR when it is built,
+    so ab.main must point that at --sf before get_spark."""
+    from steampipe_sqlite_spark import session
+
+    def fake_get_spark(*args, **kwargs):
+        raise LookupError(os.environ["SPARK_GRAFT_SF_DIR"])
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/elsewhere")
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    with pytest.raises(LookupError, match=str(tmp_path)):
+        ab.main(["--sf", str(tmp_path), "tpch_q6"])
+
+
+def test_duckdb_reads_spark_written_table_dirs(tmp_path):
+    """Replica tables are directories of part files; single-file tables
+    beside them read as before."""
+    src = "/root/testdata/sf0.001"
+    for f in os.listdir(src):
+        if f in ("documents.parquet", "lineitem.parquet"):
+            (tmp_path / f).mkdir()
+            for part in ("part-0.parquet", "part-1.parquet"):
+                shutil.copy(os.path.join(src, f), tmp_path / f / part)
+            (tmp_path / f / "_SUCCESS").touch()
+        else:
+            shutil.copy(os.path.join(src, f), tmp_path / f)
+    base, con = bench.duckdb_connect(src), bench.duckdb_connect(str(tmp_path))
+    for t, times in (("documents", 2), ("orders", 1)):
+        n = base.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
+        assert con.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0] == times * n
+    assert bench._sentinel(str(tmp_path)) >= 0

@@ -174,6 +174,8 @@ class TestScanCache:
         cache.put(key, [self.make_batch()])
         assert cache.get(key) is not None
         assert cache.hits == 1 and cache.misses == 1
+        cache.clear()
+        assert (cache.hits, cache.misses) == (0, 0)
 
     def test_ttl_expiry(self, monkeypatch):
         cache = ScanCache(ttl_s=60)

@@ -1374,35 +1374,3 @@ class TestDedupKeepBest:
             assert r.component_size == sizes[r.component_id]
             assert r.n_dropped == r.component_size - 1
             assert r.kept_n_chars == chars[r.kept_doc_id]
-
-
-def test_dedup_stats_hook_exposes_candidate_frame(spark):
-    """The opt-in ``stats`` hook on minhash_lsh_pairs / ppjoin_pairs (added
-    for tools/dedup_scale_probe.py) must expose the candidate frame BEFORE
-    scoring/verification: every output pair is a candidate, and passing no
-    stats dict changes nothing."""
-    from steampipe_sqlite_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        ppjoin_pairs,
-    )
-    from steampipe_sqlite_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    for fn, kw in (
-        (minhash_lsh_pairs, {"num_hashes": 16, "bands": 4, "threshold": 0.5}),
-        (ppjoin_pairs, {"threshold_pct": 80, "shingle": 3}),
-    ):
-        stats: dict = {}
-        pairs = {
-            (r.id_a, r.id_b)
-            for r in fn(docs, "text", "doc_id", stats=stats, **kw).collect()
-        }
-        cands = {
-            (r.id_a, r.id_b) for r in stats["candidates"].collect()
-        }
-        assert pairs <= cands, f"{fn.__name__}: output pair not in candidates"
-        # no-stats call path unchanged
-        plain = {
-            (r.id_a, r.id_b) for r in fn(docs, "text", "doc_id", **kw).collect()
-        }
-        assert plain == pairs

@@ -504,7 +504,7 @@ class TestGroupedScan:
         groups = r.partitions()
         assert [len(g.chains) for g in groups] == [8, 8]
         passes: list[list[int]] = []
-        hits, misses = ds._SCAN_CACHE.hits, ds._SCAN_CACHE.misses
+        ds._SCAN_CACHE.clear()
 
         def scan_pass() -> None:
             seqs: list[int] = []
@@ -528,7 +528,7 @@ class TestGroupedScan:
         finally:
             sys.setswitchinterval(interval)
         assert passes == [list(range(chains * pages * size))] * 2
-        assert (ds._SCAN_CACHE.hits - hits, ds._SCAN_CACHE.misses - misses) == (chains, chains)
+        assert (ds._SCAN_CACHE.hits, ds._SCAN_CACHE.misses) == (chains, chains)
         ds._SCAN_CACHE.clear()
 
     def test_closing_a_group_read_stops_its_chains(self, tmp_path):

@@ -18,8 +18,10 @@ Usage:
       two importable ``(spark, sf_dir) -> DataFrame`` callables, each
       materialized with `toPandas`
 
---sf defaults to $SPARK_GRAFT_SF_DIR, as in bench.py.  Spark arms run
-after `spark.catalog.clearCache()`.  Prints one JSON line:
+--sf defaults to $SPARK_GRAFT_SF_DIR, as in bench.py, and the session is
+sized from it; a replica dir from tools/replica.py times the same queries
+at scale.  Spark arms run after `spark.catalog.clearCache()`.  Prints one
+JSON line:
   {"metric": "ab", "sf": ..., "pairs": N,
    "results": {name: {"arms": {arm: {"med", "mad", "best", "wins"}},
                       "ratios": [first/second per pair],
@@ -155,6 +157,9 @@ def main(argv: "list[str] | None" = None) -> None:
     if bool(args.arms) == bool(args.queries):
         p.error("give either QUERY... or --arms mod:fa mod:fb")
 
+    # the session sizes itself (shuffle partitions, AQE, heap) from
+    # $SPARK_GRAFT_SF_DIR, so it must name the data being timed
+    os.environ["SPARK_GRAFT_SF_DIR"] = args.sf
     from steampipe_sqlite_spark.session import get_spark
 
     spark = get_spark("ab")

@@ -33,7 +33,7 @@ holds tiny-query latency near isolated while costing the heavy side
 little; results identical across arms.
 
 Usage: python tools/concurrency_probe.py [tiny_queries_per_thread]
-       (default 12; replica shared under .cache/floorscale)
+       (default 12; tools/replica.py corpus under .cache/replica)
 Prints one JSON line per arm.
 
 Committed reading (round 11, local[32], heavy = tpch_q3@100x looping,
@@ -83,7 +83,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.floorbound_scale_probe import build  # noqa: E402
+from tools.replica import build  # noqa: E402
 from steampipe_sqlite_spark.plans.registry import collect  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
 

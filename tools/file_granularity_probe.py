@@ -11,8 +11,8 @@ spark.sql.files.maxPartitionBytes down to 16m for the local test bed
 (session.py: single-file sub-GB fixtures must split into >= N tasks) —
 a knob tuned for too-FEW files that could misfire on too-MANY.
 
-The probe writes the SAME ~2 GB, 60M-row lineitem (the floorbound 100x
-replica) at 32 / 512 / 4096 files and runs the REGISTERED tpch_q1
+The probe writes the SAME ~2 GB, 60M-row lineitem (the tools/replica.py
+100x replica) at 32 / 512 / 4096 files and runs the REGISTERED tpch_q1
 (reads only lineitem) under both the engine's 16m override and Spark's
 128m default, fresh session per arm (SPARK_GRAFT_MAX_PARTITION_BYTES),
 best-of-3 warm, recording wall + the scan's actual partition count.
@@ -26,7 +26,7 @@ compacted form of the 4096-file one — same rows, one repartition+write
 away).
 
 Usage: python tools/file_granularity_probe.py [granularities...]
-       (default 32 512 4096; replica shared under .cache/floorscale)
+       (default 32 512 4096; tools/replica.py corpus under .cache/replica)
 Prints one JSON line per (files, maxPartitionBytes) arm.
 
 Committed reading (round 10, local[32], 60M-row/~2 GB lineitem,
@@ -69,7 +69,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.floorbound_scale_probe import SCRATCH, build  # noqa: E402
+from tools.replica import SCRATCH, build  # noqa: E402
 from steampipe_sqlite_spark.plans.registry import collect  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
 

@@ -85,7 +85,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from tools.floorbound_scale_probe import build  # noqa: E402
+from tools.replica import build  # noqa: E402
 from tools.skew_join_probe import build as build_skew  # noqa: E402
 from steampipe_sqlite_spark.plans.registry import collect  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402

@@ -1,6 +1,6 @@
 """Skew-join probe: measure the engine's two answers to a hot key.
 
-Every join story so far (floorbound and core-elasticity probes) ran
+Every join story so far (the data- and core-scale replica readings) ran
 UNIFORM keys — replicas re-keyed per copy exactly so that per-key
 density stays flat.  Real corpora are zipfian: one null-ish or
 default key owning 10-30% of a fact table is the classic 100 TB

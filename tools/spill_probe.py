@@ -1,6 +1,6 @@
 """Spill probe: shrink the heap until the engine must spill, and measure
-the tax — completing the scale-evidence matrix (floorbound = data scale,
-core_elasticity = cores, skew_join = keys, THIS = memory).
+the tax — completing the scale-evidence matrix (tools/replica.py + ab.py =
+data scale and cores, skew_join = keys, THIS = memory).
 
 At 100 TB the per-task memory budget is whatever the executor grants —
 a plan is only deployable if it degrades to disk spill instead of dying
@@ -20,8 +20,8 @@ number (that heap is below the engine's floor for this input, which the
 data-sized _driver_mem policy exists to avoid).
 
 Usage: python tools/spill_probe.py [reps] [heap ...]
-       (defaults: 2 32g 8g 4g 2g; replica corpus shared with
-       floorbound_scale_probe under .cache/floorscale)
+       (defaults: 2 32g 8g 4g 2g; the tools/replica.py corpus under
+       .cache/replica)
 Prints one JSON line per query.
 
 Committed reading (round 10, local[32], 100x sf0.1 = 60M lineitem /
@@ -72,7 +72,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.floorbound_scale_probe import build  # noqa: E402
+from tools.replica import build  # noqa: E402
 from steampipe_sqlite_spark.plans.registry import collect  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
 
@@ -107,7 +107,7 @@ def run_arm(name: str, heap: str, sf_dir: str, reps: int) -> None:
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = heap
     spark = get_spark(f"spillprobe-{heap}-{name}")
     queries, _ = collect()
-    # house measurement convention (core_elasticity/floorbound probes):
+    # house measurement convention (as tools/ab.py):
     # rebuild the registered query and clear persisted data
     # between reps — otherwise rep 2 reads an InMemoryRelation and the
     # "best" is a cache hit, not the join/aggregate under test

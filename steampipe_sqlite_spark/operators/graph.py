@@ -91,9 +91,12 @@ def connected_components(
                 (F.col("nbr_component") < F.col("component")).alias("changed"),
             )
         ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("changed")).limit(1).count()
+        # isEmpty, not limit(1).count(): a whole-stage-codegen limit names
+        # its counter from a JVM-wide sequence (`_limit_counter_<n>`), so
+        # each new limit plan is new Java source and compiles again.
+        converged = new_labels.filter(F.col("changed")).isEmpty()
         labels = new_labels.drop("changed")
-        if changed == 0:
+        if converged:
             return with_singletons(labels)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds"
@@ -286,7 +289,7 @@ def bfs_distances(
             .withColumn("dist", F.lit(depth).cast("int"))
             .localCheckpoint(eager=True)
         )
-        if nxt.limit(1).count() == 0:
+        if nxt.isEmpty():
             break
         dist = dist.unionByName(nxt)
         frontier = nxt.select("node")

@@ -715,7 +715,7 @@ def pq_codebooks(
     # every downstream query would silently return zero rows.  Checked
     # on the raw corpus (id column only — column-pruned scan, no
     # explode pipeline) so the guard job stays as cheap as possible.
-    if corpus.where(f"{id_col} < {int(codebook)}").limit(1).count() == 0:
+    if corpus.where(f"{id_col} < {int(codebook)}").isEmpty():
         raise ValueError(
             f"empty PQ init: no corpus ids < {codebook} — re-key the corpus "
             "or pass a smaller codebook"

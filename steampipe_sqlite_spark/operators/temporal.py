@@ -130,10 +130,7 @@ def asof_join_same_source(
     boolean expressions.
     """
     if validate:
-        overlap = (
-            source.where(f"({left_pred}) AND ({right_pred})").limit(1).count()
-        )
-        if overlap:
+        if not source.where(f"({left_pred}) AND ({right_pred})").isEmpty():
             raise ValueError(
                 "asof_join_same_source: left_pred and right_pred are not "
                 f"disjoint — a row matches both ({left_pred!r} AND "

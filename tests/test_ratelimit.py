@@ -1,9 +1,12 @@
 """Rate limiting: the SURVEY §7.5.5 throttle — API budgets must hold even
 when Spark fans a scan across many threads, partitions and processes."""
 
+import fcntl
 import json
 import math
 import multiprocessing
+import os
+import random
 import struct
 import sys
 import threading
@@ -75,7 +78,7 @@ class TestTokenBucket:
         finally:
             sys.setswitchinterval(old)
         assert not any(t.is_alive() for t in threads)
-        tokens, _ = struct.unpack("<dd", (tmp_path / "b").read_bytes())
+        tokens, _ = struct.unpack_from("<dd", (tmp_path / "b").read_bytes())
         assert tokens == pytest.approx(200, abs=0.01)
 
     def test_rejects_nonpositive_rate(self, tmp_path):
@@ -95,10 +98,12 @@ class TestTokenBucket:
         [
             b"",
             b"\x01\x02\x03",  # torn: shorter than one record
-            struct.pack("<dd", math.nan, 1.0),
-            struct.pack("<dd", -5.0, 1.0),
-            struct.pack("<dd", 0.0, math.inf),
-            struct.pack("<dd", 0.0, time.monotonic() + 1e6),  # after a reboot
+            struct.pack("<dd", 0.0, 1.0),  # the 16-byte record of old versions
+            struct.pack("<ddd", math.nan, 1.0, math.inf),
+            struct.pack("<ddd", -5.0, 1.0, math.inf),
+            struct.pack("<ddd", 0.0, math.inf, math.inf),
+            struct.pack("<ddd", 0.0, 1.0, 2.0),  # refilled long ago
+            struct.pack("<ddd", 0.0, time.monotonic() + 1e6, math.inf),  # after a reboot
         ],
     )
     def test_bad_state_file_reads_as_full_bucket(self, tmp_path, state):
@@ -106,8 +111,90 @@ class TestTokenBucket:
         path.write_bytes(state)
         b = TokenBucket(rate_per_s=10, burst=2, path=str(path))
         assert b.acquire() == 0.0 and b.acquire() == 0.0  # no sleep at all
-        tokens, last = struct.unpack("<dd", path.read_bytes())
+        tokens, last = struct.unpack_from("<dd", path.read_bytes())
         assert 0.0 <= tokens <= b.capacity and 0.0 < last <= time.monotonic()
+
+    def test_new_state_file_prunes_files_that_read_full(self, tmp_path):
+        """The first debit on a new state file deletes the directory's files
+        that read as a full bucket and keeps the rest."""
+        refilled = TokenBucket(rate_per_s=1000, burst=1, path=str(tmp_path / "refilled"))
+        refilled.acquire()
+        busy = TokenBucket(rate_per_s=1e-6, burst=1, path=str(tmp_path / "busy"))
+        busy.acquire()
+        (tmp_path / "old").write_bytes(struct.pack("<dd", 0.0, 1.0))
+        time.sleep(0.01)  # "refilled" is full again after 1 ms
+        assert sorted(p.name for p in tmp_path.iterdir()) == ["busy", "old", "refilled"]
+        TokenBucket(rate_per_s=10, burst=1, path=str(tmp_path / "new")).acquire()
+        assert sorted(p.name for p in tmp_path.iterdir()) == ["busy", "new"]
+        assert busy._debit(1) > 0  # "busy" kept its spent state
+
+    def test_debit_racing_a_prune_stays_in_one_budget(self, tmp_path, monkeypatch):
+        """A debit that opened the state file before a prune deleted it must
+        not draw from the deleted inode: it reopens the path and shares the
+        budget of the file a later debit created there."""
+        from steampipe_sqlite_spark.sources import ratelimit
+
+        path = str(tmp_path / "b")
+        held = os.open(path, os.O_RDWR | os.O_CREAT)
+        fcntl.flock(held, fcntl.LOCK_EX)  # the prune's lock on the old inode
+        opened, real_flock = threading.Event(), fcntl.flock
+
+        def flock(fd, op):
+            if threading.current_thread() is racer:
+                opened.set()
+            return real_flock(fd, op)
+
+        monkeypatch.setattr(ratelimit.fcntl, "flock", flock)
+        waits = []
+        racer = threading.Thread(
+            target=lambda: waits.append(TokenBucket(2, 1, path).acquire())
+        )
+        racer.start()
+        assert opened.wait(10)  # the racer holds an fd on the old inode
+        os.unlink(path)  # the prune deletes the file it holds locked
+        assert TokenBucket(2, 1, path).acquire() == 0.0  # a new file, its one token taken
+        os.close(held)
+        racer.join(timeout=10)
+        assert not racer.is_alive()
+        assert waits[0] > 0.25  # waited for the new file's refill (0.5 s)
+
+    def test_debits_racing_prunes_stay_inside_one_budget(self, tmp_path):
+        """16 threads debit one bucket (100/s, burst 1) with pauses long
+        enough for it to refill, so it often reads full, while a thread
+        prunes the directory without pause: the threads together are
+        admitted no more than one budget allows."""
+        from steampipe_sqlite_spark.sources.ratelimit import _prune
+
+        b = TokenBucket(rate_per_s=100, burst=1, path=str(tmp_path / "b"))
+        stop, admitted = threading.Event(), []
+
+        def debit(seed):
+            rng = random.Random(seed)
+            while not stop.is_set():
+                b.acquire()
+                admitted.append(time.monotonic())
+                time.sleep(rng.uniform(0, 0.2))
+
+        def prune():
+            while not stop.is_set():
+                _prune(str(tmp_path))
+
+        threads = [threading.Thread(target=debit, args=(i,)) for i in range(16)]
+        threads.append(threading.Thread(target=prune))
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        t0 = time.monotonic()
+        try:
+            for t in threads:
+                t.start()
+            time.sleep(1.0)
+            stop.set()
+            for t in threads:
+                t.join(timeout=10)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert len(admitted) <= 1 + 100 * (max(admitted) - t0) + 1e-6
 
     def test_registry_shares_by_key(self, tmp_path):
         """One key, one budget; another key, another budget."""

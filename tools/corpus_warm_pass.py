@@ -18,9 +18,13 @@ session before it is called a regression.
 
 Usage: python tools/corpus_warm_pass.py [sf_dir] [out.json] [query ...]
 Prints one JSON line {"metric": "corpus_warm_pass", "sf": ..., "walls":
-{name: sec desc-sorted, top 40}, "errors": [names that raised]} and
-writes the full dict to out.json if given.  An errored query's wall is
--1.0, which sorts last and falls out of the top 40 — read "errors".
+{name: sec desc-sorted, top 40}, "errors": [names that raised],
+"codegen_compiles": n, "jit_compile_ms": ms} and writes the full dict to
+out.json if given.  The last two are the JVM's compile work over the whole
+pass, warm runs included: generated classes Spark compiled (Janino, on a
+codegen-cache miss) and milliseconds the JIT spent compiling.  An errored
+query's wall is -1.0, which sorts last and falls out of the top 40 — read
+"errors".
 With explicit query names the pass times ONLY those, best-of-3 (the
 outlier re-measure mode: this box's co-tenant bursts inflate single
 readings up to ~17x — measured in-process on emb_neardup_cosine this
@@ -42,6 +46,14 @@ from steampipe_sqlite_spark.plans.registry import collect
 from steampipe_sqlite_spark.session import get_spark
 
 
+def _compile_work(jvm) -> tuple[int, int]:
+    """(generated classes compiled, JIT compile ms) so far in this JVM.
+    Both counters are JVM-wide, so they survive the session recycling."""
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE()
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return int(compiles.getCount()), int(jit.getTotalCompilationTime())
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
@@ -49,12 +61,15 @@ def main() -> None:
     names = sys.argv[3:] or list(queries)
     reps = 3 if sys.argv[3:] else 1
     walls: dict[str, float] = {}
-    spark = None
+    spark = jvm = None
     for i, name in enumerate(names):
         if spark is None or (i and i % 50 == 0):
             if spark is not None:
                 spark.stop()
             spark = get_spark()
+        if jvm is None:
+            jvm = spark.sparkContext._jvm
+            start = _compile_work(jvm)
         fn = queries[name]
         spark.catalog.clearCache()
         try:
@@ -75,11 +90,19 @@ def main() -> None:
                 spark.stop()
             spark = None
         print(f"{i + 1}/{len(names)} {name} {walls[name]}", file=sys.stderr)
+    end = _compile_work(jvm)
     if spark is not None:
         spark.stop()
     ordered = dict(sorted(walls.items(), key=lambda kv: -kv[1]))
     errors = [n for n, w in walls.items() if w < 0]
-    line = {"metric": "corpus_warm_pass", "sf": sf_dir, "walls": ordered, "errors": errors}
+    line = {
+        "metric": "corpus_warm_pass",
+        "sf": sf_dir,
+        "walls": ordered,
+        "errors": errors,
+        "codegen_compiles": end[0] - start[0],
+        "jit_compile_ms": end[1] - start[1],
+    }
     if out_path:
         with open(out_path, "w") as f:
             json.dump(line, f, indent=1)

@@ -1,6 +1,6 @@
-"""Engine facade: load connectors, discover schemas, register tables,
-reconfigure live — the extension-load + configure-UDF surface of the
-reference (SURVEY.md §3.1, §3.3).
+"""Engine facade: load connectors, discover schemas, reconfigure live,
+and bind connector tables into SQL — the extension-load + configure-UDF
+surface of the reference (SURVEY.md §3.1, §3.3).
 
 Usage::
 
@@ -9,20 +9,22 @@ Usage::
     eng.sql("SELECT * FROM chaos_all_types WHERE id < 10")
     eng.configure("dynamic", '{"tables": {"t": [["x", "int"]]}}')
 
-Static connectors register tables at load (reference register.go:29-43);
-dynamic connectors register on configure, and each reconfigure drops the
-old views and re-creates from the fresh schema
-(reference configure_fn.go:114-149).
+Static connectors discover their tables at load (reference
+register.go:29-43); dynamic connectors on configure, and each reconfigure
+replaces the table set with the fresh schema's (reference
+configure_fn.go:114-149).  Nothing is registered in the session catalog:
+``<alias>_<table>`` names exist only inside ``Engine.sql``, which binds
+each reference of a statement to a fresh scan, and ``Engine.table``.
 """
 
 from __future__ import annotations
 
-import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from steampipe_sqlite_spark.sources.connector import DYNAMIC, STATIC, Schema
+from steampipe_sqlite_spark.sources.connector import STATIC, Schema
 from steampipe_sqlite_spark.sources.datasource import (
     FORMAT_NAME,
     ConnectorDataSource,
@@ -47,50 +49,38 @@ class Engine:
         # task slots a bridge scan groups its connector partitions into
         # (ConnectorReader.partitions)
         self._slots = spark.sparkContext.defaultParallelism
-        # alias -> (class_path, config, schema, view names)
+        # alias -> (class_path, config, schema)
         self._connections: dict[str, dict] = {}
+        # Spark's parser substitutes ${var} first, so its spans index that
+        self._substitute = spark._jvm.org.apache.spark.sql.internal.VariableSubstitution().substitute
 
     # -- loading (reference register.go) -----------------------------------
 
     def load(self, connector_class: str, alias: str | None = None, config: str | None = None) -> str:
-        """Load a connector; static mode discovers and registers tables
-        immediately (with blank config if none given — the reference sends
-        Config:"" for static plugins, register.go:49-69).  A mistyped
-        engine option raises ``ValueError`` before anything registers."""
+        """Load a connector; static mode discovers its tables immediately
+        (with blank config if none given — the reference sends Config:""
+        for static plugins, register.go:49-69).  A mistyped engine option
+        raises ``ValueError`` before the connection is added."""
         conn = load_connector(connector_class, config)
         alias = alias or conn.name
-        schema = conn.get_schema()
-        state = {
+        self._connections[alias] = {
             "class": connector_class,
             "config": config,
-            "schema": schema,
-            "views": [],
+            "schema": conn.get_schema(),
         }
-        self._connections[alias] = state
-        if schema.mode != DYNAMIC or schema.tables:
-            self._register_views(alias)
         return alias
 
     # -- configure (reference configure_fn.go:12-149) ----------------------
 
     def configure(self, alias: str, config: str) -> None:
-        """steampipe_configure_<alias>() analog: update config, refetch
-        schema, drop/recreate views for dynamic connectors.  A config that
-        fails validation or schema discovery leaves the previous one
-        serving."""
+        """steampipe_configure_<alias>() analog: update config and refetch
+        the schema, so a dynamic connector's table set follows the new
+        config.  A config that fails validation or schema discovery leaves
+        the previous one serving."""
         state = self._connections[alias]
-        conn = load_connector(state["class"], config)
-        schema = conn.get_schema()
-        old_mode = state["schema"].mode if state["schema"] else None
+        schema = load_connector(state["class"], config).get_schema()
         state["config"] = config
         state["schema"] = schema
-        if schema.mode == DYNAMIC or old_mode == DYNAMIC:
-            self._drop_views(alias)
-            self._register_views(alias)
-        # static connectors keep their views; config affects future scans
-        # through the refreshed option below
-        else:
-            self._register_views(alias)
 
     # -- table access ------------------------------------------------------
 
@@ -107,6 +97,13 @@ class Engine:
         Spark still applies its own LIMIT); ``columns`` is explicit
         projection pushdown (B2) — the Python DS API has no pushColumns, so
         narrow scans are requested here.
+
+        Limit: the returned DataFrame (like one from ``sql``) holds one
+        relation, and PySpark 4.1.2 keeps one pushed-down reader per
+        relation.  Re-deriving it with different filters shares that
+        reader: ``df.where("partition_id = 3").count()`` then
+        ``df.count()`` reads with the first filter's quals both times.
+        Call ``table()`` or ``sql()`` again for each filtered query.
         """
         import json as _json
 
@@ -166,63 +163,55 @@ class Engine:
             reader = reader.option("config", state["config"])
         return reader.load()
 
-    _CONFIGURE_RE = re.compile(r"steampipe_configure_([A-Za-z_]\w*)\s*\(", re.IGNORECASE)
-
     def sql(self, query: str) -> DataFrame:
-        """Run SQL over the registered connector views.
+        """Run SQL in which ``<alias>_<table>`` names a connector table.
 
-        Views are re-registered first: with Python-DS filter pushdown, a
-        relation instance bakes in the first query's pushed-down reader, so
-        a long-lived temp view would silently reuse stale quals for a
-        different query (observed on PySpark 4.1.2).  A fresh relation per
-        query restores the per-query BestIndex semantics of the reference
-        (xBestIndex runs per statement, /root/reference/table.go:74).
+        Spark's parser finds each single-part relation reference naming a
+        loaded connection's table (and no WITH definition); each is bound
+        to a fresh ``table()`` under a view name unique to this call, so
+        it gets its own relation and pushed-down reader (PySpark 4.1.2
+        keeps one per relation), as the reference runs xBestIndex per
+        statement (reference table.go:74).  The views are dropped before
+        this returns: ``spark.sql`` has analyzed the statement.
 
-        ``SELECT steampipe_configure_<alias>(config)`` is supported as in
-        the reference (/root/reference/configure_fn.go:12-44, registered
-        register.go:22-27; usage /root/reference/test.sql) — including the
-        `... FROM config_table` form.  A Spark Python UDF runs in executor
-        workers and cannot mutate driver-side engine state, so the call is
-        evaluated here instead: the argument expression is executed as a
-        query, each resulting config string is applied in row order, and
-        the statement returns one NULL per application (the reference
-        function also yields NULL on success).
+        ``SELECT steampipe_configure_<alias>(config) [FROM ...]`` works as
+        in the reference (configure_fn.go:12-44, test.sql).  A Python UDF
+        cannot mutate driver-side engine state, so the statement runs with
+        the call replaced by its argument, each resulting config is applied
+        in row order, and one NULL per application is returned.
         """
-        for alias in self._connections:
-            self._register_views(alias)
-        m = self._CONFIGURE_RE.search(query)
-        if m:
-            return self._configure_sql(query, m)
-        return self.spark.sql(query)
-
-    def _configure_sql(self, query: str, m: re.Match) -> DataFrame:
-        alias = m.group(1).lower()
-        if alias not in self._connections:
-            raise ValueError(f"no connection named {alias!r} is loaded")
-        # extract the balanced-paren argument expression of the call
-        depth, in_str, i = 1, False, m.end()
-        while i < len(query) and depth:
-            ch = query[i]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            raise ValueError("unterminated steampipe_configure_* call")
-        arg_expr = query[m.end() : i - 1]
-        # run the statement with the call replaced by its argument, so
-        # `SELECT steampipe_configure_x(config) FROM tbl` evaluates the
-        # argument with full SQL semantics (any FROM/WHERE/ORDER applies)
-        rewritten = query[: m.start()] + f"({arg_expr})" + query[i:]
-        configs = [row[0] for row in self.spark.sql(rewritten).collect()]
-        for config in configs:
-            if config is None:
-                continue
+        tables = {
+            f"{a}_{t.name}".lower(): (a, t.name)
+            for a, state in self._connections.items()
+            for t in state["schema"].tables
+        }
+        query = self._substitute(query)
+        refs, calls, ctes = [], [], set()
+        _walk(self.spark._jsparkSession.sessionState().sqlParser().parsePlan(query), refs, calls, ctes)
+        edits, views = [], []  # (start, stop, replacement) over query
+        try:
+            for name, start, stop, alias_at in refs:
+                if name.lower() in ctes or name.lower() not in tables:
+                    continue
+                views.append(f"sparktap_{uuid.uuid4().hex}")
+                self.table(*tables[name.lower()]).createTempView(views[-1])
+                edits.append((start, stop, views[-1]))
+                if alias_at is not None:  # keep `<alias>_<table>.col` resolving
+                    edits.append((alias_at + 1, alias_at, f" AS {query[start : stop + 1]}"))
+            if not calls:
+                return self.spark.sql(_rewrite(query, edits))
+            name, start, stop, args = calls[0]
+            alias = name.lower().removeprefix("steampipe_configure_")
+            if alias not in self._connections:
+                raise ValueError(f"no connection named {alias!r} is loaded")
+            if len(args) != 1:
+                raise TypeError(f"{name} takes one argument")
+            edits += [(start, args[0][0] - 1, "("), (args[0][1] + 1, stop, ")")]
+            configs = [row[0] for row in self.spark.sql(_rewrite(query, edits)).collect()]
+        finally:
+            for view in views:
+                self.spark.catalog.dropTempView(view)
+        for config in (c for c in configs if c is not None):
             if isinstance(config, (bytes, bytearray)):
                 # BLOB argument accepted alongside TEXT, decoded to the
                 # config string (configure_fn.go:55-60: SQLITE_BLOB →
@@ -232,8 +221,7 @@ class Engine:
                 raise TypeError("expected a TEXT or BLOB argument")  # configure_fn.go:46-66
             self.configure(alias, config)
         return self.spark.createDataFrame(
-            [(None,) for _ in configs],
-            f"`steampipe_configure_{alias}` string",
+            [(None,) for _ in configs], f"`steampipe_configure_{alias}` string"
         )
 
     def schema(self, alias: str) -> Schema:
@@ -246,19 +234,47 @@ class Engine:
                 out.extend(f"{a}_{t.name}" for t in state["schema"].tables)
         return out
 
-    # -- view management (reference configure_fn.go:131-149, 167-182) ------
 
-    def _register_views(self, alias: str) -> None:
-        state = self._connections[alias]
-        views = []
-        for t in state["schema"].tables:
-            view = f"{alias}_{t.name}"
-            self.table(alias, t.name).createOrReplaceTempView(view)
-            views.append(view)
-        state["views"] = views
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
 
-    def _drop_views(self, alias: str) -> None:
-        state = self._connections[alias]
-        for view in state["views"]:
-            self.spark.catalog.dropTempView(view)
-        state["views"] = []
+
+def _span(node) -> tuple[int, int]:
+    """A parsed node's character span in the statement, stop inclusive."""
+    return node.origin().startIndex().get(), node.origin().stopIndex().get()
+
+
+def _walk(plan, refs: list, calls: list, ctes: set, parent=None) -> None:
+    """Collect a parsed plan's single-part relation references (name,
+    span, where an ``AS`` alias goes if it has none), configure calls
+    (name, span, argument spans) and WITH-defined names."""
+    kind = plan.nodeName()
+    if kind == "UnresolvedRelation" and plan.multipartIdentifier().size() == 1:
+        start, stop = _span(plan)
+        above = parent.nodeName() if parent is not None else "SubqueryAlias"
+        # TABLESAMPLE comes between a table name and its alias
+        alias_at = None if above == "SubqueryAlias" else _span(parent)[1] if above == "Sample" else stop
+        refs.append((plan.multipartIdentifier().head(), start, stop, alias_at))
+    elif kind == "UnresolvedWith":
+        ctes.update(r._1().lower() for r in _seq(plan.cteRelations()))
+    elif kind == "ExplainCommand":
+        _walk(plan.logicalPlan(), refs, calls, ctes)
+    # innerChildren holds subquery plans and WITH definitions
+    for child in _seq(plan.children()) + _seq(plan.innerChildren()):
+        _walk(child, refs, calls, ctes, plan)
+    exprs = _seq(plan.expressions())
+    while exprs:
+        expr = exprs.pop()
+        if expr.nodeName() == "UnresolvedFunction" and expr.nameParts().size() == 1:
+            name = expr.nameParts().head()
+            if name.lower().startswith("steampipe_configure_"):
+                calls.append((name, *_span(expr), [_span(a) for a in _seq(expr.arguments())]))
+        exprs += _seq(expr.children())
+
+
+def _rewrite(query: str, edits: list) -> str:
+    """Apply disjoint (start, stop, replacement) edits; stop == start - 1
+    inserts."""
+    for start, stop, text in sorted(edits, reverse=True):
+        query = query[:start] + text + query[stop + 1 :]
+    return query

@@ -112,14 +112,10 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
 # At cluster scale this step is a NO-OP by construction: a 100 TB input has
 # orders of magnitude more row groups than `_compact_target_k` returns, and
 # the `rows < _COMPACT_MIN_ROWS` / `size > _COMPACT_MAX_BYTES` guards keep
-# it from ever buffering more than a test-scale file in the driver.  Turn
-# off with SPARK_GRAFT_COMPACT=off.
+# it from ever buffering more than a test-scale file in the driver.
 # ---------------------------------------------------------------------------
 
-_COMPACT_ROOT = os.environ.get(
-    "SPARK_GRAFT_COMPACT_DIR",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "compact"),
-)
+_COMPACT_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "compact")
 # Under ~2k rows a single task beats any split's scheduling cost; above it,
 # splitting is cheap insurance — per-row cost varies 1000× across workloads
 # (a projected count vs. a 64-dim interpreted vector fold vs. a Python
@@ -128,10 +124,6 @@ _COMPACT_ROOT = os.environ.get(
 _COMPACT_MIN_ROWS = 2_048
 _COMPACT_MAX_BYTES = 2 << 30  # driver-side rewrite guard; bigger files => real cluster, no-op
 _COMPACT_ROWS_PER_FILE_MIN = 64  # don't shred below this many rows per file
-
-
-def _compact_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_COMPACT", "on").lower() not in ("off", "false", "0")
 
 
 def _compact_target_k(rows: int, cores: int) -> int:
@@ -144,8 +136,6 @@ def compacted_path(spark: SparkSession, path: str) -> str:
     Footer-only probe first (fast): a file already carrying >= K row groups
     splits fine natively and is returned untouched.
     """
-    if not _compact_enabled():
-        return path
     try:
         st = os.stat(path)
         if st.st_size > _COMPACT_MAX_BYTES:

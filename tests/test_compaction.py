@@ -53,12 +53,6 @@ def test_small_table_not_compacted(spark):
     assert compacted_path(spark, src) == src
 
 
-def test_env_switch_disables(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_COMPACT", "off")
-    src = os.path.join(SF_MID, "lineitem.parquet")
-    assert compacted_path(spark, src) == src
-
-
 def test_cache_invalidates_on_mtime_change(spark, scratch):
     src = os.path.join(scratch, "lineitem.parquet")
     shutil.copyfile(os.path.join(SF_MID, "lineitem.parquet"), src)

@@ -51,6 +51,21 @@ class TestConfigureSql:
         with pytest.raises(ValueError, match="no connection"):
             eng.sql("SELECT steampipe_configure_nope('{}')")
 
+    @pytest.mark.parametrize(
+        "query, expected",
+        [
+            ("SELECT 'call steampipe_configure_dyn( later' AS s", "call steampipe_configure_dyn( later"),
+            ("SELECT 'plain' AS s -- steampipe_configure_dyn(\n", "plain"),
+        ],
+    )
+    def test_call_text_in_literal_or_comment_is_plain_sql(self, spark, query, expected):
+        # only a parsed function call configures; the same text inside a
+        # string literal or a comment is ordinary SQL
+        eng = Engine(spark)
+        eng.load(DYN, alias="dyn")
+        assert eng.sql(query).collect()[0].s == expected
+        assert eng.tables("dyn") == []
+
     def test_non_text_argument_raises(self, spark):
         eng = Engine(spark)
         eng.load(DYN, alias="dyn")

@@ -11,12 +11,14 @@ retry replay arithmetic is exact, the throttle bounds the host's
 request rate across Python workers, and a partition_id qual prunes whole
 token chains at the API level."""
 
+import dataclasses
 import json
 import os
 
 import pytest
 
 from steampipe_sqlite_spark.engine import Engine
+from steampipe_sqlite_spark.sources.connector import Schema
 from steampipe_sqlite_spark.sources.pagedhttp import (
     PagedHttpConnector,
     _parse_token,
@@ -589,3 +591,113 @@ class TestGroupedScan:
         _t.sleep(0.5)
         assert len(_log(log)) == settled, "chains kept walking after LIMIT"
         assert settled < chains * pages
+
+
+class WidePagedConnector(PagedHttpConnector):
+    """The paged connector with its ``items`` table repeated 200 times
+    (``items0`` .. ``items199``): a cloud plugin's table count."""
+
+    name = "wide"
+
+    def get_schema(self) -> Schema:
+        (items,) = super().get_schema().tables
+        return Schema(tuple(dataclasses.replace(items, name=f"items{i}") for i in range(200)))
+
+
+class TestPerReferenceBinding:
+    """Engine.sql binds every connector-table reference of a statement to
+    its own scan.  Each case runs the same references once inside one
+    statement and once as separate statements and asserts equal collects:
+    a relation shared by two references would give both one reader's
+    quals."""
+
+    @pytest.fixture()
+    def paged(self, spark, tmp_path):
+        eng = Engine(spark)
+        eng.load(PAGED, alias="p")
+        log = str(tmp_path / "calls.jsonl")
+        cfg = {"n_partitions": 8, "n_pages": 1, "page_size": 20, "cache": False, "call_log": log}
+        eng.configure("p", json.dumps(cfg))
+        return eng, log
+
+    def test_scalar_subqueries_read_their_own_quals(self, paged):
+        eng, _ = paged
+        counts = [
+            "SELECT COUNT(*) FROM p_items WHERE partition_id = 3",
+            "SELECT COUNT(*) FROM p_items WHERE partition_id IN (1, 6)",
+            "SELECT COUNT(*) FROM p_items",
+        ]
+        one = eng.sql("SELECT " + ", ".join(f"({q})" for q in counts)).collect()
+        separate = [eng.sql(q).first()[0] for q in counts]
+        assert list(one[0]) == separate == [20, 40, 160]
+
+    def test_union_all_reads_both_partitions(self, paged):
+        eng, _ = paged
+        parts = [
+            f"SELECT partition_id, COUNT(*) AS n FROM p_items WHERE partition_id = {p} GROUP BY partition_id"
+            for p in (3, 5)
+        ]
+        one = sorted(eng.sql(" UNION ALL ".join(parts)).collect())
+        separate = sorted(r for q in parts for r in eng.sql(q).collect())
+        assert one == separate == [(3, 20), (5, 20)]
+
+    def test_unfiltered_statement_after_a_filtered_one_reads_every_partition(self, paged):
+        eng, log = paged
+        assert eng.sql("SELECT COUNT(*) FROM p_items WHERE partition_id = 3").first()[0] == 20
+        assert [c["partition"] for c in _log(log)] == [3]
+        assert eng.sql("SELECT COUNT(*) FROM p_items").first()[0] == 160
+        assert sorted(c["partition"] for c in _log(log)[1:]) == list(range(8))
+
+    @pytest.mark.parametrize(
+        "query, expected",
+        [
+            # columns qualified by the table's name
+            ("SELECT COUNT(p_items.seq) FROM p_items WHERE p_items.partition_id = 3", 20),
+            # the alias goes after TABLESAMPLE
+            ("SELECT COUNT(*) FROM p_items TABLESAMPLE (100 PERCENT) WHERE partition_id = 3", 20),
+            # a WITH name shadows the connector table
+            ("WITH p_items AS (SELECT 1 AS seq) SELECT COUNT(*) FROM p_items", 1),
+            # spans index the statement after ${var} substitution
+            ("SELECT COUNT(*), '${spark.app.name}' FROM p_items WHERE partition_id = 3", 20),
+        ],
+    )
+    def test_statement_shapes_bind(self, paged, query, expected):
+        eng, _ = paged
+        assert eng.sql(query).first()[0] == expected
+
+    def test_explain_binds_its_statement(self, paged):
+        eng, _ = paged
+        plan = eng.sql("EXPLAIN SELECT COUNT(*) FROM p_items WHERE partition_id = 3").first()[0]
+        assert "Physical Plan" in plan and "Error" not in plan
+
+    def test_subquery_without_required_qual_raises(self, spark):
+        eng = Engine(spark)
+        eng.load("steampipe_sqlite_spark.sources.chaos:ChaosConnector")
+        keyed = "SELECT COUNT(*) FROM chaos_keyed"
+        assert eng.sql(keyed + " WHERE tenant = 't1'").first()[0] == 100
+        with pytest.raises(Exception, match="requires qualifier.*'tenant'"):
+            eng.sql(keyed).collect()
+        with pytest.raises(Exception, match="requires qualifier.*'tenant'"):
+            eng.sql(f"SELECT ({keyed} WHERE tenant = 't1'), ({keyed})").collect()
+
+    def test_binds_only_the_referenced_tables(self, spark, monkeypatch):
+        eng = Engine(spark)
+        cfg = '{"n_partitions": 2, "n_pages": 1, "page_size": 5}'
+        eng.load("tests.test_pagedhttp_connector:WidePagedConnector", config=cfg)
+        before = {t.name for t in spark.catalog.listTables()}
+        assert "wide_items7" not in before
+        bound = []
+        table = eng.table
+        monkeypatch.setattr(eng, "table", lambda *a, **kw: bound.append(a) or table(*a, **kw))
+
+        assert eng.sql("SELECT COUNT(*) FROM wide_items7").first()[0] == 10
+        assert bound == [("wide", "items7")]
+        bound.clear()
+        rows = eng.sql(
+            "SELECT a.seq FROM wide_items0 a JOIN wide_items0 b ON a.seq = b.seq WHERE b.partition_id = 1"
+        ).collect()
+        assert sorted(r.seq for r in rows) == [5, 6, 7, 8, 9]
+        assert bound == [("wide", "items0")] * 2
+        with pytest.raises(Exception, match="nope"):
+            eng.sql("SELECT nope FROM wide_items3")
+        assert {t.name for t in spark.catalog.listTables()} == before

@@ -9,6 +9,9 @@ so the same code scales to a multi-executor cluster:
   re-planning is measurable overhead and there is nothing to coalesce.
 - shuffle.partitions sized to the INPUT DATA (32 MB per partition), not
   the core count — correct at 17 MB and at 100 TB alike.
+- Scan split size left at Spark's default: tables.compacted_path already
+  rewrites a single-row-group fixture into K one-row-group files, so file
+  scans fan out without a split-size override (DEADENDS.md).
 - Arrow enabled for every Python<->JVM hop (Pandas UDFs, createDataFrame,
   Python DataSource batches).
 - Session timezone pinned UTC so timestamp semantics match the DuckDB oracle.
@@ -34,8 +37,7 @@ _BYTES_PER_SHUFFLE_PARTITION = 32 << 20
 # each query into per-shuffle-stage jobs and re-plans between them
 # (measured here: +0.1–0.4 s per query at sf0.1, where every shuffle is
 # <20 MB and there is nothing to coalesce or skew-split). At or above the
-# threshold — any realistic cluster run — AQE is always on. Override with
-# SPARK_GRAFT_AQE=on|off|auto.
+# threshold — any realistic cluster run — AQE is always on.
 _AQE_MIN_INPUT_BYTES = 1 << 30
 
 # Generated classes the JVM keeps compiled (spark.sql.codegen.cache.
@@ -51,7 +53,7 @@ _AQE_MIN_INPUT_BYTES = 1 << 30
 _CODEGEN_CACHE_ENTRIES = 1000
 
 
-def _driver_mem() -> str:
+def _driver_mem(nbytes: int) -> str:
     """Heap sized to the data, like shuffle partitions and AQE.
 
     Measured (BASELINE.md "Round-10: core elasticity measured"): a 16g
@@ -67,7 +69,7 @@ def _driver_mem() -> str:
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
-    return "32g" if _input_bytes() >= _AQE_MIN_INPUT_BYTES else "16g"
+    return "32g" if nbytes >= _AQE_MIN_INPUT_BYTES else "16g"
 
 
 def _input_bytes() -> int:
@@ -104,96 +106,28 @@ def _input_bytes() -> int:
     return total
 
 
-# Datasets below this size are ignored by the split-size policy: a table
-# smaller than one small split can't fan out under ANY setting, its scan is
-# negligible, and letting it vote would drag the whole session to 16m splits
-# (a single-file nation alongside a many-file lineitem reinstating the
-# measured ~8% large-table regression — ADVICE r10).
-_SPLIT_POLICY_MIN_DATASET_BYTES = 4 << 20
-
-
-def _max_partition_bytes(cpus: int) -> str:
-    """Scan split size derived from the input's FILE layout, like every
-    other session knob (shuffle partitions, AQE, heap: data-derived).
-
-    Two measured regimes (tools/file_granularity_probe.py, round 10):
-    single-file sub-GB fixtures MUST split small or the scan+partial-agg
-    stage runs on 3 of 32 cores (tpch_q1 0.72 -> 0.45 s at sf0.1 going
-    128m -> 16m) — but once a dataset is already many files, small
-    splits only add scheduling: on a 60M-row/~2 GB lineitem at 32/512/
-    4096 files the 16m override was ~8% SLOWER than Spark's 128m
-    default at every granularity (72/171/1024 partitions vs 32/32/137),
-    and at 100 TB a blanket 16m would mean ~6M scan tasks per query.
-    Rule: if any dataset LARGE ENOUGH TO MATTER (see
-    _SPLIT_POLICY_MIN_DATASET_BYTES) has fewer part files than cores, it
-    needs the small split to fan out (16m); when every such dataset is
-    already at least cores-wide, Spark's 128m default wins.  Part files
-    are counted recursively (os.walk, mirroring _input_bytes) so
-    hive-partitioned datasets — whose part files nest under key=value
-    subdirs — don't miscount as 1 file (ADVICE r10).  Explicit
-    SPARK_GRAFT_MAX_PARTITION_BYTES always wins."""
-    env = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if env:
-        return env
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    def _size(path: str) -> int:
-        try:
-            return os.path.getsize(path)
-        except OSError:
-            return 0
-
-    min_files = None
-    for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
-        if os.path.isdir(p):
-            n = 0
-            total = 0
-            for root, _dirs, files in os.walk(p):
-                parts = [f for f in files if f.endswith(".parquet")]
-                n += len(parts)
-                total += sum(_size(os.path.join(root, f)) for f in parts)
-            n = max(n, 1)
-        else:
-            n = 1
-            total = _size(p)
-        if total < _SPLIT_POLICY_MIN_DATASET_BYTES:
-            continue
-        min_files = n if min_files is None else min(min_files, n)
-    if min_files is None or min_files < cpus:
-        return "16m"
-    return "128m"
-
-
-def _shuffle_partitions(cpus: int) -> int:
+def _shuffle_partitions(nbytes: int, cpus: int) -> int:
     """Size the initial shuffle partition count to the DATA, not the core
     count: a fixed `cores` setting means 32 near-empty reducer tasks per
     stage at test scale (measured 0.2–0.4 s/query of pure scheduling) and
-    would be far too FEW at 100 TB. Data-derived, it is right at both ends;
-    an explicit SPARK_GRAFT_SHUFFLE_PARTITIONS always wins."""
-    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
-    data = _input_bytes() // _BYTES_PER_SHUFFLE_PARTITION
+    would be far too FEW at 100 TB. Data-derived, it is right at both ends."""
+    data = nbytes // _BYTES_PER_SHUFFLE_PARTITION
     return max(8, min(cpus * 4, data)) if data else max(8, cpus // 4)
 
 
-def _aqe_enabled() -> bool:
-    mode = os.environ.get("SPARK_GRAFT_AQE", "auto").lower()
-    if mode in ("on", "true", "1"):
-        return True
-    if mode in ("off", "false", "0"):
-        return False
-    return _input_bytes() >= _AQE_MIN_INPUT_BYTES
+def _aqe_enabled(nbytes: int) -> bool:
+    return nbytes >= _AQE_MIN_INPUT_BYTES
 
 
 def get_spark(app_name: str = "steampipe_sqlite_spark", cpus: str | int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     n = str(cpus or _DEFAULT_CPUS)
+    nbytes = _input_bytes()
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(_shuffle_partitions(int(n))))
-        .config("spark.sql.adaptive.enabled", str(_aqe_enabled()).lower())
+        .config("spark.sql.shuffle.partitions", str(_shuffle_partitions(nbytes, int(n))))
+        .config("spark.sql.adaptive.enabled", str(_aqe_enabled(nbytes)).lower())
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Keep Spark's default parallelismFirst=TRUE: coalescing toward
         # the 64 MB advisory size was measured 2.5× slower on CPU-heavy
@@ -211,7 +145,7 @@ def get_spark(app_name: str = "steampipe_sqlite_spark", cpus: str | int | None =
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", _driver_mem())
+        .config("spark.driver.memory", _driver_mem(nbytes))
         # Scheduler mode: FIFO default (single-workload batch bed).
         # SPARK_GRAFT_SCHEDULER=fair enables FAIR job scheduling for
         # mixed interactive workloads — measured by
@@ -247,12 +181,6 @@ def get_spark(app_name: str = "steampipe_sqlite_spark", cpus: str | int | None =
         # events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
         # rejects; read as long and convert in tables.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Split size derived from the input's file layout — see
-        # _max_partition_bytes: 16m fans out single-file fixtures,
-        # already-many-file datasets keep Spark's 128m default
-        # (measured ~8% faster there, and 16m would mean millions of
-        # scan tasks at 100 TB).
-        .config("spark.sql.files.maxPartitionBytes", _max_partition_bytes(int(n)))
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()

@@ -7,12 +7,12 @@ plugin SDK parses whichever the plugin schema declares.  Here every
 connector funnels its config through :func:`parse_config`, which accepts:
 
 1. JSON (tried first — cheap and unambiguous);
-2. HCL via the public ``python-hcl2`` package when importable;
-3. a built-in parser for the flat HCL subset that connection configs in
-   practice use: ``key = value`` lines with string/number/bool/list
-   values and ``#``/``//`` comments.  (Nested blocks are out of scope —
-   none of the reference's own examples use them; install python-hcl2
-   for full HCL.)
+2. otherwise, the flat HCL subset that connection configs in practice
+   use, parsed by a built-in parser: ``key = value`` lines with
+   string/number/bool/list values and ``#``/``//`` comments.  Nested
+   blocks are out of scope — none of the reference's own examples use
+   them.  There is one HCL path, so a config string parses the same
+   whichever packages are installed.
 
 The options the engine itself reads (scan cache, retry, throttle) are
 parsed once per connection into a :class:`ConnectionOptions` record, when
@@ -28,12 +28,6 @@ import json
 import re
 from dataclasses import dataclass
 from typing import Any
-
-try:  # public package, optional — container may not ship it
-    import hcl2 as _hcl2  # type: ignore
-except Exception:  # pragma: no cover - absence is the common case here
-    _hcl2 = None
-
 
 class ConfigError(ValueError):
     """Raised when a config string parses as neither JSON nor HCL."""
@@ -142,15 +136,6 @@ def parse_config(config: str | None) -> dict[str, Any]:
         raise ConfigError(f"JSON config must be an object, got {type(parsed).__name__}")
     except json.JSONDecodeError:
         pass
-    if _hcl2 is not None:
-        import io
-
-        try:
-            parsed = _hcl2.load(io.StringIO(config))
-            if isinstance(parsed, dict):
-                return parsed
-        except Exception:
-            pass
     return _parse_hcl_subset(config)
 
 

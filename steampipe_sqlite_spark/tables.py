@@ -230,15 +230,17 @@ def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = A
     Mirrors the reference's per-table module registration
     (/root/reference/configure_fn.go:167-182) — there DDL is synthesized
     into SQLite's catalog; here each table becomes a temp view over a
-    native parquet scan.  Registration is memoized per (session, table
-    set): every query calls this, and re-registering 10 views costs
-    ~0.3 s of driver round-trips per query otherwise.  The memo rides the
-    weak per-session state (NOT id(spark) — a GC'd session's reused id
-    would make a fresh session skip registration and fail resolution).
+    native parquet scan.  Registration is memoized per (session, view
+    name) -> sf_dir: every query calls this, and re-registering 10 views
+    costs ~0.3 s of driver round-trips per query otherwise.  The memo is
+    keyed per view, not per table set: a call with another set may have
+    re-pointed one of this set's views at another sf_dir.  The memo rides
+    the weak per-session state (NOT id(spark) — a GC'd session's reused
+    id would make a fresh session skip registration and fail
+    resolution).
     """
     views = _session_state(spark).setdefault("views", {})
-    if views.get(tables) == sf_dir:
-        return
     for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    views[tables] = sf_dir
+        if views.get(name) != sf_dir:
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+            views[name] = sf_dir

@@ -27,9 +27,9 @@ Prints one JSON line per query.
 Committed reading (round 10, local[32], 100x sf0.1 = 60M lineitem /
 15M orders / 1.5M customer, best-of-2 warm per arm, fingerprints
 row-identical across every completing arm of a query; taken under the
-then-default 16m scan splits — the later data-derived split policy
-picks 128m on this corpus, which shifts absolutes mildly but not the
-degradation property this probe pins):
+then-default 16m scan splits — sessions now keep Spark's 128m
+default, which shifts absolutes mildly but not the degradation
+property this probe pins):
 
   query     heap   wall     spilled (mem-deserialized / disk)
   tpch_q3   32g    3.35 s   0 / 0

@@ -21,21 +21,25 @@ STOPWORDS = {
 CJK_PATTERN = "[\\u4e00-\\u9fff]"
 
 
+# The normalizer's two Java regexes, the one definition both spellings
+# below use: every character outside [a-z0-9], the CJK block and the space
+# becomes a space; then whitespace runs collapse to one space.
+_NORM_PATTERNS = ("[^a-z0-9\\u4e00-\\u9fff ]", "\\s+")
+
+
 def normalize_text(c: Column) -> Column:
     """Lowercase, strip non-alphanumerics, collapse whitespace."""
-    c = F.lower(c)
-    c = F.regexp_replace(c, "[^a-z0-9\\u4e00-\\u9fff ]", " ")
-    c = F.regexp_replace(c, "\\s+", " ")
-    return F.trim(c)
+    drop, runs = _NORM_PATTERNS
+    return F.trim(F.regexp_replace(F.regexp_replace(F.lower(c), drop, " "), runs, " "))
 
 
-# SQL-string twin of normalize_text (same Java regexes; the CJK range is
-# embedded as literal characters, exactly what the Column form compiles to)
-_NORM_SQL = (
-    "trim(regexp_replace(regexp_replace(lower({c}), "
-    f"'[^a-z0-9{chr(0x4E00)}-{chr(0x9FFF)} ]', ' '), "
-    r"'\\s+', ' '))"
-)
+def normalize_sql(c: str) -> str:
+    """SQL text of :func:`normalize_text` over the SQL expression ``c``:
+    the same expression tree, regex literals included, for selectExpr and
+    pure-SQL entries.  Format it once per query; :func:`posexplode_sized`
+    names the one way a column bound to it still re-runs the chain."""
+    drop, runs = (p.replace("\\", "\\\\") for p in _NORM_PATTERNS)
+    return f"trim(regexp_replace(regexp_replace(lower({c}), '{drop}', ' '), '{runs}', ' '))"
 
 
 def tokens(c: Column) -> Column:
@@ -71,6 +75,30 @@ def _let(bound: Column, body) -> Column:
     return F.transform(F.array(bound), body).getItem(0)
 
 
+def posexplode_sized(arr: Column, value: str) -> Column:
+    """Generator: one ``(n, pos, <value>)`` row per element of ``arr``,
+    with ``n = size(arr)`` and ``pos`` the 0-based position, ``arr``
+    evaluated ONCE per input row.
+
+    Use it (or explode the expression itself) instead of exploding a
+    column that a projection below bound to an unmaterialized chain.
+    Spark's InferFiltersFromGenerate adds ``size(x) > 0 AND isnotnull(x)``
+    only when a generator's input is an attribute, and filter pushdown
+    then substitutes the alias below that projection: the whole chain runs
+    3x per row, twice in the Filter and once in the Project.  A generator
+    over an expression infers nothing.  The size rides in each element so
+    that a caller needing it does not reference the chain a second time.
+    """
+    return F.inline(
+        _let(
+            arr,
+            lambda a: F.transform(
+                a, lambda x, i: F.struct(F.size(a).alias("n"), i.alias("pos"), x.alias(value))
+            ),
+        )
+    )
+
+
 def char_shingles(c: Column, k: int = 5) -> Column:
     """Distinct character k-grams of the normalized text (array<string>).
 
@@ -86,16 +114,16 @@ def char_shingles(c: Column, k: int = 5) -> Column:
     return _let(normalize_text(c), shingles)
 
 
-def word_ngrams(c: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (array<string>)."""
+def word_ngrams(c: Column, n: int = 3, distinct: bool = True) -> Column:
+    """Word n-grams in order (array<string>), deduplicated unless
+    ``distinct`` is False."""
     def grams(toks: Column) -> Column:
         count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), count),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
+        g = F.transform(
+            F.sequence(F.lit(1), count),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
         )
+        return F.array_distinct(g) if distinct else g
 
     return _let(tokens(c), grams)
 
@@ -190,13 +218,13 @@ def chunk_sliding(
     # 100k-token document).  Here total exploded rows are n·window/stride
     # (a small constant factor) and the only shuffle is the per-chunk
     # regroup.
-    toks = df.selectExpr(
-        f"{id_col} AS doc_id",
-        f"split({_NORM_SQL.format(c=text_col)}, ' ') AS toks",
+    toks = df.select(
+        F.col(id_col).alias("doc_id"), posexplode_sized(tokens(F.col(text_col)), "token")
     ).selectExpr(
         "doc_id",
-        f"(greatest(size(toks) - {w}, 0) + {st - 1}) div {st} AS last_chunk",
-        "posexplode(toks) AS (pos, token)",
+        f"(greatest(n - {w}, 0) + {st - 1}) div {st} AS last_chunk",
+        "pos",
+        "token",
     )
     routed = toks.selectExpr(
         "doc_id",
@@ -285,7 +313,9 @@ def normalize_text_arrow_udf():
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        arr = pa.Array.from_pandas(s)
+        # typed: a batch of only nulls would otherwise infer the null type,
+        # which utf8_lower has no kernel for
+        arr = pa.Array.from_pandas(s, type=pa.string())
         arr = pc.utf8_lower(arr)
         arr = pc.replace_substring_regex(
             arr, pattern="[^a-z0-9\\x{4e00}-\\x{9fff} ]", replacement=" "

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from steampipe_sqlite_spark.functions.text import _let
+
 # conventional tracking params; anchored, matches bare `ref` and `ref=x`
 TRACKING_PARAM_RE = "^(utm_[^=]*|gclid|fbclid|ref)(=|$)"
 
@@ -58,13 +60,34 @@ def canonical_url(url: Column) -> Column:
     ``regexp_replace`` needs the explicit ``'g'`` flag for the
     slash-collapse; Spark's replaces all occurrences by default).
     """
-    u = F.regexp_replace(F.trim(url), "#.*$", "")
+    return _let(F.regexp_replace(F.trim(url), "#.*$", ""), _split_scheme)
+
+
+def _split_scheme(u: Column) -> Column:
+    """canonical_url's steps over the fragment-stripped url ``u``.  Each
+    step references the one before several times, so _let binds ``u``, the
+    scheme, the rest, the host:port and the www-stripped host once per row
+    instead of nesting each into every later step (the plan held ``u`` 120
+    times)."""
     scheme = F.lower(F.regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.\\-]*)://", 1))
     # '://' is 3 chars; substr is 1-based, so the rest starts at len+4
-    rest = u.substr(F.length(scheme) + F.lit(4), F.length(u))
-    hostport = F.lower(F.regexp_extract(rest, "^([^/?]*)", 1))
+    return _let(
+        scheme,
+        lambda scheme: _let(
+            u.substr(F.length(scheme) + F.lit(4), F.length(u)),
+            lambda rest: _let(
+                F.lower(F.regexp_extract(rest, "^([^/?]*)", 1)),
+                lambda hostport: _let(
+                    F.regexp_replace(hostport, "^www\\.", ""),
+                    lambda host: _assemble(scheme, rest, hostport, host),
+                ),
+            ),
+        ),
+    )
+
+
+def _assemble(scheme: Column, rest: Column, hostport: Column, host: Column) -> Column:
     tail = rest.substr(F.length(hostport) + F.lit(1), F.length(rest))
-    host = F.regexp_replace(hostport, "^www\\.", "")
     host = (
         F.when(scheme == "https", F.regexp_replace(host, ":443$", ""))
         .when(scheme == "http", F.regexp_replace(host, ":80$", ""))

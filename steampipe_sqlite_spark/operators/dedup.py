@@ -22,7 +22,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from steampipe_sqlite_spark.functions.text import fingerprint, word_ngrams
+from steampipe_sqlite_spark.functions.text import (
+    fingerprint,
+    normalize_sql,
+    normalize_text,
+    posexplode_sized,
+    tokens,
+    word_ngrams,
+)
 
 
 def _hash64(c: Column, family: str) -> tuple[Column, int]:
@@ -119,14 +126,13 @@ def ngram_jaccard_pairs(
     cannot emit jaccard-0 pairs (they share no gram row), which such a
     threshold would include.
     """
-    grams = _spread(df).select(
-        *[F.col(c) for c in block_cols],
-        F.col(id_col).alias("id"),
-        word_ngrams(F.col(text_col), n).alias("grams"),
-    )
+    grams = word_ngrams(F.col(text_col), n)
     if threshold <= 0:
-        a = grams.alias("a")
-        b = grams.alias("b")
+        pairs = _spread(df).select(
+            *[F.col(c) for c in block_cols], F.col(id_col).alias("id"), grams.alias("grams")
+        )
+        a = pairs.alias("a")
+        b = pairs.alias("b")
         cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
         cond.append(F.col("a.id") < F.col("b.id"))
         inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
@@ -142,14 +148,14 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
         )
     # one materialization of the (block, id, gram, n) stream feeds both
-    # join sides — the ppjoin/kmv lesson: never recompute the tokenize
-    # pipeline per plan reference
-    toks = grams.select(
+    # join sides, and the tokenize pipeline runs once per document inside
+    # it: the grams expression is exploded with its size bound
+    # (posexplode_sized), never read back from a named column
+    toks = _spread(df).select(
         *[F.col(c) for c in block_cols],
-        "id",
-        F.size("grams").alias("n"),
-        F.explode("grams").alias("g"),
-    ).persist()
+        F.col(id_col).alias("id"),
+        posexplode_sized(grams, "g"),
+    ).drop("pos").persist()
     a = toks.alias("a")
     b = toks.alias("b")
     cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
@@ -198,8 +204,6 @@ def minhash_signatures(
     aggregation folds the mins map-side, so the shuffle carries one
     64-long row per document — linear and skew-free at any scale.
     """
-    from steampipe_sqlite_spark.functions.text import normalize_text
-
     # normalize once per doc (materialized below the Generate so the
     # per-shingle substr reads a column, not a re-evaluated regexp), then
     # explode positions; duplicates are kept — min over a multiset equals
@@ -248,8 +252,6 @@ def minhash_signatures_oph(
     hash aggregate whose partials fold map-side (65 longs per doc per
     map partition cross the wire).
     """
-    from steampipe_sqlite_spark.functions.text import normalize_text
-
     assert num_hashes & (num_hashes - 1) == 0, "num_hashes must be a power of 2"
 
     normed = _spread(df).select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("norm"))
@@ -386,8 +388,6 @@ def simhash_fingerprints(
     py4j round trips cost ~0.9 s of per-query construction time (A/B at
     sf0.1: 1.49 s vs 0.60 s for this stage, identical results).
     """
-    from steampipe_sqlite_spark.functions.text import tokens
-
     h, width = _hash64(F.col("t"), hash_family)
     bits = width if bits is None else bits
     assert bits <= width, f"{bits}-bit fp needs a ≥{bits}-bit hash"
@@ -553,9 +553,7 @@ def cdc_chunk_fingerprints(
     DuckDB, so chunking is oracle-checkable.  Expected chunk length ≈
     ``divisor`` grams.
     """
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
-    norm = _NORM_SQL.format(c=text_col)
+    norm = normalize_sql(text_col)
     # persist the normalized corpus ONCE (optimization r15): norm_df is
     # referenced twice — the gram/breakpoint pipeline and the final
     # chunk-substring join — and unpersisted each reference re-ran both
@@ -629,9 +627,7 @@ def duplicated_span_stats(
     The md5-60-bit gram hash reproduces bit-for-bit in DuckDB, so span
     boundaries are oracle-checkable end to end.
     """
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
-    norm = _NORM_SQL.format(c=text_col)
+    norm = normalize_sql(text_col)
     # The normalized corpus is referenced THREE times by this plan (both
     # gram pipelines below + the per-doc lengths join at the end), and the
     # regex normalize chain dominated the recompute (measured r15: 0.33 s
@@ -737,11 +733,9 @@ def ppjoin_pairs(
     partition at runtime.  Pairs that survive both are genuinely similar
     pairs — output, not waste.
     """
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     t = int(threshold_pct)
     k = int(shingle)
-    norm = _NORM_SQL.format(c=text_col)
+    norm = normalize_sql(text_col)
     # split once into a named column FIRST: a `split(...)` referenced
     # inside a transform lambda is re-evaluated per element (no CSE into
     # lambdas — measured 14 s instead of ~2 s for the sf0.1 token scan);
@@ -770,11 +764,9 @@ def ppjoin_pairs(
     arrs = words.selectExpr("id", f"{elems} AS toks").selectExpr(
         "id", "toks", "CAST(size(toks) AS BIGINT) AS n"
     ).persist()
-    # exploding the PERSISTED named column is safe here: the
-    # InferFiltersFromGenerate trap (a pushed `size(...) > 0` filter
-    # re-evaluating the whole shingle pipeline) bites when the array is
-    # an unmaterialized expression chain; against the cache it is one
-    # cheap array read.
+    # exploding a named column is safe only because it is PERSISTED: the
+    # filter Spark infers for it reads the cache, not the shingle chain
+    # (the generator rule at functions/text.posexplode_sized).
     toks = arrs.selectExpr("id", "n", "explode(toks) AS tok")
     # global rarity order: (df, tok) is a total order, so every document
     # ranks its tokens identically — the prefix-filter guarantee needs a

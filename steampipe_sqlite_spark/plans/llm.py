@@ -13,6 +13,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from steampipe_sqlite_spark.functions.text import (
+    STOPWORDS,
+    bpe_ish_token_count,
+    chunk_sliding,
+    fingerprint,
+    lang_id,
+    nfc_normalize_udf,
+    normalize_sql,
+    normalize_text,
+    normalize_text_arrow_udf,
+    quality_score,
+    token_count,
+    tokens,
+    word_ngrams,
+)
 from steampipe_sqlite_spark.plans.registry import presentation_sort, query, sql_query
 from steampipe_sqlite_spark.plans.relational import _ppm_div
 from steampipe_sqlite_spark.tables import load_table, register_views
@@ -42,8 +57,6 @@ ORDER BY doc_id
 def text_token_count(spark, sf_dir):
     """Token counting: whitespace tokens + BPE-ish regex tokens
     (functions/text.py) — pure JVM regexp expressions."""
-    from steampipe_sqlite_spark.functions.text import bpe_ish_token_count, token_count
-
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -70,22 +83,18 @@ ORDER BY doc_id
 def text_quality_score(spark, sf_dir):
     """Heuristic quality scoring (length band + mean word length +
     alphabetic ratio)."""
-    from steampipe_sqlite_spark.functions.text import quality_score
-
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", quality_score(F.col("text")).alias("quality")
     ).orderBy("doc_id")
 
 
-@query(
-    "text_decontaminate",
-    oracle=f"""
+_DECONTAMINATE_ORACLE = f"""
 WITH t AS (
   SELECT doc_id,
          list_distinct([array_to_string(list_slice(toks, i, i+7), ' ')
            FOR i IN range(1, greatest(len(toks)-7, 1)+1)]) AS grams
-  FROM (SELECT doc_id, {{toks}} AS toks FROM documents)
+  FROM (SELECT doc_id, {_DD_TOKS} AS toks FROM documents)
 ),
 bench AS (SELECT DISTINCT UNNEST(grams) AS g FROM t WHERE doc_id < 20),
 corpus AS (SELECT doc_id, UNNEST(grams) AS g FROM t WHERE doc_id >= 20),
@@ -100,27 +109,22 @@ SELECT t.doc_id,
 FROM t LEFT JOIN hits h ON t.doc_id = h.doc_id
 WHERE t.doc_id >= 20
 ORDER BY t.doc_id
-""".format(toks=_DD_TOKS),
-)
-def text_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (GPT-3 appendix-C style, 8-gram scale-down
-    for the short synthetic docs): count each corpus document's distinct
-    word-8-grams that also occur in the benchmark set (doc_id < 20 stands
-    in for an eval suite).  The benchmark gram set is tiny → broadcast; the
-    corpus side is map + broadcast-semi-join + one aggregation shuffle —
-    no all-pairs anything, the shape a 100 TB decontamination pass needs."""
-    from steampipe_sqlite_spark.functions.text import word_ngrams
+"""
 
+
+def _decontaminate(spark, sf_dir, screen=None):
+    """Per corpus document (doc_id >= 20), its distinct word-8-grams that
+    also occur in the benchmark set (doc_id < 20 stands in for an eval
+    suite), optionally pre-screened by ``screen(grams, bench)``.  Each
+    side explodes the grams EXPRESSION, so the chain runs once per
+    document (the generator rule at functions/text.posexplode_sized)."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", word_ngrams(F.col("text"), 8).alias("grams"))
-    bench = (
-        grams.filter(F.col("doc_id") < 20)
-        .select(F.explode("grams").alias("g"))
-        .distinct()
-    )
-    corpus = grams.filter(F.col("doc_id") >= 20)
+    g = F.explode(word_ngrams(F.col("text"), 8)).alias("g")
+    bench = docs.filter(F.col("doc_id") < 20).select(g).distinct()
+    corpus = docs.filter(F.col("doc_id") >= 20)
+    grams = corpus.select("doc_id", g)
     hits = (
-        corpus.select("doc_id", F.explode("grams").alias("g"))
+        (screen(grams, bench) if screen else grams)
         .join(F.broadcast(bench), "g")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
@@ -135,6 +139,16 @@ def text_decontaminate(spark, sf_dir):
         )
         .orderBy("doc_id")
     )
+
+
+@query("text_decontaminate", oracle=_DECONTAMINATE_ORACLE)
+def text_decontaminate(spark, sf_dir):
+    """Benchmark decontamination (GPT-3 appendix-C style, 8-gram scale-down
+    for the short synthetic docs).  The benchmark gram set is tiny →
+    broadcast; the corpus side is map + broadcast-semi-join + one
+    aggregation shuffle — no all-pairs anything, the shape a 100 TB
+    decontamination pass needs."""
+    return _decontaminate(spark, sf_dir)
 
 
 @query(
@@ -167,25 +181,10 @@ def text_repetition_flags(spark, sf_dir):
     per-rule pass flags.  Shape: one explode + two keyed aggregations on
     (doc, gram) then (doc) — linear, the gram shuffle carries one scalar
     count per distinct gram."""
-    from steampipe_sqlite_spark.functions.text import normalize_text
-
-    from steampipe_sqlite_spark.functions.text import _let
-
     docs = load_table(spark, sf_dir, "documents")
-    # bind the token split once per row (optimization r14): a split chain
-    # referenced inside the transform lambda is re-evaluated per element
-    # — O(tokens²) per document (see functions/text.py:_let)
-    grams = _let(
-        F.split(normalize_text(F.col("text")), " "),
-        lambda toks: F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-        ),
-    )
-    sents = F.split(F.col("text"), r"\. ")
-    base = docs.select("doc_id", grams.alias("grams"), sents.alias("sents"))
+    base = docs.select("doc_id", F.split(F.col("text"), r"\. ").alias("sents"))
     top = (
-        base.select("doc_id", F.explode("grams").alias("g"))
+        docs.select("doc_id", F.explode(word_ngrams(F.col("text"), 2, distinct=False)).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("doc_id")
@@ -217,29 +216,6 @@ def text_repetition_flags(spark, sf_dir):
     )
 
 
-_DECONTAMINATE_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id,
-         list_distinct([array_to_string(list_slice(toks, i, i+7), ' ')
-           FOR i IN range(1, greatest(len(toks)-7, 1)+1)]) AS grams
-  FROM (SELECT doc_id, {_DD_TOKS} AS toks FROM documents)
-),
-bench AS (SELECT DISTINCT UNNEST(grams) AS g FROM t WHERE doc_id < 20),
-corpus AS (SELECT doc_id, UNNEST(grams) AS g FROM t WHERE doc_id >= 20),
-hits AS (
-  SELECT c.doc_id, COUNT(*) AS n_overlap
-  FROM corpus c JOIN bench b ON c.g = b.g
-  GROUP BY c.doc_id
-)
-SELECT t.doc_id,
-       COALESCE(h.n_overlap, 0) AS n_overlap,
-       (COALESCE(h.n_overlap, 0) > 0) AS contaminated
-FROM t LEFT JOIN hits h ON t.doc_id = h.doc_id
-WHERE t.doc_id >= 20
-ORDER BY t.doc_id
-"""
-
-
 @query("text_decontaminate_bloom", oracle=_DECONTAMINATE_ORACLE)
 def text_decontaminate_bloom(spark, sf_dir):
     """Decontamination with a Bloom pre-filter: the benchmark 8-gram set
@@ -255,36 +231,12 @@ def text_decontaminate_bloom(spark, sf_dir):
         bloom_bitmap,
         bloom_might_contain,
     )
-    from steampipe_sqlite_spark.functions.text import word_ngrams
 
-    docs = load_table(spark, sf_dir, "documents")
-    grams = docs.select("doc_id", word_ngrams(F.col("text"), 8).alias("grams"))
-    bench = (
-        grams.filter(F.col("doc_id") < 20)
-        .select(F.explode("grams").alias("g"))
-        .distinct()
-    )
-    bitmap = bloom_bitmap(bench, "g", m_bits=8192, k=3)
-    corpus = grams.filter(F.col("doc_id") >= 20)
-    candidates = (
-        corpus.select("doc_id", F.explode("grams").alias("g"))
-        .filter(bloom_might_contain(bitmap, "g", m_bits=8192, k=3))
-    )
-    hits = (
-        candidates.join(F.broadcast(bench), "g")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return (
-        corpus.select("doc_id")
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)) > 0).alias("contaminated"),
-        )
-        .orderBy("doc_id")
-    )
+    def screen(grams, bench):
+        bitmap = bloom_bitmap(bench, "g", m_bits=8192, k=3)
+        return grams.filter(bloom_might_contain(bitmap, "g", m_bits=8192, k=3))
+
+    return _decontaminate(spark, sf_dir, screen)
 
 
 @query(
@@ -335,9 +287,12 @@ def text_boilerplate_strip(spark, sf_dir):
             " ELSE text END"
         ).alias("text2"),
     )
-    sp = seeded.select("doc_id", F.split("text2", r"\. ").alias("sents"))
+    sents = F.split("text2", r"\. ")
+    sp = seeded.select("doc_id", sents.alias("sents"))
     total = sp.select(F.count(F.lit(1)).alias("n_docs"))
-    s = sp.select("doc_id", F.posexplode("sents").alias("pos", "sent"))
+    # the split expression itself, not the sents column: see
+    # functions/text.posexplode_sized
+    s = seeded.select("doc_id", F.posexplode(sents).alias("pos", "sent"))
     freq = s.groupBy("sent").agg(F.countDistinct("doc_id").alias("nd"))
     boil = (
         freq.crossJoin(F.broadcast(total))
@@ -468,8 +423,6 @@ def text_gopher_flags(spark, sf_dir):
     bound aliases are expensive and multiply-referenced.  Measured
     1.04 → 0.79 s med interleaved (5/5 pairs) at sf0.1; bit-identical
     output asserted."""
-    from steampipe_sqlite_spark.functions.text import normalize_text
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id", "text",
@@ -512,8 +465,6 @@ def _dd_stop_hits(lang_words: list[str]) -> str:
 )
 def text_lang_id(spark, sf_dir):
     """Stopword/n-gram language ID vs the labeled lang column."""
-    from steampipe_sqlite_spark.functions.text import lang_id
-
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", "lang", lang_id(F.col("text")).alias("predicted"))
@@ -523,8 +474,6 @@ def text_lang_id(spark, sf_dir):
 
 
 def _lang_oracle() -> str:
-    from steampipe_sqlite_spark.functions.text import STOPWORDS
-
     en, de, fr, es = (_dd_stop_hits(STOPWORDS[lang]) for lang in ("en", "de", "fr", "es"))
     return f"""
 WITH scored AS (
@@ -566,8 +515,6 @@ ORDER BY doc_id
 )
 def text_fingerprint(spark, sf_dir):
     """Deterministic md5 fingerprint of normalized text."""
-    from steampipe_sqlite_spark.functions.text import fingerprint
-
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", fingerprint(F.col("text")).alias("fp")).orderBy("doc_id")
 
@@ -705,8 +652,6 @@ def text_nfc_dedup_q(spark, sf_dir):
     ASCII bulk through JVM-side untouched — on a real crawl corpus the
     Python stage sees the small non-ASCII fraction, not 100 TB.  Oracle:
     DuckDB's native nfc_normalize over the identical synthesis."""
-    from steampipe_sqlite_spark.functions.text import nfc_normalize_udf
-
     d = F.col("doc_id")
     raw = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1680,7 +1625,6 @@ def text_tfidf_top_terms(spark, sf_dir):
     per doc-term, df per term) + a broadcast-size df join; the doc-count
     scalar folds in as a literal cross join.  All linear, skew-free (term
     df is bounded by doc count), and entirely JVM-side."""
-    from steampipe_sqlite_spark.functions.text import tokens
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1747,7 +1691,6 @@ def sketch_topk_tokens(spark, sf_dir):
     head distribution does; the truncation mechanics are pinned separately
     on skewed synthetic data in tests/test_llm_ops.py."""
     from steampipe_sqlite_spark.functions.sketches import frequent_terms
-    from steampipe_sqlite_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens(F.col("text"))).alias("term"))
@@ -1876,8 +1819,6 @@ def curation_pipeline(spark, sf_dir):
     Every stage is an operator from this engine's toolkit composed
     declaratively — one scan, two hash shuffles (fingerprint, lang), no
     Python.  The shape a 100 TB pretraining-data pass actually uses."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     # SQL-string twins of text.token_count/fingerprint/quality_score —
     # identical expression trees (same casts, same addition order, so the
     # doubles are bit-equal), composed as staged selectExpr calls instead
@@ -1904,7 +1845,7 @@ def curation_pipeline(spark, sf_dir):
     #    exchange — at 100 TB the fp shuffle moves ≤1 row per (fp,
     #    partition) instead of every duplicate.  Measured 0.85 → 0.62 s
     #    at sf0.1.
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     docs = load_table(spark, sf_dir, "documents")
     s1 = docs.where("lang IN ('en', 'de', 'fr', 'es')").selectExpr(
         "doc_id",
@@ -2049,8 +1990,6 @@ def dedup_incremental_q(spark, sf_dir):
     in) — the daily-pipeline shape where history is a bucketed fingerprint
     table and the join is fingerprint-colocated, never a rescan of the
     historical corpus.  Same md5(normalized) fingerprint as dedup_exact."""
-    from steampipe_sqlite_spark.functions.text import fingerprint
-
     docs = load_table(spark, sf_dir, "documents")
     hist = (
         docs.filter(F.col("doc_id") < 250)
@@ -2237,8 +2176,6 @@ def text_chunk_sliding_q(spark, sf_dir):
     """Sliding-window token chunking (32-token windows, stride 24 — 8-token
     overlap): the standard pretraining/RAG chunker as a map-only Catalyst
     pipeline; the oracle replays the identical tokenize→slice arithmetic."""
-    from steampipe_sqlite_spark.functions.text import chunk_sliding
-
     docs = load_table(spark, sf_dir, "documents")
     return chunk_sliding(docs, "text", "doc_id", window=32, stride=24).orderBy(
         "doc_id", "chunk_idx"
@@ -2312,8 +2249,6 @@ def text_bigram_surprisal(spark, sf_dir):
     model join back onto the bigrams.  At 100 TB the (w1,w2) count table
     is the 'model'; it would be written once and broadcast/bucket-joined."""
     from pyspark.sql import Window  # noqa: F401
-
-    from steampipe_sqlite_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens(F.col("text")).alias("ts"))
@@ -2584,12 +2519,10 @@ def search_bm25_topk_q(spark, sf_dir):
     stats row is metadata-sized whatever the corpus; the top-k is
     TakeOrderedAndProject (per-partition heap + driver merge of 20-row
     heads — no global sort)."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     docs = load_table(spark, sf_dir, "documents")
     t = docs.selectExpr(
         "doc_id",
-        f"split({_NORM_SQL.format(c='text')}, ' ') AS toks",
+        f"split({normalize_sql('text')}, ' ') AS toks",
     ).selectExpr(
         "doc_id",
         "size(toks) AS dl",
@@ -2687,12 +2620,10 @@ def search_inverted_index_q(spark, sf_dir):
     reducer ever sees a stopword's FULL corpus-wide posting list; df/cf
     aggregate with map-side partial fold.  Both aggregates are term-keyed,
     so the join reuses the shuffle partitioning."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     docs = load_table(spark, sf_dir, "documents")
     tf = (
         docs.selectExpr(
-            "doc_id", f"explode(split({_NORM_SQL.format(c='text')}, ' ')) AS term"
+            "doc_id", f"explode(split({normalize_sql('text')}, ' ')) AS term"
         )
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
@@ -2794,7 +2725,6 @@ def curation_keep_list_q(spark, sf_dir):
     tie-break).  Scale shape: components via hash-min label propagation,
     quality map-side, one component-keyed window for the argmax — the
     emitted keep-list is what a 100 TB curation pass feeds the writer."""
-    from steampipe_sqlite_spark.functions.text import quality_score
     from steampipe_sqlite_spark.operators.dedup import ngram_jaccard_pairs
     from steampipe_sqlite_spark.operators.graph import connected_components
 
@@ -2994,18 +2924,11 @@ def graph_pagerank_q(spark, sf_dir):
 # --- Round-5 additions: dictionary tagging, containment dedup, cross-source
 # contamination, mixing schedule, hybrid retrieval ---------------------------
 
-# Spark-dialect twin of _DD_NORM (Java regex spelling; same normalization as
-# functions/text._NORM_SQL, inlined here for pure-SQL corpus entries).
-_SP_NORM = (
-    r"trim(regexp_replace(regexp_replace(lower(text),"
-    r"'[^a-z0-9\u4e00-\u9fff ]', ' '), '\\s+', ' '))"
-)
-
 sql_query(
     "text_keyword_tag",
     f"""
 WITH toks AS (
-  SELECT doc_id, explode(split({_SP_NORM}, ' ')) AS tok FROM documents
+  SELECT doc_id, explode(split({normalize_sql('text')}, ' ')) AS tok FROM documents
 ),
 kw AS (SELECT keyword FROM VALUES ('join'), ('hash'), ('vector'), ('data'), ('scan') AS t(keyword))
 SELECT doc_id, keyword, CAST(COUNT(*) AS BIGINT) AS n_hits
@@ -3034,7 +2957,7 @@ ORDER BY doc_id, keyword
 sql_query(
     "dedup_containment_ngram",
     f"""
-WITH t AS (SELECT doc_id, split({_SP_NORM}, ' ') AS toks FROM documents),
+WITH t AS (SELECT doc_id, split({normalize_sql('text')}, ' ') AS toks FROM documents),
 g AS (
   SELECT doc_id, explode(array_distinct(transform(
            sequence(1, greatest(size(toks) - 4, 1)),
@@ -3093,7 +3016,7 @@ ORDER BY id_a, id_b
 sql_query(
     "contamination_source_matrix",
     f"""
-WITH t AS (SELECT source, split({_SP_NORM}, ' ') AS toks FROM documents),
+WITH t AS (SELECT source, split({normalize_sql('text')}, ' ') AS toks FROM documents),
 g AS (
   SELECT DISTINCT source, gram FROM (
     SELECT source, explode(transform(
@@ -3137,7 +3060,7 @@ sql_query(
 WITH counts AS (
   SELECT source,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(size(split({_SP_NORM}, ' '))) AS BIGINT) AS n_tokens
+         CAST(SUM(size(split({normalize_sql('text')}, ' '))) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
 ),
 w AS (
@@ -3243,11 +3166,10 @@ def search_hybrid_rrf_q(spark, sf_dir):
     semantics, and it keeps every unbounded stage rank-free.  The fused
     doubles are sums of exact divisions of small ints — bit-identical
     cross-engine; ties (rank swaps) break on doc_id."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
     from steampipe_sqlite_spark.functions.vectors import dot_sql
 
     register_views(spark, sf_dir, ("documents", "embeddings"))
-    toks = f"split({_NORM_SQL.format(c='text')}, ' ')"
+    toks = f"split({normalize_sql('text')}, ' ')"
     tf_cols = ", ".join(
         f"size(filter(toks, x -> x = '{w}')) AS tf{i+1}"
         for i, w in enumerate(_BM25_TERMS)
@@ -3637,7 +3559,7 @@ sql_query(
     "text_oov_rate",
     f"""
 WITH toks AS (
-  SELECT doc_id, explode(split({_SP_NORM}, ' ')) AS tok FROM documents
+  SELECT doc_id, explode(split({normalize_sql('text')}, ' ')) AS tok FROM documents
 ),
 vocab AS (
   SELECT tok FROM (
@@ -3838,7 +3760,7 @@ sql_query(
     f"""
 WITH counts AS (
   SELECT lang, tok, CAST(COUNT(*) AS BIGINT) AS c
-  FROM (SELECT lang, explode(split({_SP_NORM}, ' ')) AS tok FROM documents) t
+  FROM (SELECT lang, explode(split({normalize_sql('text')}, ' ')) AS tok FROM documents) t
   GROUP BY lang, tok
 )
 SELECT lang, tok, c, rnk FROM (
@@ -3924,7 +3846,6 @@ def sketch_cms_token_counts_q(spark, sf_dir):
     batch-fold property, pinned by test); the oracle replays build,
     probe, and min-over-rows estimate."""
     from steampipe_sqlite_spark.functions.sketches import cms_build, cms_estimate
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
 
     docs = load_table(spark, sf_dir, "documents")
     # normalize the corpus ONCE (optimization r15): the token stream is
@@ -3935,7 +3856,7 @@ def sketch_cms_token_counts_q(spark, sf_dir):
     # ppjoin's r14 cache); the exploded token rows stay uncached, so each
     # branch re-splits from the cached string (cheap) instead of
     # re-regexing (the wall).  plans/r15/sketch_cms_token_counts_*.txt.
-    normed = docs.selectExpr(f"{_NORM_SQL.format(c='text')} AS norm").persist()
+    normed = docs.selectExpr(f"{normalize_sql('text')} AS norm").persist()
     toks = normed.selectExpr("explode(split(norm, ' ')) AS tok")
     sketch = cms_build(toks, "tok", width=64, depth=4)
     probes = spark.createDataFrame(
@@ -4038,10 +3959,9 @@ def sketch_kmv_source_jaccard_q(spark, sf_dir):
         kmv_pairwise_jaccard,
         kmv_signatures,
     )
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
 
     docs = load_table(spark, sf_dir, "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     bigrams = docs.selectExpr("source", f"split({norm}, ' ') AS w").selectExpr(
         "source",
         "explode(transform(sequence(1, greatest(size(w) - 1, 1)),"
@@ -4094,10 +4014,8 @@ def bpe_merge_step_q(spark, sf_dir):
     counts aggregated map-side first — corpus tokens are touched exactly
     once, and the expensive explode runs over types, not tokens.
     All-integer counts ⇒ bit-exact in any engine."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     docs = load_table(spark, sf_dir, "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     wc = (
         docs.selectExpr(f"explode(split({norm}, ' ')) AS tok")
         .where("length(tok) >= 2")
@@ -4174,10 +4092,8 @@ def text_bpe_apply_fidelity(spark, sf_dir):
 
     Precondition (documented, not guarded): the corpus yields ≥8 distinct
     character pairs — true of every documents fixture ≥ sf0.001."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     docs = load_table(spark, sf_dir, "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     wc = (
         docs.selectExpr(f"explode(split({norm}, ' ')) AS tok")
         .where("length(tok) >= 2")
@@ -4259,11 +4175,10 @@ def vocab_growth_curve_q(spark, sf_dir):
     or per-histogram-bucket cumsum queries whose window input is
     domain-bounded), so the empty-OVER window form would single-
     partition it.  All integers."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
     from steampipe_sqlite_spark.operators.scale import distributed_running_sum
 
     docs = load_table(spark, sf_dir, "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     first_seen = (
         docs.selectExpr("doc_id", f"split({norm}, ' ') AS toks")
         .selectExpr(
@@ -4319,10 +4234,8 @@ def text_novelty_ordered_q(spark, sf_dir):
     Scale shape: distinct grams per doc (map-side), ONE shuffle on gram
     for the min-doc window, one aggregate back on doc_id — never a
     doc×doc join; integer counts only (callers derive the fraction)."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     docs = load_table(spark, sf_dir, "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     grams = (
         docs.selectExpr("doc_id", f"split({norm}, ' ') AS toks")
         .selectExpr(
@@ -4913,8 +4826,6 @@ def token_pair_lift(spark, sf_dir):
     self-join is gated to that 50-token broadcast BEFORE exploding, so
     candidates are C(50,2)-bounded per doc, never corpus²; the closing
     rank window runs over <=1225 already-limited pair rows."""
-    from steampipe_sqlite_spark.functions.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
@@ -5104,7 +5015,7 @@ ORDER BY source
 # into the same pass as vocab/token totals.
 sql_query(
     "text_hapax_ratio",
-    _HAPAX_BODY.format(toks=_HAPAX_SP_TOKS.format(norm=_SP_NORM), op="div"),
+    _HAPAX_BODY.format(toks=_HAPAX_SP_TOKS.format(norm=normalize_sql("text")), op="div"),
     oracle=_HAPAX_BODY.format(toks=_HAPAX_DD_TOKS.format(norm=_DD_NORM), op="//"),
     present_sort=["source"],
 )
@@ -5347,8 +5258,6 @@ ORDER BY doc_a, doc_b
     oracle=_FUZZY_BODY.format(norm=_DD_NORM, bytelen="strlen"),
 )
 def join_fuzzy_blocked_prefix_q(spark, sf_dir):
-    from steampipe_sqlite_spark.functions.text import normalize_text_arrow_udf
-
     docs = load_table(spark, sf_dir, "documents")
     norm = normalize_text_arrow_udf()
     pa_ = (
@@ -5411,7 +5320,7 @@ ORDER BY i.lang_a, i.lang_b
 # law), the |langs|-row size table joins onto a |pairs|-row result.
 sql_query(
     "text_vocab_jaccard_langs",
-    _VOCAB_JAC_BODY.format(toks=_VOCAB_JAC_SP_TOKS.format(norm=_SP_NORM), op="div"),
+    _VOCAB_JAC_BODY.format(toks=_VOCAB_JAC_SP_TOKS.format(norm=normalize_sql("text")), op="div"),
     oracle=_VOCAB_JAC_BODY.format(toks=_VOCAB_JAC_DD_TOKS.format(norm=_DD_NORM), op="//"),
     present_sort=["lang_a", "lang_b"],
 )
@@ -5482,10 +5391,8 @@ def dedup_soft_weights_q(spark, sf_dir):
     fingerprint — equal keys co-locate, every partition independent), no
     join back, no global window.  weight_ppm is exact integer division so
     the hash-compare never sees engine float formatting."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
-
     docs = load_table(spark, sf_dir, "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     sized = docs.selectExpr("doc_id", f"md5({norm}) AS fp").selectExpr(
         "doc_id",
         "CAST(count(1) OVER (PARTITION BY fp) AS BIGINT) AS cluster_size",
@@ -5983,7 +5890,6 @@ def text_zipf_band_counts(spark, sf_dir):
     the global rank runs through operators/scale.distributed_row_number
     over the per-token AGGREGATE — never an empty-OVER window over an
     unbounded input; the band rollup is one ≤64-group hash aggregate."""
-    from steampipe_sqlite_spark.functions.text import tokens
     from steampipe_sqlite_spark.operators.scale import distributed_row_number
 
     docs = load_table(spark, sf_dir, "documents")

@@ -974,12 +974,12 @@ def test_ppjoin_prefix_shrinks_candidates_losslessly(spark):
     """The prefix filter's two claims: (a) candidate pairs are a strict
     subset of the all-shared-tokens candidates, (b) nothing above the
     threshold is lost (the oracle also proves (b) cross-engine)."""
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
+    from steampipe_sqlite_spark.functions.text import normalize_sql
     from steampipe_sqlite_spark.operators.dedup import ppjoin_pairs
     from steampipe_sqlite_spark.tables import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     elems = (
         f"array_distinct(transform(sequence(1, greatest(size(split({norm}, ' ')) - 1, 1)),"
         f" i -> array_join(slice(split({norm}, ' '), i, 2), ' ')))"
@@ -1083,12 +1083,12 @@ def test_ppjoin_hot_token_candidates_bounded(spark):
 class TestCountMinSketch:
     def test_never_undercounts_any_token(self, spark):
         from steampipe_sqlite_spark.functions.sketches import cms_build, cms_estimate
-        from steampipe_sqlite_spark.functions.text import _NORM_SQL
+        from steampipe_sqlite_spark.functions.text import normalize_sql
         from steampipe_sqlite_spark.tables import load_table
 
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")
         toks = docs.selectExpr(
-            f"explode(split({_NORM_SQL.format(c='text')}, ' ')) AS tok"
+            f"explode(split({normalize_sql('text')}, ' ')) AS tok"
         )
         sketch = cms_build(toks, "tok")
         exact = toks.groupBy("tok").count()
@@ -1122,12 +1122,12 @@ class TestCountMinSketch:
         """The mergeability contract: sketch(A) + sketch(B) folded per
         cell equals sketch(A ∪ B) exactly — counts are linear."""
         from steampipe_sqlite_spark.functions.sketches import cms_build, cms_merge
-        from steampipe_sqlite_spark.functions.text import _NORM_SQL
+        from steampipe_sqlite_spark.functions.text import normalize_sql
         from steampipe_sqlite_spark.tables import load_table
 
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")
         toks = lambda d: d.selectExpr(  # noqa: E731
-            f"explode(split({_NORM_SQL.format(c='text')}, ' ')) AS tok"
+            f"explode(split({normalize_sql('text')}, ' ')) AS tok"
         )
         whole = cms_build(toks(docs), "tok")
         merged = cms_merge(
@@ -1145,11 +1145,11 @@ def test_kmv_jaccard_accuracy_and_merge_property(spark):
         kmv_pairwise_jaccard,
         kmv_signatures,
     )
-    from steampipe_sqlite_spark.functions.text import _NORM_SQL
+    from steampipe_sqlite_spark.functions.text import normalize_sql
     from steampipe_sqlite_spark.tables import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    norm = _NORM_SQL.format(c="text")
+    norm = normalize_sql("text")
     bigrams = docs.selectExpr("source", f"split({norm}, ' ') AS w").selectExpr(
         "source",
         "explode(transform(sequence(1, greatest(size(w) - 1, 1)),"

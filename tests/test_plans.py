@@ -506,24 +506,34 @@ def test_corpus_has_no_cartesian_or_row_python_stages(corpus_plans):
 # justified shapes: each is a fix waiting to be made, and leaves this list
 # when its plan stops duplicating (the anti-rot check below).
 DUPLICATED_EXPR_OK = {
-    # the text normalizer chain (lower -> 2x regexp_replace -> split),
-    # re-evaluated once per reference of the token column
-    "dedup_exact_substrings",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "sketch_kmv_source_jaccard",
-    "text_chunk_sliding",
-    "text_decontaminate",
-    "text_decontaminate_bloom",
-    "text_repetition_flags",
-    # the boilerplate-injected text's split, per reference
-    "text_boilerplate_strip",
-    # the fragment-stripped url, nested into every later canonicalization step
-    "dedup_url_canonical",
     # one Python UDF application evaluated by several plan nodes
-    "join_fuzzy_blocked_prefix",  # ArrowEvalPython _norm
     "mm_video_neardup_shingles",  # MapInPandas parse
 }
+
+
+def test_duplicated_counts_a_cached_subtree_once(spark):
+    """A persisted frame read 3x prints its subtree under every
+    InMemoryTableScan but is computed once: not flagged.  The same frame
+    unpersisted is recomputed by every read, and exploding its named
+    token column runs the chain 3x per read (the generator rule at
+    functions/text.posexplode_sized): flagged."""
+    from pyspark.sql import functions as F
+
+    from steampipe_sqlite_spark.functions.text import tokens
+
+    docs = load_table(spark, SF_DIR, "documents")
+    toks = docs.select(tokens(F.col("text")).alias("toks"))
+
+    def read_3x():
+        t = toks.select(F.explode("toks").alias("t"))
+        return plan_text(t.union(t).union(t))
+
+    assert duplicated(read_3x())
+    toks.persist()
+    try:
+        assert not duplicated(read_3x())
+    finally:
+        toks.unpersist()
 
 
 def test_corpus_duplicated_expressions_are_allowlisted(corpus_plans):

@@ -13,7 +13,8 @@ Per query it reports:
   ``split(...)`` text, and each Python-stage node keyed by the UDF it
   evaluates, that occurs ``DUP_THRESHOLD`` or more times in one plan.  A
   subtree or expression referenced several times is recomputed on every
-  reference (VERDICT r15 #8).
+  reference (VERDICT r15 #8); a persisted subtree is computed once, so
+  it counts once however many cache scans print it.
 
 No query result is collected, but building a plan is not free for every
 query: the distributed_* helpers run their range-shuffle checkpoint and
@@ -160,13 +161,37 @@ def _call(line: str, start: int) -> str:
     return line[start:]
 
 
+def _depth(line: str) -> int:
+    """Column where the operator name starts, after the tree drawing."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
 def duplicated(plan: str) -> "dict[str, int]":
     """Items occurring DUP_THRESHOLD or more times in one plan, outside
     scan nodes: each distinct regexp_replace/split expression text, and
     each Python-stage node as "<node> <udf>#<exprId>" (one UDF application
-    evaluated by several nodes keeps its exprId)."""
+    evaluated by several nodes keeps its exprId).
+
+    A persisted relation's subtree prints under every InMemoryTableScan
+    that reads it, but Spark computes it once, so each distinct cached
+    subtree is counted once."""
     seen: Counter = Counter()
-    for line in plan.splitlines():
+    cached: set = set()
+    lines = plan.splitlines()
+    i = 0
+    while i < len(lines):
+        line = lines[i]
+        i += 1
+        if "InMemoryRelation" in line:
+            depth = _depth(line)
+            end = i
+            while end < len(lines) and _depth(lines[end]) > depth:
+                end += 1
+            subtree = tuple(ln[depth:] for ln in lines[i:end])
+            if subtree in cached:
+                i = end
+                continue
+            cached.add(subtree)
         if _SCAN_NODE.search(line):
             continue
         for m in _DUP_CALL.finditer(line):

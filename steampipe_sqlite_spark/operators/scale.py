@@ -144,6 +144,50 @@ def _with_partition_offsets(ranged: DataFrame, offsets: dict) -> DataFrame:
     return ranged.join(F.broadcast(off_df), "_pid")
 
 
+def _prefix_over_range(
+    df: DataFrame,
+    order_cols: list,
+    name: str,
+    num_partitions: int | None,
+    part_total,
+    local,
+) -> tuple[DataFrame, int]:
+    """The two-phase composition both offset-baking helpers share.
+
+    Range-shuffle ``df`` on ``order_cols`` into an eager checkpoint tagged
+    with ``_pid``, collect ``part_total`` per partition (one long each),
+    prefix-sum those on the driver into offsets, and emit ``name`` as
+    ``local(w)`` (``w`` = the partition-local order window) plus its
+    partition's offset.  Returns the frame and the grand total."""
+    from pyspark.sql import Column, Window
+
+    _check_prefix_sum_reserved(df, name)
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    cols = [c if isinstance(c, Column) else F.col(c) for c in order_cols]
+    ranged = (
+        df.repartitionByRange(n, *cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    # one long per partition — metadata, not data (same class as a
+    # parquet footer read); ordering by _pid preserves the range order
+    totals = sorted(
+        (r["_pid"], r["tot"])
+        for r in ranged.groupBy("_pid").agg(part_total.alias("tot")).collect()
+    )
+    offsets, acc = {}, 0
+    for pid, tot in totals:
+        offsets[pid] = acc
+        acc += tot or 0
+    w = Window.partitionBy("_pid").orderBy(*cols)
+    out = (
+        _with_partition_offsets(ranged, offsets)
+        .withColumn(name, (local(w) + F.col("_off")).cast("long"))
+        .drop("_pid", "_off")
+    )
+    return out, acc
+
+
 def distributed_row_number(
     df: DataFrame,
     order_cols: list,
@@ -175,35 +219,13 @@ def distributed_row_number(
     equi-join on ``_pid`` beyond it — so there is no literal-size bound at
     100 TB partition counts.
     """
-    from pyspark.sql import Column, Window
-
-    _check_prefix_sum_reserved(df, name)
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [c if isinstance(c, Column) else F.col(c) for c in order_cols]
-    ranged = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    # one long per partition — metadata, not data (same class as a
-    # parquet footer read); ordering by _pid preserves the range order
-    counts = sorted(
-        ((r["_pid"], r["cnt"]) for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()),
-    )
-    offsets, acc = {}, 0
-    for pid, cnt in counts:
-        offsets[pid] = acc
-        acc += cnt
-    w = Window.partitionBy("_pid").orderBy(*cols)
-    out = (
-        _with_partition_offsets(ranged, offsets)
-        .withColumn(name, (F.row_number().over(w) + F.col("_off")).cast("long"))
-        .drop("_pid", "_off")
+    out, rows = _prefix_over_range(
+        df, order_cols, name, num_partitions, F.count(F.lit(1)),
+        lambda w: F.row_number().over(w),
     )
     # total row count — already computed for the offsets; callers needing
     # COUNT(*) OVER () alongside the rank read this instead of re-scanning
-    out._sgs_total_rows = acc
+    out._sgs_total_rows = rows
     return out
 
 
@@ -216,49 +238,26 @@ def distributed_running_sum(
 ) -> DataFrame:
     """Global running SUM(value_col) over a total order without the
     single-partition WindowExec — the prefix-sum sibling of
-    :func:`distributed_row_number` (same two-phase composition over a
-    checkpointed ranged copy, same literal-or-broadcast offset attach via
-    :func:`_with_partition_offsets`):
-    range shuffle on the order keys, local cumsum
-    windowed by ``spark_partition_id()``, per-partition TOTALS (one long
-    per partition) prefix-summed on the driver and added as offsets.
+    :func:`distributed_row_number` (same two-phase composition): range
+    shuffle on the order keys, local cumsum windowed by
+    ``spark_partition_id()``, per-partition TOTALS (one long per
+    partition) prefix-summed on the driver and added as offsets.
 
     Results equal ``SUM(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``
     whenever ``order_cols`` is a total order.  The building block for
     anything needing global cumulative position at 100 TB: systematic
     weighted sampling, quantile-by-position splits, contiguous shard
     assignment by byte budget."""
-    from pyspark.sql import Column, Window
+    from pyspark.sql import Window
 
-    _check_prefix_sum_reserved(df, name)
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [c if isinstance(c, Column) else F.col(c) for c in order_cols]
-    ranged = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    v = F.col(value_col)
+    out, total = _prefix_over_range(
+        df, order_cols, name, num_partitions, F.sum(v).cast("long"),
+        lambda w: F.sum(v).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
     )
-    totals = sorted(
-        (r["_pid"], r["tot"])
-        for r in ranged.groupBy("_pid")
-        .agg(F.sum(F.col(value_col)).cast("long").alias("tot"))
-        .collect()
-    )
-    offsets, acc = {}, 0
-    for pid, tot in totals:
-        offsets[pid] = acc
-        acc += tot or 0
-    w = Window.partitionBy("_pid").orderBy(*cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = (
-        _with_partition_offsets(ranged, offsets)
-        .withColumn(
-            name, (F.sum(F.col(value_col)).over(w) + F.col("_off")).cast("long")
-        ).drop("_pid", "_off")
-    )
-    out._sgs_total = acc  # grand total of value_col, free from the offsets
+    out._sgs_total = total  # grand total of value_col, free from the offsets
     return out
 
 

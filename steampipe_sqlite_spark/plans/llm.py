@@ -11,8 +11,11 @@ rows-only checks, with recall tests in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from steampipe_sqlite_spark import derived
 from steampipe_sqlite_spark.functions.text import (
     STOPWORDS,
     bpe_ish_token_count,
@@ -1406,160 +1409,6 @@ def knn_ivf_q(spark, sf_dir):
     )
 
 
-# Seconds a superseded index generation stays on disk after it is
-# tombstoned, so in-flight probe scans over it can drain (see _ensure_index).
-_INDEX_RECLAIM_GRACE_S = 600.0
-
-
-def _source_identity(path: str) -> dict:
-    """Fixture identity for staleness checks.  A directory's own
-    size/mtime does NOT change when a part file is rewritten in place, so
-    directory-shaped tables (anything Spark wrote) fingerprint the full
-    recursive (relpath, size, mtime) listing instead — folded into the
-    mtime_ns slot so the identity shape stays uniform."""
-    import hashlib
-    import os
-
-    st = os.stat(path)
-    if not os.path.isdir(path):
-        return {"size": st.st_size, "mtime_ns": st.st_mtime_ns}
-    h = hashlib.sha256()
-    total = 0
-    for root, dirs, files in os.walk(path):
-        dirs.sort()
-        for f in sorted(files):
-            fp = os.path.join(root, f)
-            try:
-                s = os.stat(fp)
-            except OSError:
-                continue
-            total += s.st_size
-            h.update(f"{os.path.relpath(fp, path)}|{s.st_size}|{s.st_mtime_ns};".encode())
-    return {"size": total, "mtime_ns": int(h.hexdigest()[:15], 16)}
-
-
-def _ensure_index(
-    sf_dir: str, kind: str, build_fn, parts: tuple[str, ...]
-) -> str:
-    """Build a persisted ANN index under repo-local ``.cache/indexes``
-    exactly once per (fixture content, kind) and return its path.
-
-    The path is keyed on the embeddings fixture's identity
-    (:func:`_source_identity`: a recursive listing for directory-shaped
-    fixtures — a top-level stat misses in-place part-file rewrites), so a
-    regenerated fixture gets a NEW path instead of a stale read and
-    different SFs never collide; the build is serialized by an exclusive
-    flock on ``<path>.writing`` and completed by an engine-owned marker
-    written AFTER the data commits — so concurrent plan constructions
-    (parallel selfcheck chunks, bench alongside a sweep, pytest) can't
-    tear each other's files, and re-constructions of an unchanged fixture
-    skip the rebuild.  Completeness = marker AND every ``parts`` subdir
-    present: a torn manual deletion that leaves the marker must trigger a
-    rebuild, not a permanent PATH_NOT_FOUND.  Superseded generations
-    (other keys of the same kind) are reclaimed after a successful ensure
-    — DEFERRED behind a grace period: readers (ivf_query_index probe
-    scans) hold no flock, so an immediate rmtree could FileNotFound a
-    concurrent process mid-scan over the old generation (ADVICE r11/r12).
-    A superseded dir is first tombstoned (``_sgs_index_superseded``
-    mtime = supersession time) and its files removed only by a later
-    ensure once the tombstone outlives ``_INDEX_RECLAIM_GRACE_S``, still
-    skipping any generation a concurrent builder holds flocked."""
-    import fcntl
-    import glob
-    import hashlib
-    import os
-    import shutil
-    import time
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    ident = _source_identity(src)
-    # two-part key: fixture PATH hash names the family (distinct SFs are
-    # distinct families, all live — never each other's garbage), fixture
-    # CONTENT hash names the generation (a regenerated fixture supersedes
-    # its own family's previous generation, which becomes reclaimable)
-    fam = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:8]
-    key = hashlib.md5(
-        f"{ident['size']}|{ident['mtime_ns']}".encode()
-    ).hexdigest()[:12]
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = os.path.join(repo, ".cache", "indexes")
-    os.makedirs(root, exist_ok=True)
-    path = os.path.join(root, f"{kind}_{fam}_{key}")
-    marker = os.path.join(path, "_sgs_index_complete")
-
-    def _complete() -> bool:
-        return os.path.exists(marker) and all(
-            os.path.isdir(os.path.join(path, p)) for p in parts
-        )
-
-    wl = os.open(f"{path}.writing", os.O_CREAT | os.O_RDWR)
-    try:
-        fcntl.flock(wl, fcntl.LOCK_EX)
-        if not _complete():
-            try:
-                os.remove(marker)  # torn dir must not look complete mid-build
-            except OSError:
-                pass
-            build_fn(path)
-            with open(marker, "w"):
-                pass
-    finally:
-        fcntl.flock(wl, fcntl.LOCK_UN)
-        os.close(wl)
-        # the .writing lockfile stays on disk: unlinking a lockfile races
-        # with a concurrent opener (it can end up holding a lock on the
-        # unlinked inode while a fresh file is created — two "exclusive"
-        # holders)
-    # a fixture reverted to a previously-seen content hash resurrects its
-    # old generation: clear any tombstone so a later sweep can't reclaim
-    # the index we just served
-    try:
-        os.remove(os.path.join(path, "_sgs_index_superseded"))
-    except OSError:
-        pass
-    # reclaim superseded generations WITHIN THIS FAMILY ONLY (same fixture
-    # path, older content) — sibling SFs' indexes are live, not garbage.
-    # Two-phase: tombstone on first sighting, rmtree only once the
-    # tombstone has outlived the grace period (in-flight probe scans over
-    # the old generation drain in the meantime — see docstring).
-    for old in glob.glob(os.path.join(root, f"{kind}_{fam}_*")):
-        if old == path or old.endswith(".writing"):
-            continue
-        tomb = os.path.join(old, "_sgs_index_superseded")
-        try:
-            tomb_age = time.time() - os.path.getmtime(tomb)
-        except OSError:
-            # first sighting as superseded: tombstone and leave the files
-            try:
-                with open(tomb, "w"):
-                    pass
-            except OSError:
-                pass  # dir vanished under us (another process reclaimed)
-            continue
-        if tomb_age < _INDEX_RECLAIM_GRACE_S:
-            continue  # grace window still open for in-flight scans
-        owl = None
-        try:
-            owl = os.open(f"{old}.writing", os.O_CREAT | os.O_RDWR)
-            fcntl.flock(owl, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            if owl is not None:
-                os.close(owl)
-            continue  # a concurrent process is using/building it
-        try:
-            try:
-                os.remove(os.path.join(old, "_sgs_index_complete"))
-            except OSError:
-                pass
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            fcntl.flock(owl, fcntl.LOCK_UN)
-            os.close(owl)
-    return path
-
-
 @query("knn_ivf_index_persisted", oracle=_IVF_TOPK_ORACLE)
 def knn_ivf_index_persisted_q(spark, sf_dir):
     """Persisted-IVF serving lifecycle as a driver-checkable witness
@@ -1578,10 +1427,10 @@ def knn_ivf_index_persisted_q(spark, sf_dir):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _ensure_index(
-        sf_dir, "ivf16",
+    path = derived.ensure(
+        "indexes", os.path.join(sf_dir, "embeddings.parquet"),
         lambda p: ivf_build_index(emb, "embedding", "vec_id", p, n_cells=16),
-        parts=("centroids", "cells"),
+        "ivf16", parts=("centroids", "cells"),
     )
     queries = emb.filter(F.col("vec_id") < 10)
     return presentation_sort(
@@ -3359,10 +3208,10 @@ def knn_ivfpq_index_persisted_q(spark, sf_dir):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _ensure_index(
-        sf_dir, "ivfpq8",
+    path = derived.ensure(
+        "indexes", os.path.join(sf_dir, "embeddings.parquet"),
         lambda p: ivfpq_build_index(emb, "embedding", "vec_id", p, n_cells=8),
-        parts=("centroids", "codebooks", "cells"),
+        "ivfpq8", parts=("centroids", "codebooks", "cells"),
     )
     queries = emb.filter(F.col("vec_id") < 10)
     return presentation_sort(

@@ -10,8 +10,9 @@ so the same code scales to a multi-executor cluster:
 - shuffle.partitions sized to the INPUT DATA (32 MB per partition), not
   the core count — correct at 17 MB and at 100 TB alike.
 - Scan split size left at Spark's default: tables.compacted_path already
-  rewrites a single-row-group fixture into K one-row-group files, so file
-  scans fan out without a split-size override (DEADENDS.md).
+  rewrites a single-row-group fixture into K one-row-group files (a
+  build-once copy owned by derived.py), so file scans fan out without a
+  split-size override (DEADENDS.md).
 - Arrow enabled for every Python<->JVM hop (Pandas UDFs, createDataFrame,
   Python DataSource batches).
 - Session timezone pinned UTC so timestamp semantics match the DuckDB oracle.

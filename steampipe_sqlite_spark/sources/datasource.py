@@ -247,7 +247,6 @@ class ConnectorReader(DataSourceReader):
         # the session's task slots (Engine.table sets it); without it each
         # chain is its own task
         self.slots = int(options.get("slots", 0))
-        self._filters_seen = False
         self._constrained: set[str] = set()
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -255,7 +254,6 @@ class ConnectorReader(DataSourceReader):
         filter as residual so Catalyst re-applies them all — the exact
         Omit:false contract (/root/reference/table.go:126-129): the
         connector may over-return, the engine restores exactness."""
-        self._filters_seen = True
         self.quals, _ = filters_to_quals(filters, self.table)
         # every column a pushed filter NAMES, independent of op support or
         # translatability — the reference's gate counts any constraint
@@ -451,8 +449,9 @@ class ConnectorSimpleStreamReader(SimpleDataSourceStreamReader):
 
 
 class ConnectorDataSource(DataSource):
-    """Register once per session; one temp view per connector table is the
-    engine facade's job (engine.py)."""
+    """Registered once per session by the engine facade (engine.py), which
+    reads each connector table through it on demand (``Engine.table``, and
+    ``Engine.sql`` per statement); no view is kept per table."""
 
     @classmethod
     def name(cls) -> str:

@@ -14,11 +14,11 @@ plugin rows, our Catalyst core reads parquet natively).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from steampipe_sqlite_spark import derived
 
 TPCH_TABLES = (
     "region",
@@ -105,9 +105,10 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
 # row-group layout sized so scans split across the cluster.  This is the
 # single-process analog: on first load of a table whose layout cannot feed
 # the session's cores, rewrite it ONCE into a directory of K row-group-
-# sized files under .cache/compact, keyed by (path, size, mtime) so a new
-# fixture invalidates the copy.  Values, schema (including physical
-# TIMESTAMP(NANOS) — pyarrow preserves it), and row order are unchanged.
+# sized files, a derived copy keyed by the file's (path, size, mtime) so a
+# new fixture invalidates the copy (derived.py).  Values, schema (including
+# physical TIMESTAMP(NANOS) — pyarrow preserves it), and row order are
+# unchanged.
 #
 # At cluster scale this step is a NO-OP by construction: a 100 TB input has
 # orders of magnitude more row groups than `_compact_target_k` returns, and
@@ -115,7 +116,6 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
 # it from ever buffering more than a test-scale file in the driver.
 # ---------------------------------------------------------------------------
 
-_COMPACT_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "compact")
 # Under ~2k rows a single task beats any split's scheduling cost; above it,
 # splitting is cheap insurance — per-row cost varies 1000× across workloads
 # (a projected count vs. a 64-dim interpreted vector fold vs. a Python
@@ -131,14 +131,15 @@ def _compact_target_k(rows: int, cores: int) -> int:
 
 
 def compacted_path(spark: SparkSession, path: str) -> str:
-    """Return ``path`` or its compacted multi-file copy (building it once).
+    """Return ``path`` or its compacted multi-file copy (built once, see
+    :mod:`steampipe_sqlite_spark.derived`).
 
     Footer-only probe first (fast): a file already carrying >= K row groups
-    splits fine natively and is returned untouched.
+    splits fine natively and is returned untouched, and so is a directory
+    (a table Spark wrote is already split).
     """
     try:
-        st = os.stat(path)
-        if st.st_size > _COMPACT_MAX_BYTES:
+        if os.path.isdir(path) or os.stat(path).st_size > _COMPACT_MAX_BYTES:
             return path
         import pyarrow.parquet as pq
 
@@ -148,25 +149,15 @@ def compacted_path(spark: SparkSession, path: str) -> str:
         k = _compact_target_k(rows, cores)
         if rows < _COMPACT_MIN_ROWS or meta.num_row_groups >= k:
             return path
-        key = hashlib.sha256(
-            f"{os.path.abspath(path)}|{st.st_size}|{st.st_mtime_ns}|{k}".encode()
-        ).hexdigest()[:16]
-        dest = os.path.join(_COMPACT_ROOT, f"{key}-{os.path.basename(path)}")
-        if os.path.isdir(dest):
-            return dest
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        os.makedirs(tmp, exist_ok=True)
-        table = pq.read_table(path)
         step = -(-rows // k)  # ceil
-        for i in range(k):
-            part = table.slice(i * step, step)
-            if part.num_rows:
-                pq.write_table(part, os.path.join(tmp, f"part-{i:05d}.parquet"))
-        try:
-            os.rename(tmp, dest)  # atomic; loser of a race falls through
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return dest if os.path.isdir(dest) else path
+        parts = tuple(f"part-{i:05d}.parquet" for i in range(-(-rows // step)))
+
+        def build(out: str) -> None:
+            table = pq.read_table(path)
+            for i, name in enumerate(parts):
+                pq.write_table(table.slice(i * step, step), os.path.join(out, name))
+
+        return derived.ensure("compact", path, build, f"k{k}", parts=parts)
     except Exception:  # noqa: BLE001 — compaction must never fail a read
         return path
 

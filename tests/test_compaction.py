@@ -4,7 +4,8 @@ that splits single-row-group fixture files so scans parallelize.
 Correctness contract: the compacted copy is value-identical, schema-identical,
 and row-order-identical to the original; the cache key invalidates on any
 (path, size, mtime) change; guards keep the step a no-op on already-splittable
-or tiny inputs.
+or tiny inputs.  Tests that build a copy point the derived-copy root at
+their tmp_path, so the suite leaves the repo's .cache as it found it.
 """
 
 from __future__ import annotations
@@ -15,23 +16,22 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
-from steampipe_sqlite_spark import tables
+from steampipe_sqlite_spark import derived
 from steampipe_sqlite_spark.tables import compacted_path, load_table
 
-SF_SMALL = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"
-
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "test_scratch")
 
 
 @pytest.fixture()
-def scratch():
-    os.makedirs(SCRATCH, exist_ok=True)
-    yield SCRATCH
-    shutil.rmtree(SCRATCH, ignore_errors=True)
+def scratch(tmp_path, monkeypatch):
+    """A scratch dir for source copies; derived copies go under it too."""
+    monkeypatch.setattr(derived, "ROOT", str(tmp_path / "cache"))
+    src = tmp_path / "src"
+    src.mkdir()
+    return str(src)
 
 
-def test_compacted_values_and_order_identical(spark):
+def test_compacted_values_and_order_identical(spark, scratch):
     src = os.path.join(SF_MID, "lineitem.parquet")
     dst = compacted_path(spark, src)
     assert dst != src, "sf0.01 lineitem (60k rows, 1 row group) should compact"

@@ -433,9 +433,9 @@ def test_leakage_safe_split_never_splits_a_component(spark, docs):
 
 
 class TestEnsureIndexCache:
-    """_ensure_index (the corpus witnesses' guarded build): content-keyed,
-    flock-serialized, marker-completed — plus the torn-deletion rebuild
-    and same-family generation reclaim (code-review r12, second pass)."""
+    """The corpus index witnesses' build-once copy (derived.ensure):
+    content-keyed, published by atomic rename, rebuilt when torn, and
+    superseded generations of the same family reclaimed in two phases."""
 
     def test_directory_source_staleness_detected(self, tmp_path):
         """Directory-shaped fixtures (Spark-written tables): rewriting a
@@ -444,35 +444,39 @@ class TestEnsureIndexCache:
         listing, or the index key keeps serving a stale generation."""
         import os
 
-        from steampipe_sqlite_spark.plans.llm import _source_identity
+        from steampipe_sqlite_spark.derived import source_identity
 
         d = tmp_path / "embeddings.parquet"
         (d / "sub").mkdir(parents=True)
         for rel in ("part-00000.parquet", "sub/part-00001.parquet"):
             (d / rel).write_bytes(b"x" * 64)
-        before = _source_identity(str(d))
+        before = source_identity(str(d))
         dir_mtime = os.stat(d).st_mtime_ns
         part = d / "sub" / "part-00001.parquet"
         st = os.stat(part)
         os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
         assert os.stat(d).st_mtime_ns == dir_mtime
-        assert _source_identity(str(d)) != before
+        assert source_identity(str(d)) != before
         # a plain file keys on its own size and mtime
         f = tmp_path / "flat.parquet"
         f.write_bytes(b"y" * 8)
-        assert _source_identity(str(f))["size"] == 8
+        flat = source_identity(str(f))
+        assert source_identity(str(f)) == flat
+        f.write_bytes(b"y" * 9)
+        assert source_identity(str(f)) != flat
 
     def test_torn_deletion_rebuilds_and_generations_reclaim(
-        self, spark, monkeypatch
+        self, spark, monkeypatch, tmp_path
     ):
         import os
         import shutil
 
-        import steampipe_sqlite_spark.plans.llm as L
+        from steampipe_sqlite_spark import derived
         from steampipe_sqlite_spark.tables import load_table
 
+        monkeypatch.setattr(derived, "ROOT", str(tmp_path))
         calls = []
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+        emb = load_table(spark, SF_DIR, "embeddings")
 
         def build(p):
             calls.append(p)
@@ -480,83 +484,58 @@ class TestEnsureIndexCache:
 
             ivf_build_index(emb, "embedding", "vec_id", p, n_cells=4)
 
-        # the cache root derives from llm.py's location (repo .cache/);
-        # the test uses its own 'testivf' kind so real witnesses' indexes
-        # are untouched, and cleans up its family in the finally
-        path = L._ensure_index(
-            "/root/testdata/sf0.001", "testivf", build, parts=("centroids", "cells")
+        def ensure():
+            return derived.ensure(
+                "indexes", os.path.join(SF_DIR, "embeddings.parquet"), build,
+                "testivf", parts=("centroids", "cells"),
+            )
+
+        path = ensure()
+        assert len(calls) == 1
+        # unchanged fixture: second ensure skips the rebuild
+        assert ensure() == path
+        assert len(calls) == 1
+        # a torn deletion must trigger a REBUILD, not a permanent
+        # PATH_NOT_FOUND
+        shutil.rmtree(os.path.join(path, "cells"))
+        assert ensure() == path
+        assert len(calls) == 2
+        assert os.path.isdir(os.path.join(path, "cells"))
+        # a superseded generation of the SAME family is reclaimed in TWO
+        # phases (readers take no lock, so the first sighting only
+        # tombstones; files go when the tombstone outlives the grace
+        # period)...
+        root = os.path.dirname(path)
+        fake = path.rsplit("-", 1)[0] + "-deadbeef0000"
+        os.makedirs(os.path.join(fake, "cells"))
+        # ...while a DIFFERENT family (another fixture path) is live
+        other = os.path.join(root, "embeddings.parquet-testivf-ffffffff-aaaaaaaaaaaa")
+        os.makedirs(other)
+        ensure()
+        # phase 1: tombstoned, files intact — an in-flight scan over the
+        # old generation still completes during the grace window
+        tomb = os.path.join(fake, "_superseded")
+        assert os.path.exists(tomb)
+        assert os.path.isdir(os.path.join(fake, "cells"))
+        # within-grace re-ensure: still intact
+        ensure()
+        assert os.path.exists(fake)
+        # phase 2: grace elapsed -> next ensure reclaims the files
+        monkeypatch.setattr(derived, "RECLAIM_GRACE_S", 0.0)
+        ensure()
+        assert not os.path.exists(fake)
+        assert os.path.exists(other)
+        assert not os.path.exists(os.path.join(other, "_superseded"))
+        # resurrection: a tombstone landing on the LIVE generation (fixture
+        # reverted to old content) is cleared by ensure, so a later sweep
+        # can't reclaim an index being served
+        open(os.path.join(path, "_superseded"), "w").close()
+        ensure()
+        assert not os.path.exists(os.path.join(path, "_superseded"))
+        assert len(calls) == 2  # no spurious rebuilds along the way
+        assert sorted(os.listdir(root)) == sorted(
+            os.path.basename(p) for p in (path, other)
         )
-        try:
-            assert len(calls) == 1
-            # unchanged fixture: second ensure skips the rebuild
-            assert (
-                L._ensure_index(
-                    "/root/testdata/sf0.001", "testivf", build,
-                    parts=("centroids", "cells"),
-                )
-                == path
-            )
-            assert len(calls) == 1
-            # torn deletion leaving the marker must trigger a REBUILD, not
-            # a permanent PATH_NOT_FOUND
-            shutil.rmtree(os.path.join(path, "cells"))
-            assert os.path.exists(os.path.join(path, "_sgs_index_complete"))
-            L._ensure_index(
-                "/root/testdata/sf0.001", "testivf", build,
-                parts=("centroids", "cells"),
-            )
-            assert len(calls) == 2
-            assert os.path.isdir(os.path.join(path, "cells"))
-            # a superseded generation of the SAME family is reclaimed in
-            # TWO phases (ADVICE r12 — readers hold no flock, so the
-            # first sighting only tombstones; files go when the tombstone
-            # outlives the grace period)...
-            root = os.path.dirname(path)
-            fam_prefix = "_".join(os.path.basename(path).split("_")[:2])
-            fake = os.path.join(root, f"{fam_prefix}_deadbeef0000")
-            os.makedirs(fake, exist_ok=True)
-            open(os.path.join(fake, "_sgs_index_complete"), "w").close()
-            # ...while a DIFFERENT family (another fixture path) is live
-            other = os.path.join(root, "testivf_ffffffff_aaaaaaaaaaaa")
-            os.makedirs(other, exist_ok=True)
-            L._ensure_index(
-                "/root/testdata/sf0.001", "testivf", build,
-                parts=("centroids", "cells"),
-            )
-            # phase 1: tombstoned, files intact — an in-flight scan over
-            # the old generation still completes during the grace window
-            tomb = os.path.join(fake, "_sgs_index_superseded")
-            assert os.path.exists(fake) and os.path.exists(tomb)
-            assert os.path.exists(os.path.join(fake, "_sgs_index_complete"))
-            # within-grace re-ensure: still intact
-            L._ensure_index(
-                "/root/testdata/sf0.001", "testivf", build,
-                parts=("centroids", "cells"),
-            )
-            assert os.path.exists(fake)
-            # phase 2: grace elapsed -> next ensure reclaims the files
-            monkeypatch.setattr(L, "_INDEX_RECLAIM_GRACE_S", 0.0)
-            L._ensure_index(
-                "/root/testdata/sf0.001", "testivf", build,
-                parts=("centroids", "cells"),
-            )
-            assert not os.path.exists(fake)
-            assert os.path.exists(other)
-            # resurrection: a tombstone landing on the LIVE generation
-            # (fixture reverted to old content) is cleared by ensure, so
-            # a later sweep can't reclaim an index being served
-            open(os.path.join(path, "_sgs_index_superseded"), "w").close()
-            L._ensure_index(
-                "/root/testdata/sf0.001", "testivf", build,
-                parts=("centroids", "cells"),
-            )
-            assert not os.path.exists(
-                os.path.join(path, "_sgs_index_superseded")
-            )
-            assert len(calls) == 2  # no spurious rebuilds along the way
-            shutil.rmtree(other, ignore_errors=True)
-        finally:
-            shutil.rmtree(path, ignore_errors=True)
 
 
 class TestIvfIndexPersistence:

@@ -1,13 +1,15 @@
 """tools/replica.py at sf0.001 x2: ids re-keyed by stride, dims written
-once, near-dup output exactly doubled by the text bijection, and only
-completed tables reused."""
+once, near-dup output exactly doubled by the text bijection, only
+completed tables reused, and the replica keyed on its source fixture."""
 
 import os
+import shutil
 from collections import Counter
 
 import duckdb
 
 import bench
+from steampipe_sqlite_spark import derived
 from steampipe_sqlite_spark.plans.registry import collect
 from tools import replica
 
@@ -26,7 +28,7 @@ def _col(con, table, col):
 
 def test_replica_x2(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(replica, "SF_DIR", SF)
-    monkeypatch.setattr(replica, "SCRATCH", str(tmp_path))
+    monkeypatch.setattr(derived, "ROOT", str(tmp_path))
     out = replica.build(spark, 2, TABLES)
     base, rep = duckdb.connect(), duckdb.connect()
     _views(base, SF)
@@ -51,16 +53,30 @@ def test_replica_x2(spark, monkeypatch, tmp_path):
         assert len(base.execute(oracles[name]).fetchall()) == n, name
         assert len(rep.execute(oracles[name]).fetchall()) == 2 * n, name
 
-    # an interrupted write (no _SUCCESS) is rebuilt; a completed one is kept
+    # a missing table is built again; a completed one is kept
     docs = os.path.join(out, "documents.parquet")
-    os.remove(os.path.join(docs, "_SUCCESS"))
-    for f in sorted(os.listdir(docs))[1:]:
-        os.remove(os.path.join(docs, f))
-    kept = os.path.join(out, "nation.parquet", "_SUCCESS")
+    shutil.rmtree(docs)
+    kept = os.path.join(out, "nation.parquet")
     mtime = os.stat(kept).st_mtime_ns
-    replica.build(spark, 2, TABLES)
-    assert os.path.exists(os.path.join(docs, "_SUCCESS"))
+    assert replica.build(spark, 2, TABLES) == out
     assert rep.execute("SELECT COUNT(*) FROM documents").fetchone()[0] == 2 * len(
         _col(base, "documents", "doc_id")
     )
     assert os.stat(kept).st_mtime_ns == mtime
+
+
+def test_replica_rekeyed_on_source_change(spark, monkeypatch, tmp_path):
+    """A regenerated fixture gets a new replica dir, never the old one;
+    the old one is only tombstoned while a reader may still hold it."""
+    fixture = tmp_path / "sf"
+    fixture.mkdir()
+    src = fixture / "nation.parquet"
+    shutil.copyfile(os.path.join(SF, "nation.parquet"), src)
+    monkeypatch.setattr(replica, "SF_DIR", str(fixture))
+    monkeypatch.setattr(derived, "ROOT", str(tmp_path / "cache"))
+    first = replica.build(spark, 2, {"nation"})
+    os.utime(src, (1_000_000_000, 1_000_000_000))
+    second = replica.build(spark, 2, {"nation"})
+    assert second != first
+    assert os.path.isdir(os.path.join(second, "nation.parquet"))
+    assert os.path.exists(os.path.join(first, "_superseded"))

@@ -38,11 +38,13 @@ def test_hot_share_layout_is_the_documented_one():
     assert sum(s for _, s in HOT_SHARES) < 100
 
 
-def test_hot_key_assignment_narrow_band_wins(spark):
+def test_hot_key_assignment_narrow_band_wins(spark, monkeypatch, tmp_path):
     """Regression for the when()-chain order: id%100 in [0,20) must map to
     key 0 (not get captured by the cumulative <30 band for key 1)."""
+    from steampipe_sqlite_spark import derived
     from tools.skew_join_probe import build
 
+    monkeypatch.setattr(derived, "ROOT", str(tmp_path))
     base = build(spark, 10_000, 1_000)
     facts = spark.read.parquet(os.path.join(base, "facts.parquet"))
     shares = {

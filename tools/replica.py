@@ -2,15 +2,18 @@
 every registered query runs on it unchanged, for timing at scale.
 
 Usage: python tools/replica.py REPS
-Builds every table of the sf0.1 fixture under .cache/replica/x<REPS>/ as
-``<table>.parquet`` directories and prints that directory.  Time queries
+Builds every table of the sf0.1 fixture as ``<table>.parquet``
+directories of one derived replica directory and prints it.  The
+directory is ``.cache/replica/sf0.1-x<REPS>-<path hash>-<content key>``
+(steampipe_sqlite_spark/derived.py), so a regenerated fixture gets a new
+replica instead of the old one.  Time queries
 on it with the A/B harness, which sizes its session from --sf:
 
   python tools/ab.py --sf "$(python tools/replica.py 10)" QUERY...
 
-and vary cores with SPARK_GRAFT_CPUS.  A table is reused only when its
-write completed (Spark's committer drops ``_SUCCESS`` last), so an
-interrupted build is rebuilt, never silently read as the full replica.
+and vary cores with SPARK_GRAFT_CPUS.  Each table is built on first use
+and published by an atomic rename, so an interrupted build is rebuilt,
+never silently read as the full replica.
 
 The replica rules, each chosen so that a query's per-key work and its
 output per replica stay what they are at 1x:
@@ -51,16 +54,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from steampipe_sqlite_spark import derived
 from steampipe_sqlite_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.1"
-# "replica", not the old "floorscale": those replicas predate the text
-# bijection and must never be reused as if they had it
-SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".cache",
-    "replica",
-)
 
 DIMS = {"part", "supplier", "partsupp", "nation", "region"}
 
@@ -125,13 +122,16 @@ def build(spark, reps: int, tables: set) -> str:
     """Write each table's replica as <dir>/<table>.parquet, so the corpus
     query fns (load_table / register_views on an sf_dir) run against it
     unchanged, and return <dir>."""
-    sf_dir = os.path.join(SCRATCH, f"x{reps}")
+    sf_dir = derived.generation("replica", SF_DIR, f"x{reps}")
     strides: dict = {}
     for table in sorted(tables):
-        out = os.path.join(sf_dir, f"{table}.parquet")
-        if os.path.exists(os.path.join(out, "_SUCCESS")):
-            continue
-        _replicate(spark, 1 if table in DIMS else reps, table, out, strides)
+        derived.publish(
+            os.path.join(sf_dir, f"{table}.parquet"),
+            lambda out, t=table: _replicate(
+                spark, 1 if t in DIMS else reps, t, out, strides
+            ),
+        )
+    derived.reclaim(sf_dir)
     return sf_dir
 
 

@@ -103,14 +103,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from steampipe_sqlite_spark import derived  # noqa: E402
 from steampipe_sqlite_spark.operators.scale import salted_join_hot_keys  # noqa: E402
 from steampipe_sqlite_spark.session import get_spark, stop_spark  # noqa: E402
-
-SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".cache",
-    "skewprobe",
-)
 
 # Deterministic hot-key layout: (key, share of fact rows). Together 60% —
 # the pathological-but-real "null/default key" shape (a 45% hot key is one
@@ -135,15 +130,12 @@ def _pad(col, n_hexes: int, seed_base: int):
 
 
 def build(spark, fact_rows: int, n_keys: int) -> str:
-    """Write facts/dims parquet under SCRATCH (reused iff _SUCCESS)."""
-    # layout params in the dir name: a HOT_SHARES/pad change must rebuild,
-    # not silently reuse a stale _SUCCESS corpus with the old distribution
-    shares = "-".join(str(s) for _, s in HOT_SHARES)
-    out = os.path.join(SCRATCH, f"f{fact_rows}_k{n_keys}_h{shares}")
-    facts_path = os.path.join(out, "facts.parquet")
-    dims_path = os.path.join(out, "dims.parquet")
+    """Write facts/dims parquet once and return their directory: a derived
+    copy (steampipe_sqlite_spark/derived.py) keyed on this file, so a
+    HOT_SHARES or pad change rebuilds instead of reusing a corpus with the
+    old distribution."""
 
-    if not os.path.exists(os.path.join(facts_path, "_SUCCESS")):
+    def write(out: str) -> None:
         pct = F.pmod(F.col("id"), F.lit(100))
         # chained when(): narrowest band first, so the first hot key's
         # band wins before the wider cumulative band assigns the next key
@@ -167,10 +159,8 @@ def build(spark, fact_rows: int, n_keys: int) -> str:
                 _pad(F.col("id"), 1, 11).alias("pad"),
             )
             .repartition(64)
-            .write.mode("overwrite")
-            .parquet(facts_path)
+            .write.parquet(os.path.join(out, "facts.parquet"))
         )
-    if not os.path.exists(os.path.join(dims_path, "_SUCCESS")):
         (
             spark.range(n_keys)
             .select(
@@ -179,10 +169,13 @@ def build(spark, fact_rows: int, n_keys: int) -> str:
                 _pad(F.col("id"), 4, 31).alias("dpad"),
             )
             .repartition(16)
-            .write.mode("overwrite")
-            .parquet(dims_path)
+            .write.parquet(os.path.join(out, "dims.parquet"))
         )
-    return out
+
+    return derived.ensure(
+        "skewprobe", __file__, write, f"f{fact_rows}", f"k{n_keys}",
+        parts=("facts.parquet", "dims.parquet"),
+    )
 
 
 def _agg(joined):

@@ -391,15 +391,6 @@ def cms_build(
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Fold two CMS relations: union + per-cell SUM."""
-    return (
-        a.unionByName(b)
-        .groupBy("row", "pos")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
 def cms_estimate(sketch: DataFrame, probes: DataFrame, col: str,
                  width: int = 64, depth: int = 4) -> DataFrame:
     """Point estimates for ``probes[col]``: min over rows of the cell each

@@ -99,21 +99,6 @@ def posexplode_sized(arr: Column, value: str) -> Column:
     )
 
 
-def char_shingles(c: Column, k: int = 5) -> Column:
-    """Distinct character k-grams of the normalized text (array<string>).
-
-    Built as substring slides over the string — pure JVM expression, no
-    explode, so it composes with downstream minhash without a shuffle.
-    """
-    def shingles(norm: Column) -> Column:
-        n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, k))
-        )
-
-    return _let(normalize_text(c), shingles)
-
-
 def word_ngrams(c: Column, n: int = 3, distinct: bool = True) -> Column:
     """Word n-grams in order (array<string>), deduplicated unless
     ``distinct`` is False."""

@@ -5,8 +5,9 @@ Five dedup families, each expressed Spark-first:
 - exact:        md5(normalized) hash-groupBy — one shuffle on the hash.
 - ngram-jaccard: exact token-n-gram Jaccard on candidate pairs inside
                  blocking keys — shuffle on the block key only.
-- minhash-LSH:  char-shingle minhash signatures (pure JVM array exprs, no
-                 explode), banded; candidates meet via a shuffle on
+- minhash-LSH:  one-permutation char-shingle minhash signatures (one
+                 hash per shingle, one aggregate per doc), banded;
+                 candidates meet via a shuffle on
                  (band, band-signature) — the 100 TB-safe path: cost is
                  O(docs·hashes) map-side + a bucket join, never O(docs²).
 - simhash:      64-bit sign-vote fingerprint over token hashes; candidates
@@ -187,47 +188,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 64, shingle_k: int = 5
-) -> DataFrame:
-    """Minhash signature per document: sig[i] = min over shingles of
-    hash_i(shingle), with hash_i = xxhash64(xxhash64(shingle), salt_i) —
-    the string is hashed ONCE and the per-salt family mixes the resulting
-    long (fixed-width input), which measured ~8× faster than hashing the
-    string per salt at sf0.1 (0.5 s vs 4.2 s warm).
-
-    Shape: explode shingles → one string hash → 64 long hashes → groupBy-min.
-    (A pure array-expression form — array_min(transform(shingles, ...)) per
-    salt — reads nicer but Catalyst's project collapse inlines the shingle
-    construction into all 64 hash expressions, recomputing normalization
-    64×: measured 120 s vs ~4 s at sf0.1.)  The groupBy's partial
-    aggregation folds the mins map-side, so the shuffle carries one
-    64-long row per document — linear and skew-free at any scale.
-    """
-    # normalize once per doc (materialized below the Generate so the
-    # per-shingle substr reads a column, not a re-evaluated regexp), then
-    # explode positions; duplicates are kept — min over a multiset equals
-    # min over the set, and array_distinct on ~1k-element arrays is O(n²)
-    # (dropping it took this stage from 55 s to ~4 s at sf0.1)
-    normed = _spread(df).select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("norm"))
-    ex = normed.select(
-        "id",
-        "norm",
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(F.length("norm") - F.lit(shingle_k - 1), F.lit(1)))
-        ).alias("i"),
-    ).select("id", F.expr(f"substr(norm, i, {shingle_k})").alias("s"))
-    hashed = ex.select("id", F.xxhash64("s").alias("h")).select(
-        "id", *[F.xxhash64(F.col("h"), F.lit(i)).alias(f"h{i}") for i in range(num_hashes)]
-    )
-    sigs = hashed.groupBy("id").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
-    )
-    return sigs.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_signatures_oph(
     df: DataFrame,
     text_col: str,
@@ -243,11 +203,12 @@ def minhash_signatures_oph(
     sets share their global min with probability ≈ their Jaccard, so
     densified slots still agree).
 
-    vs the classic k-hash family (minhash_signatures): 1 string hash + 1
-    bucket shift per shingle instead of 64 derived hashes.  At sf0.1 the
-    end-to-end gain is modest (the 1.5M-row shingle shuffle dominates) but
-    the per-shingle CPU is 64× lower — the term that grows with document
-    length at real corpus sizes.  Shuffle: ONE exchange on id — the
+    vs the classic k-hash family (64 salted hashes derived per shingle,
+    min per salt): 1 string hash + 1 bucket shift per shingle instead of
+    64 derived hashes.  At sf0.1 the end-to-end gain is modest (the
+    1.5M-row shingle shuffle dominates) but the per-shingle CPU is 64×
+    lower — the term that grows with document length at real corpus
+    sizes.  Shuffle: ONE exchange on id — the
     bucket pivot runs as 64 conditional mins inside a single codegen'd
     hash aggregate whose partials fold map-side (65 longs per doc per
     map partition cross the wire).
@@ -289,6 +250,26 @@ def minhash_signatures_oph(
     )
 
 
+def _band_projection(num_hashes: int, bands: int, hash_family: str) -> str:
+    """minhash_lsh_pairs' banded key projection as one SQL string, so
+    all bands parse JVM-side in one call.  md5 family: oracle-
+    reproducible concat_ws key (DuckDB string_agg of the same longs);
+    xxhash64 family: one long per band (faster shuffle key)."""
+    rows_per_band = num_hashes // bands
+
+    def band_key(b: int) -> str:
+        cols = ", ".join(
+            f"sig[{i}]" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
+        )
+        if hash_family == "md5":
+            return f"concat_ws(',', {cols})"
+        return f"xxhash64({cols})"
+
+    return ", ".join(
+        f"struct({b} as band, {band_key(b)} as band_sig)" for b in range(bands)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -321,9 +302,7 @@ def minhash_lsh_pairs(
     ).persist()
 
     # one JVM-side parse for the whole banded projection (py4j chattiness
-    # of the per-band struct builders measured as real per-query latency);
-    # the projection itself is single-sourced with the persisted index —
-    # see _band_projection
+    # of the per-band struct builders measured as real per-query latency)
     banded = sigs.select(
         "id",
         F.expr(
@@ -819,147 +798,3 @@ def ppjoin_pairs(
     return common.where(
         f"100 * n_common >= {t} * (n_a + n_b - n_common)"
     ).select("id_a", "id_b", "n_common", "n_a", "n_b")
-
-
-# --- Persisted MinHash-LSH dedup index (incremental production shape) -------
-
-
-def _band_projection(num_hashes: int, bands: int, hash_family: str) -> str:
-    """The banded key projection shared by minhash_lsh_pairs and the
-    persisted index — single-sourced so in-memory pairing, index build,
-    query, and append can never band differently (the labeling-desync
-    bug class the round-5 IVF-PQ work hit).  md5 family: oracle-
-    reproducible concat_ws key (DuckDB string_agg of the same longs);
-    xxhash64 family: one long per band (faster shuffle key)."""
-    rows_per_band = num_hashes // bands
-
-    def band_key(b: int) -> str:
-        cols = ", ".join(
-            f"sig[{i}]" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-        )
-        if hash_family == "md5":
-            return f"concat_ws(',', {cols})"
-        return f"xxhash64({cols})"
-
-    return ", ".join(
-        f"struct({b} as band, {band_key(b)} as band_sig)" for b in range(bands)
-    )
-
-
-def minhash_index_build(
-    docs: DataFrame, text_col: str, id_col: str, path: str,
-    num_hashes: int = 64, bands: int = 16, shingle_k: int = 5,
-    hash_family: str = "xxhash64",
-) -> None:
-    """Build a PERSISTED MinHash-LSH dedup index: signatures + banded
-    keys written as parquet so later batches dedup against the corpus
-    WITHOUT recomputing it — the incremental-ingest shape (a crawler
-    frontier deduping each day's crawl against everything already kept),
-    sibling of similarity.ivfpq_build_index.
-
-    Layout: ``{path}/signatures`` (id, sig array) for candidate scoring,
-    ``{path}/bands`` (id, band_sig) hive-partitioned by band (16 dirs —
-    a band-subset probe prunes directories), ``{path}/meta`` pinning
-    (num_hashes, bands, shingle_k, hash_family) so query/append derive
-    parameters from the INDEX, never from caller arguments that could
-    silently mismatch (the _pq_params lesson)."""
-    sigs = minhash_signatures_oph(
-        docs, text_col, id_col, num_hashes, shingle_k, hash_family
-    )
-    spark = docs.sparkSession
-    sigs.write.mode("errorifexists").parquet(f"{path}/signatures")
-    saved = spark.read.parquet(f"{path}/signatures")
-    saved.selectExpr(
-        "id", f"explode(array({_band_projection(num_hashes, bands, hash_family)})) AS bk"
-    ).selectExpr("id", "bk.band AS band", "bk.band_sig AS band_sig").write.mode(
-        "errorifexists"
-    ).partitionBy("band").parquet(f"{path}/bands")
-    spark.createDataFrame(
-        [(num_hashes, bands, shingle_k, hash_family)],
-        "num_hashes int, bands int, shingle_k int, hash_family string",
-    ).write.mode("errorifexists").parquet(f"{path}/meta")
-
-
-def _minhash_index_meta(spark, path: str) -> tuple[int, int, int, str]:
-    m = spark.read.parquet(f"{path}/meta").first()
-    return int(m.num_hashes), int(m.bands), int(m.shingle_k), m.hash_family
-
-
-def minhash_index_query(
-    spark, path: str, new_docs: DataFrame, text_col: str, id_col: str,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate lookups against a persisted index: each new doc's
-    matches among the INDEXED corpus with signature-estimated Jaccard ≥
-    threshold.  Returns (query_id, index_id, jaccard_est).
-
-    Scale shape: the new batch's bands meet the index's bands on
-    (band, band_sig) — the only corpus-sized shuffle, identical to the
-    in-memory pair join; scoring joins touch candidates only; parameters
-    come from the index's meta."""
-    num_hashes, bands, shingle_k, hash_family = _minhash_index_meta(spark, path)
-    qsigs = minhash_signatures_oph(
-        new_docs, text_col, id_col, num_hashes, shingle_k, hash_family
-    ).persist()
-    qbands = qsigs.selectExpr(
-        "id", f"explode(array({_band_projection(num_hashes, bands, hash_family)})) AS bk"
-    ).selectExpr("id AS query_id", "bk.band AS band", "bk.band_sig AS band_sig")
-    ibands = spark.read.parquet(f"{path}/bands").selectExpr(
-        "id AS index_id", "band", "band_sig"
-    )
-    cand = (
-        qbands.join(ibands, ["band", "band_sig"])
-        .select("query_id", "index_id")
-        .dropDuplicates(["query_id", "index_id"])
-    )
-    isigs = spark.read.parquet(f"{path}/signatures").selectExpr(
-        "id AS index_id", "sig AS sig_i"
-    )
-    qs = qsigs.selectExpr("id AS query_id", "sig AS sig_q")
-    est = (
-        "round(cast(size(filter(zip_with(sig_q, sig_i, (x, y) -> x = y), v -> v))"
-        f" as double) / {float(num_hashes)}, 4)"
-    )
-    return (
-        cand.join(qs, "query_id")
-        .join(isigs, "index_id")
-        .selectExpr("query_id", "index_id", f"{est} AS jaccard_est")
-        .where(f"jaccard_est >= {float(threshold)}")
-    )
-
-
-def minhash_index_append(
-    new_docs: DataFrame, text_col: str, id_col: str, path: str,
-    if_exists: str = "error",
-) -> None:
-    """Add a batch to a persisted MinHash index (no rebuild): signatures
-    and bands computed with the INDEX's pinned parameters and appended.
-    Same unique-id contract as ivfpq_append_batch: ``'error'`` raises on
-    overlap with indexed ids, ``'skip'`` anti-joins them out so re-runs
-    are idempotent; the check scans only the id column of the signature
-    files (parquet column pruning — never the 64-long arrays)."""
-    if if_exists not in ("error", "skip"):
-        raise ValueError(f"if_exists must be 'error' or 'skip', got {if_exists!r}")
-    spark = new_docs.sparkSession
-    num_hashes, bands, shingle_k, hash_family = _minhash_index_meta(spark, path)
-    sigs = minhash_signatures_oph(
-        new_docs, text_col, id_col, num_hashes, shingle_k, hash_family
-    )
-    existing = spark.read.parquet(f"{path}/signatures").select("id")
-    if if_exists == "error":
-        dup = existing.join(F.broadcast(sigs.select("id")), "id").first()
-        if dup is not None:
-            raise ValueError(
-                f"minhash_index_append: id {dup.id!r} already present in the "
-                f"index at {path} (pass if_exists='skip' for idempotent re-runs)"
-            )
-    else:
-        sigs = sigs.join(existing, "id", "left_anti")
-    sigs = sigs.persist()
-    sigs.write.mode("append").parquet(f"{path}/signatures")
-    sigs.selectExpr(
-        "id", f"explode(array({_band_projection(num_hashes, bands, hash_family)})) AS bk"
-    ).selectExpr("id", "bk.band AS band", "bk.band_sig AS band_sig").write.mode(
-        "append"
-    ).partitionBy("band").parquet(f"{path}/bands")
-    sigs.unpersist()

@@ -7,10 +7,12 @@ as an opaque ``binary`` column next to typed metadata, and decode /
 feature-extract / resize / frame-sample run as Arrow-batched Python over
 ``mapInPandas``.
 
-Because the real codec libraries (PIL, cv2, librosa) are not in this
-container, actual decoding is STUBBED (``decode_image_real`` raises
-``NotImplementedError``).  Everything Spark-side is real and tested via a
-deterministic fake container format:
+The real codec libraries (PIL, cv2, librosa) are not engine
+dependencies, so no real decoding is wired in: the ``parse`` functions
+inside the ``decode_*_meta`` operators are the swap point for one, with
+the same binary-in, typed-struct-out ``mapInPandas`` contract.
+Everything Spark-side is real and tested via a deterministic fake
+container format:
 
     FIMG | width:int32be | height:int32be | channels:u8 | 8 px bytes
     FVID | n_frames:int32be | fps:u8 | width:int32be | height:int32be
@@ -340,27 +342,6 @@ def sample_frames(videos: DataFrame, every: int = 10) -> DataFrame:
         "doc_id",
         F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every))).alias("frame_idx"),
     )
-
-
-# --- real decoders: stubbed (libs not in container) ------------------------
-
-
-def decode_image_real(payload: bytes) -> "object":
-    """Real image decode via PIL — STUB: PIL is not installed here.
-
-    The Spark-side contract (binary in, typed struct out through
-    ``IMAGE_META_SCHEMA``-shaped mapInPandas) is identical to the fake
-    decoder above; swap ``parse`` internals when the library exists.
-    """
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "real image decoding requires PIL, which is not available in "
-            "this environment; use decode_image_meta (fake container) for "
-            "the plumbing path"
-        ) from e
-    raise NotImplementedError("wire PIL decode here when available")
 
 
 PHASH_SCHEMA = T.StructType(

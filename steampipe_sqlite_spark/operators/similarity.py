@@ -509,8 +509,9 @@ def ivf_build_index(
     # their raw corpus id: _assign_cells_gemm labels cells by argmax
     # position, and the query side probes by the saved id — the two must
     # be the same labeling even when the first-n_cells corpus ids are
-    # sparse (found by the ivfpq append invariant test: an even-id half
-    # corpus yields centroid ids {0, 2} but cell labels {0, 1}).
+    # sparse (an even-id half corpus yields centroid ids {0, 2} but cell
+    # labels {0, 1}; pinned by the IVF-PQ build's
+    # test_sparse_id_build_then_full_probe_is_exact).
     c.sparkSession.createDataFrame(
         [(pos, list(r.v), r.nrm) for pos, r in enumerate(cent_rows)],
         "id long, v array<float>, nrm double",
@@ -593,12 +594,12 @@ def _pq_subvectors(
     df: DataFrame, vec_col: str, id_col: str, m: int, d_sub: int
 ) -> DataFrame:
     """Explode each vector into its m contiguous d_sub-wide subvectors:
-    (id, m, sv, svv).  Single-sourced — train, encode, LUT, and append
-    all split the SAME way (a drifted copy here is exactly the
-    labeling-desync class the round-5 index bugs came from).  The unused
-    ``extra`` passthrough column and its fragile ' AS '-split alias
-    parsing were dropped (ADVICE r5) — all four callers split on id
-    alone and join any extra columns back by id."""
+    (id, m, sv, svv) — the codebook trainer's split.  _pq_encode and
+    _pq_luts inline the SAME ``slice(v, j * d_sub + 1, d_sub)`` (a
+    drifted copy is exactly the labeling-desync class the round-5 index
+    bugs came from).  The unused ``extra`` passthrough column and its
+    fragile ' AS '-split alias parsing were dropped (ADVICE r5) — the
+    caller splits on id alone and joins any extra columns back by id."""
     return (
         df.selectExpr(
             f"{id_col} AS id",
@@ -616,7 +617,7 @@ def _pq_subvectors(
 
 def _pq_params(books: DataFrame) -> tuple[int, int]:
     """Recover (m, d_sub) from a codebook relation — the saved books are
-    the source of truth for query/append paths; trusting caller-supplied
+    the source of truth for the query path; trusting caller-supplied
     defaults silently corrupts results on a mismatch (zip_with pads with
     null -> NULL scores -> arbitrary shortlist, no error)."""
     row = books.selectExpr(
@@ -769,8 +770,7 @@ def pq_codebooks(
     # (element_at(lut_row, code+1)) is positional — it is only correct if
     # cid == rank.  Renumbering by rank preserves every tie-break
     # downstream (rank is monotone in cid) and makes codes dense by
-    # construction, so appended batches encoded against the SAVED books
-    # stay consistent too.  Found by the ivfpq append invariant test:
+    # construction.  Pinned by test_sparse_id_build_then_full_probe_is_exact:
     # building on the even-id half corpus left 8 sparse cids {0,2,..,14}
     # under a 16-wide positional lookup.
     return sub.groupBy("m").applyInPandas(
@@ -1236,70 +1236,6 @@ def ivfpq_query_index(
         "row_number() OVER (PARTITION BY query_id"
         " ORDER BY cosine DESC, neighbor_id ASC) AS rank",
     ).where(f"rank <= {int(k)}")
-
-
-def ivfpq_append_batch(
-    corpus_batch: DataFrame, vec_col: str, id_col: str, path: str,
-    if_exists: str = "error",
-) -> None:
-    """Incrementally add a batch of vectors to a persisted IVF-PQ index
-    WITHOUT retraining: the saved centroids and codebooks are the frozen
-    quantizers (the production contract — retraining would re-key every
-    existing cell), the new rows are assigned + encoded against them and
-    appended to the hive cell partitions.
-
-    Ids must be unique across the index (duplicates would surface twice
-    in every shortlist).  The guard is enforced, not documented away
-    (ADVICE r5): ``if_exists='error'`` (default) raises on any overlap
-    with ids already in the index; ``'skip'`` anti-joins them out so a
-    re-run of the same batch is idempotent.  The check reads ONLY the
-    hive cell partitions the batch lands in (partition-pruned id scan),
-    never the whole index — so its cost tracks the batch, not the
-    corpus.
-
-    Scale shape: identical to the build's encode pass but over the batch
-    only — one broadcast of the frozen quantizers, no touch of existing
-    index files (parquet append creates new files inside the matching
-    cell directories)."""
-    if if_exists not in ("error", "skip"):
-        raise ValueError(f"if_exists must be 'error' or 'skip', got {if_exists!r}")
-    spark = corpus_batch.sparkSession
-    cent_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r.id
-    )
-    books = spark.read.parquet(f"{path}/codebooks")
-    # (m, d_sub) come from the SAVED books — the frozen quantizers are the
-    # source of truth; a caller-supplied mismatch would silently NULL
-    # every ADC score (zip_with pads the shorter array)
-    m, d_sub = _pq_params(books)
-    c = _prep(corpus_batch, vec_col, id_col)
-    # map-only encode against the frozen books (r15) — same deletion of
-    # the exploded assign/groupBy/join-back as the build path
-    rows = _pq_encode(_assign_cells_gemm(c, cent_rows), books, m, d_sub).select(
-        "id", "codes", "nrm", "v", "cell"
-    )
-    # Overlap guard: prune the existing index to the batch's target cells
-    # (metadata-sized centroid count, so the IN-list is bounded), then
-    # broadcast-join on id.  Deterministic assignment means a duplicate id
-    # lands in the SAME cell it already occupies — pruning loses nothing.
-    target_cells = [r.cell for r in rows.select("cell").distinct().collect()]
-    existing = (
-        spark.read.parquet(f"{path}/cells")
-        .where(F.col("cell").isin(target_cells))
-        .select("id")
-    )
-    if if_exists == "error":
-        # the incremental batch is the small side — broadcast ITS ids at
-        # the pruned index scan, never the other way around
-        dup = existing.join(F.broadcast(rows.select("id")), "id").first()
-        if dup is not None:
-            raise ValueError(
-                f"ivfpq_append_batch: id {dup.id!r} already present in the "
-                f"index at {path} (pass if_exists='skip' for idempotent re-runs)"
-            )
-    else:
-        rows = rows.join(existing, "id", "left_anti")
-    rows.write.mode("append").partitionBy("cell").parquet(f"{path}/cells")
 
 
 def random_projection(

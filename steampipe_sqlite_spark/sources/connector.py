@@ -114,9 +114,6 @@ class TableSchema:
                 return c
         return None
 
-    def key_columns(self) -> list[ColumnDef]:
-        return [c for c in self.columns if c.require is not None]
-
     def required_key_columns(self) -> list[ColumnDef]:
         return [c for c in self.columns if c.require == REQUIRED]
 

@@ -325,62 +325,3 @@ def enrich_with_dim(
     return events.join(
         F.broadcast(dim), events[left] == dim[right], "inner"
     )
-
-
-def upsert_sink(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-):
-    """Exactly-once keyed upsert sink via ``foreachBatch``: each
-    micro-batch lands in a hive partition named by its batch id with
-    OVERWRITE semantics, so a replayed batch (failure → restart from
-    checkpoint re-delivers the last uncommitted batch) rewrites the SAME
-    partition instead of duplicating rows — the standard idempotent-
-    foreachBatch pattern for stores without transactional MERGE.
-
-    The materialized state is read back with :func:`read_upserted`
-    (latest-wins compaction over (_batch, original order)).  Returns the
-    StreamingQuery; caller awaits termination.
-
-    Scale shape: each batch write touches only its own partition
-    directory; the log grows by batch count, and `read_upserted`'s
-    compaction is ONE hash aggregate (temporal.latest_by_key) — run it
-    periodically to fold the log into a compacted snapshot if batch
-    count grows unbounded.
-    """
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        (
-            bdf.withColumn("_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(f"{path}/log")
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_upserted(
-    spark: SparkSession,
-    path: str,
-    key_cols: list[str],
-    order_cols: list[str],
-    payload_cols: list[str],
-) -> DataFrame:
-    """Current state of an :func:`upsert_sink` log: latest record per key,
-    ordered by (_batch, *order_cols) so later micro-batches win and ties
-    within a batch resolve by the caller's order columns.  One hash
-    aggregate (max_by struct) — no window, no sort of the full log."""
-    from steampipe_sqlite_spark.operators.temporal import latest_by_key
-
-    log = spark.read.parquet(f"{path}/log")
-    return latest_by_key(
-        log, key_cols, ["_batch", *order_cols], payload_cols
-    )

@@ -15,7 +15,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from steampipe_sqlite_spark.functions.text import char_shingles, word_ngrams
+from steampipe_sqlite_spark.functions.text import word_ngrams
 from steampipe_sqlite_spark.functions.vectors import normalize, quantize_int8
 from steampipe_sqlite_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -56,22 +56,6 @@ def _ref_ngrams(s, n):
     return out
 
 
-def _ref_shingles(s, k):
-    if s is None:
-        # NULL text: length(NULL)=NULL → one position, substring(NULL)=NULL
-        # → [None]; identical to the pre-r14 unbound form
-        return [None]
-    norm = _norm(s)
-    count = max(len(norm) - (k - 1), 1)
-    out, seen = [], set()
-    for i in range(count):
-        g = norm[i : i + k]
-        if g not in seen:
-            seen.add(g)
-            out.append(g)
-    return out
-
-
 @pytest.fixture(scope="module")
 def text_df(spark):
     return spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)], "id int, t string")
@@ -81,12 +65,6 @@ def test_word_ngrams_matches_python_reference(text_df):
     rows = text_df.select("id", word_ngrams(F.col("t"), 3).alias("g")).collect()
     for r in rows:
         assert r.g == _ref_ngrams(TEXTS[r.id], 3), TEXTS[r.id]
-
-
-def test_char_shingles_match_python_reference(text_df):
-    rows = text_df.select("id", char_shingles(F.col("t"), 5).alias("g")).collect()
-    for r in rows:
-        assert r.g == _ref_shingles(TEXTS[r.id], 5), TEXTS[r.id]
 
 
 VECS = [

@@ -857,15 +857,16 @@ class TestIvfPqIndexPersistence:
         }
         assert len(bf & got) / len(bf) >= 0.5
 
-    def test_append_batch_then_full_probe_is_exact(self, spark, tmp_path_factory):
-        """Incremental maintenance invariant: build on half the corpus,
-        append the other half (frozen quantizers), then a full-probe query
-        with shortlist >= corpus must equal exact brute force over the
-        WHOLE corpus — the ADC stage only generates candidates, the refine
-        stage is exact, so with nothing pruned the index adds no error."""
+    def test_sparse_id_build_then_full_probe_is_exact(self, spark, tmp_path_factory):
+        """Build-path invariant on a sparse-id corpus: index only the
+        even-vec_id half (its first n_cells ids are {0, 2}, and the PQ
+        init ids are even), then a full-probe query with shortlist >= the
+        half must equal exact brute force over the half — the ADC stage
+        only generates candidates, the refine stage is exact, so with
+        nothing pruned the index adds no error.  Pins both renumberings
+        of the build: centroids saved by position, dense codeword ids."""
         from steampipe_sqlite_spark.operators.similarity import (
             brute_force_topk,
-            ivfpq_append_batch,
             ivfpq_build_index,
             ivfpq_query_index,
         )
@@ -873,46 +874,16 @@ class TestIvfPqIndexPersistence:
         from pyspark.sql import functions as F
 
         emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        first = emb.filter("vec_id % 2 = 0")
-        second = emb.filter("vec_id % 2 = 1")
-        path = str(tmp_path_factory.mktemp("ivfpq_app")) + "/idx"
-        ivfpq_build_index(first, "embedding", "vec_id", path, n_cells=4)
-        ivfpq_append_batch(second, "embedding", "vec_id", path)
-        queries = emb.filter(F.col("vec_id") < 5)
-        n = emb.count()
+        half = emb.filter("vec_id % 2 = 0")
+        path = str(tmp_path_factory.mktemp("ivfpq_sparse")) + "/idx"
+        ivfpq_build_index(half, "embedding", "vec_id", path, n_cells=4)
+        queries = half.filter(F.col("vec_id") < 10)
         got = ivfpq_query_index(
             spark, path, queries, "embedding", "vec_id",
-            k=5, nprobe=4, shortlist=n,
+            k=5, nprobe=4, shortlist=half.count(),
         ).collect()
-        bf = brute_force_topk(emb, queries, "embedding", "vec_id", k=5).collect()
+        bf = brute_force_topk(half, queries, "embedding", "vec_id", k=5).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, bf))
-
-    def test_append_duplicate_ids_guarded(self, spark, tmp_path_factory):
-        """ADVICE r5: re-appending rows whose ids are already in the index
-        must fail loudly by default (duplicates would surface twice in
-        every shortlist) and be a no-op under if_exists='skip' — the
-        idempotent re-run contract."""
-        import pytest
-
-        from steampipe_sqlite_spark.operators.similarity import (
-            ivfpq_append_batch,
-            ivfpq_build_index,
-        )
-        from steampipe_sqlite_spark.tables import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        first = emb.filter("vec_id % 2 = 0")
-        second = emb.filter("vec_id % 2 = 1")
-        path = str(tmp_path_factory.mktemp("ivfpq_dup")) + "/idx"
-        ivfpq_build_index(first, "embedding", "vec_id", path, n_cells=4)
-        ivfpq_append_batch(second, "embedding", "vec_id", path)
-        with pytest.raises(ValueError, match="already present"):
-            ivfpq_append_batch(second, "embedding", "vec_id", path)
-        before = spark.read.parquet(f"{path}/cells").count()
-        ivfpq_append_batch(second, "embedding", "vec_id", path, if_exists="skip")
-        after = spark.read.parquet(f"{path}/cells").count()
-        assert after == before, "skip re-run must not duplicate rows"
-        assert after == emb.count()
 
     def test_single_candidate_pool_still_emits_step1(self, spark):
         """A 2-vector corpus leaves each query exactly ONE candidate and
@@ -1099,8 +1070,9 @@ class TestCountMinSketch:
 
     def test_merged_halves_equal_whole(self, spark):
         """The mergeability contract: sketch(A) + sketch(B) folded per
-        cell equals sketch(A ∪ B) exactly — counts are linear."""
-        from steampipe_sqlite_spark.functions.sketches import cms_build, cms_merge
+        cell (union, then SUM per (row, pos)) equals sketch(A ∪ B)
+        exactly — counts are linear."""
+        from steampipe_sqlite_spark.functions.sketches import cms_build
         from steampipe_sqlite_spark.functions.text import normalize_sql
         from steampipe_sqlite_spark.tables import load_table
 
@@ -1109,9 +1081,11 @@ class TestCountMinSketch:
             f"explode(split({normalize_sql('text')}, ' ')) AS tok"
         )
         whole = cms_build(toks(docs), "tok")
-        merged = cms_merge(
-            cms_build(toks(docs.where("doc_id % 2 = 0")), "tok"),
-            cms_build(toks(docs.where("doc_id % 2 = 1")), "tok"),
+        merged = (
+            cms_build(toks(docs.where("doc_id % 2 = 0")), "tok")
+            .unionByName(cms_build(toks(docs.where("doc_id % 2 = 1")), "tok"))
+            .groupBy("row", "pos")
+            .agg(F.sum("c").cast("long").alias("c"))
         )
         assert sorted(map(tuple, whole.collect())) == sorted(map(tuple, merged.collect()))
 
@@ -1161,88 +1135,6 @@ def test_kmv_jaccard_accuracy_and_merge_property(spark):
     assert sorted(r.h for r in merged_direct.collect()) == sorted(
         r.h for r in re_min.collect()
     )
-
-
-class TestMinhashIndexPersistence:
-    """Persisted MinHash-LSH dedup index: the incremental-ingest shape
-    (each new batch dedups against everything already kept, nothing
-    recomputed).  Parity anchor: querying the other half against a
-    half-built index must equal the CROSS pairs of the in-memory
-    minhash_lsh_pairs over the full corpus — same signatures, same
-    banding (single-sourced _band_projection), same scoring."""
-
-    @staticmethod
-    def _halves(spark):
-        from steampipe_sqlite_spark.tables import load_table
-
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        return docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1"), docs
-
-    def test_query_matches_inmemory_cross_pairs(self, spark, tmp_path_factory):
-        from steampipe_sqlite_spark.operators.dedup import (
-            minhash_index_build,
-            minhash_index_query,
-            minhash_lsh_pairs,
-        )
-
-        first, second, docs = self._halves(spark)
-        path = str(tmp_path_factory.mktemp("mh_idx")) + "/idx"
-        minhash_index_build(first, "text", "doc_id", path)
-        got = {
-            (r.query_id, r.index_id): r.jaccard_est
-            for r in minhash_index_query(
-                spark, path, second, "text", "doc_id", threshold=0.5
-            ).collect()
-        }
-        full = minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5).collect()
-        # cross pairs only, re-keyed (query=odd id, index=even id)
-        expected = {}
-        for r in full:
-            if r.id_a % 2 != r.id_b % 2:
-                q, i = (r.id_a, r.id_b) if r.id_a % 2 == 1 else (r.id_b, r.id_a)
-                expected[(q, i)] = r.jaccard_est
-        assert got == expected
-        assert got, "fixture must produce at least one cross near-dup pair"
-
-    def test_append_then_query_equals_full_build(self, spark, tmp_path_factory):
-        from steampipe_sqlite_spark.operators.dedup import (
-            minhash_index_append,
-            minhash_index_build,
-            minhash_index_query,
-        )
-
-        first, second, docs = self._halves(spark)
-        probe = docs.filter("doc_id < 20")
-        inc = str(tmp_path_factory.mktemp("mh_inc")) + "/idx"
-        minhash_index_build(first, "text", "doc_id", inc)
-        minhash_index_append(second, "text", "doc_id", inc)
-        full = str(tmp_path_factory.mktemp("mh_full")) + "/idx"
-        minhash_index_build(docs, "text", "doc_id", full)
-        q_inc = sorted(
-            map(tuple, minhash_index_query(spark, inc, probe, "text", "doc_id").collect())
-        )
-        q_full = sorted(
-            map(tuple, minhash_index_query(spark, full, probe, "text", "doc_id").collect())
-        )
-        assert q_inc == q_full
-
-    def test_append_duplicate_ids_guarded(self, spark, tmp_path_factory):
-        import pytest
-
-        from steampipe_sqlite_spark.operators.dedup import (
-            minhash_index_append,
-            minhash_index_build,
-        )
-
-        first, second, _ = self._halves(spark)
-        path = str(tmp_path_factory.mktemp("mh_dup")) + "/idx"
-        minhash_index_build(first, "text", "doc_id", path)
-        minhash_index_append(second, "text", "doc_id", path)
-        with pytest.raises(ValueError, match="already present"):
-            minhash_index_append(second, "text", "doc_id", path)
-        before = spark.read.parquet(f"{path}/signatures").count()
-        minhash_index_append(second, "text", "doc_id", path, if_exists="skip")
-        assert spark.read.parquet(f"{path}/signatures").count() == before
 
 
 class TestSoftDedupWeights:

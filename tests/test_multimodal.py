@@ -5,7 +5,6 @@ import pytest
 from steampipe_sqlite_spark.operators.multimodal import (
     decode_audio_meta,
     decode_image_meta,
-    decode_image_real,
     decode_video_meta,
     resize_plan,
     sample_frames,
@@ -63,11 +62,6 @@ def test_frame_sampling_stride(media):
     per = {r.doc_id: r.n for r in frames.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()}
     expected = {r.doc_id: (r.n_frames - 1) // 10 + 1 for r in vids.collect()}
     assert per == expected
-
-
-def test_real_decoder_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"\x89PNG")
 
 
 class TestImagePhash:

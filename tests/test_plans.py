@@ -117,20 +117,6 @@ def test_multimodal_decode_is_shuffle_free(spark):
     assert "Exchange" not in p, "decode path should not shuffle"
 
 
-def test_minhash_signature_shuffle_carries_only_doc_rows(spark):
-    from steampipe_sqlite_spark.operators.dedup import minhash_signatures
-
-    docs = load_table(spark, SF_DIR, "documents")
-    p = plan_text(minhash_signatures(docs, "text", "doc_id"))
-    assert "partial_min" in p, "minhash min-fold must aggregate map-side"
-    # two shuffles: the tiny doc-spread repartition (single-file fixture
-    # parallelization, see dedup._spread) + the per-doc min fold
-    # upper bound, not ==: the invariant is "no exchange beyond spread +
-    # min fold"; exact node counts pin Spark's plan rendering (ADVICE r14)
-    assert p.count("Exchange") <= 2, p[:1500]
-    assert "roundrobin" in p.lower(), "spread repartition missing"
-
-
 def test_oph_signatures_one_exchange_no_object_agg(spark):
     """Optimization r14: the OPH bucket pivot runs as 64 conditional mins
     inside ONE codegen'd hash aggregate — one id exchange (plus the tiny

@@ -282,70 +282,6 @@ def test_cdc_latest_state_survives_micro_batches(spark, tmp_path):
     assert spark.table("cdc_mb").count() > expected.count()
 
 
-def test_upsert_sink_idempotent_and_latest_wins(spark, tmp_path):
-    """The idempotent-foreachBatch contract: (a) the multi-batch stream's
-    upserted state equals the batch latest-by-key ground truth; (b)
-    REPLAYING a batch (simulated by rewriting its partition, the exact
-    crash-recovery path) leaves the state bit-identical — overwrite of
-    the batch partition, never an append dup."""
-    from steampipe_sqlite_spark.operators.temporal import latest_by_key
-    from steampipe_sqlite_spark.streaming.jobs import read_upserted, upsert_sink
-
-    path, events = _slice_events(spark, tmp_path)
-    sink = str(tmp_path / "upsert")
-    ckpt = str(tmp_path / "ckpt")
-    stream = _stream_slices(spark, path).select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    q = upsert_sink(stream, sink, ckpt)
-    q.awaitTermination()
-
-    got = read_upserted(
-        spark, sink, ["user_id"], ["ts", "event_id"],
-        ["event_id", "event_type", "ts", "value"],
-    )
-    # ground truth must respect ARRIVAL order (later micro-batch wins,
-    # then (ts, event_id) within a batch) — the slices are cut by
-    # event_id % 3, not by time, so batch precedence is part of the
-    # upsert semantics being tested, exactly as in a real CDC stream
-    # where arrival order IS version order
-    want = latest_by_key(
-        events.select(
-            "event_id", "user_id", "event_type", "ts", "value",
-            F.pmod(F.col("event_id"), F.lit(3)).alias("_arrival"),
-        ),
-        ["user_id"], ["_arrival", "ts", "event_id"],
-        ["event_id", "event_type", "ts", "value"],
-    )
-    as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    assert as_set(got) == as_set(want)
-
-    # replay batch 0: rewrite its partition the way a restarted query's
-    # re-delivered foreachBatch would — state must not change.
-    # Materialize the batch FIRST (collect → local relation): the lazy
-    # plan would otherwise read the very files the overwrite deletes.
-    log = spark.read.parquet(f"{sink}/log")
-    log_count = log.count()
-    rows0 = log.where("_batch = 0").drop("_batch").collect()
-    batch0 = spark.createDataFrame(
-        rows0, log.drop("_batch").schema
-    )
-    (
-        batch0.withColumn("_batch", F.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch")
-        .parquet(f"{sink}/log")
-    )
-    again = read_upserted(
-        spark, sink, ["user_id"], ["ts", "event_id"],
-        ["event_id", "event_type", "ts", "value"],
-    )
-    assert as_set(again) == as_set(want)
-    # and the log row count is unchanged (no duplicate batch rows)
-    assert spark.read.parquet(f"{sink}/log").count() == log_count
-
-
 def test_rocksdb_state_store_matches_batch(spark, tmp_path):
     """The production state-store config: the same watermarked tumbling
     aggregation run with RocksDBStateStoreProvider (state spills to disk
@@ -380,43 +316,3 @@ def test_rocksdb_state_store_matches_batch(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-
-
-def test_observe_quality_batch_counts_without_extra_pass(spark):
-    """observe() metrics must match a hand aggregation while the observed
-    frame's rows are untouched — quality counters for free on the same
-    job."""
-    from steampipe_sqlite_spark.operators.observability import observe_quality
-
-    events = load_table(spark, SF_DIR, "events")
-    observed, obs = observe_quality(events, ["user_id", "props"])
-    n = observed.count()  # the ONLY action — metrics ride this job
-    m = obs.get
-    assert m["n_rows"] == n
-    assert m["n_null_user_id"] == events.where("user_id IS NULL").count()
-    assert m["n_null_props"] == events.where("props IS NULL").count()
-
-
-def test_observe_metrics_surface_per_microbatch(spark, tmp_path):
-    """The same observe() call on a STREAMING frame lands its counters on
-    StreamingQueryProgress.observedMetrics — per-micro-batch quality
-    telemetry with no side queries."""
-    from steampipe_sqlite_spark.operators.observability import quality_metrics
-
-    path, events = _slice_events(spark, tmp_path)
-    stream = _stream_slices(spark, path).observe(
-        "quality", *quality_metrics(["user_id"])
-    )
-    q = (
-        stream.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows_seen = 0
-    for p in q.recentProgress:
-        om = p.observedMetrics.get("quality")
-        if om is not None:
-            rows_seen += om["n_rows"]
-            assert om["n_null_user_id"] == 0
-    assert rows_seen == events.count()

@@ -1,10 +1,11 @@
-"""Anti-rot for test-only helpers: a public top-level function in
-``operators/``, ``functions/`` or ``sources/`` that no code outside
-``tests/`` references is either a library entry point kept on purpose
-(listed below with its reason) or dead code to delete.  AST only: a
-reference is a name, attribute or import of the function in the engine,
-``tools/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``;
-docstrings and comments do not count."""
+"""Anti-rot for test-only helpers: a public top-level function anywhere in
+the package that no code outside ``tests/`` references is either a library
+entry point kept on purpose (listed below with its reason) or dead code to
+delete.  AST only: a reference is a name, attribute or import of the
+function in the engine, ``tools/``, ``perfbench/``, ``bench.py`` or
+``__spark_entry__.py``; docstrings and comments do not count.  A decorated
+function counts as referenced: its decorator registers it (the corpus
+plans, under ``@query``)."""
 
 import ast
 from pathlib import Path
@@ -14,28 +15,22 @@ PACKAGE = ROOT / "steampipe_sqlite_spark"
 
 # function -> why it stays with only test callers
 TEST_ONLY_OK = {
-    "char_shingles": "character k-gram shingler, a public text primitive",
-    "cms_merge": "count-min sketch merge, the sketch API's combine step",
-    "decode_image_real": "PIL decoder stub, the swap point when PIL exists",
-    "ivfpq_append_batch": "incremental IVF-PQ index append API",
     "json_replace": "SQLite json_replace column function, exported in __all__",
     "json_tree_udtf": "SQLite json_tree as a Python UDTF, exported in __all__",
-    "minhash_index_append": "incremental minhash index append API",
-    "minhash_index_build": "persisted minhash index build API",
-    "minhash_index_query": "persisted minhash index query API",
-    "minhash_signatures": "classic k-hash minhash, beside the one-permutation form",
-    "observe_quality": "batch data-quality observation API",
-    "stopword_hits": "per-language stopword counter, a public text primitive",
+    "stopword_hits": "naive per-language stopword counter that lang_id is pinned against",
 }
 
 
 def _public_functions() -> set[str]:
     names = set()
-    for sub in ("operators", "functions", "sources"):
-        for path in (PACKAGE / sub).glob("*.py"):
-            for node in ast.parse(path.read_text()).body:
-                if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-                    names.add(node.name)
+    for path in PACKAGE.rglob("*.py"):
+        for node in ast.parse(path.read_text()).body:
+            if (
+                isinstance(node, ast.FunctionDef)
+                and not node.name.startswith("_")
+                and not node.decorator_list
+            ):
+                names.add(node.name)
     return names
 
 

@@ -22,7 +22,6 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from steampipe_sqlite_spark.sources.connector import STATIC, Schema
 from steampipe_sqlite_spark.sources.datasource import (
@@ -131,10 +130,7 @@ class Engine:
         if schema_obj is not None and schema_obj.mode == STATIC:
             tschema = schema_obj.table(table)
             if tschema is not None:
-                fields = tschema.spark_schema().fields
-                if columns is not None:
-                    fields = [f for f in fields if f.name in set(columns)]
-                reader = reader.schema(T.StructType(fields))
+                reader = reader.schema(tschema.spark_schema(columns))
         return reader.load()
 
     def stream(

@@ -105,14 +105,11 @@ class ChaosConnector(Connector):
                 ]
         return [Partition(0)]
 
-    # -- row generators ----------------------------------------------------
+    # -- row generators: raw rows; rows_to_batches applies quals and limit
 
-    def _all_types_rows(self, quals: list[Qual], limit: int | None):
-        n = 0
-        if limit == 0:  # LIMIT 0 fetches nothing (yield-then-check misses it)
-            return
+    def _all_types_rows(self):
         for i in range(self.n_rows):
-            row = {
+            yield {
                 "id": i,
                 "flag": i % 2 == 0,
                 "score": i * 1.5,
@@ -124,14 +121,11 @@ class ChaosConnector(Connector):
                 "path": f"root.n{i % 10}.leaf{i}",
                 "maybe": None if i % 7 == 0 else f"v{i}",
             }
-            # advisory pushdown: honor quals when cheap, over-return is fine
-            if all(q.matches(row.get(q.column)) for q in quals):
-                yield row
-                n += 1
-                if limit is not None and n >= limit:
-                    return
 
-    def _keyed_rows(self, quals: list[Qual], limit: int | None):
+    def _keyed_rows(self, quals: list[Qual]):
+        """A plain function returning a generator, so its tenant gate
+        raises when ``execute`` starts, even at LIMIT 0 (where
+        rows_to_batches pulls no row)."""
         tenants = [q for q in quals if q.column == "tenant" and q.op in ("=", "in")]
         # the required key column drives generation — the plugin-style
         # behavior where the qual IS the API call parameter.  When the
@@ -149,41 +143,21 @@ class ChaosConnector(Connector):
                 "keyed: the 'tenant' key column requires an '=' or IN qual "
                 "(the connector cannot enumerate tenants)"
             )
-        n = 0
-        if limit == 0:  # LIMIT 0 fetches nothing (yield-then-check misses it)
-            return
-        for tenant in sorted(wanted):
-            for i in range(self.n_rows):
-                row = {
-                    "tenant": tenant,
-                    "kind": f"kind{i % 3}",
-                    "seq": i,
-                    "payload": f"{tenant}:{i}",
-                }
-                if all(q.matches(row.get(q.column)) for q in quals):
-                    yield row
-                    n += 1
-                    if limit is not None and n >= limit:
-                        return
+        return (
+            {"tenant": tenant, "kind": f"kind{i % 3}", "seq": i, "payload": f"{tenant}:{i}"}
+            for tenant in sorted(wanted)
+            for i in range(self.n_rows)
+        )
 
-    def _flaky_rows(self, quals: list[Qual], limit: int | None):
-        cfg = parse_config(self.config)
+    def _flaky_rows(self, cfg: dict):
         error_at = cfg.get("error_at_row")
         delay_ms = cfg.get("delay_ms", 0)
-        n = 0
-        if limit == 0:  # LIMIT 0 fetches nothing (yield-then-check misses it)
-            return
         for i in range(self.n_rows):
             if error_at is not None and i == error_at:
                 raise RuntimeError(f"chaos: injected error at row {i}")
             if delay_ms:
                 time.sleep(delay_ms / 1000)
-            row = {"id": i, "mode": "delay" if delay_ms else "ok"}
-            if all(q.matches(row.get(q.column)) for q in quals):
-                yield row
-                n += 1
-                if limit is not None and n >= limit:
-                    return
+            yield {"id": i, "mode": "delay" if delay_ms else "ok"}
 
     def execute(
         self,
@@ -215,20 +189,18 @@ class ChaosConnector(Connector):
         schema = self.get_schema().table(table)
         if schema is None:
             raise ValueError(f"unknown table {table!r}")
-        gen = {
-            "all_types": self._all_types_rows,
-            "keyed": self._keyed_rows,
-            "flaky": self._flaky_rows,
-        }[table]
         if partition is not None and "tenant" in partition.info:
             # IN fan-out: this partition reads exactly one tenant's rows
             quals = [q for q in quals if q.column != "tenant"] + [
                 Qual("tenant", "=", partition.info["tenant"])
             ]
-        arrow = schema.arrow_schema(columns)
-        names = set(arrow.names)
-        rows = ({k: v for k, v in r.items() if k in names} for r in gen(quals, limit))
-        yield from rows_to_batches(arrow, rows)
+        if table == "keyed":
+            rows = self._keyed_rows(quals)
+        elif table == "flaky":
+            rows = self._flaky_rows(parse_config(self.config))
+        else:
+            rows = self._all_types_rows()
+        yield from rows_to_batches(schema.arrow_schema(columns), rows, quals, limit)
 
 
 class DynamicConnector(Connector):
@@ -268,9 +240,6 @@ class DynamicConnector(Connector):
             raise ValueError(f"unknown table {table!r}")
 
         def rows():
-            n = 0
-            if limit == 0:  # LIMIT 0 fetches nothing (yield-then-check misses it)
-                return
             for i in range(self.n_rows):
                 row = {}
                 for c in schema.columns:
@@ -284,17 +253,9 @@ class DynamicConnector(Connector):
                         row[c.name] = _EPOCH + dt.timedelta(days=i)
                     else:
                         row[c.name] = f"{c.name}_{i}"
-                if all(q.matches(row.get(q.column)) for q in quals):
-                    yield row
-                    n += 1
-                    if limit is not None and n >= limit:
-                        return
+                yield row
 
-        arrow = schema.arrow_schema(columns)
-        names = set(arrow.names)
-        yield from rows_to_batches(
-            arrow, ({k: v for k, v in r.items() if k in names} for r in rows())
-        )
+        yield from rows_to_batches(schema.arrow_schema(columns), rows(), quals, limit)
 
 
 class ShardedConnector(Connector):
@@ -336,23 +297,9 @@ class ShardedConnector(Connector):
         shard = 0 if partition is None else partition.info["shard"]
         lo = shard * self.n_rows // self.n_shards
         hi = (shard + 1) * self.n_rows // self.n_shards
-        schema = self.get_schema().table(table)
-        arrow = schema.arrow_schema(columns)
-        names = set(arrow.names)
-
-        def rows():
-            n = 0
-            if limit == 0:
-                return
-            for i in range(lo, hi):
-                row = {"id": i, "shard": shard, "value": i * 0.25}
-                if all(q.matches(row.get(q.column)) for q in quals):
-                    yield {k: v for k, v in row.items() if k in names}
-                    n += 1
-                    if limit is not None and n >= limit:
-                        return
-
-        yield from rows_to_batches(arrow, rows())
+        arrow = self.get_schema().table(table).arrow_schema(columns)
+        rows = ({"id": i, "shard": shard, "value": i * 0.25} for i in range(lo, hi))
+        yield from rows_to_batches(arrow, rows, quals, limit)
 
 
 class FeedConnector(Connector):
@@ -392,9 +339,6 @@ class FeedConnector(Connector):
         return 1000
 
     def execute(self, table, quals, columns, limit, partition=None):
-        schema = self.get_schema().table(table)
-        arrow = schema.arrow_schema(columns)
-        names = set(arrow.names)
         lo, hi = 0, self._max_seq()
         for q in quals:  # seq-range quals tighten generation (the API call)
             if q.column == "seq" and isinstance(q.value, int):
@@ -407,20 +351,9 @@ class FeedConnector(Connector):
                 elif q.op == "<=":
                     hi = min(hi, q.value + 1)
 
-        def rows():
-            n = 0
-            if limit == 0:
-                return
-            for i in range(lo, hi):
-                row = {
-                    "seq": i,
-                    "ts": _EPOCH + dt.timedelta(minutes=i),
-                    "value": round(i * 0.5, 2),
-                }
-                if all(q.matches(row.get(q.column)) for q in quals):
-                    yield {k: v for k, v in row.items() if k in names}
-                    n += 1
-                    if limit is not None and n >= limit:
-                        return
-
-        yield from rows_to_batches(arrow, rows())
+        rows = (
+            {"seq": i, "ts": _EPOCH + dt.timedelta(minutes=i), "value": round(i * 0.5, 2)}
+            for i in range(lo, hi)
+        )
+        arrow = self.get_schema().table(table).arrow_schema(columns)
+        yield from rows_to_batches(arrow, rows, quals, limit)

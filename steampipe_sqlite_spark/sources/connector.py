@@ -22,9 +22,10 @@ from __future__ import annotations
 import datetime as dt
 import ipaddress
 from abc import ABC, abstractmethod
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable, Iterator, Sequence
 from dataclasses import dataclass, field
 from enum import Enum
+from itertools import islice
 from typing import Any
 
 import pyarrow as pa
@@ -117,14 +118,18 @@ class TableSchema:
     def required_key_columns(self) -> list[ColumnDef]:
         return [c for c in self.columns if c.require == REQUIRED]
 
-    def spark_schema(self) -> T.StructType:
+    def _narrow(self, columns: list[str] | None) -> list[ColumnDef]:
+        """The declared columns named in ``columns`` (all when None), in
+        declaration order: the one projection rule for both schemas."""
+        return [c for c in self.columns if columns is None or c.name in columns]
+
+    def spark_schema(self, columns: list[str] | None = None) -> T.StructType:
         return T.StructType(
-            [T.StructField(c.name, SPARK_TYPES[c.type], True) for c in self.columns]
+            [T.StructField(c.name, SPARK_TYPES[c.type], True) for c in self._narrow(columns)]
         )
 
     def arrow_schema(self, columns: list[str] | None = None) -> pa.Schema:
-        cols = self.columns if columns is None else [c for c in self.columns if c.name in columns]
-        return pa.schema([pa.field(c.name, ARROW_TYPES[c.type]) for c in cols])
+        return pa.schema([pa.field(c.name, ARROW_TYPES[c.type]) for c in self._narrow(columns)])
 
 
 STATIC = "static"
@@ -292,7 +297,10 @@ class Connector(ABC):
 
     Implementations must be picklable — readers ship to executor Python
     workers.  ``execute`` may over-return rows (pushdown is advisory); it
-    must never under-return.
+    must never under-return.  A row-producing connector yields raw dict
+    rows through ``rows_to_batches(schema, rows, quals, limit)``, which
+    applies the quals, the limit and the projection for it; a paged one
+    hands whole pages to ``pages_to_batches``.
 
     ``execute`` may run concurrently on threads of one process for
     distinct partitions of one scan: a Spark task walks its group of
@@ -363,19 +371,31 @@ class Connector(ABC):
 
 
 def rows_to_batches(
-    schema: pa.Schema, rows: Iterable[dict[str, Any]], batch_size: int = 4096
+    schema: pa.Schema,
+    rows: Iterable[dict[str, Any]],
+    quals: Sequence[Qual] = (),
+    limit: int | None = None,
+    batch_size: int = 4096,
 ) -> Iterator[pa.RecordBatch]:
-    """Helper for row-producing connectors: buffer dict-rows into Arrow
-    record batches (the reference is strictly 1 row per Next(),
-    /root/reference/cursor.go:99-115 — batching is our throughput fix)."""
-    buf: list[dict[str, Any]] = []
-    for row in rows:
-        buf.append(row)
-        if len(buf) >= batch_size:
-            yield _dicts_to_batch(schema, buf)
-            buf = []
-    if buf:
-        yield _dicts_to_batch(schema, buf)
+    """The advisory-pushdown loop every row-producing connector shares, so
+    a row generator only fetches.  Rows failing a qual are dropped
+    (``Qual.matches``; the engine's residual Filter still re-applies every
+    qual, Omit:false, reference table.go:126-129), and no row past
+    ``limit`` is pulled (the SDK's row stream owns the limit,
+    reference cursor.go:194-209), so LIMIT 0 pulls none.  Rows need
+    not be projected: _dicts_to_batch keeps only ``schema``'s fields.
+
+    The reference is strictly 1 row per Next()
+    (reference cursor.go:99-115); chunking rows into Arrow batches
+    is our throughput fix.  A check the generator must raise even at
+    LIMIT 0 (a required-qual gate) belongs in ``execute`` before this call:
+    at LIMIT 0 the generator body never runs."""
+    if quals:
+        rows = (r for r in rows if all(q.matches(r.get(q.column)) for q in quals))
+    if limit is not None:
+        rows = islice(rows, limit)
+    chunks = iter(lambda: list(islice(rows, batch_size)), [])
+    yield from pages_to_batches(schema, chunks, batch_size)
 
 
 def _dicts_to_batch(schema: pa.Schema, buf: list[dict[str, Any]]) -> pa.RecordBatch:

@@ -7,8 +7,8 @@ Config (JSON): {"paths": ["/abs/file.csv", ...], "header": true}
 One table per file (stem-named); column types inferred from the first data
 row (int → long, float → double, else string).  Stdlib csv only — no
 pandas dependency on the read path; rows stream through the same
-Arrow-batch pipeline as every other connector, and quals/limit are honored
-row-at-a-time (advisory pushdown; the engine re-filters).
+Arrow-batch pipeline as every other connector, and rows_to_batches honors
+quals/limit row-at-a-time (advisory pushdown; the engine re-filters).
 
 Note on scale: for big LOCAL csv/parquet data the right tool is Spark's
 native reader (tables.py) — this connector exists for reference parity
@@ -93,6 +93,24 @@ def _coerce(value: str, ctype: ColumnType):
     return value
 
 
+def _stem(path: str) -> str:
+    return os.path.splitext(os.path.basename(path))[0]
+
+
+def _file_table(path: str) -> TableSchema | None:
+    """The table one CSV file exposes, its types inferred over the first
+    _INFER_SAMPLE_ROWS rows; None for a file without a header row."""
+    with open(path, newline="") as fh:
+        reader = csv.reader(fh)
+        try:
+            header = next(reader)
+        except StopIteration:
+            return None
+        sample = [row for _, row in zip(range(_INFER_SAMPLE_ROWS), reader)]
+    types = _infer_columns(header, sample)
+    return TableSchema(_stem(path), tuple(ColumnDef(name, t) for name, t in zip(header, types)))
+
+
 class CsvConnector(Connector):
     """Dynamic-mode connector over local CSV files."""
 
@@ -104,25 +122,8 @@ class CsvConnector(Connector):
         return list(parse_config(self.config).get("paths", []))
 
     def get_schema(self) -> Schema:
-        tables = []
-        for path in self._paths():
-            with open(path, newline="") as fh:
-                reader = csv.reader(fh)
-                try:
-                    header = next(reader)
-                except StopIteration:
-                    continue
-                sample = [row for _, row in zip(range(_INFER_SAMPLE_ROWS), reader)]
-            types = _infer_columns(header, sample)
-            cols = tuple(ColumnDef(name, t) for name, t in zip(header, types))
-            stem = os.path.splitext(os.path.basename(path))[0]
-            tables.append(TableSchema(stem, cols))
+        tables = [t for t in map(_file_table, self._paths()) if t is not None]
         return Schema(tables=tuple(tables), mode=DYNAMIC)
-
-    def partitions(self, table: str, quals: list[Qual]) -> list[Partition]:
-        # one partition per file-table (files are the reference's unit);
-        # a huge file would be range-split here
-        return [Partition(0)]
 
     def execute(
         self,
@@ -132,28 +133,16 @@ class CsvConnector(Connector):
         limit: int | None,
         partition: Partition | None = None,
     ) -> Iterator[pa.RecordBatch]:
-        schema = self.get_schema().table(table)
+        # infer only the scanned file: get_schema() would sample every one
+        path = next((p for p in self._paths() if _stem(p) == table), None)
+        schema = None if path is None else _file_table(path)
         if schema is None:
             raise ValueError(f"unknown csv table {table!r}")
-        path = next(
-            p for p in self._paths() if os.path.splitext(os.path.basename(p))[0] == table
-        )
-        arrow = schema.arrow_schema(columns)
-        names = set(arrow.names)
         types = {c.name: c.type for c in schema.columns}
 
         def rows():
-            n = 0
-            if limit == 0:
-                return
             with open(path, newline="") as fh:
-                reader = csv.DictReader(fh)
-                for raw in reader:
-                    row = {k: _coerce(v, types[k]) for k, v in raw.items() if k in types}
-                    if all(q.matches(row.get(q.column)) for q in quals):
-                        yield {k: v for k, v in row.items() if k in names}
-                        n += 1
-                        if limit is not None and n >= limit:
-                            return
+                for raw in csv.DictReader(fh):
+                    yield {k: _coerce(v, types[k]) for k, v in raw.items() if k in types}
 
-        yield from rows_to_batches(arrow, rows())
+        yield from rows_to_batches(schema.arrow_schema(columns), rows(), quals, limit)

@@ -469,17 +469,13 @@ class ConnectorDataSource(DataSource):
         self.table = table
 
     def schema(self) -> StructType:
+        # projection pushdown hint (B2 analog): the scan declares only the
+        # requested columns, so read() yields narrow batches and the
+        # connector fetches less.  The Python DS API has no engine-driven
+        # pushColumns; narrowing is requested explicitly via
+        # engine.table(columns=[...]).
         cols_opt = self.options.get("columns")
-        if cols_opt:
-            # projection pushdown hint (B2 analog): the scan declares only
-            # the requested columns, so read() yields narrow batches and
-            # the connector fetches less.  The Python DS API has no
-            # engine-driven pushColumns; narrowing is requested explicitly
-            # via engine.table(columns=[...]).
-            wanted = json.loads(cols_opt)
-            full = self.table.spark_schema()
-            return StructType([f for f in full.fields if f.name in wanted])
-        return self.table.spark_schema()
+        return self.table.spark_schema(json.loads(cols_opt) if cols_opt else None)
 
     def reader(self, schema: StructType) -> ConnectorReader:
         return ConnectorReader(self.connector, self.table, dict(self.options))

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
+from itertools import islice
 
 import pyarrow as pa
 
@@ -78,6 +79,41 @@ def _coerce(v, ctype: ColumnType):
         return None
 
 
+def _stem(path: str) -> str:
+    return os.path.splitext(os.path.basename(path))[0]
+
+
+def _objects(path: str) -> Iterator[dict]:
+    """The file's JSON-object lines; blank, malformed and non-object lines
+    are skipped, never fatal."""
+    with open(path) as fh:
+        for line in fh:
+            line = line.strip()
+            if not line:
+                continue
+            try:
+                obj = json.loads(line)
+            except json.JSONDecodeError:
+                continue
+            if isinstance(obj, dict):
+                yield obj
+
+
+def _file_table(path: str) -> TableSchema:
+    """The table one JSONL file exposes: columns in first-seen order, types
+    widened over the first _INFER_SAMPLE_ROWS objects."""
+    types: dict[str, ColumnType] = {}
+    for row in islice(_objects(path), _INFER_SAMPLE_ROWS):
+        for k, v in row.items():
+            if v is None:
+                types.setdefault(k, ColumnType.STRING)
+            elif k in types:
+                types[k] = _widen(types[k], _cell_type(v))
+            else:
+                types[k] = _cell_type(v)
+    return TableSchema(_stem(path), tuple(ColumnDef(k, t) for k, t in types.items()))
+
+
 class JsonlConnector(Connector):
     """Dynamic-mode connector over local JSON-lines files."""
 
@@ -88,49 +124,8 @@ class JsonlConnector(Connector):
             return []
         return list(parse_config(self.config).get("paths", []))
 
-    def _sample(self, path: str) -> list[dict]:
-        rows = []
-        with open(path) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    obj = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if isinstance(obj, dict):
-                    rows.append(obj)
-                if len(rows) >= _INFER_SAMPLE_ROWS:
-                    break
-        return rows
-
     def get_schema(self) -> Schema:
-        tables = []
-        for path in self._paths():
-            sample = self._sample(path)
-            types: dict[str, ColumnType] = {}
-            order: list[str] = []
-            for row in sample:
-                for k, v in row.items():
-                    if v is None:
-                        if k not in types:
-                            order.append(k)
-                            types[k] = ColumnType.STRING
-                        continue
-                    t = _cell_type(v)
-                    if k not in types:
-                        order.append(k)
-                        types[k] = t
-                    else:
-                        types[k] = _widen(types[k], t)
-            cols = tuple(ColumnDef(name, types[name]) for name in order)
-            stem = os.path.splitext(os.path.basename(path))[0]
-            tables.append(TableSchema(stem, cols))
-        return Schema(tables=tuple(tables), mode=DYNAMIC)
-
-    def partitions(self, table: str, quals: list[Qual]) -> list[Partition]:
-        return [Partition(0)]
+        return Schema(tables=tuple(map(_file_table, self._paths())), mode=DYNAMIC)
 
     def execute(
         self,
@@ -140,36 +135,13 @@ class JsonlConnector(Connector):
         limit: int | None,
         partition: Partition | None = None,
     ) -> Iterator[pa.RecordBatch]:
-        schema = self.get_schema().table(table)
-        if schema is None:
+        # infer only the scanned file: get_schema() would sample every one
+        path = next((p for p in self._paths() if _stem(p) == table), None)
+        if path is None:
             raise ValueError(f"unknown jsonl table {table!r}")
-        path = next(
-            p for p in self._paths() if os.path.splitext(os.path.basename(p))[0] == table
-        )
-        arrow = schema.arrow_schema(columns)
-        names = set(arrow.names)
+        schema = _file_table(path)
         types = {c.name: c.type for c in schema.columns}
-
-        def rows():
-            n = 0
-            if limit == 0:
-                return
-            with open(path) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        obj = json.loads(line)
-                    except json.JSONDecodeError:
-                        continue  # malformed line → skipped, never fatal
-                    if not isinstance(obj, dict):
-                        continue
-                    row = {k: _coerce(obj.get(k), t) for k, t in types.items()}
-                    if all(q.matches(row.get(q.column)) for q in quals):
-                        yield {k: v for k, v in row.items() if k in names}
-                        n += 1
-                        if limit is not None and n >= limit:
-                            return
-
-        yield from rows_to_batches(arrow, rows())
+        rows = (
+            {k: _coerce(obj.get(k), t) for k, t in types.items()} for obj in _objects(path)
+        )
+        yield from rows_to_batches(schema.arrow_schema(columns), rows, quals, limit)

@@ -2,6 +2,7 @@
 no Spark."""
 
 import datetime as dt
+import json
 
 import pyarrow as pa
 import pytest
@@ -18,6 +19,8 @@ from steampipe_sqlite_spark.sources.connector import (
     bind_timestamp,
     check_required_quals,
 )
+from steampipe_sqlite_spark.sources.csvfiles import CsvConnector
+from steampipe_sqlite_spark.sources.jsonlines import JsonlConnector
 
 
 def collect(batches):
@@ -161,6 +164,34 @@ class TestExecution:
         c.set_config('{"error_at_row": 3}')
         with pytest.raises(RuntimeError, match="injected error at row 3"):
             collect(c.execute("flaky", [], None, None))
+
+    @pytest.mark.parametrize("quals", [[], [Qual("tenant", ">", "a")]])
+    def test_keyed_tenant_gate_raises_at_limit_zero(self, quals):
+        # LIMIT 0 pulls no row, but the gate is not a row: an unservable
+        # tenant shape must still fail loudly, never come back empty
+        c = ChaosConnector(n_rows=5)
+        with pytest.raises(ValueError, match="requires an '=' or IN qual"):
+            list(c.execute("keyed", quals, None, 0))
+
+    @pytest.mark.parametrize("error_at", [5, 10])
+    def test_no_row_past_the_limit_is_pulled(self, error_at):
+        # generating row ``error_at`` raises; a LIMIT 5 scan must stop
+        # before it, even when it is the very next row
+        c = ChaosConnector(n_rows=20)
+        c.set_config(f'{{"error_at_row": {error_at}}}')
+        rows = collect(c.execute("flaky", [], None, 5))
+        assert [r["id"] for r in rows] == [0, 1, 2, 3, 4]
+
+    @pytest.mark.parametrize(
+        "cls, ext, text",
+        [(CsvConnector, "csv", "id\n1\n"), (JsonlConnector, "jsonl", '{"id": 1}\n')],
+    )
+    def test_file_scan_opens_only_its_own_file(self, tmp_path, cls, ext, text):
+        # a scan infers its own file's schema; get_schema() would open
+        # every configured path, here one that is gone
+        (tmp_path / f"own.{ext}").write_text(text)
+        c = cls(json.dumps({"paths": [str(tmp_path / f"own.{ext}"), str(tmp_path / f"gone.{ext}")]}))
+        assert collect(c.execute("own", [], None, None)) == [{"id": 1}]
 
 
 class TestScanCache:

@@ -8,7 +8,7 @@ import pytest
 
 from steampipe_sqlite_spark.plans.registry import collect
 from steampipe_sqlite_spark.tables import load_table
-from tools.plan_audit import audit, duplicated, plan_text, single_partition_windows
+from tools.plan_audit import audit, duplicated, mask_for_diff, plan_text, single_partition_windows
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -456,6 +456,27 @@ def test_window_group_limit_is_not_a_global_window_hazard():
         "   +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=3]\n"
     )
     assert single_partition_windows(real_global)
+
+
+def test_plan_dumps_of_two_builds_diff_equal(monkeypatch):
+    """Two builds of one plan, in two checkouts, print different exprIds,
+    Exchange plan ids, checkpointed RDD ids, unseeded rand() seeds and
+    derived-copy roots; the --out dump masks all five, and nothing else."""
+    from steampipe_sqlite_spark import derived
+
+    def build(i):
+        return (
+            f"+- Project [k#{i}L, rand({-i * 7919}) AS r#{i + 1}]\n"
+            f"   +- Exchange hashpartitioning(k#{i}L, 4), ENSURE_REQUIREMENTS, [plan_id={i}]\n"
+            f"      +- Scan ExistingRDD[k#{i}L] RDD[{i + 2}]\n"
+            f"Location: InMemoryFileIndex [file:{derived.ROOT}/compact/t-k4]\n"
+        )
+
+    here = mask_for_diff(build(12))
+    assert "k#_L" in here and "file:<cache>/compact/t-k4" in here
+    assert here != mask_for_diff(build(12).replace("4), ", "8), "))
+    monkeypatch.setattr(derived, "ROOT", "/elsewhere/.cache")
+    assert mask_for_diff(build(345)) == here
 
 
 def test_corpus_has_no_cartesian_or_row_python_stages(corpus_plans):

@@ -11,12 +11,14 @@ connector through the REAL engine path (Engine.load → Python DataSource
 
 - ``firehose``  — the connector yields Arrow batches built columnar
   (numpy → RecordBatch), the shape a high-volume plugin should use;
-- ``rowgen``    — the connector yields per-row Python dicts buffered
-  through ``rows_to_batches`` (the row-at-a-time producer the reference
-  API forces on every plugin; our bridge still ships them to Spark as
-  Arrow batches, so this is an UPPER bound on a cursor.go-style
-  producer — the reference additionally pays a cgo hop and SQLite row
-  materialization per row and cannot parallelize the cursor).
+- ``rowgen``    — the connector yields raw per-row Python dicts and
+  ``rows_to_batches`` applies quals, limit and projection, the shape of
+  every row-producing connector under sources/ (the row-at-a-time
+  producer the reference API forces on every plugin; our bridge still
+  ships them to Spark as Arrow batches, so this is an UPPER bound on a
+  cursor.go-style producer — the reference additionally pays a cgo hop
+  and SQLite row materialization per row and cannot parallelize the
+  cursor).
 
 Usage: python tools/bridge_scan_probe.py [n_rows] [n_partitions]
 Prints one JSON line:
@@ -30,6 +32,9 @@ partitions, best-of-3 after one warm run):
   regime     wall_s   rows/s
   firehose   0.645    12.4 M
   rowgen     0.941     8.5 M
+
+  (rowgen was read when the generator still projected each row to the
+  requested columns itself; _dicts_to_batch does that now.)
 
   Columnar Arrow generation clears 12 M rows/s through the full bridge
   (DataSource plan → 32 parallel Python readers → Arrow → JVM agg);
@@ -114,7 +119,6 @@ class FirehoseConnector(Connector):
     def execute(self, table, quals, columns, limit, partition=None):
         lo, hi = self._bounds(partition)
         schema = self.get_schema().tables[0].arrow_schema(columns)
-        names = set(schema.names)
         if table == "firehose":
             # columnar: one numpy->Arrow batch per 64k rows
             for start in range(lo, hi, 65536):
@@ -131,17 +135,9 @@ class FirehoseConnector(Connector):
                             pa.array(np.array(_TAGS)[ids % 4]).cast(pa.string())
                         )
                 yield pa.RecordBatch.from_arrays(arrays, schema=schema)
-        else:  # rowgen: the row-at-a-time producer shape
-            def rows():
-                for i in range(lo, hi):
-                    row = {
-                        "id": i,
-                        "val": i % 1000 / 10.0,
-                        "tag": _TAGS[i % 4],
-                    }
-                    yield {k: v for k, v in row.items() if k in names}
-
-            yield from rows_to_batches(schema, rows())
+        else:  # rowgen: the row-at-a-time producer shape, raw rows only
+            rows = ({"id": i, "val": i % 1000 / 10.0, "tag": _TAGS[i % 4]} for i in range(lo, hi))
+            yield from rows_to_batches(schema, rows, quals, limit)
 
 
 def measure(eng: Engine, table: str, n_rows: int) -> dict:

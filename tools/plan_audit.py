@@ -22,7 +22,9 @@ count jobs at construction time, so point the audit at a small sf_dir.
 
 Usage: python tools/plan_audit.py [--sf DIR] [--out DIR] [QUERY...]
   --sf   defaults to $SPARK_GRAFT_SF_DIR, as in bench.py
-  --out  writes ``explain("formatted")`` per query to DIR/<query>.txt
+  --out  writes ``explain("formatted")`` per query to DIR/<query>.txt,
+         masked by ``mask_for_diff``, so ``diff -r`` of two dumps, taken
+         in two checkouts, is a before/after plan check
 
 tests/test_plans.py runs the same walk and pins its results.
 """
@@ -44,6 +46,15 @@ _DUP_CALL = re.compile(r"\b(?:regexp_replace|split)\(")
 _PY_NODE = re.compile(r"\b(" + "|".join(PYTHON_STAGES) + r")\b")
 # "<node> ... <udf>(<args>)#<exprId>": the first call after the node name
 _PY_UDF = re.compile(_PY_NODE.pattern + r"[^(]*?(\w+)\(.*?\)(#\d+)")
+# Counters that differ between two builds of one plan: expression ids,
+# Exchange plan ids, checkpointed RDD ids, and the seed Spark draws for an
+# unseeded rand() (a literal seed prints the same way, so it is masked too)
+_COUNTERS = (
+    (re.compile(r"#\d+"), "#_"),
+    (re.compile(r"plan_id=\d+"), "plan_id=_"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    (re.compile(r"\brand\(-?\d+\)"), "rand(_)"),
+)
 # scan nodes print the predicates pushed into them; the Filter above them
 # evaluates those, so their text is not counted as another evaluation
 _SCAN_NODE = re.compile(r"\b(?:InMemoryTableScan|FileScan|BatchScan)\b")
@@ -58,6 +69,20 @@ class PlanAudit(NamedTuple):
 def plan_text(df, mode: str = "simple") -> str:
     """What ``df.explain(mode)`` prints."""
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def mask_for_diff(plan: str) -> str:
+    """``plan`` with every per-build counter replaced by ``_`` and the
+    checkout's derived-copy root (``derived.ROOT``, printed in the
+    Location of every scan of a compacted or indexed copy) by ``<cache>``.
+    Only for the dumps: duplicated() keys Python-stage nodes on their raw
+    exprIds."""
+    from steampipe_sqlite_spark.derived import ROOT
+
+    plan = plan.replace(ROOT, "<cache>")
+    for pattern, repl in _COUNTERS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def _walk(node, visit):
@@ -253,7 +278,7 @@ def main(argv: "list[str] | None" = None) -> None:
         if args.out:
             os.makedirs(args.out, exist_ok=True)
             with open(os.path.join(args.out, f"{name}.txt"), "w") as fh:
-                fh.write(a.formatted)
+                fh.write(mask_for_diff(a.formatted))
     for name, err in errors.items():
         print(f"{name}: BUILD ERROR {err}")
     print(
